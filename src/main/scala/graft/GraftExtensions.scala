@@ -110,17 +110,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           case Some(other) => throw new IllegalArgumentException(
             s"minhash_sig: shingle size must be an integer literal, got $other")
         }
-        // MUST mirror Dedup.coeffs exactly (same seed, same field-wide
-        // draw — the r22 estimator fix widened both): the SQL surface's
-        // signatures have to be bit-equal to the library's, or a probe
-        // through one surface would never match an index built through
-        // the other
-        val rnd = new java.util.Random(42L)
-        val M = (1L << 61) - 1
-        def draw() = math.abs(rnd.nextLong()) % (M - 1)
-        val a = Array.fill(64)(draw() + 1)
-        val b = Array.fill(64)(draw())
-        MinHashSig(args.head, n, a, b, M)
+        // the library's coefficients: SQL signatures must be bit-equal
+        // to Dedup.minhashSignature's
+        val (a, b) = graft.ops.Dedup.minhashCoeffs(64)
+        MinHashSig(args.head, n, a, b, graft.ops.Dedup.MinhashP)
       }))
   }
 }

@@ -1,6 +1,8 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.functions.{broadcast, col, concat, lit, raise_error, sum, when}
 
 /** Bucketed-table support: pre-shuffle once at write time so repeated
   * equi-joins and aggregations on the bucket key run with NO exchange.
@@ -206,8 +208,11 @@ object Bucketing {
     * leaks a still-running sibling job.
     *
     * Caller contract: the two actions must touch DIFFERENT tables and
-    * must not mutate shared session conf (the writers here use
-    * per-write options precisely for that). */
+    * must not mutate session conf themselves — the only conf change
+    * allowed inside is the reference-counted [[withDynamicOverwrite]]
+    * pin (what [[overwritePartitions]] takes), because a plain
+    * set/restore pair on the shared session races the sibling's
+    * planning. */
   def concurrently(a: => Unit, b: => Unit): Unit = {
     @volatile var bErr: Throwable = null
     val t = new Thread(() => try b catch { case e: Throwable => bErr = e })
@@ -220,14 +225,14 @@ object Bucketing {
     if (bErr != null) throw bErr
   }
 
-  /** Table-property key recording the max batch_id the last
-    * auto-compaction folded — [[maybeCompact]]'s cadence cursor.
-    * Carried through the compaction rewrite like every graft.* stamp;
-    * a crash between compaction and the stamp only means the next
-    * maybeCompact re-compacts (idempotent rewrite, never wrong). */
+  /** Table-property key recording the max batch_id the last cadence
+    * compaction covered — [[maintainIndex]]'s compaction cursor. It rides
+    * the compaction's side-table stamp, so it goes live atomically with
+    * the compacted rows; a crash before the swap only means the next
+    * cadence entry re-compacts (idempotent rewrite, never wrong). */
   val CompactedAtProperty = "graft.index.compactedAt"
 
-  /** Table-property key stamped by [[foldBucketed]]: the highest
+  /** Table-property key stamped by the additive folds: the highest
     * batch_id whose partial was FOLDED into the index's summed rows —
     * the replay watermark for the additive-df families (the
     * [[Tombstones.PurgedThroughProperty]] device applied to partials).
@@ -239,10 +244,10 @@ object Bucketing {
     * no-ops any batch at/below the watermark. Batch ids are
     * monotonically increasing per table (stream micro-batch ids or a
     * 0,1,2… sequence — the [[Tombstones]] contract), so one O(1)
-    * property covers the whole replay history. Stamped on the
-    * REPLACEMENT table before the swap, so the watermark and the
-    * folded content become visible atomically — no crash window shows
-    * folded rows without the watermark that protects them. */
+    * property covers the whole replay history. A base merge stamps it on
+    * the REPLACEMENT table before the swap and a run fold advances it
+    * under the fold journal, so no crash window shows folded rows
+    * without the watermark that protects them. */
   val FoldedThroughProperty = "graft.index.foldedThrough"
 
   /** The five additive-df index kinds whose per-batch partials sum to
@@ -252,10 +257,10 @@ object Bucketing {
   val AdditiveKinds: Set[String] =
     Set("shingle-df", "line-df", "window-df", "tok-counts", "bm25-df")
 
-  /** TIERED-FOLD level markers (VERDICT r19 item 2). The additive-df
-    * index is physically a set of batch_id partitions; the tiered fold
-    * organizes them into LSM-style levels WITHOUT changing what a
-    * probe reads (probes sum every partition regardless):
+  /** TIERED-FOLD level markers. The additive-df index is physically a
+    * set of batch_id partitions; the tiered fold organizes them into
+    * LSM-style levels WITHOUT changing what a probe reads (probes sum
+    * every partition regardless):
     *
     *  - BASE: the one partition holding the long-term folded mass,
     *    at `batch_id = baseAt`.
@@ -274,57 +279,44 @@ object Bucketing {
   val BaseAtProperty = "graft.index.baseAt"
   val RunAtProperty = "graft.index.runAt"
 
-  /** Row count of the base partition, stamped by [[foldBucketed]] at
-    * base-merge time — the only event that changes it (VERDICT r20
-    * item 3). [[tieredFold]]'s run-vs-merge decision reads this stamp
-    * instead of counting the base partition: `count()` is footer-only
-    * in bytes but still lists and opens every base data file's footer,
-    * an O(base files) filesystem pass per cadence window — the very
-    * dependence on index size the tiered fold exists to remove. The
-    * merge UNSETs the stamp atomically with its swap and re-stamps the
-    * fresh value after, so a crash in between leaves the property
-    * absent (never stale) and the next decision falls back to
-    * counting. */
+  /** Row count of the base partition, stamped with the base merge's
+    * replacement table — the merge is the only event that changes it, so
+    * the stamp goes live atomically with the new base. [[tieredFold]]'s
+    * run-vs-merge decision reads this stamp instead of counting the base
+    * partition: `count()` is footer-only in bytes but still lists and
+    * opens every base data file's footer, an O(base files) filesystem
+    * pass per cadence window — the very dependence on index size the
+    * tiered fold exists to remove. A table without the stamp falls back
+    * to counting. */
   val BaseMassProperty = "graft.index.baseMass"
 
-  /** Crash journal for the run-level fold: `<newRunId>|<id,id,...>`
-    * (the partition the folded run lands in, and the source partitions
-    * — old run + fresh — it replaces). Stamped on the MAIN table in one
-    * metastore op AFTER the folded rows are durably in the
-    * `<table>_runfold` side table and BEFORE any partition is dropped;
-    * cleared after the swap completes. Any entry point that reads the
-    * table first calls [[repairRunFold]], which re-applies a pending
-    * journal idempotently — so no crash point can expose a
-    * half-folded partition set to a probe. */
+  /** Crash journal of the run-level fold: `<newRunId>|<id,id,...>` (the
+    * partition the folded run lands in, and the source partitions — old
+    * run + fresh — it replaces). Stamped on the live table once the
+    * folded rows are durable in the `<table>_runfold` side table and
+    * BEFORE any partition is dropped; cleared after the landing.
+    * [[repairCompaction]] replays a pending journal, so no crash point
+    * exposes a half-replaced partition set to a probe. */
   val FoldJournalProperty = "graft.index.foldJournal"
 
-  /** Stamped on the REPLACEMENT table BEFORE [[rewriteBucketed]]'s
-    * two-name swap and UNSET only after the post-rename `RECOVER
-    * PARTITIONS` completed (optimization r22, guide §6): the stamp
-    * turns [[repairCompaction]]'s per-batch staleness decision into an
-    * O(1) property read instead of an O(partitions) `listPartitions`
-    * location sweep — the repair guard runs on EVERY maintenance batch
-    * and probe entry, so at 100 TB the old sweep shipped every
-    * partition's metadata from the metastore once per micro-batch per
-    * table. The property also closes the mid-RECOVER crash window the
-    * location signature could not see (ADVICE r21): a kill during the
-    * recover itself leaves the stamp set, so the next entry re-runs
-    * the recover; the location test would have read the
-    * partially-registered layout as healthy. Every table rename in
-    * this codebase goes through the swap protocols here, so the stamp
-    * covers all in-protocol stale states; a FOREIGN rename (an
-    * operator's raw ALTER TABLE RENAME) is outside the maintenance
-    * protocol and is healed explicitly via
-    * [[recoverPartitionsIfStale]]. */
+  /** Stamped on a partitioned table BEFORE it is renamed into place (a
+    * rewrite's side table, or the backup/side a recovery restores) and
+    * unset only after the post-rename `RECOVER PARTITIONS`: renaming a
+    * managed partitioned table moves its directory but leaves the
+    * catalog's per-partition locations at the old path, so the table
+    * resolves while every scan reads empty. A crash anywhere between the
+    * rename and the unset — mid-recover included — leaves the stamp set,
+    * and [[repairCompaction]] re-runs the recover: an O(1) property read
+    * on the hot path instead of a sweep of partition locations. */
   val NeedsRecoverProperty = "graft.index.needsRecover"
 
   /** Count of metastore round-trips issued by this object's catalog
     * READS on the maintenance/probe paths (metadata fetches, existence
     * checks, partition listings) — the instrument behind the per-batch
-    * metastore budget MetastoreBudgetSpec pins (optimization r22,
-    * guide §6: at fixture scale these calls are sub-10 ms driver work,
-    * at 100 TB they are metastore QPS). Monotone; tests snapshot
-    * around a unit of work and assert the delta. */
+    * metastore budget MetastoreBudgetSpec pins (at fixture scale these
+    * calls are sub-10 ms driver work, at 100 TB they are metastore QPS).
+    * Monotone; tests snapshot around a unit of work and assert the
+    * delta. */
   val metastoreCalls = new java.util.concurrent.atomic.AtomicLong(0)
 
   private def identOf(table: String) =
@@ -335,8 +327,7 @@ object Bucketing {
     spark.sessionState.catalog.tableExists(identOf(table))
   }
 
-  private def countedMeta(spark: SparkSession, table: String)
-      : org.apache.spark.sql.catalyst.catalog.CatalogTable = {
+  private def countedMeta(spark: SparkSession, table: String): CatalogTable = {
     metastoreCalls.incrementAndGet()
     spark.sessionState.catalog.getTableMetadata(identOf(table))
   }
@@ -344,8 +335,8 @@ object Bucketing {
   /** Existence check and metadata fetch in ONE round-trip: the absent
     * case surfaces as NoSuchTableException instead of a separate
     * tableExists probe. */
-  private def countedMetaOption(spark: SparkSession, table: String)
-      : Option[org.apache.spark.sql.catalyst.catalog.CatalogTable] = {
+  private def countedMetaOption(spark: SparkSession,
+                                table: String): Option[CatalogTable] = {
     metastoreCalls.incrementAndGet()
     try Some(spark.sessionState.catalog.getTableMetadata(identOf(table)))
     catch {
@@ -360,85 +351,54 @@ object Bucketing {
     spark.sessionState.catalog.listPartitionNames(identOf(table))
   }
 
+  private def batchIds(partitionNames: Seq[String]): Seq[Long] =
+    partitionNames.flatMap(_.stripPrefix("batch_id=").toLongOption)
+
+  private def longProperty(meta: CatalogTable, key: String): Option[Long] =
+    meta.properties.get(key).flatMap(_.toLongOption)
+
   def foldedThrough(spark: SparkSession, table: String): Long =
-    spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties.get(FoldedThroughProperty)
-      .flatMap(_.toLongOption).getOrElse(Long.MinValue)
+    longProperty(spark.sessionState.catalog.getTableMetadata(identOf(table)),
+      FoldedThroughProperty).getOrElse(Long.MinValue)
 
-  /** True when `table` exists and is stamped as one of the additive-df
-    * index families — the tables whose maintenance cadence runs
-    * [[maybeFold]] instead of [[maybeCompact]]. */
-  def isAdditiveIndex(spark: SparkSession, table: String): Boolean =
-    spark.sessionState.catalog.tableExists(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)) &&
-      tableKind(spark, table).exists(AdditiveKinds)
-
-  /** AUTO-COMPACTION CADENCE for streamed per-batch index maintenance:
-    * once `everyBatches` NEW batch_id partitions have landed since the
-    * last fold, run the crash-safe [[compactBucketed]] swap and stamp
-    * the cursor. This is the policy the round-16 ProbeCompact
-    * measurement asked for: accumulated per-batch file waves double
-    * streamed-probe cost by the ~80x index point (each append fans one
-    * wave of files into every bucket), and compaction recovers it
-    * (q73 probe 1.36 -> 0.63 s, q71 1.75 -> 0.81 s) — but until now a
-    * user had to know to run it. Wired into `runIndexMaintenance`, so
-    * every streamed index family pays O(index/N) amortized rewrite per
-    * batch instead of unbounded fragmentation.
+  /** MAINTENANCE CADENCE — the one entry per maintained table per batch.
+    * One metadata fetch decides: once `everyBatches` batch_id partitions
+    * have landed above the table's cursor, an additive-df family runs the
+    * [[tieredFold]] (cursor [[FoldedThroughProperty]]: a fold subsumes a
+    * compaction and is the only rewrite that physically drops retracted
+    * keys' cancelled row pairs, so the two never both run), and any other
+    * batch_id-partitioned index runs the [[compactBucketed]] rewrite
+    * (cursor [[CompactedAtProperty]]). Absent tables and non-batch
+    * layouts (e.g. the pinned IVF centroid artifact) are no-ops.
     *
-    * Safe under the streaming replay contract: compaction preserves
-    * content exactly, so a batch replayed AFTER a fold idempotently
-    * overwrites its own (already folded) partition — re-fragmenting one
-    * partition until the next cadence point, never double-counting.
-    * No-op for unpartitioned or non-batch_id tables (e.g. the pinned
-    * IVF centroid artifact). Returns true when a compaction ran. */
-  def maybeCompact(spark: SparkSession, table: String,
-                   everyBatches: Int = 4): Boolean = {
-    if (everyBatches <= 0) return false
-    countedMetaOption(spark, table) match {
-      case Some(meta) if meta.partitionColumnNames == Seq("batch_id") =>
-        maybeCompactWith(spark, table, meta, everyBatches)
-      case _ => false
-    }
-  }
-
-  private def maybeCompactWith(spark: SparkSession, table: String,
-                               meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-                               everyBatches: Int): Boolean = {
-    val parts = countedListPartitionNames(spark, table)
-      .flatMap(_.stripPrefix("batch_id=").toLongOption)
-    if (parts.isEmpty) return false
-    val compactedAt = meta.properties.get(CompactedAtProperty)
-      .flatMap(_.toLongOption).getOrElse(Long.MinValue)
-    if (parts.count(_ > compactedAt) < everyBatches) false
-    else {
-      compactBucketed(spark, table)
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-        s"('$CompactedAtProperty' = '${parts.max}')")
-      true
-    }
-  }
-
-  /** ONE cadence entry per maintained table per micro-batch
-    * (optimization r22, guide §6): the old foreachBatch sequence —
-    * [[isAdditiveIndex]] (existence + metadata) then [[maybeFold]] /
-    * [[maybeCompact]] (existence + metadata + partition names) — paid
-    * five metastore reads per table per batch for one decision that
-    * needs a single metadata fetch. This fetches the table's metadata
-    * once and dispatches: additive-df family → tiered fold cadence,
-    * anything else batch_id-partitioned → compaction cadence, absent /
-    * non-batch layouts → no-op. Semantics identical to the old
-    * branch pair (pinned by StreamedIndexSpec's cadence tests).
-    * Returns true when a rewrite ran. */
+    * Why on a cadence: each append fans one wave of files into every
+    * bucket, and accumulated waves double streamed-probe cost by the
+    * ~80x index point (compaction took the q73 probe 1.36 -> 0.63 s,
+    * q71 1.75 -> 0.81 s); at cadence N every streamed family pays
+    * O(index/N) amortized rewrite per batch instead of unbounded
+    * fragmentation. Safe under the streaming replay contract: a batch
+    * replayed after a compaction idempotently overwrites its own
+    * partition (compaction preserves content), and one at/below a fold
+    * watermark no-ops (see [[appendPartialInto]]). Returns true when a
+    * rewrite ran. */
   def maintainIndex(spark: SparkSession, table: String,
                     everyBatches: Int = 4,
                     mergeFraction: Double = 0.25): Boolean = {
     if (everyBatches <= 0) return false
     countedMetaOption(spark, table) match {
       case Some(meta) if meta.partitionColumnNames == Seq("batch_id") =>
-        if (meta.properties.get(KindProperty).exists(AdditiveKinds))
-          maybeFoldWith(spark, table, meta, everyBatches, mergeFraction)
-        else maybeCompactWith(spark, table, meta, everyBatches)
+        val additive = meta.properties.get(KindProperty).exists(AdditiveKinds)
+        val cursor = longProperty(meta,
+          if (additive) FoldedThroughProperty else CompactedAtProperty)
+          .getOrElse(Long.MinValue)
+        val parts = batchIds(countedListPartitionNames(spark, table))
+        if (parts.count(_ > cursor) < everyBatches) false
+        else {
+          if (additive) tieredFold(spark, table, mergeFraction)
+          else rewriteTable(spark, table, identity,
+            Map(CompactedAtProperty -> parts.max.toString))
+          true
+        }
       case _ => false
     }
   }
@@ -447,31 +407,29 @@ object Bucketing {
     * caller's cached relation (the create may have run through another
     * cloned session), verify the existing table is the expected index
     * FAMILY, then land the partial as its own idempotent batch_id
-    * partition. The kind check here closes the blind spot the ADVICE-r16
-    * audit found: only probes checked the stamp, so a partial appended
-    * into a same-column-layout table of a DIFFERENT hash family (e.g. a
-    * shingle-df partial into a line-df index — both `(h, df_corpus,
-    * batch_id)`) would silently mix families; now the very first append
-    * into a wrong-family table fails loudly.
+    * partition. The kind check closes the blind spot of probe-only
+    * checks: a partial appended into a same-column-layout table of a
+    * DIFFERENT hash family (e.g. a shingle-df partial into a line-df
+    * index — both `(h, df_corpus, batch_id)`) would silently mix
+    * families; the very first append into a wrong-family table fails
+    * loudly instead.
     *
-    * FOLD WATERMARK (VERDICT r18 item 1): a batch at/below the table's
+    * FOLD WATERMARK: a batch at/below the table's
     * [[FoldedThroughProperty]] already had its partial absorbed by a
-    * [[foldBucketed]] rewrite — its per-batch partition no longer
-    * exists, so the overwrite-own-partition idempotence that makes
-    * replays safe is gone, and landing it would DOUBLE-COUNT. Such a
-    * batch no-ops, and the method returns false so callers (and the
-    * SQL surface's `landed` column) can see the drop. Batch ids are
-    * monotone per table (the [[Tombstones]] contract), so a sub-
-    * watermark id IS a replay; an operator reusing a low id after a
-    * fold sees `landed = false` instead of a silent partial loss. */
+    * fold — its per-batch partition no longer exists, so the
+    * overwrite-own-partition idempotence that makes replays safe is
+    * gone, and landing it would DOUBLE-COUNT. Such a batch no-ops, and
+    * the method returns false so callers (and the SQL surface's
+    * `landed` column) can see the drop. Batch ids are monotone per
+    * table (the [[Tombstones]] contract), so a sub-watermark id IS a
+    * replay; an operator reusing a low id after a fold sees
+    * `landed = false` instead of a silent partial loss. */
   def appendPartialInto(spark: SparkSession, partial: DataFrame,
                         table: String, kind: String,
                         batchId: Long): Boolean = {
     spark.catalog.refreshTable(table)
-    // ONE metadata fetch serves all three guards (optimization r22,
-    // guide §6): the kind check, the layout guard and the fold
-    // watermark each re-fetched the table's metadata — three metastore
-    // round-trips per append per table for properties of one snapshot
+    // ONE metadata fetch serves all three guards (kind, layout, fold
+    // watermark) — each is a property of the same snapshot
     val meta = countedMeta(spark, table)
     meta.properties.get(KindProperty).foreach { k =>
       require(k == kind,
@@ -490,149 +448,150 @@ object Bucketing {
         "layout; per-batch APPEND maintains only the streamed " +
         "(partitioned) layout. Rebuild it with the streamed create " +
         "path, or extend it with the family's batch append")
-    val folded = meta.properties.get(FoldedThroughProperty)
-      .flatMap(_.toLongOption).getOrElse(Long.MinValue)
-    if (batchId <= folded) return false
+    if (batchId <= longProperty(meta, FoldedThroughProperty)
+        .getOrElse(Long.MinValue)) return false
     overwritePartitions(partial, table)
     true
   }
 
   /** Compact a BUCKETED table back to one file per bucket, preserving
-    * the bucket spec — the maintenance companion to append-mode
-    * ingestion: every [[writeBucketedMulti]] append lands one more file
-    * wave inside the existing buckets, and after enough days the scan's
-    * file-open count (not its byte count) becomes the bottleneck.
-    * Plain [[graft.io.Sinks.compactParquet]] would destroy the layout
-    * (repartition + plain write loses catalog bucket metadata); this
-    * reads the spec from the catalog, repartitions on the bucket keys —
-    * `repartition(n, keys)` hashes exactly like the bucket layout, so
-    * each output task holds exactly one bucket and writes exactly one
-    * file — and swaps the rewritten table in under the original name.
-    *
-    * The swap follows the Ledger two-name protocol (Ledger.scala:29),
-    * adapted to catalog tables: the ORIGINAL is renamed to a backup name
-    * BEFORE the compacted table takes its place, and the backup is
-    * dropped only after the rename-in succeeded — the original's data
-    * files are never destroyed until the new table is live under the
-    * real name (the old drop-then-rename form deleted the managed
-    * table's data first, so a crash in the window lost the index until
-    * a full rebuild). A crash mid-swap leaves at most a one-rename
-    * repair, performed automatically by [[repairCompaction]], which
-    * both this method and any probe-side caller can run first; no
-    * crash point loses data (proved under injected kills in
-    * RecoverySpec). Run it in the maintenance window that also owns
-    * appends. Returns the data file count after compaction. */
-  def compactBucketed(spark: SparkSession, table: String,
-                      injectCrashAtSwapStep: Int = 0): Int =
-    rewriteBucketed(spark, table, identity, injectCrashAtSwapStep)
+    * the bucket spec and any partition layout — the maintenance
+    * companion to append-mode ingestion: every append lands one more
+    * file wave inside the existing buckets, and after enough batches
+    * the scan's file-open count (not its byte count) becomes the
+    * bottleneck. Plain [[graft.io.Sinks.compactParquet]] would destroy
+    * the layout (repartition + plain write loses catalog bucket
+    * metadata); this reads the spec from the catalog and repartitions on
+    * the bucket keys — `repartition(n, keys)` hashes exactly like the
+    * bucket layout, so each output task holds exactly one bucket and
+    * writes exactly one file. The replacement goes live through the
+    * crash-safe [[rewrite]] protocol. Returns the data file count after
+    * compaction. */
+  def compactBucketed(spark: SparkSession, table: String): Int =
+    rewriteTable(spark, table, identity)
 
   /** PHYSICAL PURGE of tombstoned keys from a bucketed index table —
-    * the deletion companion to [[compactBucketed]]: the same crash-safe
-    * layout-preserving two-name swap, but the rewrite drops every row
-    * whose `keyCol` appears in `removeKeys` (broadcast anti-join —
+    * the deletion companion to [[compactBucketed]]: the same
+    * layout-preserving [[rewrite]], but dropping every row whose
+    * `keyCol` appears in `removeKeys` (broadcast anti-join —
     * `removeKeys` is retraction-sized, the scan side streams). After a
     * purge the rows are GONE from disk, not merely filtered at probe
     * time: the right-to-be-forgotten end state for a posting-list index
     * whose rows (unlike the additive-df families) cannot be cancelled
-    * by a negated partial. Same crash windows and repair as compaction
-    * (RecoverySpec's injected-kill matrix applies verbatim — the
-    * original table survives under `_precompact` until the purged
-    * table is live). Returns the data file count after the rewrite. */
+    * by a negated partial. Returns the data file count after the
+    * rewrite. */
   def purgeBucketed(spark: SparkSession, table: String,
-                    removeKeys: DataFrame, keyCol: String,
-                    injectCrashAtSwapStep: Int = 0): Int = {
+                    removeKeys: DataFrame, keyCol: String): Int = {
     val ids = removeKeys.select(removeKeys(keyCol))
-    rewriteBucketed(spark, table,
-      _.join(org.apache.spark.sql.functions.broadcast(ids), Seq(keyCol),
-        "left_anti"),
-      injectCrashAtSwapStep)
+    rewriteTable(spark, table,
+      _.join(broadcast(ids), Seq(keyCol), "left_anti"))
   }
 
-  /** FOLD-PURGE for the additive-df index families (VERDICT r18 item
-    * 1) — the negated-partial twin of [[Tombstones.purge]]: retraction
-    * lands as a NEGATED partial, so after enough retractions a key
-    * lives on as (h, +df)/(h, −df) row pairs that [[compactBucketed]]
-    * (an identity rewrite) carries forever — under steady
-    * right-to-be-forgotten traffic the index's ROW count grows with
-    * total retraction history even though the folded answer stays
-    * correct. This rewrite performs the fold physically: group by the
-    * bucket key, SUM the count column, DROP keys that fold to zero
-    * (absent, exactly as a rebuild-without would have it — the
-    * documented probe semantics of all five families), FAIL LOUDLY on
-    * a negative fold (double retraction / never-appended doc — baking
-    * corrupted history into the index is worse than aborting the
-    * maintenance window), and land the result as ONE summed partition
-    * under the highest folded batch_id, through the same crash-safe
-    * two-name swap as compaction (RecoverySpec's injected-kill matrix
-    * applies verbatim).
+  /** FOLD-PURGE for the additive-df index families — the negated-partial
+    * twin of [[Tombstones.purge]]: retraction lands as a NEGATED
+    * partial, so after enough retractions a key lives on as (h, +df) /
+    * (h, −df) row pairs that [[compactBucketed]] (an identity rewrite)
+    * carries forever — under steady right-to-be-forgotten traffic the
+    * index's ROW count grows with total retraction history even though
+    * the folded answer stays correct. This BASE MERGE performs the fold
+    * physically: group by the bucket key, SUM the count column, DROP
+    * keys that fold to zero (absent, exactly as a rebuild-without would
+    * have it — the documented probe semantics of all five families),
+    * FAIL LOUDLY on a negative fold (double retraction / never-appended
+    * doc — baking corrupted history into the index is worse than
+    * aborting the maintenance window), and land the result as ONE
+    * summed partition under the highest folded batch_id.
     *
-    * Replay safety: the [[FoldedThroughProperty]] watermark is stamped
-    * on the replacement table BEFORE the swap, so folded content and
-    * its watermark go live atomically; [[appendPartialInto]] no-ops
-    * any partial at/below it. A crash before the swap leaves the
-    * original table (partials intact, replays idempotent as ever); a
-    * crash after leaves the folded table already stamped.
+    * Replay safety: the [[FoldedThroughProperty]] watermark rides the
+    * replacement table's stamp, so folded content and its watermark go
+    * live atomically; [[appendPartialInto]] no-ops any partial at/below
+    * it. A crash before the swap leaves the original table (partials
+    * intact, replays idempotent as ever).
     *
-    * Scale shape: the groupBy runs ON the bucketed scan (the scan is
-    * NOT pinned off — with an aggregate caring about the layout the
-    * planner keeps it), so the fold is exchange-free on the index side
-    * and each task drains one bucket into one summed file: O(index)
-    * once per cadence window, O(index/N) amortized per batch — the
-    * same economics as the compaction it replaces, minus the rows that
-    * no longer exist. Returns the data file count after the fold. */
-  def foldBucketed(spark: SparkSession, table: String,
-                   injectCrashAtSwapStep: Int = 0): Int = {
-    import org.apache.spark.sql.functions.{col, concat, lit, raise_error, sum, when}
-    repairCompaction(spark, table)
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    val (keys, value) = additiveLayout(spark, table)
-    val parts = spark.sessionState.catalog.listPartitionNames(ident)
-      .flatMap(_.stripPrefix("batch_id=").toLongOption)
-    if (parts.isEmpty) return dataFileCount(spark, table)
-    val maxBatch = parts.max
-    FoldEvents.record(table, "base-merge", parts.size)
-    rewriteBucketed(spark, table,
-      df => df.groupBy(keys.map(col): _*)
-        .agg(sum(col(value.name)).cast(value.dataType).as(value.name))
-        // zero folds become ABSENT (row-presence is the predicate for
-        // these families); negative folds are history corruption and
-        // must abort the rewrite, not persist
-        .filter(when(col(value.name) < 0,
-            raise_error(concat(
-              lit(s"$table folds a negative ${value.name} — double "),
-              lit("retraction or retraction of a never-appended doc"))))
-          .otherwise(col(value.name)) =!= 0)
-        .withColumn("batch_id", lit(maxBatch)),
-      injectCrashAtSwapStep,
-      // watermark + cadence cursor + base marker ride the swap
-      // atomically: the fold subsumes a compaction, and everything now
-      // lives in the single base partition — the run level is consumed
-      extraProps = Map(FoldedThroughProperty -> maxBatch.toString,
-        CompactedAtProperty -> maxBatch.toString,
-        BaseAtProperty -> maxBatch.toString),
-      pinBucketedScanOff = false,
-      // the old base's mass stamp dies with the swap (atomically); the
-      // fresh value is stamped below, AFTER the swap — a crash between
-      // the two leaves the property absent, and tieredFold falls back
-      // to counting (see BaseMassProperty)
-      dropProps = Set(RunAtProperty, BaseMassProperty))
-    // one footer-only count of the just-merged base, paid once per
-    // merge (amortized O(delta) like the merge itself), so every
-    // subsequent cadence decision is metadata-only
-    val baseMass = spark.table(table)
-      .filter(col("batch_id") === maxBatch).count()
-    stampProperties(spark, table,
-      Map(BaseMassProperty -> baseMass.toString))
+    * Scale shape: the groupBy runs ON the bucketed scan, so the fold is
+    * exchange-free on the index side and each task drains one bucket
+    * into one summed file: O(index) once per cadence window, O(index/N)
+    * amortized per batch. Returns the data file count after the fold. */
+  def foldBucketed(spark: SparkSession, table: String): Int = {
+    val meta = repairedMeta(spark, table)
+    baseMerge(spark, table, meta,
+      batchIds(spark.sessionState.catalog.listPartitionNames(identOf(table))))
     dataFileCount(spark, table)
   }
 
-  /** Shared layout guard of the fold paths: `table` must be a
+  /** TIERED FOLD — the cadence action that decouples maintenance cost
+    * from index size. A base merge rewrites the ENTIRE table: O(index)
+    * once per cadence window, an amortized per-batch cost that grows
+    * linearly with index size while the batches stay delta-sized. The
+    * LSM answer, two levels:
+    *
+    *  1. RUN-LEVEL FOLD (the common case): (old run ∪ fresh partials)
+    *     fold into ONE new run partition — cost O(run + delta), the
+    *     base partition's files are never read or written. Zero sums
+    *     drop; NEGATIVE sums stay (a retraction of a base-resident key
+    *     is pending until the merge; probes sum base + run before any
+    *     sign check, so correctness is unchanged).
+    *  2. BASE MERGE (rare): when the run would outgrow `mergeFraction`
+    *     x base mass, everything folds into a new base (the
+    *     [[foldBucketed]] rewrite) — O(index), but amortized O(delta)
+    *     per batch because it runs only after the run accumulated a
+    *     constant fraction of the base.
+    *
+    * Both levels go through the one [[rewrite]] protocol. Returns true
+    * when the base-merge path ran (the expensive one). */
+  def tieredFold(spark: SparkSession, table: String,
+                 mergeFraction: Double = 0.25): Boolean = {
+    val meta = repairedMeta(spark, table)
+    additiveLayout(table, meta) // layout guards before any decision
+    val folded = longProperty(meta, FoldedThroughProperty)
+      .getOrElse(Long.MinValue)
+    val baseAt = longProperty(meta, BaseAtProperty)
+    val runAt = longProperty(meta, RunAtProperty)
+    val parts = batchIds(
+      spark.sessionState.catalog.listPartitionNames(identOf(table)))
+    val fresh = parts.filter(_ > folded)
+    if (fresh.isEmpty) return false
+    def mass(ids: Seq[Long]): Long =
+      if (ids.isEmpty) 0L
+      else spark.table(table)
+        .filter(col("batch_id").isin(ids: _*)).count() // footer-only scan
+    // the base only changes at a merge, so its stamp is authoritative
+    val baseMass = longProperty(meta, BaseMassProperty)
+      .getOrElse(mass(baseAt.toSeq))
+    // no base yet (first fold), or the run would outgrow its bound:
+    // merge everything into a new base
+    if (baseAt.isEmpty ||
+        mass(runAt.toSeq ++ fresh) > mergeFraction * baseMass) {
+      baseMerge(spark, table, meta, parts)
+      true
+    } else {
+      runFold(spark, table, meta, runAt, fresh)
+      false
+    }
+  }
+
+  /** Repair `table`, then fetch its metadata once for the rewrite. */
+  private def repairedMeta(spark: SparkSession, table: String): CatalogTable = {
+    repairCompaction(spark, table)
+    spark.sessionState.catalog.getTableMetadata(identOf(table))
+  }
+
+  /** Whole-table [[rewrite]] of `transform(table)`, after a repair.
+    * Returns the data file count after the rewrite. */
+  private def rewriteTable(spark: SparkSession, table: String,
+                           transform: DataFrame => DataFrame,
+                           props: Map[String, String] = Map.empty): Int = {
+    val meta = repairedMeta(spark, table)
+    rewrite(spark, table, meta, transform(spark.table(table)), WholeTable,
+      props)
+    dataFileCount(spark, table)
+  }
+
+  /** Layout guard of the fold paths: `table` must be a
     * batch_id-partitioned, bucketed, additive-df index with exactly one
     * summable value column. Returns (bucket keys, the value field). */
-  private def additiveLayout(spark: SparkSession,
-                             table: String): (Seq[String], org.apache.spark.sql.types.StructField) = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
+  private def additiveLayout(table: String, meta: CatalogTable)
+      : (Seq[String], org.apache.spark.sql.types.StructField) = {
     require(meta.partitionColumnNames == Seq("batch_id"),
       s"$table is not a batch_id-partitioned streamed index — " +
         "folds rewrite per-batch partials; nothing to fold here")
@@ -652,242 +611,155 @@ object Bucketing {
     (keys, dataCols.head)
   }
 
-  /** TIERED FOLD (VERDICT r19 item 2) — the cadence action that
-    * decouples maintenance cost from index size. [[foldBucketed]]
-    * rewrites the ENTIRE table: O(index) once per cadence window, an
-    * amortized per-batch cost that grows linearly with index size
-    * while the batches stay delta-sized — at a 100 TB index under
-    * steady ingest the maintenance loop would eventually dominate
-    * ingest. The LSM answer, two levels:
-    *
-    *  1. RUN-LEVEL FOLD (the common case): (old run ∪ fresh partials)
-    *     fold into ONE new run partition — cost O(run + delta), the
-    *     base partition's files are never read or written. Zero sums
-    *     drop; NEGATIVE sums stay (a retraction of a base-resident key
-    *     is pending until the merge; probes sum base + run before any
-    *     sign check, so correctness is unchanged — certified by the
-    *     run-level spec and the q81-family oracles).
-    *  2. BASE MERGE (rare): when the run would outgrow
-    *     `mergeFraction` x base mass, everything folds into a new base
-    *     via [[foldBucketed]] — O(index), but amortized O(delta) per
-    *     batch because it runs only after the run accumulated a
-    *     constant fraction of the base.
-    *
-    * Crash safety: the run-level fold materializes the folded rows in
-    * a `<table>_runfold` side table FIRST, then stamps the
-    * [[FoldJournalProperty]] (one metastore op), then swaps partitions;
-    * [[repairRunFold]] — called by every probe-side
-    * [[repairCompaction]] — re-applies a pending journal idempotently,
-    * so no crash point exposes a half-swapped partition set
-    * (ChaosSpec kills at every failpoint). The base merge inherits the
-    * two-name-swap proof of [[compactBucketed]].
-    *
-    * Returns true when the base-merge path ran (the expensive one) —
-    * measurement hooks use it. */
-  def tieredFold(spark: SparkSession, table: String,
-                 mergeFraction: Double = 0.25,
-                 injectCrashAtStep: Int = 0): Boolean = {
-    import org.apache.spark.sql.functions.col
-    repairCompaction(spark, table)
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    additiveLayout(spark, table) // layout guards
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val props = meta.properties
-    val folded = props.get(FoldedThroughProperty)
-      .flatMap(_.toLongOption).getOrElse(Long.MinValue)
-    val baseAt = props.get(BaseAtProperty).flatMap(_.toLongOption)
-    val runAt = props.get(RunAtProperty).flatMap(_.toLongOption)
-    val parts = spark.sessionState.catalog.listPartitionNames(ident)
-      .flatMap(_.stripPrefix("batch_id=").toLongOption)
-    val fresh = parts.filter(_ > folded)
-    if (fresh.isEmpty) return false
-    def mass(ids: Seq[Long]): Long =
-      if (ids.isEmpty) 0L
-      else spark.table(table)
-        .filter(col("batch_id").isin(ids: _*)).count() // footer-only scan
-    // base mass from the merge-time stamp (VERDICT r20 item 3): the
-    // base only changes at a merge, so the stamp is authoritative;
-    // counting it here would list/open every base file's footer once
-    // per cadence window — O(base) filesystem work the tiered fold
-    // exists to avoid. Fallback to counting covers pre-stamp tables
-    // and the crash window between a merge's swap and its re-stamp.
-    val baseMass = props.get(BaseMassProperty).flatMap(_.toLongOption)
-      .getOrElse(mass(baseAt.toSeq))
-    // no base yet (first fold), or the run would outgrow its bound:
-    // merge everything into a new base
-    if (baseAt.isEmpty ||
-        mass(runAt.toSeq ++ fresh) > mergeFraction * baseMass) {
-      foldBucketed(spark, table, injectCrashAtStep)
-      true
-    } else {
-      runLevelFold(spark, table, runAt, fresh, injectCrashAtStep)
-      false
-    }
+  /** Per-key sums of `df`'s value column, typed like the value column. */
+  private def keySums(df: DataFrame, keys: Seq[String],
+                      value: org.apache.spark.sql.types.StructField): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(sum(col(value.name)).cast(value.dataType).as(value.name))
+
+  /** Fold every partition in `parts` into one base partition. */
+  private def baseMerge(spark: SparkSession, table: String, meta: CatalogTable,
+                        parts: Seq[Long]): Unit = {
+    val (keys, value) = additiveLayout(table, meta)
+    if (parts.isEmpty) return
+    val maxBatch = parts.max.toString
+    FoldEvents.record(table, "base-merge", parts.size)
+    rewrite(spark, table, meta,
+      keySums(spark.table(table), keys, value)
+        // zero folds become ABSENT (row-presence is the predicate for
+        // these families); negative folds are history corruption and
+        // must abort the rewrite, not persist
+        .filter(when(col(value.name) < 0,
+            raise_error(concat(
+              lit(s"$table folds a negative ${value.name} — double "),
+              lit("retraction or retraction of a never-appended doc"))))
+          .otherwise(col(value.name)) =!= 0)
+        .withColumn("batch_id", lit(parts.max)),
+      WholeTable,
+      // watermark + cadence cursor + base marker + base mass ride the
+      // swap atomically: the fold subsumes a compaction, and everything
+      // now lives in the single base partition — the run level is consumed
+      props = Map(FoldedThroughProperty -> maxBatch,
+        CompactedAtProperty -> maxBatch, BaseAtProperty -> maxBatch),
+      dropProps = Set(RunAtProperty),
+      countAs = Some(BaseMassProperty),
+      // the aggregate on the bucket keys keeps the bucketed scan and runs
+      // exchange-free on it; the scan pin would force the shuffle
+      pinBucketedScanOff = false)
   }
 
   /** The O(run + delta) half of [[tieredFold]]: fold (old run ∪ fresh)
     * into one new run partition at `batch_id = max(fresh)` without
-    * touching the base partition. See [[FoldJournalProperty]] for the
-    * crash protocol; `injectCrashAtStep` is a ChaosSpec failpoint
-    * (1 = after the side table, before the journal; 2 = after the
-    * journal, before any partition moves; 3 = mid-swap, after the
-    * source partitions dropped but before the folded run lands). */
-  private def runLevelFold(spark: SparkSession, table: String,
-                           runAt: Option[Long], fresh: Seq[Long],
-                           injectCrashAtStep: Int): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, sum}
-    val (keys, value) = additiveLayout(spark, table)
-    val srcIds = runAt.toSeq ++ fresh
-    val newRunId = fresh.max
-    val side = s"${table}_runfold"
-    dropTable(spark, side)
-    FoldEvents.record(table, "run-fold", srcIds.size)
-    // fold the run + fresh partitions only — the scan prunes to those
-    // directories, the groupBy runs on the bucketed scan (exchange-free
-    // on the index side), base files are never opened. The side table
-    // mirrors the TARGET's resolved column order (data cols, then the
-    // partition col) so the later positional insertInto cannot mis-map.
-    val schemaOrder = spark.table(table).columns.toSeq
-    spark.table(table).filter(col("batch_id").isin(srcIds: _*))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col(value.name)).cast(value.dataType).as(value.name))
-      // zeros drop (fully cancelled inside the run); negatives STAY —
-      // they are pending cancellations against base-resident keys
-      .filter(col(value.name) =!= 0)
-      .withColumn("batch_id", lit(newRunId))
-      .select(schemaOrder.map(col): _*)
-      .write.format("parquet").saveAsTable(side)
-    def failpoint(step: Int): Unit =
-      if (injectCrashAtStep == step)
-        throw new IllegalStateException(s"injected crash at run-fold step $step")
-    failpoint(1)
-    // one metastore op makes the swap REDOABLE before anything moves
-    stampProperties(spark, table, Map(
-      FoldJournalProperty -> s"$newRunId|${srcIds.mkString(",")}"))
-    failpoint(2)
-    applyRunFoldJournal(spark, table, injectCrashAtStep)
+    * touching the base partition. */
+  private def runFold(spark: SparkSession, table: String, meta: CatalogTable,
+                      runAt: Option[Long], fresh: Seq[Long]): Unit = {
+    val (keys, value) = additiveLayout(table, meta)
+    val sources = runAt.toSeq ++ fresh
+    FoldEvents.record(table, "run-fold", sources.size)
+    // the scan prunes to the run + fresh directories and the groupBy runs
+    // on the bucketed scan; base files are never opened
+    rewrite(spark, table, meta,
+      keySums(spark.table(table).filter(col("batch_id").isin(sources: _*)),
+        keys, value)
+        // zeros drop (fully cancelled inside the run); negatives STAY —
+        // they are pending cancellations against base-resident keys
+        .filter(col(value.name) =!= 0)
+        .withColumn("batch_id", lit(fresh.max)),
+      RunFold(fresh.max, sources))
   }
 
-  /** Re-apply a pending run-fold journal (no-op without one). Called by
-    * [[repairCompaction]] so every probe/maintenance entry point heals
-    * a mid-swap crash before reading the partition set. Idempotent:
-    * partition drops ignore absences, the landing overwrites exactly
-    * its own partition, property stamps re-stamp the same values. */
-  def repairRunFold(spark: SparkSession, table: String): Unit = {
-    val cat = spark.sessionState.catalog
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    if (!cat.tableExists(ident)) return
-    if (cat.getTableMetadata(ident).properties.contains(FoldJournalProperty))
-      applyRunFoldJournal(spark, table, injectCrashAtStep = 0)
-    else {
-      // a side table with NO journal is a pre-journal crash leftover:
-      // the main table is untouched, the next fold rebuilds it
-      val side = s"${table}_runfold"
-      if (cat.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(side)))
-        dropTable(spark, side)
+  private val BackupSuffix = "_precompact"
+  private val SwapSideSuffix = "_compacting"
+  private val RunSideSuffix = "_runfold"
+
+  /** How a [[rewrite]]'s side table replaces the live rows; `side` is the
+    * side table's name suffix. */
+  private sealed abstract class Install(val side: String)
+  /** The whole table, by the two-name swap: live table renamed to
+    * `<table>_precompact`, side table renamed into its place, backup
+    * dropped last — the original's data files are never destroyed until
+    * the replacement is live under the real name. */
+  private case object WholeTable extends Install(SwapSideSuffix)
+  /** The `sources` partitions, by drop-then-land of the side table's one
+    * partition at `runId` (the run-level fold). */
+  private final case class RunFold(runId: Long, sources: Seq[Long])
+      extends Install(RunSideSuffix) {
+    def journal: String = s"$runId|${sources.mkString(",")}"
+  }
+
+  /** THE REWRITE PROTOCOL every index rewrite goes through — compaction,
+    * purge, base merge and run fold — as a fixed order of named steps:
+    *
+    *  1. `write-side`: the replacement lands in a side table; the live
+    *     table is untouched.
+    *  2. `stamp`: what makes the rest redoable goes durable BEFORE any
+    *     rename or drop — for a whole-table swap the side table's carried
+    *     `graft.*` properties plus [[NeedsRecoverProperty]], for a run
+    *     fold the [[FoldJournalProperty]] on the live table.
+    *  3. install: `rename-to-backup` + `rename-into-place` (whole
+    *     table), or `drop-sources` + `land` + `advance-markers` (run
+    *     fold).
+    *  4. `recover-partitions` (partitioned whole-table swap).
+    *  5. `clear-stamp`.
+    *  6. `drop-leftover`: the backup, or the run fold's side table.
+    *
+    * Each step is one catalog or filesystem mutation and replaying any of
+    * them is idempotent; [[repairCompaction]] resumes — or, between the
+    * two renames, rolls back — whatever prefix a crash left durable, so
+    * no kill point loses data or exposes a half-installed table. The
+    * caller has repaired `table` and fetched `meta`. */
+  private def rewrite(spark: SparkSession, table: String, meta: CatalogTable,
+                      replacement: DataFrame, install: Install,
+                      props: Map[String, String] = Map.empty,
+                      dropProps: Set[String] = Set.empty,
+                      countAs: Option[String] = None,
+                      pinBucketedScanOff: Boolean = true): Unit = {
+    val side = table + install.side
+    step(table, "write-side") {
+      dropTable(spark, side)
+      install match {
+        case WholeTable =>
+          writeLayout(spark, replacement, table, side, meta, pinBucketedScanOff)
+        case _: RunFold =>
+          // mirror the target's resolved column order (data cols, then the
+          // partition col) so the positional insertInto of `land` cannot
+          // mis-map
+          replacement.select(spark.table(table).columns.toSeq.map(col): _*)
+            .write.format("parquet").saveAsTable(side)
+      }
+    }
+    install match {
+      case WholeTable =>
+        val partitioned = meta.partitionColumnNames.nonEmpty
+        // carry graft.* table properties (kind and geometry stamps)
+        // through the rewrite in one ALTER — saveAsTable starts from a
+        // blank property map, and losing the kind stamp would re-open
+        // requireKind's blind spot after every compaction
+        val stamps = meta.properties.filter(_._1.startsWith("graft.")) --
+          dropProps ++ props ++
+          countAs.map(_ -> spark.table(side).count().toString) ++
+          (if (partitioned) Some(NeedsRecoverProperty -> "true") else None)
+        step(table, "stamp")(stampProperties(spark, side, stamps))
+        step(table, "rename-to-backup")(
+          spark.sql(s"ALTER TABLE $table RENAME TO ${table + BackupSuffix}"))
+        renameIntoPlace(spark, table, side, partitioned,
+          leftover = table + BackupSuffix)
+      case fold: RunFold =>
+        step(table, "stamp")(stampProperties(spark, table,
+          Map(FoldJournalProperty -> fold.journal)))
+        replayRunFold(spark, table, fold.journal)
     }
   }
 
-  private def applyRunFoldJournal(spark: SparkSession, table: String,
-                                  injectCrashAtStep: Int): Unit = {
-    val cat = spark.sessionState.catalog
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    val journal = cat.getTableMetadata(ident).properties
-      .get(FoldJournalProperty).getOrElse(return)
-    val Array(newRunIdS, dropS) = journal.split('|')
-    val newRunId = newRunIdS.toLong
-    val dropIds = dropS.split(',').map(_.trim).filter(_.nonEmpty).map(_.toLong)
-    val side = s"${table}_runfold"
-    require(cat.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(side)),
-      s"$table carries a run-fold journal but $side is missing — the " +
-        "journal is only ever stamped after the side table committed; " +
-        "this table was tampered with outside the maintenance protocol")
-    // 1. drop the consumed partitions (old run + fresh), data included;
-    //    ONE partition listing up front (ADVICE r20: listing inside the
-    //    filter was O(n^2) metastore calls on a wide journal)
-    val existing = cat.listPartitions(ident).map(_.spec).toSet
-    val specs = dropIds.toSeq.map(id => Map("batch_id" -> id.toString))
-      .filter(existing)
-    if (specs.nonEmpty)
-      cat.dropPartitions(ident, specs, ignoreIfNotExists = true,
-        purge = false, retainData = false)
-    if (injectCrashAtStep == 3)
-      throw new IllegalStateException("injected crash at run-fold step 3")
-    // 2. land the folded run as its own partition (idempotent replay).
-    //    When run + fresh fully cancelled, the fold's output is EMPTY:
-    //    a dynamic-partition overwrite of an empty frame writes no
-    //    partition, so stamping RunAtProperty would leave a run marker
-    //    pointing at a partition that does not exist — violating the
-    //    documented "RUN: one bounded partition at batch_id = runAt"
-    //    invariant (ADVICE r20). The watermark/cadence cursors still
-    //    advance; the run marker is UNSET instead of stamped.
-    val sideEmpty = spark.table(side).isEmpty
-    if (!sideEmpty) overwritePartitions(spark.table(side), table)
-    // 3. advance the level markers + watermark, then clear the journal;
-    //    a crash between the two replays this method harmlessly
-    stampProperties(spark, table, Map(
-      FoldedThroughProperty -> newRunId.toString,
-      CompactedAtProperty -> newRunId.toString) ++
-      (if (sideEmpty) Map.empty[String, String]
-       else Map(RunAtProperty -> newRunId.toString)))
-    val unsetProps =
-      if (sideEmpty) s"'$FoldJournalProperty', '$RunAtProperty'"
-      else s"'$FoldJournalProperty'"
-    spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES IF EXISTS " +
-      s"($unsetProps)")
-    dropTable(spark, side)
-    spark.catalog.refreshTable(table)
-  }
-
-  /** AUTO-FOLD CADENCE — [[maybeCompact]]'s shape for the additive-df
-    * families, with [[FoldedThroughProperty]] as the cursor: once
-    * `everyBatches` partials have landed above the watermark, run the
-    * TIERED fold (run-level in the common case, base merge when the
-    * run outgrows its bound — see [[tieredFold]]). Replaces (subsumes)
-    * the compaction cadence for these tables — a fold IS a compaction
-    * plus the zero-sum drop — so `runIndexMaintenance` branches on
-    * [[isAdditiveIndex]] rather than running both rewrites. Returns
-    * true when a fold ran. */
-  def maybeFold(spark: SparkSession, table: String,
-                everyBatches: Int = 4,
-                mergeFraction: Double = 0.25): Boolean = {
-    if (everyBatches <= 0) return false
-    countedMetaOption(spark, table) match {
-      case Some(meta) if meta.partitionColumnNames == Seq("batch_id") &&
-          meta.properties.get(KindProperty).exists(AdditiveKinds) =>
-        maybeFoldWith(spark, table, meta, everyBatches, mergeFraction)
-      case _ => false
-    }
-  }
-
-  private def maybeFoldWith(spark: SparkSession, table: String,
-                            meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-                            everyBatches: Int,
-                            mergeFraction: Double): Boolean = {
-    val folded = meta.properties.get(FoldedThroughProperty)
-      .flatMap(_.toLongOption).getOrElse(Long.MinValue)
-    val fresh = countedListPartitionNames(spark, table)
-      .flatMap(_.stripPrefix("batch_id=").toLongOption)
-      .count(_ > folded)
-    if (fresh < everyBatches) false
-    else { tieredFold(spark, table, mergeFraction); true }
-  }
-
-  private def rewriteBucketed(spark: SparkSession, table: String,
-                              transform: DataFrame => DataFrame,
-                              injectCrashAtSwapStep: Int,
-                              extraProps: Map[String, String] = Map.empty,
-                              pinBucketedScanOff: Boolean = true,
-                              dropProps: Set[String] = Set.empty): Int = {
-    repairCompaction(spark, table)
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
+  /** Write `df` into `side` with `meta`'s bucket spec and partition
+    * layout. */
+  private def writeLayout(spark: SparkSession, df: DataFrame, table: String,
+                          side: String, meta: CatalogTable,
+                          pinBucketedScanOff: Boolean): Unit = {
     val spec = meta.bucketSpec.getOrElse(
       throw new IllegalArgumentException(s"$table is not bucketed"))
     val keys = spec.bucketColumnNames
     val sorts = spec.sortColumnNames
-    val tmp = s"${table}_compacting"
-    dropTable(spark, tmp)
     // pin the bucketed scan ON for the rewrite: the explicit repartition
     // is elided against the scan's bucket partitioning (zero-shuffle
     // compaction — each task drains one bucket's file wave into one
@@ -895,26 +767,21 @@ object Bucketing {
     // then demote the scan to a plain file-split read
     // (DisableUnnecessaryBucketedScan sees no join/agg caring), leaving
     // rows bucket-misaligned across tasks — one file per (task, bucket)
-    // instead of one per bucket, silently re-fragmenting the table
-    // ...unless the transform itself aggregates on the bucket keys
-    // (pinBucketedScanOff = false, the foldBucketed path): there the
-    // aggregate makes the planner keep the bucketed scan, the agg runs
-    // exchange-free on it, and the pin would FORCE the shuffle it
-    // exists to prevent
+    // instead of one per bucket, silently re-fragmenting the table.
+    // A transform that aggregates on the bucket keys opts out
+    // (pinBucketedScanOff = false): the aggregate keeps the bucketed scan
+    // and the pin would FORCE the shuffle it exists to prevent
     val scanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prevScan = spark.conf.get(scanKey)
     try {
       if (pinBucketedScanOff) spark.conf.set(scanKey, "false")
-      // preserve a partition layout too (the streamed line-df index is
-      // partitionBy(batch_id) + bucketBy(h)): a rewrite that silently
+      // preserve a partition layout too (the streamed index families are
+      // partitionBy(batch_id) + bucketBy): a rewrite that silently
       // dropped the partition columns would not just lose directory
       // pruning — the NEXT dynamic-partition-overwrite append would see
       // an unpartitioned target and truncate the whole index
       val partCols = meta.partitionColumnNames
-      val writerBase = transform(spark.table(table))
-        .repartition(spec.numBuckets,
-          keys.map(org.apache.spark.sql.functions.col): _*)
-        .write
+      val writerBase = df.repartition(spec.numBuckets, keys.map(col): _*).write
       val writer =
         (if (partCols.isEmpty) writerBase else writerBase.partitionBy(partCols: _*))
           .bucketBy(spec.numBuckets, keys.head, keys.tail: _*)
@@ -923,181 +790,162 @@ object Bucketing {
       // sortBy rather than throwing NoSuchElementException on sorts.head
       (if (sorts.isEmpty) writer else writer.sortBy(sorts.head, sorts.tail: _*))
         .format("parquet")
-        .saveAsTable(tmp)
-      // carry graft.* table properties (the index-kind stamp) through
-      // the rewrite — saveAsTable starts from a blank property map, and
-      // losing the stamp would re-open requireKind's blind spot after
-      // every compaction. One combined ALTER: each statement is a
-      // metastore round-trip, and auto-compaction runs inside the
-      // timed maintenance loop.
-      // partitioned replacements additionally carry the needs-recover
-      // stamp INTO the swap: it goes live with the rename (whose
-      // post-rename partition locations are stale by construction) and
-      // is unset only after the RECOVER below completed — the O(1)
-      // signal repairCompaction's hot path reads instead of sweeping
-      // partition locations per batch (see NeedsRecoverProperty)
-      val props = meta.properties.filter(_._1.startsWith("graft."))
-        .filterNot { case (k, _) => dropProps(k) } ++ extraProps ++
-        (if (partCols.nonEmpty) Map(NeedsRecoverProperty -> "true")
-         else Map.empty[String, String])
-      if (props.nonEmpty)
-        spark.sql(s"ALTER TABLE $tmp SET TBLPROPERTIES (" +
-          props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
+        .saveAsTable(side)
     } finally spark.conf.set(scanKey, prevScan)
-    // two-name swap: original survives under _precompact until the
-    // compacted table is live under the real name.
-    // injectCrashAtSwapStep is a FAILPOINT for RecoverySpec only: 1
-    // kills in the only window where `table` does not resolve (between
-    // the two renames), 2 kills after the swap but before backup
-    // cleanup — the two states repairCompaction must handle
-    def failpoint(step: Int): Unit =
-      if (injectCrashAtSwapStep == step)
-        throw new IllegalStateException(s"injected crash at swap step $step")
-    val backup = s"${table}_precompact"
-    dropTable(spark, backup)
-    spark.sql(s"ALTER TABLE $table RENAME TO $backup")
-    failpoint(1)
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    // renaming a managed PARTITIONED table moves its directory but the
-    // catalog's per-partition locations still point at the old path —
-    // the table resolves yet every scan comes back empty. Re-sync them
-    // from the filesystem, then retire the needs-recover stamp: a crash
-    // anywhere between the rename and the unset (including MID-recover)
-    // leaves the stamp set, and repairCompaction re-runs the recover.
-    recoverPartitionsIfPartitioned(spark, table)
-    if (meta.partitionColumnNames.nonEmpty)
-      spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES IF EXISTS " +
-        s"('$NeedsRecoverProperty')")
-    failpoint(2)
-    dropTable(spark, backup) // partition-safe drop: never follows stale paths
-    dataFileCount(spark, table)
   }
 
-  /** Re-register a partitioned table's partition locations from the
-    * filesystem (no-op for unpartitioned tables). Needed after any
-    * ALTER TABLE RENAME of a managed partitioned table: the catalog
-    * keeps the old per-partition paths. */
-  def recoverPartitionsIfPartitioned(spark: SparkSession, table: String): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    if (meta.partitionColumnNames.nonEmpty) {
+  /** Install steps shared by a whole-table swap and its recovery: rename
+    * the (already stamped) `from` into place, re-sync a partitioned
+    * table's partition locations, drop `leftover`. */
+  private def renameIntoPlace(spark: SparkSession, table: String, from: String,
+                              partitioned: Boolean, leftover: String): Unit = {
+    step(table, "rename-into-place")(
+      spark.sql(s"ALTER TABLE $from RENAME TO $table"))
+    if (partitioned) recoverPartitions(spark, table)
+    // partition-safe drop: never follows the backup's stale paths
+    step(table, "drop-leftover")(dropTable(spark, leftover))
+  }
+
+  /** Re-register the partition locations from the filesystem, then retire
+    * the [[NeedsRecoverProperty]] stamp that demanded it. */
+  private def recoverPartitions(spark: SparkSession, table: String): Unit = {
+    step(table, "recover-partitions") {
       spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
       spark.catalog.refreshTable(table)
     }
+    step(table, "clear-stamp")(unsetProperties(spark, table,
+      Seq(NeedsRecoverProperty)))
   }
 
-  /** [[recoverPartitionsIfPartitioned]] gated on a METADATA-ONLY
-    * staleness check (optimization r21, the VERDICT-r20-item-3 doctrine
-    * applied to the repair path): the only event that strands stale
-    * partition locations is an ALTER TABLE RENAME, and its signature is
-    * precise — a registered partition whose location does not live
-    * under the table's current location. Checking that reads the
-    * session catalog only; `RECOVER PARTITIONS` by contrast walks the
-    * table's whole directory tree, and [[repairCompaction]] runs on
-    * EVERY maintenance/probe entry — per micro-batch, per table — so
-    * the unconditional recover was an O(partitions) filesystem pass per
-    * batch at 100 TB for a state that only ever exists in a crash
-    * window. A table with no registered partitions recovers
-    * unconditionally (the one shape the location test cannot see:
-    * catalog lost its entries but the directories exist). */
-  def recoverPartitionsIfStale(spark: SparkSession, table: String): Unit = {
+  /** Install steps of a run fold from its journal — run right after the
+    * stamp, and again by [[repairCompaction]] for any pending journal.
+    * Idempotent: partition drops skip absences, the landing overwrites
+    * exactly its own partition, the marker stamps re-stamp the same
+    * values, and the side table is dropped only after the journal is
+    * cleared. */
+  private def replayRunFold(spark: SparkSession, table: String,
+                            journal: String): Unit = {
     val cat = spark.sessionState.catalog
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    val meta = cat.getTableMetadata(ident)
-    if (meta.partitionColumnNames.nonEmpty) {
-      // compare PATH components, not raw URI strings: the catalog
-      // renders the table location and its partition locations with
-      // different scheme spellings (file:/ vs file:///), so a naive
-      // string prefix test misreads every healthy table as stale and
-      // the gate degenerates to recover-always
-      def pathOf(u: java.net.URI): String =
-        new org.apache.hadoop.fs.Path(u).toUri.getPath.stripSuffix("/")
-      val root = pathOf(meta.location) + "/"
-      val parts = cat.listPartitions(ident)
-      // zero registered partitions is ambiguous (ADVICE r21): a table
-      // whose catalog LOST its entries must recover, but a legitimately
-      // EMPTY partitioned table (created, no batches landed yet) must
-      // not re-walk its directory tree on every call. One single-level
-      // listing of the table root disambiguates: partition-style
-      // (`col=value`) subdirectories with no catalog entries = lost
-      // entries; no such directories = genuinely empty, skip.
-      def dirHasPartitionDirs: Boolean = {
-        val rootPath = new org.apache.hadoop.fs.Path(meta.location)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.exists(rootPath) && fs.listStatus(rootPath).exists(st =>
-          st.isDirectory && st.getPath.getName.contains("="))
-      }
-      val stale =
-        if (parts.isEmpty) dirHasPartitionDirs
-        else parts.exists(p => !(pathOf(p.location) + "/").startsWith(root))
-      if (stale) {
-        spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-        spark.catalog.refreshTable(table)
-      }
+    val Array(runId, sourcesS) = journal.split('|')
+    val sources = sourcesS.split(',').map(_.trim).filter(_.nonEmpty)
+    val side = table + RunSideSuffix
+    require(cat.tableExists(identOf(side)),
+      s"$table carries a run-fold journal but $side is missing — the " +
+        "journal is only ever stamped after the side table committed; " +
+        "this table was tampered with outside the maintenance protocol")
+    step(table, "drop-sources") {
+      // ONE partition listing up front, not one per journal entry
+      val existing = cat.listPartitions(identOf(table)).map(_.spec).toSet
+      val specs = sources.toSeq.map(id => Map("batch_id" -> id))
+        .filter(existing)
+      if (specs.nonEmpty)
+        cat.dropPartitions(identOf(table), specs, ignoreIfNotExists = true,
+          purge = false, retainData = false)
     }
+    // when run + fresh fully cancelled, the side table is EMPTY and a
+    // dynamic-partition overwrite of an empty frame writes no partition:
+    // the watermark and cadence cursor still advance, but the run marker
+    // is UNSET rather than pointed at a partition that does not exist
+    val landed = !spark.table(side).isEmpty
+    step(table, "land")(if (landed) overwritePartitions(spark.table(side), table))
+    step(table, "advance-markers")(stampProperties(spark, table,
+      Map(FoldedThroughProperty -> runId, CompactedAtProperty -> runId) ++
+        (if (landed) Map(RunAtProperty -> runId) else Map.empty)))
+    step(table, "clear-stamp")(unsetProperties(spark, table,
+      FoldJournalProperty +: (if (landed) Nil else Seq(RunAtProperty))))
+    step(table, "drop-leftover")(dropTable(spark, side))
+    spark.catalog.refreshTable(table)
   }
 
-  /** Repair an interrupted [[compactBucketed]] swap so `table` resolves
-    * again. Exactly one of three states can follow a mid-swap crash:
-    * (a) `table` exists — the swap either never started or completed;
-    * drop any stragglers; (b) `table` is gone but the `_precompact`
-    * backup exists (killed between the two renames) — restore the
-    * backup, which is ALWAYS safe because the backup is the complete
-    * pre-compaction table and compaction is an idempotent rewrite;
-    * (c) only the `_compacting` table exists (cannot happen in this
-    * protocol's ordering, but a legacy drop-then-rename crash leaves
-    * it) — promote it, since it was fully written before any rename
-    * began. Returns true if `table` resolves on exit. */
+  private def unsetProperties(spark: SparkSession, table: String,
+                              keys: Seq[String]): Unit =
+    spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES IF EXISTS (" +
+      keys.map(k => s"'$k'").mkString(", ") + ")")
+
+  /** THE RECOVER ENTRY POINT, and the only one: every rewrite, append
+    * and probe runs it first, so whatever prefix of [[rewrite]]'s steps
+    * a crash left durable is completed or rolled back before anything
+    * reads the table. One metadata fetch decides on the hot path:
+    *
+    *  - `table` resolves: drop a straggler backup (a kill after the swap,
+    *    before its cleanup — one existence check; a probe-only workload
+    *    would otherwise carry the doubled storage forever), re-run the
+    *    partition recover while [[NeedsRecoverProperty]] is set, and
+    *    replay a pending [[FoldJournalProperty]].
+    *  - `table` is gone (a kill between the two renames): restore the
+    *    `_precompact` backup — always safe, it is the complete
+    *    pre-rewrite table — or else promote the `_compacting` side, which
+    *    was complete before any rename began. Like every rename of the
+    *    protocol, the restore or promote is stamped with
+    *    [[NeedsRecoverProperty]] first, so a kill between it and the
+    *    partition recover leaves a table the next call recovers, never
+    *    one whose partitions silently read empty.
+    *
+    * Its own mutations are named steps too, so a crash inside recovery is
+    * resumed by the next call. Returns true if `table` resolves on exit. */
   def repairCompaction(spark: SparkSession, table: String): Boolean = {
-    val backup = s"${table}_precompact"
-    val tmp = s"${table}_compacting"
+    val backup = table + BackupSuffix
+    val side = table + SwapSideSuffix
     countedMetaOption(spark, table) match {
       case Some(meta) =>
-        // HOT path — every maintenance batch and probe routes through
-        // here. ONE metadata fetch decides everything (optimization
-        // r22, guide §6): the needs-recover stamp replaces the r21
-        // location-signature sweep (which shipped every partition's
-        // metadata from the metastore per call) AND catches the
-        // mid-RECOVER crash the sweep could not see; the run-fold
-        // journal is a property of the same snapshot. A straggler
-        // backup (crash after the swap, before its cleanup) still
-        // costs one existence check — it must be dropped here, not
-        // left until the next rewrite, or a probe-only workload would
-        // carry the doubled storage forever.
-        if (countedExists(spark, backup)) dropTable(spark, backup)
-        if (meta.properties.contains(NeedsRecoverProperty)) {
-          spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-          spark.catalog.refreshTable(table)
-          spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES IF EXISTS " +
-            s"('$NeedsRecoverProperty')")
-        }
-        // heal a mid-swap run-fold too (the tiered fold's journal) — no
-        // reader can see a half-swapped partition set. The journal flag
-        // comes from the fetched snapshot; a no-journal leftover side
-        // table needs no action here (the next fold drops and rebuilds
-        // it — see repairRunFold's else branch, kept for the explicit
-        // recovery entry points).
-        if (meta.properties.contains(FoldJournalProperty))
-          applyRunFoldJournal(spark, table, injectCrashAtStep = 0)
+        if (countedExists(spark, backup))
+          step(table, "drop-leftover")(dropTable(spark, backup))
+        if (meta.properties.contains(NeedsRecoverProperty))
+          recoverPartitions(spark, table)
+        meta.properties.get(FoldJournalProperty)
+          .foreach(replayRunFold(spark, table, _))
         true
       case None =>
-        if (countedExists(spark, backup)) {
-          spark.sql(s"ALTER TABLE $backup RENAME TO $table")
-          if (countedExists(spark, tmp)) dropTable(spark, tmp)
-          recoverPartitionsIfPartitioned(spark, table)
-          spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES IF EXISTS " +
-            s"('$NeedsRecoverProperty')")
-          repairRunFold(spark, table)
-          true
-        } else if (countedExists(spark, tmp)) {
-          spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-          recoverPartitionsIfPartitioned(spark, table)
-          spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES IF EXISTS " +
-            s"('$NeedsRecoverProperty')")
-          repairRunFold(spark, table)
-          true
-        } else false
+        Seq(backup -> side, side -> backup)
+          .find { case (from, _) => countedExists(spark, from) } match {
+          case Some((from, leftover)) =>
+            val partitioned =
+              countedMeta(spark, from).partitionColumnNames.nonEmpty
+            if (partitioned)
+              step(table, "stamp")(stampProperties(spark, from,
+                Map(NeedsRecoverProperty -> "true")))
+            renameIntoPlace(spark, table, from, partitioned, leftover)
+            true
+          case None => false
+        }
     }
+  }
+
+  /** Thrown by an armed failpoint: the state a kill just before `step`
+    * leaves behind. */
+  private[graft] final class InjectedCrash(step: String)
+      extends IllegalStateException(s"injected crash before step $step")
+
+  private val stepHooks =
+    new java.util.concurrent.ConcurrentHashMap[String, String => Unit]()
+
+  /** Crash-test hook: run `body` with `hook` called on the name of every
+    * protocol step reached on `table`, just before the step's mutation.
+    * A hook that throws is a kill at that step; one that records traces
+    * the path a rewrite or recovery takes. */
+  private[graft] def withStepHook[T](table: String)(hook: String => Unit)(
+      body: => T): T = {
+    val key = table.toLowerCase
+    stepHooks.put(key, hook)
+    try body finally stepHooks.remove(key)
+  }
+
+  /** Arm the failpoint of `step` on `table` for the scope of `body`: the
+    * first time that step is reached it throws [[InjectedCrash]] instead
+    * of mutating. One-shot, so the recovery that follows runs unarmed
+    * unless a test arms it. */
+  private[graft] def withFailpoint[T](table: String, step: String)(body: => T): T = {
+    var armed = true
+    withStepHook(table) { reached =>
+      if (armed && reached == step) { armed = false; throw new InjectedCrash(step) }
+    }(body)
+  }
+
+  /** One named mutation of the rewrite protocol. */
+  private def step(table: String, name: String)(mutation: => Unit): Unit = {
+    if (!stepHooks.isEmpty)
+      Option(stepHooks.get(table.toLowerCase)).foreach(_(name))
+    mutation
   }
 
   /** Total bytes of a managed table's parquet data files — the probe

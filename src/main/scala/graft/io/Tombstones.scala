@@ -197,15 +197,15 @@ object Tombstones {
                              everyBatches: Int = PurgeEveryDefault)
 
   /** Default purge cadence (pending retraction BATCHES before a fold),
-    * mirroring [[Bucketing.maybeCompact]]'s shape: a purge rewrites the
-    * whole index (O(index/N) amortized at cadence N), so it runs every
-    * few retraction batches, not per batch — while the unpurged window
-    * stays bounded at `everyBatches` batches' worth of broadcast gate. */
-  val PurgeEveryDefault: Int =
-    sys.env.get("SPARK_GRAFT_PURGE_EVERY").flatMap(_.toIntOption).getOrElse(4)
+    * mirroring [[Bucketing.maintainIndex]]'s compaction cadence: a purge
+    * rewrites the whole index (O(index/N) amortized at cadence N), so it
+    * runs every few retraction batches, not per batch — while the
+    * unpurged window stays bounded at `everyBatches` batches' worth of
+    * broadcast gate. */
+  val PurgeEveryDefault: Int = 4
 
   /** AUTO-PURGE CADENCE — the tombstone analogue of
-    * [[Bucketing.maybeCompact]], closing the one unbounded-growth path
+    * [[Bucketing.maintainIndex]]'s compaction cadence, closing the one unbounded-growth path
     * left in the index lifecycle (VERDICT r17 item 1): without it,
     * steady right-to-be-forgotten traffic grows the probe-side
     * broadcast gate and the tombstone table without bound, and physical

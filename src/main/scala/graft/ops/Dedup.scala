@@ -40,12 +40,25 @@ object Dedup {
   // order-preserving, so the k permutations elected the same argmin and
   // the agreement estimator deviated by many sigma on real pairs);
   // constants from a fixed seed for determinism.
-  private val MinhashP = (1L << 61) - 1
-  private def coeffs(k: Int, seed: Long): (Seq[Long], Seq[Long]) = {
+  private[graft] val MinhashP = (1L << 61) - 1
+
+  /** The k affine coefficients (a_i in [1, P-1], b_i in [0, P-2]) of the
+    * MinHash family, drawn from `seed` — the ONE copy shared by
+    * [[minhashSignature]] and the SQL `minhash_sig` builder, whose
+    * signatures must be bit-equal or a probe through one surface never
+    * matches an index built through the other. */
+  private[graft] def minhashCoeffs(k: Int, seed: Long = 42L)
+      : (Array[Long], Array[Long]) = {
     val rnd = new java.util.Random(seed)
-    def draw() = math.abs(rnd.nextLong()) % (MinhashP - 1)
-    (Seq.fill(k)(draw() + 1), Seq.fill(k)(draw()))
+    val a = Array.fill(k)(coeffDraw(rnd.nextLong()) + 1)
+    (a, Array.fill(k)(coeffDraw(rnd.nextLong())))
   }
+
+  /** A raw 64-bit draw reduced into [0, P-2]. `floorMod` keeps it in
+    * range at `Long.MinValue` (where `math.abs` stays negative) and
+    * equals `%` on every other draw, so no seeded coefficient moves. */
+  private[graft] def coeffDraw(v: Long): Long =
+    Math.floorMod(math.abs(v), MinhashP - 1)
 
   /** Per-document MinHash signature (array of k minima) over word
     * n-gram shingles — native expression, one tight loop per document
@@ -53,9 +66,9 @@ object Dedup {
     * Narrow, no shuffle.
     */
   def minhashSignature(text: Column, k: Int = 64, shingleN: Int = 2): Column = {
-    val (a, b) = coeffs(k, seed = 42L)
+    val (a, b) = minhashCoeffs(k)
     graft.functions.TextFunctions.minhash_sig(
-      TextAnalysis.tokens(text), shingleN, a.toArray, b.toArray, MinhashP)
+      TextAnalysis.tokens(text), shingleN, a, b, MinhashP)
   }
 
   /** LSH candidate pairs: signatures banded (bands x rowsPerBand = k);

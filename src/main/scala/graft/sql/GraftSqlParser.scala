@@ -460,14 +460,14 @@ case class CompactIndexCommand(table: String) extends LeafRunnableCommand {
         spark.catalog.tableExists(s"${table}_precompact") ||
         spark.catalog.tableExists(s"${table}_compacting"),
       s"$table does not exist — nothing to compact")
-    // repair BEFORE deciding fold-vs-compact (ADVICE r19): after a
-    // crash that left only _precompact/_compacting (states the guard
-    // above explicitly accepts), the main name is missing and
-    // isAdditiveIndex would read false — an additive-df table would get
-    // an identity compaction instead of the requested fold, leaving
-    // cancelled (+df, −df) pairs on disk until a SECOND compact
+    // repair BEFORE reading the kind: after a crash that left only
+    // _precompact/_compacting (states the guard above accepts), the main
+    // name does not resolve until the repair restores it — deciding
+    // first would give an additive-df table an identity compaction
+    // instead of the requested fold
     graft.io.Bucketing.repairCompaction(spark, table)
-    val additive = graft.io.Bucketing.isAdditiveIndex(spark, table)
+    val additive = graft.io.Bucketing.tableKind(spark, table)
+      .exists(graft.io.Bucketing.AdditiveKinds)
     val files =
       if (additive) graft.io.Bucketing.foldBucketed(spark, table)
       else graft.io.Bucketing.compactBucketed(spark, table)

@@ -130,7 +130,7 @@ object ProbeScaling {
         val t = tbl("ps_q79_shdf")
         graft.io.Bucketing.dropTable(spark, t)
         // four doc-disjoint appended batches play the streamed history;
-        // the default auto-compaction cadence (maybeCompact, every 4
+        // the default auto-compaction cadence (maintainIndex, every 4
         // batches — exactly what runIndexMaintenance now applies per
         // batch) fires once, so the probe measures the POST-POLICY
         // layout: flat-at-80x must hold with no manual compaction step
@@ -138,7 +138,7 @@ object ProbeScaling {
           graft.ops.Dedup.appendShingleDfPartial(spark,
             docs(sf).filter(col("doc_id") % 5 =!= 0)
               .filter(pmod(col("doc_id"), lit(4)) === i), t, i.toLong)
-          graft.io.Bucketing.maybeCompact(spark, t)
+          graft.io.Bucketing.maintainIndex(spark, t)
         }
         (spark.table(t).count(), () =>
           graft.ops.Dedup.noveltyIncremental(spark, deltaDocs, t))
@@ -166,7 +166,7 @@ object ProbeScaling {
         (0 until 4).foreach { b =>
           graft.ops.Dedup.appendWindowDfPartial(spark,
             corpus.filter(pmod(col("doc_id"), lit(4)) === b), t, b.toLong, k = 8)
-          graft.io.Bucketing.maybeCompact(spark, t)
+          graft.io.Bucketing.maintainIndex(spark, t)
         }
         (spark.table(t).count(), () =>
           graft.ops.Dedup.substringRemoveIncremental(spark, deltaDocs, t, k = 8))
@@ -214,7 +214,7 @@ object ProbeScaling {
         (0 until 4).foreach { b =>
           graft.ops.TextAnalysis.appendLineDfPartial(spark,
             corpus.filter(pmod(col("doc_id"), lit(4)) === b), t, b.toLong)
-          graft.io.Bucketing.maybeCompact(spark, t)
+          graft.io.Bucketing.maintainIndex(spark, t)
         }
         (spark.table(t).count(), () =>
           graft.ops.TextAnalysis.lineDedupIncremental(spark, deltaDocs, t))
@@ -228,7 +228,7 @@ object ProbeScaling {
           graft.ops.Similarity.appendVectorIndexPartial(spark,
             corpus.filter(pmod(col("vec_id"), lit(4)) === b), bands, vecs,
             b.toLong, tables = 8, bitsPerTable = bits)
-          Seq(bands, vecs).foreach(graft.io.Bucketing.maybeCompact(spark, _))
+          Seq(bands, vecs).foreach(graft.io.Bucketing.maintainIndex(spark, _))
         }
         (spark.table(vecs).count(), () =>
           graft.ops.Similarity.incrementalCosineVerdictsAgainstIndex(spark,
@@ -241,7 +241,7 @@ object ProbeScaling {
         (0 until 4).foreach { b =>
           graft.ops.TextAnalysis.appendBenchGramPartial(spark,
             bench.filter(pmod(col("doc_id"), lit(4)) === b), t, b.toLong)
-          graft.io.Bucketing.maybeCompact(spark, t)
+          graft.io.Bucketing.maintainIndex(spark, t)
         }
         (spark.table(t).count(), () =>
           graft.ops.TextAnalysis.decontaminationAgainstIndex(spark, deltaTrain, t))
@@ -254,7 +254,7 @@ object ProbeScaling {
           graft.ops.Dedup.appendCorpusIndexPartial(spark,
             corpus.filter(pmod(col("doc_id"), lit(4)) === b), bands, sigs,
             b.toLong)
-          Seq(bands, sigs).foreach(graft.io.Bucketing.maybeCompact(spark, _))
+          Seq(bands, sigs).foreach(graft.io.Bucketing.maintainIndex(spark, _))
         }
         (spark.table(sigs).count(), () =>
           graft.ops.Dedup.incrementalVerdictsAgainstIndex(spark, deltaDocs,
@@ -269,7 +269,7 @@ object ProbeScaling {
           graft.ops.Similarity.appendIvfAssignPartial(spark,
             emb(sf).filter(pmod(col("vec_id"), lit(4)) === b), cents, t,
             b.toLong)
-          graft.io.Bucketing.maybeCompact(spark, t)
+          graft.io.Bucketing.maintainIndex(spark, t)
         }
         (spark.table(t).count(), () =>
           graft.ops.Similarity.ivfTopKAgainstIndex(spark, queryEmb, t))

@@ -127,44 +127,4 @@ class BucketingSpec extends SparkSpec {
     assert(graft.io.Bucketing.tableKind(spark, tbl) === Some("line-df"))
     graft.io.Bucketing.dropTable(spark, tbl)
   }
-
-  test("recoverPartitionsIfStale: metadata-gated — no-op when healthy, heals a post-rename layout") {
-    import spark.implicits._
-    val tbl = "graft_stalerec_tbl"
-    val other = "graft_stalerec_renamed"
-    Seq(tbl, other).foreach(graft.io.Bucketing.dropTable(spark, _))
-    Seq((1L, 10L, 0L), (2L, 20L, 0L), (3L, 30L, 1L))
-      .toDF("h", "df_corpus", "batch_id")
-      .write.partitionBy("batch_id").bucketBy(2, "h").sortBy("h")
-      .format("parquet").saveAsTable(tbl)
-    val cat = spark.sessionState.catalog
-    def ident(t: String) = org.apache.spark.sql.catalyst.TableIdentifier(t)
-    def partLocs(t: String) = cat.listPartitions(ident(t)).map(_.location.toString)
-    // healthy table: every partition location under the table root, and
-    // the gated recover must leave the registered locations IDENTICAL
-    // (it took the metadata-only branch; an unconditional recover would
-    // also be a no-op in VALUE, so additionally pin the staleness
-    // detector itself on both shapes)
-    def pathOf(u: String): String =
-      new org.apache.hadoop.fs.Path(java.net.URI.create(u)).toUri.getPath.stripSuffix("/")
-    val rootBefore = pathOf(cat.getTableMetadata(ident(tbl)).location.toString)
-    assert(partLocs(tbl).forall(l => (pathOf(l) + "/").startsWith(rootBefore + "/")))
-    val before = partLocs(tbl).sorted
-    graft.io.Bucketing.recoverPartitionsIfStale(spark, tbl)
-    assert(partLocs(tbl).sorted === before, "healthy layout must be untouched")
-    // strand stale locations exactly the way a crash inside the swap
-    // does: a raw RENAME moves the directory but not the per-partition
-    // catalog paths
-    spark.sql(s"ALTER TABLE $tbl RENAME TO $other")
-    val rootAfter = pathOf(cat.getTableMetadata(ident(other)).location.toString)
-    assert(partLocs(other).exists(l => !(pathOf(l) + "/").startsWith(rootAfter + "/")),
-      "rename must strand stale partition locations for this test to mean anything")
-    assert(spark.table(other).count() === 0L,
-      "stale partition paths read as empty — the failure the recover heals")
-    graft.io.Bucketing.recoverPartitionsIfStale(spark, other)
-    assert(partLocs(other).forall(l => (pathOf(l) + "/").startsWith(rootAfter + "/")),
-      "stale layout must be re-registered under the current root")
-    assert(spark.table(other).count() === 3L, "recovered table must read fully")
-    graft.io.Bucketing.dropTable(spark, other)
-  }
 }

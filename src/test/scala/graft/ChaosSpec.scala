@@ -33,6 +33,12 @@ class ChaosSpec extends SparkSpec {
 
   private val Seeds = 24
 
+  /** The two whole-table swap crash points the seeded lifecycles draw:
+    * 1 = between the two renames (the table name does not resolve),
+    * 2 = after the swap, before the backup is dropped. */
+  private def swapCrash(crashStep: Int): String =
+    if (crashStep == 1) "rename-into-place" else "drop-leftover"
+
   // small corpus with deliberate line overlap: shared boilerplate lines
   // (df > 1 across docs and batches) plus per-doc unique lines
   private lazy val corpus = (1L to 20L).map { id =>
@@ -79,7 +85,9 @@ class ChaosSpec extends SparkSpec {
         if (crashStep == 0) Bucketing.compactBucketed(spark, tbl)
         else {
           intercept[IllegalStateException] {
-            Bucketing.compactBucketed(spark, tbl, injectCrashAtSwapStep = crashStep)
+            Bucketing.withFailpoint(tbl, swapCrash(crashStep)) {
+              Bucketing.compactBucketed(spark, tbl)
+            }
           }
           // sometimes repair promptly, sometimes leave the torn swap for
           // the next maintenance/append/probe entry to repair
@@ -168,8 +176,9 @@ class ChaosSpec extends SparkSpec {
           if (crashStep == 0) Bucketing.compactBucketed(spark, tbl)
           else {
             intercept[IllegalStateException] {
-              Bucketing.compactBucketed(spark, tbl,
-                injectCrashAtSwapStep = crashStep)
+              Bucketing.withFailpoint(tbl, swapCrash(crashStep)) {
+                Bucketing.compactBucketed(spark, tbl)
+              }
             }
             if (rnd.nextBoolean()) Bucketing.repairCompaction(spark, tbl)
           }
@@ -244,8 +253,9 @@ class ChaosSpec extends SparkSpec {
           if (crashStep == 0) Bucketing.compactBucketed(spark, tbl)
           else {
             intercept[IllegalStateException] {
-              Bucketing.compactBucketed(spark, tbl,
-                injectCrashAtSwapStep = crashStep)
+              Bucketing.withFailpoint(tbl, swapCrash(crashStep)) {
+                Bucketing.compactBucketed(spark, tbl)
+              }
             }
             if (rnd.nextBoolean()) Bucketing.repairCompaction(spark, tbl)
           }
@@ -316,8 +326,9 @@ class ChaosSpec extends SparkSpec {
           if (crashStep == 0) Bucketing.compactBucketed(spark, victim)
           else {
             intercept[IllegalStateException] {
-              Bucketing.compactBucketed(spark, victim,
-                injectCrashAtSwapStep = crashStep)
+              Bucketing.withFailpoint(victim, swapCrash(crashStep)) {
+                Bucketing.compactBucketed(spark, victim)
+              }
             }
             if (rnd.nextBoolean()) Bucketing.repairCompaction(spark, victim)
           }
@@ -385,8 +396,9 @@ class ChaosSpec extends SparkSpec {
           if (crashStep == 0) Bucketing.compactBucketed(spark, tbl)
           else {
             intercept[IllegalStateException] {
-              Bucketing.compactBucketed(spark, tbl,
-                injectCrashAtSwapStep = crashStep)
+              Bucketing.withFailpoint(tbl, swapCrash(crashStep)) {
+                Bucketing.compactBucketed(spark, tbl)
+              }
             }
             if (rnd.nextBoolean()) Bucketing.repairCompaction(spark, tbl)
           }
@@ -451,8 +463,9 @@ class ChaosSpec extends SparkSpec {
           if (crashStep == 0) Bucketing.compactBucketed(spark, tbl)
           else {
             intercept[IllegalStateException] {
-              Bucketing.compactBucketed(spark, tbl,
-                injectCrashAtSwapStep = crashStep)
+              Bucketing.withFailpoint(tbl, swapCrash(crashStep)) {
+                Bucketing.compactBucketed(spark, tbl)
+              }
             }
             if (rnd.nextBoolean()) Bucketing.repairCompaction(spark, tbl)
           }
@@ -627,9 +640,10 @@ class ChaosSpec extends SparkSpec {
           val victim = if (rnd.nextBoolean()) tb else ts
           val key = "doc_id"
           intercept[IllegalStateException] {
-            Bucketing.purgeBucketed(spark, victim,
-              spark.table(tt).select(col(key)), key,
-              injectCrashAtSwapStep = 1 + rnd.nextInt(2))
+            Bucketing.withFailpoint(victim, swapCrash(1 + rnd.nextInt(2))) {
+              Bucketing.purgeBucketed(spark, victim,
+                spark.table(tt).select(col(key)), key)
+            }
           }
           if (rnd.nextBoolean()) Bucketing.repairCompaction(spark, victim)
         }
@@ -700,9 +714,10 @@ class ChaosSpec extends SparkSpec {
         Bucketing.purgeBucketed(spark, tb,
           spark.table(tt).select(col("doc_id")), "doc_id")
         intercept[IllegalStateException] {
-          Bucketing.purgeBucketed(spark, ts,
-            spark.table(tt).select(col("doc_id")), "doc_id",
-            injectCrashAtSwapStep = 1 + rnd.nextInt(2))
+          Bucketing.withFailpoint(ts, swapCrash(1 + rnd.nextInt(2))) {
+            Bucketing.purgeBucketed(spark, ts,
+              spark.table(tt).select(col("doc_id")), "doc_id")
+          }
         }
         Bucketing.repairCompaction(spark, ts)
         Dedup.retractFromCorpusIndex(spark, poisonA, tb, ts, tt, 10L)
@@ -740,7 +755,7 @@ class ChaosSpec extends SparkSpec {
 
   test("12 seeded lifecycles: fold cadence + retraction + replay past fold converge on the rebuild-without index") {
     // the round-19 machinery under chaos: random append decompositions
-    // with torn commits, the maybeFold CADENCE (fires only at its
+    // with torn commits, the maintainIndex fold CADENCE (fires only at its
     // fresh-batch threshold), fold swaps killed at either failpoint
     // with sometimes-deferred repairs, two retraction waves, and
     // replays landing in every window — before a fold (idempotent
@@ -783,13 +798,15 @@ class ChaosSpec extends SparkSpec {
       def maybeChaosFold(): Unit =
         if (rnd.nextDouble() < 0.6) {
           val crashStep = rnd.nextInt(3)
-          if (crashStep == 0) Bucketing.maybeFold(spark, tbl, everyBatches = 2)
-          else if (Bucketing.isAdditiveIndex(spark, tbl) &&
+          if (crashStep == 0) Bucketing.maintainIndex(spark, tbl, everyBatches = 2)
+          else if (spark.catalog.tableExists(tbl) &&
+              Bucketing.tableKind(spark, tbl).exists(Bucketing.AdditiveKinds) &&
               spark.sessionState.catalog.listPartitionNames(
                 org.apache.spark.sql.catalyst.TableIdentifier(tbl)).size >= 2) {
             intercept[IllegalStateException] {
-              Bucketing.foldBucketed(spark, tbl,
-                injectCrashAtSwapStep = crashStep)
+              Bucketing.withFailpoint(tbl, swapCrash(crashStep)) {
+                Bucketing.foldBucketed(spark, tbl)
+              }
             }
             if (rnd.nextBoolean()) Bucketing.repairCompaction(spark, tbl)
           }
@@ -834,5 +851,172 @@ class ChaosSpec extends SparkSpec {
         .foreach(Bucketing.dropTable(spark, _))
     }
     Bucketing.dropTable(spark, refTbl)
+  }
+
+  // --- exhaustive crash walk over the one rewrite protocol -----------
+  // Fixtures are written directly in the index layouts (h, df_corpus
+  // [, batch_id]) so each of the ~100 crash scenarios costs one small
+  // write: a batch_id-partitioned streamed index stamped as an additive
+  // family, and an unpartitioned batch-built one.
+
+  private def walkRows(t: String): Seq[String] =
+    spark.table(t).collect().map(_.toString).sorted.toSeq
+
+  private def walkCleanup(t: String): Unit =
+    Seq("", "_compacting", "_precompact", "_runfold")
+      .foreach(s => Bucketing.dropTable(spark, t + s))
+
+  /** Steps reached on `t` while `body` runs. */
+  private def walkTrace(t: String)(body: => Unit): Seq[String] = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    Bucketing.withStepHook(t)(seen += _)(body)
+    seen.toSeq
+  }
+
+  private def walkCrash(t: String, step: String)(body: => Unit): Unit =
+    intercept[Bucketing.InjectedCrash](Bucketing.withFailpoint(t, step)(body))
+
+  /** Streamed additive index: partials in batches 0-2, batch 2 retracting
+    * keys 1-5 (they fold to zero and must vanish). */
+  private def streamedFixture(t: String): Unit = {
+    val rows = (1L to 30L).map(h => (h, 1L, 0L)) ++
+      (20L to 40L).map(h => (h, 2L, 1L)) ++ (1L to 5L).map(h => (h, -1L, 2L))
+    Bucketing.writePartitionedBucketed(rows.toDF("h", "df_corpus", "batch_id"),
+      t, "batch_id", "h", buckets = 2)
+    Bucketing.stampKind(spark, t, "shingle-df")
+  }
+
+  /** Tiered layout: base at batch 1, fresh partials 2 and 3 above the
+    * watermark, batch 3 retracting base-resident keys (pending negatives
+    * the run fold must keep). */
+  private def tieredFixture(t: String): Unit = {
+    val rows = (1L to 30L).map(h => (h, 3L, 1L)) ++
+      (25L to 35L).map(h => (h, 1L, 2L)) ++ (1L to 4L).map(h => (h, -1L, 3L))
+    Bucketing.writePartitionedBucketed(rows.toDF("h", "df_corpus", "batch_id"),
+      t, "batch_id", "h", buckets = 2)
+    Bucketing.stampProperties(spark, t, Map(
+      Bucketing.KindProperty -> "shingle-df",
+      Bucketing.FoldedThroughProperty -> "1", Bucketing.BaseAtProperty -> "1",
+      Bucketing.BaseMassProperty -> "30"))
+  }
+
+  private def batchBuiltFixture(t: String): Unit = {
+    Bucketing.writeBucketed((1L to 30L).map(h => (h, h % 4 + 1)).toDF("h", "df_corpus"),
+      t, "h", buckets = 2)
+    Bucketing.writeBucketed((31L to 40L).map(h => (h, 1L)).toDF("h", "df_corpus"),
+      t, "h", buckets = 2, mode = org.apache.spark.sql.SaveMode.Append)
+  }
+
+  /** One rewrite kind: its fixture, the rewrite, the step order it must
+    * take, and its commit step — a kill at or before it rolls back to
+    * the original rows, a kill after it rolls forward to the rewrite. */
+  private case class WalkKind(name: String, build: String => Unit,
+                              run: String => Unit, path: Seq[String],
+                              commit: String)
+
+  private val swapPath = Seq("write-side", "stamp", "rename-to-backup",
+    "rename-into-place", "recover-partitions", "clear-stamp", "drop-leftover")
+
+  private lazy val walkKinds = Seq(
+    WalkKind("compact_streamed", streamedFixture,
+      t => Bucketing.compactBucketed(spark, t), swapPath, "rename-into-place"),
+    WalkKind("compact_batch_built", batchBuiltFixture,
+      t => Bucketing.compactBucketed(spark, t),
+      swapPath.filterNot(Set("recover-partitions", "clear-stamp")),
+      "rename-into-place"),
+    WalkKind("purge", streamedFixture,
+      t => Bucketing.purgeBucketed(spark, t, (7L to 12L).toDF("h"), "h"),
+      swapPath, "rename-into-place"),
+    WalkKind("base_merge", streamedFixture,
+      t => Bucketing.foldBucketed(spark, t), swapPath, "rename-into-place"),
+    WalkKind("run_fold", tieredFixture,
+      t => assert(!Bucketing.tieredFold(spark, t, mergeFraction = 1e9),
+        "the tiered fixture must take the run-level path"),
+      Seq("write-side", "stamp", "drop-sources", "land", "advance-markers",
+        "clear-stamp", "drop-leftover"), "stamp"))
+
+  test("exhaustive crash walk: every rewrite kind x every named step, kills inside recovery included, heals row-for-row") {
+    for (kind <- walkKinds) {
+      val t = s"walk_${kind.name}"
+      walkCleanup(t)
+      kind.build(t)
+      val original = walkRows(t)
+      val path = walkTrace(t)(kind.run(t))
+      assert(path === kind.path, s"${kind.name}: the rewrite's step order")
+      val rewritten = walkRows(t)
+      if (!kind.name.startsWith("compact")) // compaction preserves rows
+        assert(rewritten !== original, s"${kind.name}: vacuous fixture")
+      walkCleanup(t)
+
+      def crashAt(step: String): Unit = {
+        kind.build(t)
+        walkCrash(t, step)(kind.run(t))
+      }
+      def assertHealed(want: Seq[String], clue: String): Unit = {
+        assert(Bucketing.repairCompaction(spark, t), s"$clue: table must resolve")
+        withClue(s"$clue: ") {
+          assert(walkRows(t) === want, "healed table must be row-for-row the reference")
+          if (want.nonEmpty)
+            assert(spark.table(t).count() > 0L, "healed table must not read empty")
+        }
+        walkCleanup(t)
+      }
+      for ((step, i) <- path.zipWithIndex) {
+        val want = if (i <= path.indexOf(kind.commit)) original else rewritten
+        // pass 1: kill at `step`, then an unarmed recovery (traced)
+        crashAt(step)
+        val recovery = walkTrace(t)(Bucketing.repairCompaction(spark, t))
+        assertHealed(want, s"${kind.name} killed at $step")
+        // pass 2: the same kill, then a second kill at each step of that
+        // recovery, then the final repair
+        for (inner <- recovery.distinct) {
+          crashAt(step)
+          walkCrash(t, inner)(Bucketing.repairCompaction(spark, t))
+          assertHealed(want, s"${kind.name} killed at $step, then in recovery at $inner")
+        }
+      }
+    }
+  }
+
+  test("a kill after the restore rename and before the partition recover heals to the full index") {
+    val t = "walk_restore_window"
+    walkCleanup(t)
+    streamedFixture(t)
+    val original = walkRows(t)
+    // the swap dies between its two renames: only the backup holds the index
+    walkCrash(t, "rename-into-place")(Bucketing.compactBucketed(spark, t))
+    assert(!spark.catalog.tableExists(t))
+    // the recovery dies right after renaming the backup into place
+    walkCrash(t, "recover-partitions")(Bucketing.repairCompaction(spark, t))
+    assert(spark.catalog.tableExists(t))
+    assert(Bucketing.tableProperty(spark, t, Bucketing.NeedsRecoverProperty)
+      === Some("true"), "the restore rename must have been stamped first")
+    // the next entry re-runs the recover: the index reads full, not empty
+    assert(Bucketing.repairCompaction(spark, t))
+    assert(spark.table(t).count() === original.size.toLong)
+    assert(walkRows(t) === original)
+    // and the next rewrite persists the full view
+    Bucketing.compactBucketed(spark, t)
+    assert(walkRows(t) === original)
+    walkCleanup(t)
+  }
+
+  test("a kill after promoting an unstamped side table and before the partition recover heals to the full index") {
+    // the legacy drop-then-rename state: only a complete `_compacting`
+    // side survives, without the needs-recover stamp the protocol's own
+    // side tables carry. Renaming it into place strands its partition
+    // locations, so the promote must stamp first or the table reads empty
+    val t = "walk_promote_window"
+    walkCleanup(t)
+    streamedFixture(t + "_compacting")
+    val original = walkRows(t + "_compacting")
+    walkCrash(t, "recover-partitions")(Bucketing.repairCompaction(spark, t))
+    assert(spark.catalog.tableExists(t) &&
+      !spark.catalog.tableExists(t + "_compacting"))
+    assert(Bucketing.repairCompaction(spark, t))
+    assert(spark.table(t).count() === original.size.toLong,
+      "the promoted index must read full, not empty")
+    assert(walkRows(t) === original)
+    walkCleanup(t)
   }
 }

@@ -322,4 +322,58 @@ class DedupSpec extends SparkSpec {
       "healed streamed window index must equal the batch-built one")
     Seq(tbl, mono).foreach(graft.io.Bucketing.dropTable(spark, _))
   }
+
+  test("minhash coefficients: seed-42 draws are unchanged, and the draw stays in range at Long.MinValue") {
+    val (a, b) = Dedup.minhashCoeffs(64)
+    val p = Dedup.MinhashP
+    // the plain `%` form — identical on every draw except Long.MinValue
+    val rnd = new java.util.Random(42L)
+    val plain = Array.fill(128)(math.abs(rnd.nextLong()) % (p - 1))
+    assert(a.toSeq === plain.take(64).map(_ + 1).toSeq)
+    assert(b.toSeq === plain.drop(64).toSeq)
+    assert(math.abs(Long.MinValue) % (p - 1) < 0L,
+      "the plain form goes negative at Long.MinValue")
+    val edge = Dedup.coeffDraw(Long.MinValue)
+    assert(edge >= 0L && edge < p - 1, s"draw out of range: $edge")
+  }
+
+  test("minhash signature agreement tracks exact shingle Jaccard within a binomial band") {
+    val rnd = new scala.util.Random(7)
+    val vocab = Vector.tabulate(400)(i => s"w$i")
+    def word() = vocab(rnd.nextInt(vocab.size))
+    // pinned pair: dropping the last of ten words drops exactly one of
+    // nine bigrams, Jaccard 8/9
+    val ten = Vector.tabulate(10)(i => s"pin$i")
+    val pairs = (ten, ten.init) +: Vector.fill(30) {
+      val a = Vector.fill(40)(word())
+      val b = (0 to rnd.nextInt(8)).foldLeft(a)((d, _) =>
+        d.updated(rnd.nextInt(d.size), word()))
+      (a, b)
+    }
+    val docs = pairs.zipWithIndex.flatMap { case ((a, b), i) =>
+      Seq((i, 0, a.mkString(" ")), (i, 1, b.mkString(" ")))
+    }.toDF("pair", "side", "text")
+    val got = docs.select(col("pair"), col("side"),
+        Dedup.shingles(col("text"), 2).as("sh"),
+        Dedup.minhashSignature(col("text")).as("sig"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)) ->
+        (r.getSeq[String](2).toSet, r.getSeq[Long](3))).toMap
+    val k = 64
+    val stats = pairs.indices.map { i =>
+      val (sa, ga) = got((i, 0)); val (sb, gb) = got((i, 1))
+      val jaccard = (sa & sb).size.toDouble / (sa | sb).size
+      val agree = ga.zip(gb).count { case (x, y) => x == y }.toDouble / k
+      (jaccard, agree)
+    }
+    assert(math.abs(stats.head._1 - 8.0 / 9) < 1e-12,
+      "fixture: the pinned pair is Jaccard 8/9")
+    stats.zipWithIndex.foreach { case ((j, agree), i) =>
+      // agreement ~ Binomial(k, J) / k: 4.5 sigma plus one step
+      val band = 4.5 * math.sqrt(j * (1 - j) / k) + 1.0 / k
+      assert(math.abs(agree - j) <= band,
+        f"pair $i: agreement $agree%.3f vs exact Jaccard $j%.3f (band $band%.3f)")
+    }
+    val bias = stats.map { case (j, agree) => agree - j }.sum / stats.size
+    assert(math.abs(bias) < 0.05, f"mean agreement is biased by $bias%.3f")
+  }
 }

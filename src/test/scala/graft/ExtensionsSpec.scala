@@ -514,4 +514,39 @@ class ExtensionsSpec extends SparkSpec {
     assert(archived.size === 1 &&
       new java.io.File(dir.resolve("archive").resolve("ok.csv").toString).exists())
   }
+
+  test("SQL minhash_sig is bit-identical to Dedup.minhashSignature") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val lib = Seq("spark merges sorted partitions into wide batches",
+        "a b c d e f g", "single",
+        "the quick brown fox jumps over the lazy dog and the quick cat")
+      .toDF("text")
+      .select(col("text"), graft.ops.TextAnalysis.tokens(col("text")).as("tokens"),
+        graft.ops.Dedup.minhashSignature(col("text")).as("sig"))
+      .collect()
+      .map(r => (r.getString(0), r.getSeq[String](1), r.getSeq[Long](2)))
+    spark.sparkContext
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder().master("local[4]")
+      .appName("graft-ext-test")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    try {
+      s2.createDataFrame(lib.toSeq.map { case (t, toks, _) => (t, toks) })
+        .toDF("text", "tokens").createOrReplaceTempView("mh_sql_docs")
+      val viaSql = s2.sql(
+          "SELECT text, minhash_sig(tokens, 2) AS sig FROM mh_sql_docs")
+        .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+      lib.foreach { case (t, _, sig) =>
+        assert(viaSql(t) === sig, s"signatures differ for '$t'")
+      }
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
 }

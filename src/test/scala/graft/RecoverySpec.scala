@@ -561,7 +561,7 @@ class RecoverySpec extends SparkSpec {
               if (isRetract)
                 graft.ops.Dedup.retractShingleDfPartial(spark, d, tbl, id)
               else graft.ops.Dedup.appendShingleDfPartial(spark, d, tbl, id)
-            val fired = graft.io.Bucketing.maybeFold(spark, tbl)
+            val fired = graft.io.Bucketing.maintainIndex(spark, tbl)
             if (fired && crashAfterFold) {
               crashAfterFold = false
               foldFiredBeforeCrash = true
@@ -606,10 +606,13 @@ class RecoverySpec extends SparkSpec {
     // kill in the only window where the table name does not resolve:
     // between rename-out (original -> _precompact) and rename-in
     intercept[IllegalStateException] {
-      Bucketing.compactBucketed(spark, tbl, injectCrashAtSwapStep = 1)
+      Bucketing.withFailpoint(tbl, "rename-into-place") {
+        Bucketing.compactBucketed(spark, tbl)
+      }
     }
     assert(!spark.catalog.tableExists(tbl),
-      "failpoint 1 must leave the window state: table name unresolved")
+      "a kill before rename-into-place must leave the window state: " +
+        "table name unresolved")
     // repair: the _precompact backup is the complete original — restore
     // it; nothing was lost because nothing was dropped before rename-in
     assert(Bucketing.repairCompaction(spark, tbl), "repair must restore the table")
@@ -627,7 +630,9 @@ class RecoverySpec extends SparkSpec {
     Bucketing.writeBucketed(docs.limit(50), tbl, "doc_id", 4,
       org.apache.spark.sql.SaveMode.Append)
     intercept[IllegalStateException] {
-      Bucketing.compactBucketed(spark, tbl, injectCrashAtSwapStep = 2)
+      Bucketing.withFailpoint(tbl, "drop-leftover") {
+        Bucketing.compactBucketed(spark, tbl)
+      }
     }
     assert(spark.catalog.tableExists(tbl) &&
       spark.catalog.tableExists(s"${tbl}_precompact"))

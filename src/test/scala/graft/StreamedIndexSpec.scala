@@ -219,12 +219,12 @@ class StreamedIndexSpec extends SparkSpec {
     val fired = (0 until 4).map { i =>
       Dedup.appendShingleDfPartial(spark,
         corpus.filter(pmod(col("doc_id"), lit(4)) === i), "si_mc", i.toLong)
-      Bucketing.maybeCompact(spark, "si_mc")
+      Bucketing.maintainIndex(spark, "si_mc")
     }
     assert(fired === Seq(false, false, false, true),
       s"cadence must fire exactly at the 4th accumulated batch, got $fired")
     // the cursor property blocks an immediate re-fire
-    assert(!Bucketing.maybeCompact(spark, "si_mc"),
+    assert(!Bucketing.maintainIndex(spark, "si_mc"),
       "cursor must record the fold — an immediate re-check may not re-compact")
     assert(Bucketing.tableKind(spark, "si_mc").contains("shingle-df"),
       "the kind stamp must survive the auto-compaction rewrite")
@@ -233,8 +233,9 @@ class StreamedIndexSpec extends SparkSpec {
     val want = rows(Dedup.noveltyIncremental(spark, delta, "si_mc_b"))
     assert(rows(Dedup.noveltyIncremental(spark, delta, "si_mc")) === want,
       "auto-compacted streamed index must still equal the batch build")
-    // a batch replayed AFTER the fold overwrites its own (folded)
-    // partition with identical content — still idempotent
+    // a batch replayed AFTER the cadence rewrite must not change the
+    // probe (shingle-df is additive, so the cadence folded and the
+    // replay no-ops on the watermark)
     Dedup.appendShingleDfPartial(spark,
       corpus.filter(pmod(col("doc_id"), lit(4)) === 2), "si_mc", 2L)
     assert(rows(Dedup.noveltyIncremental(spark, delta, "si_mc")) === want,
@@ -243,7 +244,7 @@ class StreamedIndexSpec extends SparkSpec {
     val fired2 = (4 until 8).map { i =>
       Dedup.appendShingleDfPartial(spark,
         delta.filter(pmod(col("doc_id"), lit(4)) === (i - 4)), "si_mc", i.toLong)
-      Bucketing.maybeCompact(spark, "si_mc")
+      Bucketing.maintainIndex(spark, "si_mc")
     }
     assert(fired2 === Seq(false, false, false, true),
       s"cadence must re-arm after the fold, got $fired2")
@@ -338,9 +339,10 @@ class StreamedIndexSpec extends SparkSpec {
     // purge with an injected crash in the swap window, then repair —
     // the compaction two-name protocol applied to deletion
     intercept[IllegalStateException] {
-      graft.io.Bucketing.purgeBucketed(spark, "si_vr_vecs",
-        spark.table("si_vr_tombs").select(col("corpus_id")), "corpus_id",
-        injectCrashAtSwapStep = 1)
+      graft.io.Bucketing.withFailpoint("si_vr_vecs", "rename-into-place") {
+        graft.io.Bucketing.purgeBucketed(spark, "si_vr_vecs",
+          spark.table("si_vr_tombs").select(col("corpus_id")), "corpus_id")
+      }
     }
     assert(graft.io.Bucketing.repairCompaction(spark, "si_vr_vecs"),
       "repair must restore the table after a mid-swap crash")
@@ -707,14 +709,18 @@ class StreamedIndexSpec extends SparkSpec {
         Dedup.appendShingleDfPartial(spark,
           corpus.filter(pmod(col("doc_id"), lit(3)) === i), "si_mf", i.toLong)
       else Dedup.retractShingleDfPartial(spark, retired, "si_mf", i.toLong)
-      Bucketing.maybeFold(spark, "si_mf")
+      Bucketing.maintainIndex(spark, "si_mf")
     }
     assert(fired === Seq(false, false, false, true),
       s"fold cadence must fire exactly at the 4th accumulated batch, got $fired")
-    assert(!Bucketing.maybeFold(spark, "si_mf"),
+    assert(!Bucketing.maintainIndex(spark, "si_mf"),
       "the watermark must block an immediate re-fire")
-    assert(!Bucketing.maybeCompact(spark, "si_mf"),
-      "a fold subsumes a compaction — the compaction cursor must have advanced")
+    assert(Bucketing.foldedThrough(spark, "si_mf") === 3L &&
+        Bucketing.tableProperty(spark, "si_mf",
+          Bucketing.CompactedAtProperty) === Some("3"),
+      "an additive table must get a fold (watermark advanced), not an " +
+        "identity compaction — and the fold subsumes a compaction " +
+        "(compaction cursor advanced)")
     assert(Bucketing.tableKind(spark, "si_mf").contains("shingle-df"),
       "the kind stamp must survive the fold rewrite")
     // probe equals the rebuild without the retired docs
@@ -728,7 +734,7 @@ class StreamedIndexSpec extends SparkSpec {
       Dedup.appendShingleDfPartial(spark,
         delta.filter(pmod(col("doc_id"), lit(4)) === (i - 4)), "si_mf",
         i.toLong)
-      Bucketing.maybeFold(spark, "si_mf")
+      Bucketing.maintainIndex(spark, "si_mf")
     }
     assert(fired2 === Seq(false, false, false, true),
       s"cadence must re-arm after the fold, got $fired2")
@@ -746,7 +752,9 @@ class StreamedIndexSpec extends SparkSpec {
     // crash between the two renames: repair restores the ORIGINAL
     // (unfolded, unstamped) table — replays stay partition-idempotent
     intercept[IllegalStateException] {
-      Bucketing.foldBucketed(spark, "si_fc", injectCrashAtSwapStep = 1)
+      Bucketing.withFailpoint("si_fc", "rename-into-place") {
+        Bucketing.foldBucketed(spark, "si_fc")
+      }
     }
     assert(Bucketing.repairCompaction(spark, "si_fc"))
     assert(Bucketing.foldedThrough(spark, "si_fc") === Long.MinValue,
@@ -755,7 +763,9 @@ class StreamedIndexSpec extends SparkSpec {
     // crash after the swap: the folded table is live AND stamped (the
     // watermark rode the swap); repair only sweeps the backup
     intercept[IllegalStateException] {
-      Bucketing.foldBucketed(spark, "si_fc", injectCrashAtSwapStep = 2)
+      Bucketing.withFailpoint("si_fc", "drop-leftover") {
+        Bucketing.foldBucketed(spark, "si_fc")
+      }
     }
     assert(Bucketing.repairCompaction(spark, "si_fc"))
     assert(Bucketing.foldedThrough(spark, "si_fc") === 1L,

@@ -101,7 +101,10 @@ class TieredFoldSpec extends SparkSpec {
   test("run-fold crash windows: a kill at every failpoint heals through the probe-side repair") {
     rebuildWithout("tfc_reb", maxQ = 2)
     val want = rows(Dedup.noveltyIncremental(spark, delta, "tfc_reb"))
-    for (step <- 1 to 3) {
+    // the run fold's crash windows: side table written but no journal,
+    // journal stamped with nothing moved, sources dropped with the run
+    // not yet landed
+    for ((crashAt, step) <- Seq("stamp" -> 1, "drop-sources" -> 2, "land" -> 3)) {
       val tbl = s"tfc_idx_$step"
       drop(tbl)
       Dedup.appendShingleDfPartial(spark, quarter(0), tbl, 0L)
@@ -110,8 +113,9 @@ class TieredFoldSpec extends SparkSpec {
       Dedup.appendShingleDfPartial(spark, quarter(2), tbl, 2L)
       Dedup.retractShingleDfPartial(spark, retired, tbl, 3L)
       intercept[IllegalStateException] {
-        Bucketing.tieredFold(spark, tbl, mergeFraction = 1e9,
-          injectCrashAtStep = step)
+        Bucketing.withFailpoint(tbl, crashAt) {
+          Bucketing.tieredFold(spark, tbl, mergeFraction = 1e9)
+        }
       }
       // the probe's own repair path must see a consistent partition
       // set at EVERY crash point: pre-journal (stale side table),
