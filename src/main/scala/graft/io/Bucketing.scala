@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.functions.{broadcast, col, concat, lit, raise_error, sum, when}
+import org.apache.spark.sql.types.StructType
 
 /** Bucketed-table support: pre-shuffle once at write time so repeated
   * equi-joins and aggregations on the bucket key run with NO exchange.
@@ -119,34 +120,63 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Partitioned + bucketed layout: directory-partition on `partKey`
-    * (a low-cardinality maintenance key — batch id, ingest day) AND
-    * bucket on `key` within every partition. The partition column makes
-    * per-batch maintenance a DIRECTORY operation (overwrite one
-    * partition, prune to one directory) while the bucket layout keeps
-    * the probe-side joins/aggregations on `key` exchange-free — Spark's
-    * bucketed scan folds bucket i's files ACROSS partitions into task i,
-    * so the hash distribution on `key` survives any number of partition
-    * directories. */
-  def writePartitionedBucketed(df: DataFrame, table: String, partKey: String,
-                               key: String, buckets: Int,
-                               mode: SaveMode = SaveMode.Overwrite): Unit =
-    writePartitionedBucketedMulti(df, table, partKey, Seq(key), buckets, mode)
+  /** THE LANDING PATH of every streamed index table: land `rows` as the
+    * `batch_id = batchId` partition of `table`, creating the table first
+    * when it does not resolve. Returns false when the batch no-opped at
+    * the fold watermark (see [[appendPartialInto]]).
+    *
+    * Layout: directory-partitioned on `batch_id` (per-batch maintenance
+    * is a DIRECTORY operation — overwrite one partition, prune to one
+    * directory) AND bucketed + sorted on the full `keys` sequence within
+    * every partition. Spark's bucketed scan folds bucket i's files ACROSS
+    * partitions into task i, so the probe-side joins/aggregations on
+    * `keys` stay exchange-free whatever the batch count; every cluster
+    * key is in the layout because a co-partitioned join needs all of them
+    * (the [[writeBucketedMulti]] rationale).
+    *
+    * Create-then-land, like a table declared once in DDL: the table is
+    * created EMPTY by one `CREATE TABLE` (step `create`) that carries the
+    * kind stamp and `stamps` in its TBLPROPERTIES, so no kill window
+    * leaves an unstamped table behind — the replay of a batch killed
+    * after the create finds its table stamped. Every batch, the first
+    * included, then lands through the same dynamic-partition overwrite
+    * (step `append`). The repair runs first: a compaction swap killed
+    * mid-rename leaves the index resolvable only under its backup name,
+    * and creating a fresh table there would orphan every earlier batch.
+    * A warehouse directory without a catalog entry (a prior JVM's files
+    * under a fresh metastore) would fail the CREATE on
+    * LOCATION_ALREADY_EXISTS, so the create sweeps the location first.
+    *
+    * `stamps` (geometry) is evaluated only when the table is created. */
+  def landPartial(spark: SparkSession, rows: DataFrame, table: String,
+                  kind: String, keys: Seq[String], buckets: Int, batchId: Long,
+                  stamps: => Map[String, String] = Map.empty): Boolean = {
+    val partial = rows.withColumn("batch_id", lit(batchId))
+    val created = !repairCompaction(spark, table)
+    if (created) step(table, "create") {
+      dropTable(spark, table)
+      // nullable columns, as saveAsTable stores them
+      val cols = StructType(partial.schema.map(_.copy(nullable = true)))
+      val cluster = keys.map(k => s"`$k`").mkString(", ")
+      val props = (Map(KindProperty -> kind) ++ stamps)
+        .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ")
+      spark.sql(s"CREATE TABLE $table (${cols.toDDL}) USING parquet " +
+        s"PARTITIONED BY (batch_id) CLUSTERED BY ($cluster) " +
+        s"SORTED BY ($cluster) INTO $buckets BUCKETS TBLPROPERTIES ($props)")
+    }
+    appendPartialInto(spark, partial, table, kind, batchId, created)
+  }
 
-  /** Multi-key variant of [[writePartitionedBucketed]] — partition on
-    * `partKey`, bucket+sort on the FULL key sequence (the
-    * [[writeBucketedMulti]] rationale: a co-partitioned join needs every
-    * cluster key in the layout). */
-  def writePartitionedBucketedMulti(df: DataFrame, table: String,
-                                    partKey: String, keys: Seq[String],
-                                    buckets: Int,
-                                    mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
-      .partitionBy(partKey)
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
+  /** Land a NEGATED partial of an additive family (the retraction twin of
+    * [[landPartial]]): the same guarded overwrite, but into an existing
+    * table only. */
+  def retractPartial(spark: SparkSession, rows: DataFrame, table: String,
+                     kind: String, batchId: Long): Boolean = {
+    require(repairCompaction(spark, table),
+      s"$table does not exist — a retraction can only follow appends")
+    appendPartialInto(spark, rows.withColumn("batch_id", lit(batchId)),
+      table, kind, batchId, created = false)
+  }
 
   /** Overwrite EXACTLY the partitions present in `df` (dynamic partition
     * overwrite), leaving every other partition untouched. This is the
@@ -403,11 +433,13 @@ object Bucketing {
     }
   }
 
-  /** The append-branch step every `append*Partial` shares: refresh the
-    * caller's cached relation (the create may have run through another
-    * cloned session), verify the existing table is the expected index
-    * FAMILY, then land the partial as its own idempotent batch_id
-    * partition. The kind check closes the blind spot of probe-only
+  /** The guarded landing [[landPartial]] and [[retractPartial]] share:
+    * refresh the caller's cached relation (an earlier batch may have run
+    * through another cloned session), verify the existing table is the
+    * expected index FAMILY, then land the partial as its own idempotent
+    * batch_id partition. A table this call's own `create` just made
+    * passes every guard by construction, so the first batch skips the
+    * metadata read. The kind check closes the blind spot of probe-only
     * checks: a partial appended into a same-column-layout table of a
     * DIFFERENT hash family (e.g. a shingle-df partial into a line-df
     * index — both `(h, df_corpus, batch_id)`) would silently mix
@@ -424,33 +456,35 @@ object Bucketing {
     * table (the [[Tombstones]] contract), so a sub-watermark id IS a
     * replay; an operator reusing a low id after a fold sees
     * `landed = false` instead of a silent partial loss. */
-  def appendPartialInto(spark: SparkSession, partial: DataFrame,
-                        table: String, kind: String,
-                        batchId: Long): Boolean = {
-    spark.catalog.refreshTable(table)
-    // ONE metadata fetch serves all three guards (kind, layout, fold
-    // watermark) — each is a property of the same snapshot
-    val meta = countedMeta(spark, table)
-    meta.properties.get(KindProperty).foreach { k =>
-      require(k == kind,
-        s"$table is a '$k' index, not the '$kind' index this append " +
-          "expects — same column layout, different hash family; joining it " +
-          "would silently resolve against unrelated hashes")
+  private def appendPartialInto(spark: SparkSession, partial: DataFrame,
+                                table: String, kind: String, batchId: Long,
+                                created: Boolean): Boolean = {
+    if (!created) {
+      spark.catalog.refreshTable(table)
+      // ONE metadata fetch serves all three guards (kind, layout, fold
+      // watermark) — each is a property of the same snapshot
+      val meta = countedMeta(spark, table)
+      meta.properties.get(KindProperty).foreach { k =>
+        require(k == kind,
+          s"$table is a '$k' index, not the '$kind' index this append " +
+            "expects — same column layout, different hash family; joining " +
+            "it would silently resolve against unrelated hashes")
+      }
+      // layout guard: the dynamic-partition overwrite below is only
+      // idempotent against a batch_id-PARTITIONED table — against an
+      // unpartitioned (batch-built) layout, insertInto-overwrite would
+      // TRUNCATE the whole index and land one batch in its place. The
+      // SQL surface makes this reachable (APPEND TO ... naming a
+      // batch-built table), so fail loudly instead.
+      require(meta.partitionColumnNames == Seq("batch_id"),
+        s"$table is not batch_id-partitioned — it is a batch-built index " +
+          "layout; per-batch APPEND maintains only the streamed " +
+          "(partitioned) layout. Rebuild it with the streamed create " +
+          "path, or extend it with the family's batch append")
+      if (batchId <= longProperty(meta, FoldedThroughProperty)
+          .getOrElse(Long.MinValue)) return false
     }
-    // layout guard: the dynamic-partition overwrite below is only
-    // idempotent against a batch_id-PARTITIONED table — against an
-    // unpartitioned (batch-built) layout, insertInto-overwrite would
-    // TRUNCATE the whole index and land one batch in its place. The
-    // SQL surface makes this reachable (APPEND TO ... naming a
-    // batch-built table), so fail loudly instead.
-    require(meta.partitionColumnNames == Seq("batch_id"),
-      s"$table is not batch_id-partitioned — it is a batch-built index " +
-        "layout; per-batch APPEND maintains only the streamed " +
-        "(partitioned) layout. Rebuild it with the streamed create " +
-        "path, or extend it with the family's batch append")
-    if (batchId <= longProperty(meta, FoldedThroughProperty)
-        .getOrElse(Long.MinValue)) return false
-    overwritePartitions(partial, table)
+    step(table, "append")(overwritePartitions(partial, table))
     true
   }
 
@@ -478,13 +512,15 @@ object Bucketing {
     * purge the rows are GONE from disk, not merely filtered at probe
     * time: the right-to-be-forgotten end state for a posting-list index
     * whose rows (unlike the additive-df families) cannot be cancelled
-    * by a negated partial. Returns the data file count after the
-    * rewrite. */
+    * by a negated partial. `stamps` ride the replacement table's stamp,
+    * so they go live together with the purged rows. Returns the data
+    * file count after the rewrite. */
   def purgeBucketed(spark: SparkSession, table: String,
-                    removeKeys: DataFrame, keyCol: String): Int = {
+                    removeKeys: DataFrame, keyCol: String,
+                    stamps: Map[String, String] = Map.empty): Int = {
     val ids = removeKeys.select(removeKeys(keyCol))
     rewriteTable(spark, table,
-      _.join(broadcast(ids), Seq(keyCol), "left_anti"))
+      _.join(broadcast(ids), Seq(keyCol), "left_anti"), stamps)
   }
 
   /** FOLD-PURGE for the additive-df index families — the negated-partial

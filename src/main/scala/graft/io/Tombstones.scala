@@ -46,9 +46,10 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   */
 object Tombstones {
 
-  /** Table property stamped on every family table at [[purge]] time:
-    * the highest retraction batch_id the purge folded. [[land]] reads
-    * it from `sigsTable` to recognize a post-purge replay. */
+  /** Table property stamped on every family table by its [[purge]]
+    * swap: the highest retraction batch_id the purge folded. [[land]]
+    * reads it from `sigsTable` (the last table a purge rewrites) to
+    * recognize a post-purge replay. */
   val PurgedThroughProperty = "graft.retraction.purgedThrough"
 
   private def purgedThrough(spark: SparkSession, table: String): Long =
@@ -175,17 +176,17 @@ object Tombstones {
       return false
     }
     val ids = pending.select(col(idCol)).distinct().localCheckpoint()
-    val maxBatch = maxBatchRow.getLong(0)
-    tables.foreach(t => Bucketing.purgeBucketed(spark, t, ids, idCol))
-    // watermark BEFORE the drop: every crash window is replay-safe —
-    // after purgeBucketed but before the stamp, the tombstone table
-    // still exists so a replayed land() passes the tombstone-membership
-    // exemption and a re-run purge is an idempotent rewrite; after the
-    // stamp but before the drop, replays of folded batches no-op on the
-    // watermark while the leftover gate filters already-absent ids (a
-    // no-op) until the next purge drops it
-    tables.foreach(t => spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
-      s"('$PurgedThroughProperty' = '$maxBatch')"))
+    // the watermark rides each table's purge swap, so it goes live
+    // together with that table's purged rows, and every table is stamped
+    // BEFORE the drop: every crash window is replay-safe — until the last
+    // table's swap, land() (which reads the last table) sees no watermark,
+    // the tombstone table still exists so a replay passes the
+    // tombstone-membership exemption, and a re-run purge is an idempotent
+    // rewrite; after it but before the drop, replays of folded batches
+    // no-op on the watermark while the leftover gate filters
+    // already-absent ids (a no-op) until the next purge drops it
+    val watermark = Map(PurgedThroughProperty -> maxBatchRow.getLong(0).toString)
+    tables.foreach(t => Bucketing.purgeBucketed(spark, t, ids, idCol, watermark))
     Bucketing.dropTable(spark, tombstonesTable)
     true
   }

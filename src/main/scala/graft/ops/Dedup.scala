@@ -316,39 +316,20 @@ object Dedup {
                                sigsTable: String, batchId: Long,
                                bands: Int = 16, rowsPerBand: Int = 8,
                                shingleN: Int = 3, buckets: Int = 8): Unit = {
-    import org.apache.spark.sql.functions.lit
     val sig = sigFrame(batch, bands * rowsPerBand, shingleN)
       // the banding reads sig twice (once per projection tree below);
       // localCheckpoint keeps the per-doc minhash from recomputing
       .localCheckpoint(true)
-    val bandPartial = bandFrame(sig, bands, rowsPerBand)
-      .withColumn("batch_id", lit(batchId))
-    val sigPartial = sig.withColumn("batch_id", lit(batchId))
-    val bandsLive = graft.io.Bucketing.repairCompaction(spark, bandsTable)
-    val sigsLive = graft.io.Bucketing.repairCompaction(spark, sigsTable)
     // both partials derive from the CHECKPOINTED sig frame (signed
-    // once, above) and the two tables share no state, so the writes
+    // once, above) and the two tables share no state, so the landings
     // overlap (guide §2.6, optimization r22) — the q71 device applied
     // to the minhash family's streamed maintenance
-    graft.io.Bucketing.concurrently({
-      if (!bandsLive) {
-        graft.io.Bucketing.dropTable(spark, bandsTable)
-        graft.io.Bucketing.writePartitionedBucketedMulti(bandPartial,
-          bandsTable, "batch_id", Seq("band_id", "band_hash"), buckets)
-        graft.io.Bucketing.stampKind(spark, bandsTable, "minhash-bands")
-      } else {
-        graft.io.Bucketing.appendPartialInto(spark, bandPartial, bandsTable, "minhash-bands", batchId)
-      }
-    }, {
-      if (!sigsLive) {
-        graft.io.Bucketing.dropTable(spark, sigsTable)
-        graft.io.Bucketing.writePartitionedBucketed(sigPartial, sigsTable,
-          "batch_id", "doc_id", buckets)
-        graft.io.Bucketing.stampKind(spark, sigsTable, "minhash-sigs")
-      } else {
-        graft.io.Bucketing.appendPartialInto(spark, sigPartial, sigsTable, "minhash-sigs", batchId)
-      }
-    })
+    graft.io.Bucketing.concurrently(
+      graft.io.Bucketing.landPartial(spark, bandFrame(sig, bands, rowsPerBand),
+        bandsTable, "minhash-bands", Seq("band_id", "band_hash"), buckets,
+        batchId),
+      graft.io.Bucketing.landPartial(spark, sig, sigsTable, "minhash-sigs",
+        Seq("doc_id"), buckets, batchId))
   }
 
   /** The probe half of the daily-ingest contract: identical semantics to
@@ -821,11 +802,15 @@ object Dedup {
     * probe join runs exchange-free on the corpus side. */
   def buildWindowDfIndex(docs: DataFrame, table: String, k: Int = 8,
                          buckets: Int = 8): Unit = {
-    val idx = windowOccurrences(passageTokens(docs), k)
-      .groupBy("h").agg(count(lit(1)).cast("long").as("df_corpus"))
-    graft.io.Bucketing.writeBucketed(idx, table, "h", buckets)
+    graft.io.Bucketing.writeBucketed(windowDf(docs, k, 1L), table, "h", buckets)
     graft.io.Bucketing.stampKind(docs.sparkSession, table, "window-df")
   }
+
+  /** (h, df_corpus): `docs`' window occurrence counts times `sign` — the
+    * one aggregate the build, the append and the retraction share. */
+  private def windowDf(docs: DataFrame, k: Int, sign: Long): DataFrame =
+    windowOccurrences(passageTokens(docs), k)
+      .groupBy("h").agg((count(lit(1)) * sign).as("df_corpus"))
 
   /** Streaming/micro-batch maintenance of the [[buildWindowDfIndex]]
     * table — the window-df twin of TextAnalysis.appendLineDfPartial,
@@ -840,20 +825,9 @@ object Dedup {
     * cost tracks the batch, never the corpus. */
   def appendWindowDfPartial(spark: org.apache.spark.sql.SparkSession,
                             batch: DataFrame, table: String, batchId: Long,
-                            k: Int = 8, buckets: Int = 8): Boolean = {
-    val partial = windowOccurrences(passageTokens(batch), k)
-      .groupBy("h").agg(count(lit(1)).cast("long").as("df_corpus"))
-      .withColumn("batch_id", lit(batchId))
-    if (!graft.io.Bucketing.repairCompaction(spark, table)) {
-      graft.io.Bucketing.dropTable(spark, table)
-      graft.io.Bucketing.writePartitionedBucketed(partial, table,
-        "batch_id", "h", buckets)
-      graft.io.Bucketing.stampKind(spark, table, "window-df")
-      true
-    } else {
-      graft.io.Bucketing.appendPartialInto(spark, partial, table, "window-df", batchId)
-    }
-  }
+                            k: Int = 8, buckets: Int = 8): Boolean =
+    graft.io.Bucketing.landPartial(spark, windowDf(batch, k, 1L), table,
+      "window-df", Seq("h"), buckets, batchId)
 
   /** RETRACTION partial for the window-df family — p113's negated-df
     * device applied to passage removal: land the REMOVED docs' window
@@ -868,14 +842,9 @@ object Dedup {
     * in the corpus". */
   def retractWindowDfPartial(spark: org.apache.spark.sql.SparkSession,
                              removed: DataFrame, table: String, batchId: Long,
-                             k: Int = 8, buckets: Int = 8): Boolean = {
-    require(graft.io.Bucketing.repairCompaction(spark, table),
-      s"$table does not exist — a retraction can only follow appends")
-    val partial = windowOccurrences(passageTokens(removed), k)
-      .groupBy("h").agg((-count(lit(1))).cast("long").as("df_corpus"))
-      .withColumn("batch_id", lit(batchId))
-    graft.io.Bucketing.appendPartialInto(spark, partial, table, "window-df", batchId)
-  }
+                             k: Int = 8): Boolean =
+    graft.io.Bucketing.retractPartial(spark, windowDf(removed, k, -1L), table,
+      "window-df", batchId)
 
   /** Incremental passage removal — the daily-ingest shape of
     * [[substringRemove]]: the already-ingested corpus's window counts
@@ -1014,11 +983,15 @@ object Dedup {
     * fold on the bucketed key with no index-side exchange). */
   def buildShingleDfIndex(corpus: DataFrame, table: String, n: Int = 3,
                           buckets: Int = 8): Unit = {
-    val df = shingleGrams(corpus, n)
-      .groupBy(col("h")).agg(count(lit(1)).as("df_corpus"))
-    graft.io.Bucketing.writeBucketed(df, table, "h", buckets)
+    graft.io.Bucketing.writeBucketed(shingleDf(corpus, n, 1L), table, "h", buckets)
     graft.io.Bucketing.stampKind(corpus.sparkSession, table, "shingle-df")
   }
+
+  /** (h, df_corpus): `docs`' shingle document frequencies times `sign` —
+    * the one aggregate the build, the append and the retraction share. */
+  private def shingleDf(docs: DataFrame, n: Int, sign: Long): DataFrame =
+    shingleGrams(docs, n).groupBy(col("h"))
+      .agg((count(lit(1)) * sign).as("df_corpus"))
 
   /** STREAMED maintenance: one micro-batch's (h, df_corpus) partial
     * lands as its own batch_id partition bucketed on h. The fold is
@@ -1028,20 +1001,9 @@ object Dedup {
     * batch-shingle-vocabulary-bounded. */
   def appendShingleDfPartial(spark: org.apache.spark.sql.SparkSession,
                              batch: DataFrame, table: String, batchId: Long,
-                             n: Int = 3, buckets: Int = 8): Boolean = {
-    val partial = shingleGrams(batch, n)
-      .groupBy(col("h")).agg(count(lit(1)).as("df_corpus"))
-      .withColumn("batch_id", lit(batchId))
-    if (!graft.io.Bucketing.repairCompaction(spark, table)) {
-      graft.io.Bucketing.dropTable(spark, table)
-      graft.io.Bucketing.writePartitionedBucketed(partial, table,
-        "batch_id", "h", buckets)
-      graft.io.Bucketing.stampKind(spark, table, "shingle-df")
-      true
-    } else {
-      graft.io.Bucketing.appendPartialInto(spark, partial, table, "shingle-df", batchId)
-    }
-  }
+                             n: Int = 3, buckets: Int = 8): Boolean =
+    graft.io.Bucketing.landPartial(spark, shingleDf(batch, n, 1L), table,
+      "shingle-df", Seq("h"), buckets, batchId)
 
   /** RETRACTION partial: land the REMOVED docs' shingle dfs NEGATED as
     * their own batch_id partition — the right-to-be-forgotten path for
@@ -1059,18 +1021,9 @@ object Dedup {
     * silently inflating novelty. */
   def retractShingleDfPartial(spark: org.apache.spark.sql.SparkSession,
                               removed: DataFrame, table: String, batchId: Long,
-                              n: Int = 3, buckets: Int = 8): Boolean = {
-    // existence FIRST: requireKind would throw a raw NoSuchTableException
-    // before the designed contract message could fire
-    require(graft.io.Bucketing.repairCompaction(spark, table),
-      s"$table does not exist — a retraction can only follow appends")
-    graft.io.Bucketing.requireKind(spark, table, "shingle-df")
-    val partial = shingleGrams(removed, n)
-      .groupBy(col("h")).agg((-count(lit(1))).as("df_corpus"))
-      .withColumn("batch_id", lit(batchId))
-    graft.io.Bucketing.appendPartialInto(spark, partial, table, "shingle-df",
-      batchId)
-  }
+                              n: Int = 3): Boolean =
+    graft.io.Bucketing.retractPartial(spark, shingleDf(removed, n, -1L), table,
+      "shingle-df", batchId)
 
   /** Incremental novelty audit: per-DELTA-doc novelty with shingle dfs
     * merged from the persisted corpus index plus the delta's own

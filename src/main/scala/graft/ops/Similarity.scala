@@ -390,22 +390,14 @@ object Similarity {
                              table: String, batchId: Long,
                              buckets: Int = 8): Unit = {
     graft.io.Bucketing.requireKind(spark, centroidsTable, "ivf-centroids")
-    val partial = ivfAssignAgainst(batch, spark.table(centroidsTable))
-      .withColumn("batch_id", lit(batchId))
-    if (!graft.io.Bucketing.repairCompaction(spark, table)) {
-      graft.io.Bucketing.dropTable(spark, table)
-      graft.io.Bucketing.writePartitionedBucketed(partial, table,
-        "batch_id", "cell", buckets)
-      graft.io.Bucketing.stampKind(spark, table, "ivf-assign")
-      // geometry stamp: centroid count + the pinned artifact's name, so
-      // SQL APPEND/PROBE re-read the provisioning instead of guessing
-      graft.io.Bucketing.stampProperties(spark, table, Map(
-        graft.io.Bucketing.CentroidsProperty ->
+    // geometry stamp: centroid count + the pinned artifact's name, so
+    // SQL APPEND/PROBE re-read the provisioning instead of guessing
+    graft.io.Bucketing.landPartial(spark,
+      ivfAssignAgainst(batch, spark.table(centroidsTable)), table,
+      "ivf-assign", Seq("cell"), buckets, batchId,
+      Map(graft.io.Bucketing.CentroidsProperty ->
           spark.table(centroidsTable).count().toString,
         graft.io.Bucketing.CentroidsTableProperty -> centroidsTable))
-    } else {
-      graft.io.Bucketing.appendPartialInto(spark, partial, table, "ivf-assign", batchId)
-    }
   }
 
   /** STREAMED vector-index maintenance: band one ingest micro-batch
@@ -429,40 +421,20 @@ object Similarity {
     val bands = batch.select(col("vec_id"),
       posexplode(lshBucketsMulti(col("embedding"), tables, bitsPerTable)))
       .toDF("corpus_id", "t", "bucket")
-      .withColumn("batch_id", lit(batchId))
     val vecs = batch.select(col("vec_id").as("corpus_id"),
-        col("embedding").as("c_emb"), vec_norm(col("embedding")).as("c_nrm"))
-      .withColumn("batch_id", lit(batchId))
-    val bandsLive = graft.io.Bucketing.repairCompaction(spark, bandsTable)
-    val vecsLive = graft.io.Bucketing.repairCompaction(spark, vecsTable)
+      col("embedding").as("c_emb"), vec_norm(col("embedding")).as("c_nrm"))
     val geom = Map(graft.io.Bucketing.LshTablesProperty -> tables.toString,
       graft.io.Bucketing.LshBitsProperty -> bitsPerTable.toString)
-    // the two tables share no state, so their writes overlap (guide
+    // the two tables share no state, so their landings overlap (guide
     // §2.6, optimization r22): per micro-batch the vecs write used to
-    // wait out the full bands job (ProfileQ71 measured bands ~0.48 s +
-    // vecs ~0.25 s per batch, sequential); concurrent submission makes
-    // the pair cost ~max of the two
-    graft.io.Bucketing.concurrently({
-      if (!bandsLive) {
-        graft.io.Bucketing.dropTable(spark, bandsTable)
-        graft.io.Bucketing.writePartitionedBucketedMulti(bands, bandsTable,
-          "batch_id", Seq("t", "bucket"), buckets)
-        graft.io.Bucketing.stampKind(spark, bandsTable, "vec-bands")
-        graft.io.Bucketing.stampProperties(spark, bandsTable, geom)
-      } else {
-        graft.io.Bucketing.appendPartialInto(spark, bands, bandsTable, "vec-bands", batchId)
-      }
-    }, {
-      if (!vecsLive) {
-        graft.io.Bucketing.dropTable(spark, vecsTable)
-        graft.io.Bucketing.writePartitionedBucketed(vecs, vecsTable,
-          "batch_id", "corpus_id", buckets)
-        graft.io.Bucketing.stampKind(spark, vecsTable, "vec-payload")
-        graft.io.Bucketing.stampProperties(spark, vecsTable, geom)
-      } else {
-        graft.io.Bucketing.appendPartialInto(spark, vecs, vecsTable, "vec-payload", batchId)
-      }
-    })
+    // wait out the full bands job (bands ~0.48 s + vecs ~0.25 s per
+    // batch, sequential, OPTIMIZATION_r22); concurrent submission makes the
+    // pair cost ~max of the two
+    graft.io.Bucketing.concurrently(
+      graft.io.Bucketing.landPartial(spark, bands, bandsTable, "vec-bands",
+        Seq("t", "bucket"), buckets, batchId, geom),
+      graft.io.Bucketing.landPartial(spark, vecs, vecsTable, "vec-payload",
+        Seq("corpus_id"), buckets, batchId, geom))
   }
 
   /** IVF-PQ: the coarse quantizer prunes to nProbe cells (as ivfTopK),

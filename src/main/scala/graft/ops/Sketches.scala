@@ -75,15 +75,8 @@ object Sketches {
       .groupBy("lang")
       .agg(graft.functions.KmvAggregator.kmv(k)(col("h")).as("mins"))
       .select(col("lang"), explode(col("mins")).as("h"))
-      .withColumn("batch_id", lit(batchId))
-    if (!graft.io.Bucketing.repairCompaction(spark, table)) {
-      graft.io.Bucketing.dropTable(spark, table)
-      graft.io.Bucketing.writePartitionedBucketed(partial, table,
-        "batch_id", "lang", buckets)
-      graft.io.Bucketing.stampKind(spark, table, "kmv-profile")
-    } else {
-      graft.io.Bucketing.appendPartialInto(spark, partial, table, "kmv-profile", batchId)
-    }
+    graft.io.Bucketing.landPartial(spark, partial, table, "kmv-profile",
+      Seq("lang"), buckets, batchId)
   }
 
   /** Fold a streamed ([[appendKmvPartial]]) profile back to the
@@ -163,15 +156,8 @@ object Sketches {
       .agg(graft.functions.CountMin.count_min(depth, width)(col("key")).as("sk"))
       .select(posexplode(col("sk")))
       .toDF("pos", "cnt")
-      .withColumn("batch_id", lit(batchId))
-    if (!graft.io.Bucketing.repairCompaction(spark, table)) {
-      graft.io.Bucketing.dropTable(spark, table)
-      graft.io.Bucketing.writePartitionedBucketed(partial, table,
-        "batch_id", "pos", buckets)
-      graft.io.Bucketing.stampKind(spark, table, s"countmin-$depth-$width")
-    } else {
-      graft.io.Bucketing.appendPartialInto(spark, partial, table, s"countmin-$depth-$width", batchId)
-    }
+    graft.io.Bucketing.landPartial(spark, partial, table,
+      s"countmin-$depth-$width", Seq("pos"), buckets, batchId)
   }
 
   /** Audit the stream-maintained count-min sketch against the exact
@@ -342,15 +328,8 @@ object Sketches {
         .cast("long"))
       .groupBy(col("lang"), col("bin"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-    if (!graft.io.Bucketing.repairCompaction(spark, table)) {
-      graft.io.Bucketing.dropTable(spark, table)
-      graft.io.Bucketing.writePartitionedBucketed(partial, table,
-        "batch_id", "lang", buckets)
-      graft.io.Bucketing.stampKind(spark, table, "log2-hist")
-    } else {
-      graft.io.Bucketing.appendPartialInto(spark, partial, table, "log2-hist", batchId)
-    }
+    graft.io.Bucketing.landPartial(spark, partial, table, "log2-hist",
+      Seq("lang"), buckets, batchId)
   }
 
   /** Fold a streamed ([[appendLog2HistogramPartial]]) histogram back to

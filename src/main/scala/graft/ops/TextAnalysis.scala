@@ -152,12 +152,19 @@ object TextAnalysis {
   def buildLineDfIndex(corpus: DataFrame, table: String,
                        segTokens: Int = 12, byLines: Boolean = false,
                        buckets: Int = 8): Unit = {
-    val df = segmented(corpus, segTokens, byLines)
-      .select("h", "doc_id").distinct()
-      .groupBy("h").count().withColumnRenamed("count", "df_corpus")
-    graft.io.Bucketing.writeBucketed(df, table, "h", buckets)
+    graft.io.Bucketing.writeBucketed(lineDf(corpus, segTokens, byLines, 1L),
+      table, "h", buckets)
     graft.io.Bucketing.stampKind(corpus.sparkSession, table, "line-df")
   }
+
+  /** (h, df_corpus): `docs`' per-segment document frequencies times
+    * `sign` — the one aggregate the build, the append and the retraction
+    * share. */
+  private def lineDf(docs: DataFrame, segTokens: Int, byLines: Boolean,
+                     sign: Long): DataFrame =
+    segmented(docs, segTokens, byLines)
+      .select("h", "doc_id").distinct()
+      .groupBy("h").agg((count(lit(1)) * sign).as("df_corpus"))
 
   /** Streaming/micro-batch maintenance of the [[buildLineDfIndex]]
     * table: land ONE batch's partial document frequencies as the
@@ -184,31 +191,10 @@ object TextAnalysis {
   def appendLineDfPartial(spark: org.apache.spark.sql.SparkSession,
                           batch: DataFrame, table: String, batchId: Long,
                           segTokens: Int = 12, byLines: Boolean = false,
-                          buckets: Int = 8): Boolean = {
-    val partial = segmented(batch, segTokens, byLines)
-      .select("h", "doc_id").distinct()
-      .groupBy("h").count().withColumnRenamed("count", "df_corpus")
-      .withColumn("batch_id", lit(batchId))
-    // a compaction swap killed mid-rename leaves the index resolvable
-    // only under its backup name; repair BEFORE the existence check, or
-    // the create branch would start a fresh index and the eventual
-    // repair would drop the backup holding every earlier batch
-    if (!graft.io.Bucketing.repairCompaction(spark, table)) {
-      // a crash during the CREATE leaves staged files but no catalog
-      // entry; sweep the orphaned location so the retry's saveAsTable
-      // cannot die on LOCATION_ALREADY_EXISTS
-      graft.io.Bucketing.dropTable(spark, table)
-      graft.io.Bucketing.writePartitionedBucketed(partial, table,
-        "batch_id", "h", buckets)
-      graft.io.Bucketing.stampKind(spark, table, "line-df")
-      true
-    } else {
-      // appends run through the micro-batch's CLONED session, so the
-      // caller session's cached relation goes stale — refresh before
-      // resolving the insert target
-      graft.io.Bucketing.appendPartialInto(spark, partial, table, "line-df", batchId)
-    }
-  }
+                          buckets: Int = 8): Boolean =
+    graft.io.Bucketing.landPartial(spark,
+      lineDf(batch, segTokens, byLines, 1L), table, "line-df", Seq("h"),
+      buckets, batchId)
 
   /** RETRACTION partial for the line-df family — the negated-df device
     * (see Dedup.retractShingleDfPartial): land the REMOVED docs'
@@ -219,16 +205,10 @@ object TextAnalysis {
     * fails the probe loudly. */
   def retractLineDfPartial(spark: org.apache.spark.sql.SparkSession,
                            removed: DataFrame, table: String, batchId: Long,
-                           segTokens: Int = 12, byLines: Boolean = false,
-                           buckets: Int = 8): Boolean = {
-    require(graft.io.Bucketing.repairCompaction(spark, table),
-      s"$table does not exist — a retraction can only follow appends")
-    val partial = segmented(removed, segTokens, byLines)
-      .select("h", "doc_id").distinct()
-      .groupBy("h").agg((-count(lit(1))).cast("long").as("df_corpus"))
-      .withColumn("batch_id", lit(batchId))
-    graft.io.Bucketing.appendPartialInto(spark, partial, table, "line-df", batchId)
-  }
+                           segTokens: Int = 12,
+                           byLines: Boolean = false): Boolean =
+    graft.io.Bucketing.retractPartial(spark,
+      lineDf(removed, segTokens, byLines, -1L), table, "line-df", batchId)
 
   /** Incremental line dedup: rewrite ONLY the freshly-ingested delta
     * docs, gating each segment on its total document frequency = count
@@ -571,21 +551,15 @@ object TextAnalysis {
     * batch-size-bounded. */
   def appendTokenCountPartial(spark: org.apache.spark.sql.SparkSession,
                               batch: DataFrame, table: String, batchId: Long,
-                              buckets: Int = 8): Boolean = {
-    val partial = batch
-      .select(explode(tokens(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-    if (!graft.io.Bucketing.repairCompaction(spark, table)) {
-      graft.io.Bucketing.dropTable(spark, table)
-      graft.io.Bucketing.writePartitionedBucketed(partial, table,
-        "batch_id", "tok", buckets)
-      graft.io.Bucketing.stampKind(spark, table, "tok-counts")
-      true
-    } else {
-      graft.io.Bucketing.appendPartialInto(spark, partial, table, "tok-counts", batchId)
-    }
-  }
+                              buckets: Int = 8): Boolean =
+    graft.io.Bucketing.landPartial(spark, tokenCounts(batch, 1L), table,
+      "tok-counts", Seq("tok"), buckets, batchId)
+
+  /** (tok, cnt): `docs`' token counts times `sign` — the one aggregate
+    * the append and the retraction share. */
+  private def tokenCounts(docs: DataFrame, sign: Long): DataFrame =
+    docs.select(explode(tokens(col("text"))).as("tok"))
+      .groupBy(col("tok")).agg((count(lit(1)) * sign).as("cnt"))
 
   /** RETRACTION partial for the token-count family — the negated-df
     * device: land the REMOVED docs' token counts NEGATED as their own
@@ -595,16 +569,10 @@ object TextAnalysis {
     * the vocabulary (absent, exactly as a rebuild would have it);
     * negative folds fail probes loudly. */
   def retractTokenCountPartial(spark: org.apache.spark.sql.SparkSession,
-                               removed: DataFrame, table: String, batchId: Long,
-                               buckets: Int = 8): Boolean = {
-    require(graft.io.Bucketing.repairCompaction(spark, table),
-      s"$table does not exist — a retraction can only follow appends")
-    val partial = removed
-      .select(explode(tokens(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg((-count(lit(1))).as("cnt"))
-      .withColumn("batch_id", lit(batchId))
-    graft.io.Bucketing.appendPartialInto(spark, partial, table, "tok-counts", batchId)
-  }
+                               removed: DataFrame, table: String,
+                               batchId: Long): Boolean =
+    graft.io.Bucketing.retractPartial(spark, tokenCounts(removed, -1L), table,
+      "tok-counts", batchId)
 
   /** Retraction-aware global fold of a token-count index: zero folds
     * (token fully retracted) are dropped — the token is absent from
@@ -954,17 +922,10 @@ object TextAnalysis {
   def appendBenchGramPartial(spark: org.apache.spark.sql.SparkSession,
                              batch: DataFrame, table: String, batchId: Long,
                              n: Int = 8, buckets: Int = 8): Unit = {
-    val partial = batch
-      .select(explode(Dedup.shingles(col("text"), n)).as("gram")).distinct()
-      .withColumn("batch_id", lit(batchId))
-    if (!graft.io.Bucketing.repairCompaction(spark, table)) {
-      graft.io.Bucketing.dropTable(spark, table)
-      graft.io.Bucketing.writePartitionedBucketed(partial, table,
-        "batch_id", "gram", buckets)
-      graft.io.Bucketing.stampKind(spark, table, "bench-grams")
-    } else {
-      graft.io.Bucketing.appendPartialInto(spark, partial, table, "bench-grams", batchId)
-    }
+    graft.io.Bucketing.landPartial(spark,
+      batch.select(explode(Dedup.shingles(col("text"), n)).as("gram"))
+        .distinct(),
+      table, "bench-grams", Seq("gram"), buckets, batchId)
   }
 
   /** Incremental decontamination: score ONLY the freshly-ingested delta
@@ -1339,30 +1300,28 @@ object TextAnalysis {
     * exactly its own partition, healing even a torn job commit. */
   def appendBm25DfPartial(spark: org.apache.spark.sql.SparkSession,
                           batch: DataFrame, table: String, batchId: Long,
-                          buckets: Int = 8): Boolean = {
-    val df = batch
+                          buckets: Int = 8): Boolean =
+    graft.io.Bucketing.landPartial(spark, bm25Df(batch, 1L), table,
+      "bm25-df", Seq("term"), buckets, batchId)
+
+  /** (term, df_corpus): `docs`' term document frequencies plus the two
+    * sentinel corpus-stat rows, times `sign` — the one aggregate the
+    * append and the retraction share. */
+  private def bm25Df(docs: DataFrame, sign: Long): DataFrame = {
+    val df = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .distinct()
-      .groupBy("term").agg(count(lit(1)).cast("long").as("df_corpus"))
-    val stats = batch
+      .groupBy("term").agg((count(lit(1)) * sign).as("df_corpus"))
+    val stats = docs
       .select(size(tokens(col("text"))).cast("long").as("dl"))
-      .agg(count(lit(1)).cast("long").as("n"),
-        coalesce(sum(col("dl")), lit(0L)).as("tot"))
+      .agg((count(lit(1)) * sign).as("n"),
+        (coalesce(sum(col("dl")), lit(0L)) * sign).as("tot"))
       .select(explode(array(
         struct(lit(StatNDocs).as("term"), col("n").as("df_corpus")),
         struct(lit(StatTotTokens).as("term"), col("tot").as("df_corpus"))))
         .as("r"))
       .select(col("r.term"), col("r.df_corpus"))
-    val partial = df.unionByName(stats).withColumn("batch_id", lit(batchId))
-    if (!graft.io.Bucketing.repairCompaction(spark, table)) {
-      graft.io.Bucketing.dropTable(spark, table)
-      graft.io.Bucketing.writePartitionedBucketed(partial, table,
-        "batch_id", "term", buckets)
-      graft.io.Bucketing.stampKind(spark, table, "bm25-df")
-      true
-    } else {
-      graft.io.Bucketing.appendPartialInto(spark, partial, table, "bm25-df", batchId)
-    }
+    df.unionByName(stats)
   }
 
   /** RETRACTION partial for the streamed BM25 df family — the
@@ -1375,26 +1334,10 @@ object TextAnalysis {
     * coalesce-merge); negative probed dfs and non-positive folded
     * stats fail loudly. */
   def retractBm25DfPartial(spark: org.apache.spark.sql.SparkSession,
-                           removed: DataFrame, table: String, batchId: Long,
-                           buckets: Int = 8): Boolean = {
-    require(graft.io.Bucketing.repairCompaction(spark, table),
-      s"$table does not exist — a retraction can only follow appends")
-    val df = removed
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .distinct()
-      .groupBy("term").agg((-count(lit(1))).cast("long").as("df_corpus"))
-    val stats = removed
-      .select(size(tokens(col("text"))).cast("long").as("dl"))
-      .agg((-count(lit(1))).cast("long").as("n"),
-        (-coalesce(sum(col("dl")), lit(0L))).as("tot"))
-      .select(explode(array(
-        struct(lit(StatNDocs).as("term"), col("n").as("df_corpus")),
-        struct(lit(StatTotTokens).as("term"), col("tot").as("df_corpus"))))
-        .as("r"))
-      .select(col("r.term"), col("r.df_corpus"))
-    val partial = df.unionByName(stats).withColumn("batch_id", lit(batchId))
-    graft.io.Bucketing.appendPartialInto(spark, partial, table, "bm25-df", batchId)
-  }
+                           removed: DataFrame, table: String,
+                           batchId: Long): Boolean =
+    graft.io.Bucketing.retractPartial(spark, bm25Df(removed, -1L), table,
+      "bm25-df", batchId)
 
   /** Incremental BM25 screening against a STREAMED
     * ([[appendBm25DfPartial]]) index: per-batch partials fold back to

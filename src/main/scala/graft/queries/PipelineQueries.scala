@@ -1541,7 +1541,7 @@ object PipelineQueries {
       graft.io.Bucketing.dropTable(spark, idxTbl)
       TextAnalysis.appendLineDfPartial(spark, corpus, idxTbl, 0L, buckets = 8)
       TextAnalysis.appendLineDfPartial(spark, poison, idxTbl, 1L, buckets = 8)
-      TextAnalysis.retractLineDfPartial(spark, poison, idxTbl, 2L, buckets = 8)
+      TextAnalysis.retractLineDfPartial(spark, poison, idxTbl, 2L)
       graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)

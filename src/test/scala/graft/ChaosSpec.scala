@@ -793,8 +793,7 @@ class ChaosSpec extends SparkSpec {
           buckets = 2)
       def retract(docIds: Vector[Long], bid: Long): Boolean =
         Dedup.retractShingleDfPartial(spark,
-          corpus.filter(col("doc_id").isin(docIds: _*)), tbl, bid,
-          buckets = 2)
+          corpus.filter(col("doc_id").isin(docIds: _*)), tbl, bid)
       def maybeChaosFold(): Unit =
         if (rnd.nextDouble() < 0.6) {
           val crashStep = rnd.nextInt(3)
@@ -855,8 +854,8 @@ class ChaosSpec extends SparkSpec {
 
   // --- exhaustive crash walk over the one rewrite protocol -----------
   // Fixtures are written directly in the index layouts (h, df_corpus
-  // [, batch_id]) so each of the ~100 crash scenarios costs one small
-  // write: a batch_id-partitioned streamed index stamped as an additive
+  // [, batch_id]) so each of the ~100 crash scenarios costs a few small
+  // writes: a batch_id-partitioned streamed index landed as an additive
   // family, and an unpartitioned batch-built one.
 
   private def walkRows(t: String): Seq[String] =
@@ -876,26 +875,29 @@ class ChaosSpec extends SparkSpec {
   private def walkCrash(t: String, step: String)(body: => Unit): Unit =
     intercept[Bucketing.InjectedCrash](Bucketing.withFailpoint(t, step)(body))
 
+  /** Land `rows` (h, df_corpus, batch_id) as a shingle-df index, one
+    * [[Bucketing.landPartial]] call per batch_id. */
+  private def landFixture(t: String, rows: Seq[(Long, Long, Long)]): Unit =
+    rows.groupBy(_._3).toSeq.sortBy(_._1).foreach { case (bid, rs) =>
+      Bucketing.landPartial(spark, rs.map(r => (r._1, r._2)).toDF("h", "df_corpus"),
+        t, "shingle-df", Seq("h"), buckets = 2, bid)
+    }
+
   /** Streamed additive index: partials in batches 0-2, batch 2 retracting
     * keys 1-5 (they fold to zero and must vanish). */
-  private def streamedFixture(t: String): Unit = {
-    val rows = (1L to 30L).map(h => (h, 1L, 0L)) ++
-      (20L to 40L).map(h => (h, 2L, 1L)) ++ (1L to 5L).map(h => (h, -1L, 2L))
-    Bucketing.writePartitionedBucketed(rows.toDF("h", "df_corpus", "batch_id"),
-      t, "batch_id", "h", buckets = 2)
-    Bucketing.stampKind(spark, t, "shingle-df")
-  }
+  private def streamedFixture(t: String): Unit =
+    landFixture(t, (1L to 30L).map(h => (h, 1L, 0L)) ++
+      (20L to 40L).map(h => (h, 2L, 1L)) ++ (1L to 5L).map(h => (h, -1L, 2L)))
 
   /** Tiered layout: base at batch 1, fresh partials 2 and 3 above the
     * watermark, batch 3 retracting base-resident keys (pending negatives
     * the run fold must keep). */
   private def tieredFixture(t: String): Unit = {
-    val rows = (1L to 30L).map(h => (h, 3L, 1L)) ++
-      (25L to 35L).map(h => (h, 1L, 2L)) ++ (1L to 4L).map(h => (h, -1L, 3L))
-    Bucketing.writePartitionedBucketed(rows.toDF("h", "df_corpus", "batch_id"),
-      t, "batch_id", "h", buckets = 2)
+    landFixture(t, (1L to 30L).map(h => (h, 3L, 1L)) ++
+      (25L to 35L).map(h => (h, 1L, 2L)) ++ (1L to 4L).map(h => (h, -1L, 3L)))
+    // the fold markers go on after landing: a foldedThrough watermark
+    // would no-op the fixture's own batches
     Bucketing.stampProperties(spark, t, Map(
-      Bucketing.KindProperty -> "shingle-df",
       Bucketing.FoldedThroughProperty -> "1", Bucketing.BaseAtProperty -> "1",
       Bucketing.BaseMassProperty -> "30"))
   }
@@ -1018,5 +1020,84 @@ class ChaosSpec extends SparkSpec {
       "the promoted index must read full, not empty")
     assert(walkRows(t) === original)
     walkCleanup(t)
+  }
+
+  // --- create-then-land: kills on a table's first batch ---------------
+
+  private def graftProps(t: String): Map[String, String] =
+    spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t))
+      .properties.filter(_._1.startsWith("graft."))
+
+  test("a first batch killed at create or at append replays into a stamped table equal to a clean landing") {
+    val vecs = Tables.embeddings(spark, sfDir)
+    def landVec(b: String, p: String): Unit =
+      graft.ops.Similarity.appendVectorIndexPartial(spark, vecs, b, p, 0L,
+        tables = 4, bitsPerTable = 6, buckets = 2)
+    def landDf(t: String): Unit =
+      Dedup.appendShingleDfPartial(spark, corpus, t, 0L, buckets = 2)
+    val (refB, refP, refS) = ("land_ref_vb", "land_ref_vp", "land_ref_sdf")
+    Seq(refB, refP, refS).foreach(walkCleanup)
+    landVec(refB, refP)
+    landDf(refS)
+    assert(graftProps(refB) === Map(Bucketing.KindProperty -> "vec-bands",
+      Bucketing.LshTablesProperty -> "4", Bucketing.LshBitsProperty -> "6"))
+    for (step <- Seq("create", "append")) {
+      val (b, p, s) = (s"land_${step}_vb", s"land_${step}_vp", s"land_${step}_sdf")
+      Seq(b, p, s).foreach(walkCleanup)
+      walkCrash(b, step)(landVec(b, p))
+      walkCrash(s, step)(landDf(s))
+      for (t <- Seq(b, s)) withClue(s"$t killed at $step: ") {
+        if (step == "create") assert(!spark.catalog.tableExists(t))
+        else assert(spark.table(t).isEmpty, "the kill precedes every row")
+      }
+      landVec(b, p) // the replay
+      landDf(s)
+      for ((t, ref) <- Seq(b -> refB, p -> refP, s -> refS))
+        withClue(s"$t killed at $step, then replayed: ") {
+          assert(graftProps(t) === graftProps(ref), "kind and geometry stamps")
+          assert(walkRows(t) === walkRows(ref))
+        }
+      Seq(b, p, s).foreach(walkCleanup)
+    }
+    Seq(refB, refP, refS).foreach(walkCleanup)
+  }
+
+  test("a purge killed at any step of either table's swap leaves purgedThrough exactly on the tables it purged") {
+    val (tb, ts, tt) = ("purgewalk_b", "purgewalk_s", "purgewalk_t")
+    val retired = Seq(3L, 7L)
+    def purgedRowsGone(t: String): Boolean =
+      spark.table(t).filter(col("doc_id").isin(retired: _*)).isEmpty
+    val commit = swapPath.indexOf("rename-into-place")
+    for ((victim, v) <- Seq(tb, ts).zipWithIndex;
+         (step, i) <- swapPath.zipWithIndex) {
+      Seq(tb, ts, tt).foreach(walkCleanup)
+      Dedup.appendCorpusIndexPartial(spark, mCorpus, tb, ts, 0L,
+        bands = 8, rowsPerBand = 4, buckets = 2)
+      Dedup.retractFromCorpusIndex(spark,
+        mCorpus.filter(col("doc_id").isin(retired: _*)), tb, ts, tt, 1L)
+      walkCrash(victim, step)(Dedup.purgeCorpusIndexRetractions(spark, tb, ts, tt))
+      Seq(tb, ts).foreach(Bucketing.repairCompaction(spark, _))
+      withClue(s"purge killed at $step of $victim: ") {
+        // tables are purged in order; the victim's swap counts once it
+        // got past its commit step
+        val purged = Seq(tb, ts).zipWithIndex.map { case (_, j) =>
+          j < v || (j == v && i > commit) }
+        assert(Seq(tb, ts).map(purgedRowsGone) === purged)
+        for (t <- Seq(tb, ts))
+          assert(Bucketing.tableProperty(spark, t,
+              graft.io.Tombstones.PurgedThroughProperty) ===
+            (if (purgedRowsGone(t)) Some("1") else None), t)
+        // and the re-run purge converges
+        assert(Dedup.purgeCorpusIndexRetractions(spark, tb, ts, tt))
+        for (t <- Seq(tb, ts)) {
+          assert(purgedRowsGone(t), t)
+          assert(Bucketing.tableProperty(spark, t,
+            graft.io.Tombstones.PurgedThroughProperty) === Some("1"), t)
+        }
+        assert(!spark.catalog.tableExists(tt))
+      }
+    }
+    Seq(tb, ts, tt).foreach(walkCleanup)
   }
 }

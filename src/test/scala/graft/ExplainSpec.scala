@@ -899,7 +899,7 @@ class ExplainSpec extends SparkSpec {
         buckets = 4)
     }
     graft.ops.Dedup.retractShingleDfPartial(spark,
-      corpus.filter(col("doc_id") % 7 === 1), tbl, 4L, buckets = 4)
+      corpus.filter(col("doc_id") % 7 === 1), tbl, 4L)
     // the fold's own write must land exactly one file per bucket — the
     // hash-aggregate on the bucketed scan IS the repartition, so a
     // misaligned write (scan demoted, repartition not elided) would
