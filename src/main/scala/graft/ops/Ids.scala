@@ -34,17 +34,9 @@ object Ids {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val withB = df.withColumn("id_bucket",
       floor(orderCol.cast("long") / lit(bucketWidth)).cast("long"))
-    val offsets = withB.groupBy(col("id_bucket"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .withColumn("bucket_offset",
-        coalesce(
-          sum(col("bucket_n")).over(Window.orderBy(col("id_bucket"))
-            .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .drop("bucket_n")
     val w = Window.partitionBy(col("id_bucket"))
       .orderBy(orderCol.asc, tieCol.asc)
-    withB.join(broadcast(offsets), "id_bucket")
+    withB.join(broadcast(bucketOffsets(withB)), "id_bucket")
       .withColumn("global_id",
         col("bucket_offset") + row_number().over(w).cast("long") - 1)
       .drop("id_bucket", "bucket_offset")
@@ -73,7 +65,20 @@ object Ids {
     val withB = bucketize.transform(keyed)
       .withColumn("id_bucket", col("id_bucket_d").cast("long"))
       .drop("id_bucket_d")
-    val offsets = withB.groupBy(col("id_bucket"))
+    val w = Window.partitionBy(col("id_bucket"))
+      .orderBy(orderCol.asc, tieCol.asc)
+    withB.join(broadcast(bucketOffsets(withB)), "id_bucket")
+      .withColumn("global_id",
+        col("bucket_offset") + row_number().over(w).cast("long") - 1)
+      .drop("id_bucket", "bucket_offset", "id_ord")
+  }
+
+  /** Rows before each bucket: (id_bucket, bucket_offset), the prefix sum
+    * of per-bucket counts. The unpartitioned `Window.orderBy` is
+    * deliberate: it runs over the per-bucket aggregate, whose row count
+    * is bounded by the bucket count, not by the input. */
+  private def bucketOffsets(withB: DataFrame): DataFrame =
+    withB.groupBy(col("id_bucket"))
       .agg(count(lit(1)).as("bucket_n"))
       .withColumn("bucket_offset",
         coalesce(
@@ -81,11 +86,4 @@ object Ids {
             .rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
       .drop("bucket_n")
-    val w = Window.partitionBy(col("id_bucket"))
-      .orderBy(orderCol.asc, tieCol.asc)
-    withB.join(broadcast(offsets), "id_bucket")
-      .withColumn("global_id",
-        col("bucket_offset") + row_number().over(w).cast("long") - 1)
-      .drop("id_bucket", "bucket_offset", "id_ord")
-  }
 }

@@ -94,6 +94,9 @@ object Selection {
       .agg(sum(col("sel_w")).as("bucket_w"))
       .withColumn("bucket_offset",
         coalesce(
+          // unpartitioned on purpose: this window runs over the per-bucket
+          // aggregate, whose row count is bounded by the bucket count
+          // (resolution + 1), not by the input
           sum(col("bucket_w")).over(Window.orderBy(col("sel_bucket"))
             .rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))

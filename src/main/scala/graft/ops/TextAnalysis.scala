@@ -267,6 +267,10 @@ object TextAnalysis {
     reassemble(delta, kept, segTokens, byLines)
   }
 
+  /** The first 16 bits of the md5 of `t`, mod `m` (m ≤ 65536). */
+  private def md5Bucket(t: Column, m: Int): Column =
+    conv(substring(md5(t), 1, 4), 16, 10).cast("int") % m
+
   /** Hashed-feature linear quality classifier — the fastText-shaped
     * scorer the CCNet/LLaMA curation pipelines gate on: each token is
     * feature-hashed into a fixed bucket space and the document score is
@@ -288,11 +292,8 @@ object TextAnalysis {
     require(weightMod > 1 && weightMod % 2 == 1,
       "odd weightMod keeps the weight range symmetric around zero")
     val toks = tokens(col("text"))
-    def bucket(w: Column): Column =
-      conv(substring(md5(w), 1, 4), 16, 10).cast("int") % buckets
     def weight(w: Column): Column =
-      conv(substring(md5(bucket(w).cast("string")), 1, 4), 16, 10)
-        .cast("int") % weightMod - (weightMod - 1) / 2
+      md5Bucket(md5Bucket(w, buckets).cast("string"), weightMod) - (weightMod - 1) / 2
     docs.select(col("doc_id"),
         aggregate(transform(toks, w => weight(w).cast("long")),
           lit(0L), (acc, x) => acc + x).as("score_raw"),
@@ -300,87 +301,121 @@ object TextAnalysis {
       .withColumn("keep", col("score_raw") > 0)
   }
 
-  /** Long-form hashed features for the logreg rows: one row per
-    * (doc, occupied dim) with the capped count, PLUS a constant bias
-    * feature at dim `dims` (value `biasX` — scaled up so the intercept's
-    * gradient is commensurate with the count features'; an unscaled
-    * x=1 bias learns too slowly to ever move the decision boundary off
-    * the origin), and the per-doc label riding along — (doc_id, y6, d, x). */
-  private def logRegFeatures(docs: DataFrame, dims: Int, capCount: Int,
-                             labelMinTokens: Int, biasX: Int): DataFrame = {
+  /** Sparse hashed features, one narrow projection → (doc_id, y6, f:
+    * array<struct<d, x>>): each occupied dim's token count capped at
+    * `capCount` (run lengths of the sorted bucket array: state bounded by
+    * tokens, not `dims`), plus the bias dim `dims` = `biasX`, scaled so
+    * the intercept learns as fast as the counts. Null text: null label,
+    * bias only. */
+  private[graft] def logRegFeatures(docs: DataFrame, dims: Int, capCount: Int,
+                                    labelMinTokens: Int, biasX: Int): DataFrame = {
     val toks = tokens(col("text"))
-    def bucket(t: Column): Column =
-      conv(substring(md5(t), 1, 4), 16, 10).cast("int") % dims
     val y6 = (size(toks) > labelMinTokens).cast("long").*(lit(1000000L))
+    val (b, ends) = (col("b"), col("ends"))
+    val runs = transform(ends, (e, j) => struct(b.getItem(e).as("d"),
+      least((e - when(j === 0, -1).otherwise(ends.getItem(j - 1))).cast("long"),
+        lit(capCount.toLong)).as("x")))
+    val bias = struct(lit(dims).as("d"), lit(biasX.toLong).as("x"))
     docs
-      .select(col("doc_id"), y6.as("y6"), explode(toks).as("t"))
-      .groupBy(col("doc_id"), col("y6"), bucket(col("t")).as("d"))
-      .agg(least(count(lit(1)), lit(capCount.toLong)).as("x"))
-      .unionByName(docs.select(col("doc_id"), y6.as("y6"),
-        lit(dims).as("d"), lit(biasX.toLong).as("x")))
+      .select(col("doc_id"), y6.as("y6"), array_sort(transform(
+        coalesce(toks, array().cast("array<string>")), t => md5Bucket(t, dims))).as("b"))
+      .select(col("doc_id"), col("y6"), b, filter(transform(b, (_, i) => i),
+        i => i === size(b) - 1 || b.getItem(i) =!= b.getItem(i + 1)).as("ends"))
+      .select(col("doc_id"), col("y6"), concat(runs, array(bias)).as("f"))
   }
 
-  /** Exact integer per-doc margins under a weight vector: one bounded
-    * broadcast join + one doc-keyed aggregate → (doc_id, y6, m6). */
-  private def logRegMargins(feat: DataFrame, w: Array[Long]): DataFrame = {
-    val spark = feat.sparkSession
-    import spark.implicits._
-    val wDf = w.toSeq.zipWithIndex.map { case (wv, d) => (d, wv) }
-      .toDF("d", "w6")
-    feat.join(broadcast(wDf), "d")
-      .groupBy("doc_id").agg(max(col("y6")).as("y6"),
-        sum(col("w6") * col("x")).as("m6"))
-  }
+  /** Exact integer margin: the weights, one array literal, folded over
+    * `f` — a narrow projection, no weight table, no join. */
+  private def logRegMargin(w: Array[Long]): Column =
+    aggregate(col("f"), lit(0L), (acc, e) =>
+      acc + element_at(lit(w), e.getField("d") + 1) * e.getField("x"))
 
-  /** Run the K gradient steps; returns the weight vector AFTER each
-    * step (the full trajectory). Per step: margins, sigmoid
-    * re-quantized to the 1e-6 grid, one dims-bounded gradient
-    * aggregate, a D-long driver fold (the k-means collect discipline). */
-  private def logRegSteps(feat: DataFrame, n: Long, width: Int, steps: Int,
-                          etaInvFactor: Int): Seq[Array[Long]] = {
-    val etaInv = etaInvFactor * n
-    val w = Array.fill(width)(0L)
-    val snaps = Seq.newBuilder[Array[Long]]
-    for (_ <- 1 to steps) {
-      val r = logRegMargins(feat, w)
-        .select(col("doc_id"),
-          round(lit(1000000.0) /
-            (lit(1.0) + exp(-(col("m6").cast("double") / lit(1000000.0)))))
-            .cast("long").as("r6"))
-      val grad = feat.join(r, "doc_id")
-        .groupBy("d").agg(sum((col("r6") - col("y6")) * col("x")).as("g"))
-        .collect().map(row => row.getInt(0) -> row.getLong(1)).toMap
-      var d = 0
-      while (d < width) {
-        w(d) -= grad.getOrElse(d, 0L) / etaInv
-        d += 1
+  /** A step's rows: err = sigmoid on the 1e-6 grid − y6 (null for a null label), and `f`. */
+  private[graft] def logRegStep(feat: DataFrame, w: Array[Long]): DataFrame =
+    feat.select(
+      (round(lit(1000000.0) /
+        (lit(1.0) + exp(-(logRegMargin(w).cast("double") / lit(1000000.0)))))
+        .cast("long") - col("y6")).as("err"),
+      col("f"))
+
+  /** One pass, one job, no shuffle → (rows, gradient): partitions fold
+    * err · x densely and the driver sums them. Overflow fails loudly and
+    * null errors are skipped, as in ANSI `sum`. */
+  private def logRegGradient(feat: DataFrame, w: Array[Long]): (Long, Array[Long]) = {
+    val width = w.length
+    val parts = logRegStep(feat, w).queryExecution.toRdd.mapPartitions { rows =>
+      var n = 0L
+      val g = new Array[Long](width)
+      for (r <- rows) {
+        n += 1
+        if (!r.isNullAt(0)) {
+          val f = r.getArray(1)
+          for (i <- 0 until f.numElements()) {
+            val e = f.getStruct(i, 2)
+            val d = e.getInt(0)
+            g(d) = Math.addExact(g(d), Math.multiplyExact(r.getLong(0), e.getLong(1)))
+          }
+        }
       }
-      snaps += w.clone()
-    }
-    snaps.result()
+      Iterator.single((n, g))
+    }.collect()
+    (parts.map(_._1).sum, Array.tabulate(width)(d =>
+      parts.foldLeft(0L)((acc, p) => Math.addExact(acc, p._2(d)))))
+  }
+
+  /** Featurize once (persisted; the first pass fills the cache and
+    * counts the N docs), run the K steps, and hand (features, N, weights
+    * AFTER each step) to `use`. Updates divide by etaInvFactor·N. */
+  private def logRegTrained[T](docs: DataFrame, dims: Int, steps: Int, capCount: Int,
+                               labelMinTokens: Int, etaInvFactor: Int, biasX: Int)(
+                               use: (DataFrame, Long, Seq[Array[Long]]) => T): T = {
+    require(dims > 0 && dims <= 65536, "dim space must fit the 16-bit md5 prefix")
+    require(steps >= 1 && steps <= 8, "unrolled-oracle training is short")
+    val feat = logRegFeatures(docs, dims, capCount, labelMinTokens, biasX).persist()
+    try {
+      val snaps = (1 to steps).scanLeft((0L, Array.fill(dims + 1)(0L))) {
+        case ((_, w), _) =>
+          val (n, grad) = logRegGradient(feat, w)
+          (n, Array.tabulate(w.length)(d => w(d) - grad(d) / (etaInvFactor * n)))
+      }.tail
+      use(feat, snaps.last._1, snaps.map(_._2))
+    } finally feat.unpersist()
+  }
+
+  /** (thr6, tp, fp, tn, fn) per cutoff, prediction = m6 > thr6; a
+    * null-label doc counts in none of the four cells. */
+  private def logRegConfusion(feat: DataFrame, w: Array[Long],
+                              thresholds6: Seq[Long]): DataFrame = {
+    val pos = col("m6") > col("thr6")
+    val truth = col("y6") === 1000000L
+    def cnt(c: Column): Column = sum(when(c, 1L).otherwise(0L))
+    feat.select(col("y6"), logRegMargin(w).as("m6"))
+      .crossJoin(broadcast(feat.sparkSession.createDataFrame(thresholds6.map(Tuple1(_)))
+        .toDF("thr6")))
+      .groupBy(col("thr6"))
+      .agg(cnt(pos && truth).as("tp"), cnt(pos && !truth).as("fp"),
+        cnt(!pos && !truth).as("tn"), cnt(!pos && truth).as("fn"))
   }
 
   /** Distributed full-batch logistic-regression TRAINING over hashed
     * token-count features — the training half of the [[hashedLinearQuality]]
     * story (p61 APPLIES a weight table; this row LEARNS one). The shape is
     * the classic parameter-server-free fleet pattern a quality-classifier
-    * pipeline ships: per step, one map-side featurize + aggregate produces
-    * the (D+1)-dimensional gradient (D hashed dims + intercept), the
-    * driver folds it into the weight vector (D+1 longs — the k-means
-    * p41/p42 collect discipline), and the next step broadcasts the
-    * weights back out. Cost per step is one shuffle bounded by `dims`,
-    * independent of corpus size.
+    * pipeline ships: per step, one narrow pass scores every doc and
+    * folds the (D+1)-dimensional gradient (D hashed dims + intercept)
+    * per partition; the driver sums the partials into the weight vector
+    * (D+1 longs — the k-means p41/p42 collect discipline). Cost per step
+    * is one job: no join, no shuffle.
     *
-    * Exact fixed-point replay discipline: weights live as 1e-6-scaled
-    * LONGS; features are integer token counts capped at `capCount` plus
-    * the `biasX`-scaled intercept feature; margins are exact integer
-    * sums; the only float op per step is the sigmoid, immediately
-    * re-quantized to the 1e-6 grid with HALF_UP rounding (positive
-    * domain — Spark and DuckDB agree), so gradient sums are exact
-    * integers and the whole K-step trajectory is bit-replayable by the
-    * SQL oracle with no summation-order caveats. The weight update
-    * divides by (etaInvFactor·N) with TRUNCATING integer division —
-    * Scala `/` on Long and DuckDB `//` both truncate toward zero.
+    * Exact fixed-point replay discipline: weights are 1e-6-scaled
+    * LONGS, features integer counts, margins exact integer sums; the
+    * only float op per step is the sigmoid, re-quantized to the 1e-6 grid
+    * with HALF_UP rounding (positive domain — Spark and DuckDB agree), so
+    * the whole K-step trajectory is bit-replayable by the SQL oracle. The
+    * weight update divides by (etaInvFactor·N) TRUNCATING — Scala `/` on
+    * Long and DuckDB `//` both truncate toward zero.
+    *
+    * Precondition: `doc_id` is a key of `docs` (each row is one example).
     *
     * Label: y = 1 iff the doc has more than `labelMinTokens` whitespace
     * tokens — the fixture median, so classes are balanced and the
@@ -393,71 +428,47 @@ object TextAnalysis {
     * not just the final vector. Dim `dims` is the intercept. */
   def trainHashedLogReg(docs: DataFrame, dims: Int = 8, steps: Int = 4,
                         capCount: Int = 1000, labelMinTokens: Int = 55,
-                        etaInvFactor: Int = 128, biasX: Int = 25): DataFrame = {
-    require(dims > 0 && dims <= 65536, "dim space must fit the 16-bit md5 prefix")
-    require(steps >= 1 && steps <= 8, "unrolled-oracle training is short")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val feat = logRegFeatures(docs, dims, capCount, labelMinTokens, biasX)
-      .persist()
-    try {
-      val snaps = logRegSteps(feat, docs.count(), dims + 1, steps, etaInvFactor)
-      (for {
-        (w, i) <- snaps.zipWithIndex
-        d <- 0 to dims // dim `dims` is the intercept
-      } yield (i + 1, d, w(d)))
-        .toDF("step", "dim", "weight6")
-        .select(col("step").cast("long"), col("dim").cast("long"),
-          col("weight6"))
-    } finally feat.unpersist()
-  }
+                        etaInvFactor: Int = 128, biasX: Int = 25): DataFrame =
+    logRegTrained(docs, dims, steps, capCount, labelMinTokens, etaInvFactor, biasX) {
+      (_, _, snaps) =>
+        docs.sparkSession.createDataFrame(for {
+          (w, i) <- snaps.zipWithIndex
+          d <- 0 to dims // dim `dims` is the intercept
+        } yield (i + 1L, d.toLong, w(d))).toDF("step", "dim", "weight6")
+    }
 
   /** Evaluation of the TRAINED classifier on the training corpus —
     * the confusion matrix a pipeline publishes next to its filter:
     * train the [[trainHashedLogReg]] weights, score every doc with the
-    * final vector (prediction = margin > 0), and aggregate exact
-    * integer counts. `acc6` is (tp+tn)·1e6 div n — truncating integer
-    * division, engine-exact. One output row. */
+    * final vector (prediction = margin > 0, the thr6 = 0 row of
+    * [[evalHashedLogRegThresholds]]), and aggregate exact integer
+    * counts. `acc6` is (tp+tn)·1e6 div n — truncating integer division,
+    * engine-exact. One output row. Same `doc_id` precondition as
+    * [[trainHashedLogReg]]. */
   def evalHashedLogReg(docs: DataFrame, dims: Int = 8, steps: Int = 4,
                        capCount: Int = 1000, labelMinTokens: Int = 55,
-                       etaInvFactor: Int = 128, biasX: Int = 25): DataFrame = {
-    val feat = logRegFeatures(docs, dims, capCount, labelMinTokens, biasX)
-      .persist()
-    try {
-      val n = docs.count()
-      val w = logRegSteps(feat, n, dims + 1, steps, etaInvFactor).last
-      val pos = col("m6") > 0
-      val truth = col("y6") === 1000000L
-      def cnt(c: Column): Column = sum(when(c, 1L).otherwise(0L))
-      logRegMargins(feat, w)
-        .agg(cnt(pos && truth).as("tp"), cnt(pos && !truth).as("fp"),
-          cnt(!pos && !truth).as("tn"), cnt(!pos && truth).as("fn"))
-        .selectExpr("tp", "fp", "tn", "fn",
-          // integral DIV (truncating) — Column./ would promote to double
-          s"CAST(((tp + tn) * 1000000L) DIV ${n}L AS BIGINT) AS acc6")
-    } finally feat.unpersist()
-  }
+                       etaInvFactor: Int = 128, biasX: Int = 25): DataFrame =
+    logRegTrained(docs, dims, steps, capCount, labelMinTokens, etaInvFactor, biasX) {
+      (feat, n, snaps) =>
+        logRegConfusion(feat, snaps.last, Seq(0L))
+          .selectExpr("tp", "fp", "tn", "fn",
+            // integral DIV (truncating) — Column./ would promote to double
+            s"CAST(((tp + tn) * 1000000L) DIV ${n}L AS BIGINT) AS acc6")
+    }
 
   /** Operating-point sweep of the TRAINED classifier — the curve a
     * curation pipeline reads to CHOOSE its quality-gate threshold
     * (recall-leaning for bulk pretraining data, precision-leaning for
     * a high-quality subset), rather than defaulting to margin > 0.
-    * Train the [[trainHashedLogReg]] weights once, score every doc
-    * once (exact integer margins), then evaluate the confusion matrix
-    * at each probability cutoff: p > t ⟺ m6 > floor(logit(t)·1e6)
-    * over integer margins, so the sweep thresholds are PINNED integer
-    * literals — the FLOOR of each logit on the 1e-6 grid (default:
-    * logit of 0.1/0.3/0.5/0.7/0.9; flooring, not nearest-rounding,
-    * keeps the equivalence exact for a margin landing ON the pinned
-    * value) — and the whole row stays
-    * inside the exact fixed-point replay discipline — no float compare
-    * anywhere. Derived metrics use truncating 1e-6 integer division
-    * (`DIV` / DuckDB `//`, nonnegative operands), with -1 as the
-    * undefined sentinel. Cost: the margin pass is one dims-bounded
-    * broadcast join + doc aggregate; the sweep itself is a
-    * |thresholds|-way broadcast expansion of the n-row margin frame
-    * into one bounded aggregate — threshold count never multiplies
-    * corpus scans. */
+    * Each probability cutoff is an integer margin cutoff, p > t ⟺
+    * m6 > floor(logit(t)·1e6), so the thresholds are PINNED integer
+    * literals (default: logit of 0.1/0.3/0.5/0.7/0.9; flooring, not
+    * nearest-rounding, keeps the equivalence exact for a margin landing
+    * ON the pinned value) and no float compare happens anywhere. Derived
+    * metrics use truncating 1e-6 integer division (`DIV` / DuckDB `//`,
+    * nonnegative operands), with -1 as the undefined sentinel. Cutoffs
+    * broadcast into one bounded aggregate, never multiplying corpus
+    * scans. Same `doc_id` precondition as [[trainHashedLogReg]]. */
   def evalHashedLogRegThresholds(docs: DataFrame,
                                  thresholds6: Seq[Long] =
                                    Seq(-2197225L, -847298L, 0L, 847297L,
@@ -466,31 +477,17 @@ object TextAnalysis {
                                  capCount: Int = 1000,
                                  labelMinTokens: Int = 55,
                                  etaInvFactor: Int = 128,
-                                 biasX: Int = 25): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val feat = logRegFeatures(docs, dims, capCount, labelMinTokens, biasX)
-      .persist()
-    try {
-      val w = logRegSteps(feat, docs.count(), dims + 1, steps,
-        etaInvFactor).last
-      val thr = thresholds6.toDF("thr6")
-      val pos = col("m6") > col("thr6")
-      val truth = col("y6") === 1000000L
-      def cnt(c: Column): Column = sum(when(c, 1L).otherwise(0L))
-      logRegMargins(feat, w)
-        .crossJoin(broadcast(thr))
-        .groupBy(col("thr6"))
-        .agg(cnt(pos && truth).as("tp"), cnt(pos && !truth).as("fp"),
-          cnt(!pos && !truth).as("tn"), cnt(!pos && truth).as("fn"))
-        .selectExpr("thr6", "tp", "fp", "tn", "fn",
-          "CASE WHEN tp + fp = 0 THEN -1L ELSE tp * 1000000L DIV (tp + fp) END AS prec6",
-          "CASE WHEN tp + fn = 0 THEN -1L ELSE tp * 1000000L DIV (tp + fn) END AS rec6")
-        .selectExpr("thr6", "tp", "fp", "tn", "fn", "prec6", "rec6",
-          "CASE WHEN prec6 < 0 OR rec6 < 0 OR prec6 + rec6 = 0 THEN -1L " +
-            "ELSE 2L * prec6 * rec6 DIV (prec6 + rec6) END AS f16")
-    } finally feat.unpersist()
-  }
+                                 biasX: Int = 25): DataFrame =
+    logRegTrained(docs, dims, steps, capCount, labelMinTokens, etaInvFactor, biasX) {
+      (feat, _, snaps) =>
+        logRegConfusion(feat, snaps.last, thresholds6)
+          .selectExpr("thr6", "tp", "fp", "tn", "fn",
+            "CASE WHEN tp + fp = 0 THEN -1L ELSE tp * 1000000L DIV (tp + fp) END AS prec6",
+            "CASE WHEN tp + fn = 0 THEN -1L ELSE tp * 1000000L DIV (tp + fn) END AS rec6")
+          .selectExpr("thr6", "tp", "fp", "tn", "fn", "prec6", "rec6",
+            "CASE WHEN prec6 < 0 OR rec6 < 0 OR prec6 + rec6 = 0 THEN -1L " +
+              "ELSE 2L * prec6 * rec6 DIV (prec6 + rec6) END AS f16")
+    }
 
   /** Tokenizer-vocabulary coverage / OOV audit — the check a pipeline
     * runs BEFORE committing to a tokenizer: build the top-V corpus

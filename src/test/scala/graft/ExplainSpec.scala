@@ -745,19 +745,31 @@ class ExplainSpec extends SparkSpec {
     }
   }
 
-  test("p98 sweep: weights and thresholds broadcast; margins aggregate once") {
+  test("p98 sweep: no weight join; the threshold table is the only join") {
     val plan = planString(
       graft.ops.TextAnalysis.evalHashedLogRegThresholds(
         Tables.documents(spark, sfDir)))
-    // the (dims+1)-row weight table and the 5-row threshold table both
-    // broadcast against the doc-keyed frames; nothing corpus-sized
-    // sort-merges and the 5-way expansion is a broadcast nested loop,
-    // not a cartesian shuffle
-    assert(plan.contains("BroadcastHashJoin"), s"weight join must broadcast:\n$plan")
-    assert(plan.contains("BroadcastNestedLoopJoin"),
-      s"threshold expansion must broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), s"no corpus-sized sort-merge:\n$plan")
-    assert(!plan.contains("CartesianProduct"), plan)
+    // the weights are an array literal folded over each doc's sparse
+    // features: no weight join, no explode, and the 5-way threshold
+    // expansion is a broadcast nested loop into one bounded aggregate
+    for (op <- Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+        "Generate", "CartesianProduct"))
+      assert(!plan.contains(op), s"no $op in the sweep:\n$plan")
+    assert("Join".r.findAllIn(plan).size ===
+      "BroadcastNestedLoopJoin".r.findAllIn(plan).size &&
+      plan.contains("BroadcastNestedLoopJoin"),
+      s"the threshold expansion must be the only join:\n$plan")
+    assert("(?<!Broadcast)Exchange ".r.findAllIn(plan).size <= 1,
+      s"at most one shuffle, the threshold aggregate's:\n$plan")
+  }
+
+  test("p88 training step: one narrow pass, no exchange") {
+    val feat = graft.ops.TextAnalysis.logRegFeatures(
+      Tables.documents(spark, sfDir), dims = 8, capCount = 1000,
+      labelMinTokens = 55, biasX = 25)
+    val plan = planString(graft.ops.TextAnalysis.logRegStep(feat, Array.fill(9)(1L)))
+    assert(!plan.contains("Exchange") && !plan.contains("Join") &&
+      !plan.contains("Generate"), s"a step must not shuffle or join:\n$plan")
   }
 
   test("p99 coverage: vocab broadcasts back; top-V selection never sorts") {

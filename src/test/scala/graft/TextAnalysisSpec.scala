@@ -329,25 +329,31 @@ class TextAnalysisSpec extends SparkSpec {
       (id, x, y6)
     }
     val etaInv = etaF.toLong * corpus.length
-    val w = Array.fill(dims + 1)(0L)
-    val want = Seq.newBuilder[(Long, Long, Long)]
-    for (step <- 1 to steps) {
-      val grad = Array.fill(dims + 1)(0L)
-      for ((_, x, y6) <- feats) {
-        val m6 = x.map { case (d, xv) => w(d) * xv }.sum
-        val r6 = math.round(1000000.0 / (1.0 + math.exp(-(m6.toDouble / 1000000.0))))
-        for ((d, xv) <- x) grad(d) += (r6 - y6) * xv
+    def reference(steps: Int): Seq[(Long, Long, Long)] = {
+      val w = Array.fill(dims + 1)(0L)
+      val want = Seq.newBuilder[(Long, Long, Long)]
+      for (step <- 1 to steps) {
+        val grad = Array.fill(dims + 1)(0L)
+        for ((_, x, y6) <- feats) {
+          val m6 = x.map { case (d, xv) => w(d) * xv }.sum
+          val r6 = math.round(1000000.0 / (1.0 + math.exp(-(m6.toDouble / 1000000.0))))
+          for ((d, xv) <- x) grad(d) += (r6 - y6) * xv
+        }
+        for (d <- 0 to dims) {
+          w(d) -= grad(d) / etaInv
+          want += ((step.toLong, d.toLong, w(d)))
+        }
       }
-      for (d <- 0 to dims) {
-        w(d) -= grad(d) / etaInv
-        want += ((step.toLong, d.toLong, w(d)))
-      }
+      want.result()
     }
-    val got = TextAnalysis.trainHashedLogReg(
+    def trained(steps: Int): Seq[(Long, Long, Long)] = TextAnalysis.trainHashedLogReg(
         corpus.toDF("doc_id", "text"), dims, steps, cap, minTok, etaF, biasX)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       .sortBy(t => (t._1, t._2))
-    assert(got === want.result(), "weight trajectory must replay exactly")
+    val got = trained(steps)
+    assert(got === reference(steps), "weight trajectory must replay exactly")
+    // one step: the corpus size comes from the same pass as the gradient
+    assert(trained(1) === reference(1), "a single step must replay exactly")
     // the trajectory is non-degenerate: step-4 weights differ from step-1
     val byStep = got.groupBy(_._1).view.mapValues(_.map(_._3)).toMap
     assert(byStep(1L) !== byStep(steps.toLong))
@@ -389,6 +395,42 @@ class TextAnalysisSpec extends SparkSpec {
     sweep.filter(r => r.getLong(1) + r.getLong(2) == 0L).foreach { r =>
       assert(r.getLong(5) === -1L && r.getLong(7) === -1L)
     }
+  }
+
+  test("classifier edge cases: null and empty text, capped counts, partitioned input") {
+    import spark.implicits._
+    val docs = Seq[(Long, String)](
+        (1L, null),                                  // bias entry only
+        (2L, ""),                                    // one empty token
+        (3L, "x x x x x x y"),                       // x capped at 3
+        (4L, "the cat sat on the mat"),
+        (5L, "a b c d e f g h"),
+        (6L, "dog"),
+        (7L, "red red red red blue blue"),
+        (8L, "one two three four five six seven eight nine"))
+      .toDF("doc_id", "text").repartition(4)
+    val (dims, steps, cap, minTok, etaF, biasX) = (8, 3, 3, 4, 1, 1)
+    val train = TextAnalysis.trainHashedLogReg(docs, dims, steps, cap, minTok, etaF, biasX)
+      .collect().map(r => Seq(r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sortBy(t => (t(0), t(1))).map(_(2)).grouped(dims + 1).map(_.toSeq).toSeq
+    assert(train === Seq(
+      Seq(62500L, 375000L, 312500L, 187500L, 375000L, 187500L, 187500L, 187500L, 187500L),
+      Seq(27989L, 470181L, 372494L, 231703L, 488458L, 166064L, 234969L, 237359L, 127426L),
+      Seq(-10150L, 542437L, 416576L, 266825L, 576923L, 135496L, 270477L, 277542L, 53755L)))
+    // the null-text doc has a null label (size(null) is null), so it counts
+    // in n but in none of the four cells: 7 of 8 docs, acc6 = 5e6 div 8
+    val ev = TextAnalysis.evalHashedLogReg(docs, dims, steps, cap, minTok, etaF, biasX)
+      .collect().head
+    assert((0 until 5).map(ev.getLong) === Seq(5L, 2L, 0L, 0L, 625000L))
+    val sweep = TextAnalysis.evalHashedLogRegThresholds(docs, Seq(-2197225L, -847298L,
+        0L, 847297L, 2197224L), dims, steps, cap, minTok, etaF, biasX)
+      .collect().map(r => (0 until 8).map(r.getLong)).sortBy(_.head).toSeq
+    assert(sweep === Seq(
+      Seq(-2197225L, 5L, 2L, 0L, 0L, 714285L, 1000000L, 833332L),
+      Seq(-847298L, 5L, 2L, 0L, 0L, 714285L, 1000000L, 833332L),
+      Seq(0L, 5L, 2L, 0L, 0L, 714285L, 1000000L, 833332L),
+      Seq(847297L, 5L, 0L, 2L, 0L, 1000000L, 1000000L, 1000000L),
+      Seq(2197224L, 4L, 0L, 2L, 1L, 1000000L, 800000L, 888888L)))
   }
 
   test("vocabCoverage selects top-V by (count desc, token asc) and audits OOV exactly") {
