@@ -1,25 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // keep saveAsTable scratch (q34/p54 bucket layouts) out of the
-      // repo root; the graft-warehouse prefix is swept by
-      // TempPaths.sweepStale if a kill strands it (pid token = live-
-      // owner protection, since the appId doesn't exist yet here)
-      .config("spark.sql.warehouse.dir", graft.io.TempPaths.newWarehouseDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.io.TempPaths.cleanupOnExit(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    val spark = Sessions.local()
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     // warm the session so first-use compilation cost (codegen, JIT of the
     // native expression paths, parquet reader init) doesn't land on
     // whichever timed query happens to run an operator family first —

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline demo driver: the full reference-shaped flow on one
@@ -12,17 +11,7 @@ import org.apache.spark.sql.functions._
 object Demo {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, workDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$workDir/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(warehouse = s"$workDir/warehouse")
 
     // 1. streaming ingest of the events landing zone, exactly-once
     val landing = s"$workDir/landing"
@@ -59,13 +48,14 @@ object Demo {
     io.Bucketing.writeBucketed(
       Tables.lineitem(spark, sfDir).withColumnRenamed("l_orderkey", "o_orderkey"),
       "demo_lineitem_bkt", "o_orderkey", 8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val cocolocated = io.Bucketing.cocolocatedJoin(
-      spark, "demo_orders_bkt", "demo_lineitem_bkt", "o_orderkey")
-    cocolocated.collect()
-    val exchangeFree = !cocolocated.queryExecution.executedPlan.toString.contains("Exchange")
+    val exchangeFree = Sessions.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val cocolocated = io.Bucketing.cocolocatedJoin(
+        spark, "demo_orders_bkt", "demo_lineitem_bkt", "o_orderkey")
+      cocolocated.collect()
+      !cocolocated.queryExecution.executedPlan.toString.contains("Exchange")
+    }
     println("DEMO bucketed_join_exchange_free=" + exchangeFree)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
     // 4. salted join equals the plain join
     val salted = ops.Salting.saltedJoin(Tables.orders(spark, sfDir),

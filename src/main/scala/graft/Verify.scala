@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,23 +7,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     // dev-only: optional comma-separated name filter (driver passes 2 args)
     val only: Option[Set[String]] = rest.headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // keep saveAsTable scratch (q34/p54 bucket layouts) out of the
-      // repo root; the graft-warehouse prefix is swept by
-      // TempPaths.sweepStale if a kill strands it (pid token = live-
-      // owner protection, since the appId doesn't exist yet here)
-      .config("spark.sql.warehouse.dir", graft.io.TempPaths.newWarehouseDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.io.TempPaths.cleanupOnExit(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

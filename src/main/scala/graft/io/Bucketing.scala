@@ -807,10 +807,8 @@ object Bucketing {
     // A transform that aggregates on the bucket keys opts out
     // (pinBucketedScanOff = false): the aggregate keeps the bucketed scan
     // and the pin would FORCE the shuffle it exists to prevent
-    val scanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prevScan = spark.conf.get(scanKey)
-    try {
-      if (pinBucketedScanOff) spark.conf.set(scanKey, "false")
+    val pin = "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false"
+    graft.Sessions.withConf(spark, Seq(pin).filter(_ => pinBucketedScanOff): _*) {
       // preserve a partition layout too (the streamed index families are
       // partitionBy(batch_id) + bucketBy): a rewrite that silently
       // dropped the partition columns would not just lose directory
@@ -827,7 +825,7 @@ object Bucketing {
       (if (sorts.isEmpty) writer else writer.sortBy(sorts.head, sorts.tail: _*))
         .format("parquet")
         .saveAsTable(side)
-    } finally spark.conf.set(scanKey, prevScan)
+    }
   }
 
   /** Install steps shared by a whole-table swap and its recovery: rename

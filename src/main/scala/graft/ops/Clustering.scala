@@ -231,8 +231,6 @@ object Clustering {
       val obj = asg
         .agg(sum(round(col("cos"), 6).cast("decimal(28,6)")).cast("double"))
         .collect()(0).getDouble(0)
-      if (sys.env.contains("GRAFT_LLOYD_DEBUG"))
-        println(s"lloyd round $rounds obj=$obj prev=$prevObj")
       if (!prevObj.isNaN &&
           math.abs(obj - prevObj) <= eps * math.max(math.abs(prevObj), 1e-12)) {
         done = true

@@ -646,11 +646,9 @@ object EvalQueries {
   def noveltyIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p110_shdf", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(idxTbl)) {
       graft.io.Bucketing.dropTable(spark, idxTbl)
       Dedup.buildShingleDfIndex(docs.filter(col("doc_id") % 5 =!= 0), idxTbl)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
     }
     Dedup.noveltyIncremental(spark, docs.filter(col("doc_id") % 5 === 0), idxTbl)
   }
@@ -673,12 +671,10 @@ object EvalQueries {
   def logprobIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p112_tok", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(idxTbl)) {
       graft.io.Bucketing.dropTable(spark, idxTbl)
       TextAnalysis.appendTokenCountPartial(spark,
         docs.filter(col("doc_id") % 5 =!= 0), idxTbl, 0L)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
     }
     TextAnalysis.unigramLogProbIncremental(spark,
       docs.filter(col("doc_id") % 5 === 0), idxTbl)
@@ -702,7 +698,6 @@ object EvalQueries {
     val delta = docs.filter(col("doc_id") % 5 === 0)
     val poison = delta.withColumn("doc_id", col("doc_id") + lit(10000000L))
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p120_tok", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // completion MARKER: a crash between the poison append and the
     // retraction must rebuild, never probe a poisoned index
     val done = graft.io.TempPaths.scratchDir(spark, "graft_p120_done", dir)
@@ -711,7 +706,6 @@ object EvalQueries {
       TextAnalysis.appendTokenCountPartial(spark, corpus, idxTbl, 0L)
       TextAnalysis.appendTokenCountPartial(spark, poison, idxTbl, 1L)
       TextAnalysis.retractTokenCountPartial(spark, poison, idxTbl, 2L)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }
@@ -752,7 +746,6 @@ object EvalQueries {
     val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p113_shdf", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // the rebuild guard must witness the RETRACTION, not bare table
     // existence: a crash between the append and the retraction leaves a
     // real table whose probe would silently return un-retracted novelty
@@ -766,7 +759,6 @@ object EvalQueries {
       Dedup.appendShingleDfPartial(spark, corpus, idxTbl, 0L)
       Dedup.retractShingleDfPartial(spark,
         corpus.filter(col("doc_id") % 7 === 1), idxTbl, 1L)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
     }
     Dedup.noveltyIncremental(spark, docs.filter(col("doc_id") % 5 === 0), idxTbl)
   }

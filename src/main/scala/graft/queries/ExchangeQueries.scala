@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.io.Bucketing
 import graft.ops.Salting
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -84,14 +84,11 @@ object ExchangeQueries {
     val epoch = graft.io.TempPaths.epochTag
     val oTbl = s"graft_q34_orders_bkt_${app}_$tag$epoch"
     val liTbl = s"graft_q34_lineitem_bkt_${app}_$tag$epoch"
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:")
     if (!spark.catalog.tableExists(oTbl)) {
       Bucketing.dropTable(spark, oTbl) // clear any stale warehouse dir
       Bucketing.writeBucketed(
         Tables.orders(spark, dir).select(col("o_orderkey"), col("o_totalprice")),
         oTbl, "o_orderkey", 8)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${oTbl.toLowerCase}")
     }
     if (!spark.catalog.tableExists(liTbl)) {
       Bucketing.dropTable(spark, liTbl)
@@ -99,19 +96,13 @@ object ExchangeQueries {
         Tables.lineitem(spark, dir)
           .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
         liTbl, "o_orderkey", 8)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${liTbl.toLowerCase}")
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       Bucketing
         .cocolocatedJoin(spark, oTbl, liTbl, "o_orderkey")
         .groupBy(col("o_orderkey"), col("o_totalprice"))
         .agg(count(lit(1)).as("n_items"),
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))
-        .localCheckpoint() // materialize under the disabled-broadcast conf
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 

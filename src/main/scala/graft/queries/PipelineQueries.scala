@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.ops.{Audio, Dedup, Multimodal, Quantize, Sampling, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -122,7 +122,6 @@ object PipelineQueries {
     val docs = Tables.documents(spark, dir)
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p54_bands", dir)
     val sigsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p54_sigs", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(bandsTbl) ||
         !spark.catalog.tableExists(sigsTbl)) {
       graft.io.Bucketing.dropTable(spark, bandsTbl)
@@ -130,18 +129,11 @@ object PipelineQueries {
       Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 5 =!= 0),
         bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3,
         buckets = 8)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${bandsTbl.toLowerCase}")
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${sigsTbl.toLowerCase}")
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       Dedup.incrementalVerdictsAgainstIndex(spark,
           docs.filter(col("doc_id") % 5 === 0), bandsTbl, sigsTbl,
           bands = 16, rowsPerBand = 8, shingleN = 3, threshold = 0.7)
-        .localCheckpoint() // materialize under the disabled-broadcast conf
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 
@@ -169,7 +161,6 @@ object PipelineQueries {
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p116_bands", dir)
     val sigsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p116_sigs", dir)
     val tombsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p116_tombs", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // completion MARKER, not tableExists: a crash between the poison
     // append and the retraction would otherwise cache a poisoned index
     // as "built" for the rest of the epoch
@@ -183,58 +174,13 @@ object PipelineQueries {
         bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
       Dedup.retractFromCorpusIndex(spark, poison, bandsTbl, sigsTbl,
         tombsTbl, batchId = 0L)
-      Seq(bandsTbl, sigsTbl, tombsTbl).foreach(t =>
-        graft.io.TempPaths.cleanupOnExit(s"$wh/${t.toLowerCase}"))
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       Dedup.incrementalVerdictsAgainstIndex(spark, delta, bandsTbl, sigsTbl,
           bands = 16, rowsPerBand = 8, shingleN = 3, threshold = 0.7,
           tombstonesTable = Some(tombsTbl))
-        .localCheckpoint() // materialize under the disabled-broadcast conf
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    }
-  }
-
-  /** One extensions-enabled session per JVM — the SQL surface a
-    * production session gets from
-    * `spark.sql.extensions=graft.GraftExtensions`, materialized at
-    * runtime for rows that must route through it (the driver's
-    * Verify/Bench sessions are built plain). The session is CACHED and
-    * the p123 row runs its WHOLE lifecycle through it: a builder-made
-    * sibling does not share the caller's SessionCatalog (each new
-    * session gets its own SharedState/in-memory catalog), so tables
-    * built in one session are invisible to the other — build, RETRACT,
-    * PURGE and probe must share one catalog. The caller's session is
-    * restored as active/default so the surrounding harness is
-    * unaffected. */
-  private object SqlSurface {
-    @volatile private var cached: SparkSession = _
-    def session(spark: SparkSession): SparkSession = synchronized {
-      if (cached == null || cached.sparkContext != spark.sparkContext) {
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        cached = SparkSession.builder()
-          .config("spark.sql.shuffle.partitions",
-            spark.conf.get("spark.sql.shuffle.partitions"))
-          .config("spark.sql.session.timeZone",
-            spark.conf.get("spark.sql.session.timeZone", "UTC"))
-          .config("spark.sql.warehouse.dir",
-            spark.conf.get("spark.sql.warehouse.dir"))
-          .config("spark.sql.legacy.parquet.nanosAsLong",
-            spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "true"))
-          .config("spark.sql.parquet.inferTimestampNTZ.enabled",
-            spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "false"))
-          .withExtensions(new graft.GraftExtensions)
-          .getOrCreate()
-        SparkSession.setDefaultSession(spark)
-        SparkSession.setActiveSession(spark)
-      }
-      cached
     }
   }
 
@@ -248,48 +194,40 @@ object PipelineQueries {
     * oracle certifies the SQL-driven retract+purge is bit-equivalent
     * to a build that never contained the poison — same leak-detector
     * construction as p116/p117, now exercising the parser, the command
-    * dispatch, AND the underlying protocol in one driver-gated row. */
+    * dispatch, AND the underlying protocol in one hash-gated row. The
+    * statements run on the caller's session: every graft session
+    * carries [[graft.GraftExtensions]] ([[graft.Sessions.local]]), so
+    * the tables the SQL builds and the probe reads share one catalog. */
   def dedupRetractionSql(spark: SparkSession, dir: String): DataFrame = {
-    // the WHOLE lifecycle rides the extensions-enabled session: its
-    // catalog holds the index tables the SQL statements operate on
-    val s2 = SqlSurface.session(spark)
-    val docs = Tables.documents(s2, dir)
+    val docs = Tables.documents(spark, dir)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
     val delta = docs.filter(col("doc_id") % 5 === 0)
     val poison = delta.withColumn("doc_id", col("doc_id") + lit(10000000L))
-    val bandsTbl = graft.io.TempPaths.scratchTableName(s2, "graft_p123_bands", dir)
-    val sigsTbl = graft.io.TempPaths.scratchTableName(s2, "graft_p123_sigs", dir)
-    val tombsTbl = graft.io.TempPaths.scratchTableName(s2, "graft_p123_tombs", dir)
-    val wh = s2.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val done = graft.io.TempPaths.scratchDir(s2, "graft_p123_done", dir)
+    val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p123_bands", dir)
+    val sigsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p123_sigs", dir)
+    val tombsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p123_tombs", dir)
+    val done = graft.io.TempPaths.scratchDir(spark, "graft_p123_done", dir)
     if (!graft.io.TempPaths.isComplete(done)) {
       Seq(bandsTbl, sigsTbl, tombsTbl)
-        .foreach(graft.io.Bucketing.dropTable(s2, _))
+        .foreach(graft.io.Bucketing.dropTable(spark, _))
       Dedup.buildCorpusIndex(corpus, bandsTbl, sigsTbl,
         bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
       Dedup.appendToCorpusIndex(poison, bandsTbl, sigsTbl,
         bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
-      s2.sql(
+      spark.sql(
         s"""RETRACT FROM minhash INDEX $bandsTbl, $sigsTbl
            |TOMBSTONES $tombsTbl BATCH 0 AS
            |SELECT doc_id + 10000000 AS doc_id
            |FROM parquet.`$dir/documents.parquet`
            |WHERE doc_id % 5 = 0""".stripMargin).collect()
-      s2.sql(s"PURGE RETRACTIONS FROM minhash INDEX $bandsTbl, " +
+      spark.sql(s"PURGE RETRACTIONS FROM minhash INDEX $bandsTbl, " +
         s"$sigsTbl TOMBSTONES $tombsTbl").collect()
-      Seq(bandsTbl, sigsTbl).foreach(t =>
-        graft.io.TempPaths.cleanupOnExit(s"$wh/${t.toLowerCase}"))
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }
-    val prev = s2.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      Dedup.incrementalVerdictsAgainstIndex(s2, delta, bandsTbl, sigsTbl,
+    Sessions.withoutBroadcast(spark) {
+      Dedup.incrementalVerdictsAgainstIndex(spark, delta, bandsTbl, sigsTbl,
           bands = 16, rowsPerBand = 8, shingleN = 3, threshold = 0.7)
-        .localCheckpoint() // materialize under the disabled-broadcast conf
-    } finally {
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 
@@ -308,38 +246,34 @@ object PipelineQueries {
     * Scala batch build over the clean corpus — any leaked poison df
     * would lower a delta doc's uniqueness and flip its row. */
   def sqlIndexLifecycle(spark: SparkSession, dir: String): DataFrame = {
-    val s2 = SqlSurface.session(spark)
-    val idxTbl = graft.io.TempPaths.scratchTableName(s2, "graft_p124_shdf", dir)
-    val outTbl = graft.io.TempPaths.scratchTableName(s2, "graft_p124_out", dir)
-    val wh = s2.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val done = graft.io.TempPaths.scratchDir(s2, "graft_p124_done", dir)
+    val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p124_shdf", dir)
+    val outTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p124_out", dir)
+    val done = graft.io.TempPaths.scratchDir(spark, "graft_p124_done", dir)
     val docsSql = s"parquet.`$dir/documents.parquet`"
     if (!graft.io.TempPaths.isComplete(done)) {
-      Seq(idxTbl, outTbl).foreach(graft.io.Bucketing.dropTable(s2, _))
-      s2.sql(s"""CREATE shingle_df INDEX $idxTbl AS
-                |SELECT doc_id, text FROM $docsSql
-                |WHERE doc_id % 5 <> 0 AND doc_id % 2 = 0""".stripMargin)
+      Seq(idxTbl, outTbl).foreach(graft.io.Bucketing.dropTable(spark, _))
+      spark.sql(s"""CREATE shingle_df INDEX $idxTbl AS
+                   |SELECT doc_id, text FROM $docsSql
+                   |WHERE doc_id % 5 <> 0 AND doc_id % 2 = 0""".stripMargin)
         .collect()
-      s2.sql(s"""APPEND TO shingle_df INDEX $idxTbl BATCH 1 AS
-                |SELECT doc_id, text FROM $docsSql
-                |WHERE doc_id % 5 <> 0 AND doc_id % 2 = 1""".stripMargin)
+      spark.sql(s"""APPEND TO shingle_df INDEX $idxTbl BATCH 1 AS
+                   |SELECT doc_id, text FROM $docsSql
+                   |WHERE doc_id % 5 <> 0 AND doc_id % 2 = 1""".stripMargin)
         .collect()
-      s2.sql(s"""APPEND TO shingle_df INDEX $idxTbl BATCH 2 AS
-                |SELECT doc_id + 10000000 AS doc_id, text FROM $docsSql
-                |WHERE doc_id % 5 = 0""".stripMargin).collect()
-      s2.sql(s"""RETRACT FROM shingle_df INDEX $idxTbl BATCH 3 AS
-                |SELECT doc_id + 10000000 AS doc_id, text FROM $docsSql
-                |WHERE doc_id % 5 = 0""".stripMargin).collect()
-      s2.sql(s"COMPACT INDEX $idxTbl").collect()
-      s2.sql(s"""PROBE shingle_df INDEX $idxTbl INTO $outTbl AS
-                |SELECT doc_id, text FROM $docsSql
-                |WHERE doc_id % 5 = 0""".stripMargin).collect()
-      Seq(idxTbl, outTbl).foreach(t =>
-        graft.io.TempPaths.cleanupOnExit(s"$wh/${t.toLowerCase}"))
+      spark.sql(s"""APPEND TO shingle_df INDEX $idxTbl BATCH 2 AS
+                   |SELECT doc_id + 10000000 AS doc_id, text FROM $docsSql
+                   |WHERE doc_id % 5 = 0""".stripMargin).collect()
+      spark.sql(s"""RETRACT FROM shingle_df INDEX $idxTbl BATCH 3 AS
+                   |SELECT doc_id + 10000000 AS doc_id, text FROM $docsSql
+                   |WHERE doc_id % 5 = 0""".stripMargin).collect()
+      spark.sql(s"COMPACT INDEX $idxTbl").collect()
+      spark.sql(s"""PROBE shingle_df INDEX $idxTbl INTO $outTbl AS
+                   |SELECT doc_id, text FROM $docsSql
+                   |WHERE doc_id % 5 = 0""".stripMargin).collect()
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }
-    s2.table(outTbl)
+    spark.table(outTbl)
   }
 
   /** p126 — the VECTOR-index lifecycle routed through the SQL surface
@@ -359,48 +293,42 @@ object PipelineQueries {
     * certifies the SQL-provisioned, SQL-retracted index is
     * bit-equivalent to a Scala batch build over the clean corpus. */
   def sqlVectorLifecycle(spark: SparkSession, dir: String): DataFrame = {
-    val s2 = SqlSurface.session(spark)
-    val bandsTbl = graft.io.TempPaths.scratchTableName(s2, "graft_p126_vbands", dir)
-    val vecsTbl = graft.io.TempPaths.scratchTableName(s2, "graft_p126_vecs", dir)
-    val tombsTbl = graft.io.TempPaths.scratchTableName(s2, "graft_p126_tombs", dir)
-    val outTbl = graft.io.TempPaths.scratchTableName(s2, "graft_p126_out", dir)
-    val wh = s2.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val done = graft.io.TempPaths.scratchDir(s2, "graft_p126_done", dir)
+    val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p126_vbands", dir)
+    val vecsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p126_vecs", dir)
+    val tombsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p126_tombs", dir)
+    val outTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p126_out", dir)
+    val done = graft.io.TempPaths.scratchDir(spark, "graft_p126_done", dir)
     val embSql = s"parquet.`$dir/embeddings.parquet`"
     if (!graft.io.TempPaths.isComplete(done)) {
       Seq(bandsTbl, vecsTbl, tombsTbl, outTbl)
-        .foreach(graft.io.Bucketing.dropTable(s2, _))
+        .foreach(graft.io.Bucketing.dropTable(spark, _))
       // the provisioning decision the CREATE clause states: bits sized
       // from the full build input (corpus + poison), exactly p117's pin
-      val emb = Tables.embeddings(s2, dir)
+      val emb = Tables.embeddings(spark, dir)
       val bits = Similarity.adaptiveBitsPerTable(emb.count())
-      s2.sql(s"""CREATE vector INDEX $bandsTbl, $vecsTbl
-                |TABLES 8 BITS $bits AS
-                |SELECT vec_id, embedding FROM $embSql
-                |WHERE vec_id % 5 <> 0""".stripMargin).collect()
-      s2.sql(s"""APPEND TO vector INDEX $bandsTbl, $vecsTbl BATCH 1 AS
-                |SELECT vec_id + 10000000 AS vec_id, embedding
-                |FROM $embSql WHERE vec_id % 5 = 0""".stripMargin).collect()
-      s2.sql(s"""RETRACT FROM vector INDEX $bandsTbl, $vecsTbl
-                |TOMBSTONES $tombsTbl BATCH 0 AS
-                |SELECT vec_id + 10000000 AS vec_id
-                |FROM $embSql WHERE vec_id % 5 = 0""".stripMargin).collect()
-      s2.sql(s"PURGE RETRACTIONS FROM vector INDEX $bandsTbl, " +
+      spark.sql(s"""CREATE vector INDEX $bandsTbl, $vecsTbl
+                   |TABLES 8 BITS $bits AS
+                   |SELECT vec_id, embedding FROM $embSql
+                   |WHERE vec_id % 5 <> 0""".stripMargin).collect()
+      spark.sql(s"""APPEND TO vector INDEX $bandsTbl, $vecsTbl BATCH 1 AS
+                   |SELECT vec_id + 10000000 AS vec_id, embedding
+                   |FROM $embSql WHERE vec_id % 5 = 0""".stripMargin).collect()
+      spark.sql(s"""RETRACT FROM vector INDEX $bandsTbl, $vecsTbl
+                   |TOMBSTONES $tombsTbl BATCH 0 AS
+                   |SELECT vec_id + 10000000 AS vec_id
+                   |FROM $embSql WHERE vec_id % 5 = 0""".stripMargin).collect()
+      spark.sql(s"PURGE RETRACTIONS FROM vector INDEX $bandsTbl, " +
         s"$vecsTbl TOMBSTONES $tombsTbl").collect()
-      val prev = s2.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        // the p57 plan discipline: the probe shuffles only the delta
-        s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s2.sql(s"""PROBE vector INDEX $bandsTbl, $vecsTbl INTO $outTbl AS
-                  |SELECT vec_id, embedding FROM $embSql
-                  |WHERE vec_id % 5 = 0""".stripMargin).collect()
-      } finally s2.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      Seq(bandsTbl, vecsTbl, outTbl).foreach(t =>
-        graft.io.TempPaths.cleanupOnExit(s"$wh/${t.toLowerCase}"))
+      // the p57 plan discipline: the probe shuffles only the delta
+      Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        spark.sql(s"""PROBE vector INDEX $bandsTbl, $vecsTbl INTO $outTbl AS
+                     |SELECT vec_id, embedding FROM $embSql
+                     |WHERE vec_id % 5 = 0""".stripMargin).collect()
+      }
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }
-    s2.table(outTbl)
+    spark.table(outTbl)
   }
 
   /** p58 — index MAINTENANCE: the persisted corpus index is built from
@@ -419,7 +347,6 @@ object PipelineQueries {
     val docs = Tables.documents(spark, dir)
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p58_bands", dir)
     val sigsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p58_sigs", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(bandsTbl) ||
         !spark.catalog.tableExists(sigsTbl)) {
       graft.io.Bucketing.dropTable(spark, bandsTbl)
@@ -430,18 +357,11 @@ object PipelineQueries {
       Dedup.appendToCorpusIndex(docs.filter(col("doc_id") % 5 === 1),
         bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3,
         buckets = 8)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${bandsTbl.toLowerCase}")
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${sigsTbl.toLowerCase}")
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       Dedup.incrementalVerdictsAgainstIndex(spark,
           docs.filter(col("doc_id") % 5 === 0), bandsTbl, sigsTbl,
           bands = 16, rowsPerBand = 8, shingleN = 3, threshold = 0.7)
-        .localCheckpoint() // materialize under the disabled-broadcast conf
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 
@@ -459,7 +379,6 @@ object PipelineQueries {
     val docs = Tables.documents(spark, dir)
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p59_bands", dir)
     val sigsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p59_sigs", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(bandsTbl) ||
         !spark.catalog.tableExists(sigsTbl)) {
       graft.io.Bucketing.dropTable(spark, bandsTbl)
@@ -472,18 +391,11 @@ object PipelineQueries {
         buckets = 8)
       graft.io.Bucketing.compactBucketed(spark, bandsTbl)
       graft.io.Bucketing.compactBucketed(spark, sigsTbl)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${bandsTbl.toLowerCase}")
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${sigsTbl.toLowerCase}")
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       Dedup.incrementalVerdictsAgainstIndex(spark,
           docs.filter(col("doc_id") % 5 === 0), bandsTbl, sigsTbl,
           bands = 16, rowsPerBand = 8, shingleN = 3, threshold = 0.7)
-        .localCheckpoint() // materialize under the disabled-broadcast conf
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 
@@ -669,11 +581,9 @@ object PipelineQueries {
     * the indexed path returns bit-identical neighbors. */
   def annIvfTopKIndexed(spark: SparkSession, dir: String): DataFrame = {
     val tbl = graft.io.TempPaths.scratchTableName(spark, "graft_p56_ivf", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(tbl)) {
       graft.io.Bucketing.dropTable(spark, tbl)
       Similarity.buildIvfIndex(Tables.embeddings(spark, dir), tbl)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${tbl.toLowerCase}")
     }
     Similarity.ivfTopKAgainstIndex(spark, Tables.embeddings(spark, dir), tbl)
   }
@@ -1498,19 +1408,15 @@ object PipelineQueries {
   def lineDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p63_linedf", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(idxTbl)) {
       graft.io.Bucketing.dropTable(spark, idxTbl)
       TextAnalysis.buildLineDfIndex(docs.filter(col("doc_id") % 5 =!= 0),
         idxTbl, buckets = 8)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       TextAnalysis.lineDedupIncremental(spark,
         docs.filter(col("doc_id") % 5 === 0), idxTbl)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** p118 — RETRACTION for the line-df family via the negated-df
@@ -1532,7 +1438,6 @@ object PipelineQueries {
     val delta = docs.filter(col("doc_id") % 5 === 0)
     val poison = delta.withColumn("doc_id", col("doc_id") + lit(10000000L))
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p118_linedf", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // completion MARKER: a crash between the poison append and the
     // retraction must rebuild, never probe a poisoned index (the
     // p116/p117 discipline)
@@ -1542,16 +1447,12 @@ object PipelineQueries {
       TextAnalysis.appendLineDfPartial(spark, corpus, idxTbl, 0L, buckets = 8)
       TextAnalysis.appendLineDfPartial(spark, poison, idxTbl, 1L, buckets = 8)
       TextAnalysis.retractLineDfPartial(spark, poison, idxTbl, 2L)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       TextAnalysis.lineDedupIncremental(spark, delta, idxTbl)
-        .localCheckpoint() // materialize under the disabled-broadcast conf
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** The oracle replays the GLOBAL rewrite (p60's device: segment →
@@ -1595,20 +1496,16 @@ object PipelineQueries {
   def textDecontaminationIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p65_grams", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(idxTbl)) {
       graft.io.Bucketing.dropTable(spark, idxTbl)
       TextAnalysis.buildBenchGramIndex(
         docs.filter(pmod(col("doc_id"), lit(10)) === 0), idxTbl)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
     }
     val delta = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0 &&
       pmod(col("doc_id"), lit(4)) === 1)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       TextAnalysis.decontaminationAgainstIndex(spark, delta, idxTbl)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** p33's oracle with the train side restricted to the delta slice. */
@@ -1861,7 +1758,6 @@ object PipelineQueries {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p91_bm25df", dir)
     val statsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p91_bm25st", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // guard on BOTH tables: buildBm25DfIndex writes the df index before
     // the stats table, so a crash between the two leaves a torn state a
     // single-table guard would skip forever (the q70 single-table layout
@@ -1872,8 +1768,6 @@ object PipelineQueries {
       graft.io.Bucketing.dropTable(spark, statsTbl)
       TextAnalysis.buildBm25DfIndex(docs.filter(col("doc_id") % 5 =!= 0),
         idxTbl, statsTbl)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${statsTbl.toLowerCase}")
     }
     TextAnalysis.bm25TopKIncremental(spark,
       docs.filter(col("doc_id") % 5 === 0),
@@ -1901,7 +1795,6 @@ object PipelineQueries {
     val delta = docs.filter(col("doc_id") % 5 === 0)
     val poison = delta.withColumn("doc_id", col("doc_id") + lit(10000000L))
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p121_bm25df", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // completion MARKER: a crash between the poison append and the
     // retraction must rebuild, never probe a poisoned index
     val done = graft.io.TempPaths.scratchDir(spark, "graft_p121_done", dir)
@@ -1910,7 +1803,6 @@ object PipelineQueries {
       TextAnalysis.appendBm25DfPartial(spark, corpus, idxTbl, 0L)
       TextAnalysis.appendBm25DfPartial(spark, poison, idxTbl, 1L)
       TextAnalysis.retractBm25DfPartial(spark, poison, idxTbl, 2L)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }

@@ -214,7 +214,6 @@ object ProfilingQueries {
     import org.apache.spark.sql.functions.{col, lit, pmod}
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p102_tok", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(idxTbl)) {
       graft.io.Bucketing.dropTable(spark, idxTbl)
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
@@ -222,7 +221,6 @@ object ProfilingQueries {
         graft.ops.TextAnalysis.appendTokenCountPartial(spark,
           corpus.filter(pmod(col("doc_id"), lit(2)) === i), idxTbl, i.toLong)
       }
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
     }
     Sketches.driftProbeIncremental(spark,
       docs.filter(pmod(col("doc_id"), lit(5)) === 0), idxTbl)

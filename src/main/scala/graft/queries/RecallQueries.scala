@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.ops.{Dedup, Selection, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -425,23 +425,15 @@ object RecallQueries {
     val delta = emb.filter(col("vec_id") % 5 === 0)
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p57_vbands", dir)
     val vecsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p57_vecs", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(bandsTbl) ||
         !spark.catalog.tableExists(vecsTbl)) {
       graft.io.Bucketing.dropTable(spark, bandsTbl)
       graft.io.Bucketing.dropTable(spark, vecsTbl)
       Similarity.buildVectorIndex(corpus, bandsTbl, vecsTbl)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${bandsTbl.toLowerCase}")
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${vecsTbl.toLowerCase}")
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       Similarity.incrementalCosineVerdictsAgainstIndex(spark, delta,
           bandsTbl, vecsTbl, threshold = 0.45)
-        .localCheckpoint() // materialize under the disabled-broadcast conf
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 
@@ -883,7 +875,6 @@ object RecallQueries {
     // pin the geometry from the BUILD input's count — bits must not be
     // re-derived after the purge shrinks the store
     val bits = Similarity.adaptiveBitsPerTable(corpus.count() + delta.count())
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // completion MARKER, not tableExists: a crash between build and
     // purge must rebuild, never probe a still-poisoned index
     val done = graft.io.TempPaths.scratchDir(spark, "graft_p117_done", dir)
@@ -896,19 +887,12 @@ object RecallQueries {
         tombsTbl, batchId = 0L)
       Similarity.purgeVectorIndexRetractions(spark, bandsTbl, vecsTbl,
         tombsTbl)
-      Seq(bandsTbl, vecsTbl).foreach(t =>
-        graft.io.TempPaths.cleanupOnExit(s"$wh/${t.toLowerCase}"))
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       Similarity.incrementalCosineVerdictsAgainstIndex(spark, delta,
           bandsTbl, vecsTbl, threshold = 0.45, bitsPerTable = bits)
-        .localCheckpoint() // materialize under the disabled-broadcast conf
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 
@@ -933,7 +917,6 @@ object RecallQueries {
     val centsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p122_cents", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p122_ivf", dir)
     val tombsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p122_tombs", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // completion MARKER: a crash between the poison append and the
     // retraction must rebuild, never probe a poisoned index
     val done = graft.io.TempPaths.scratchDir(spark, "graft_p122_done", dir)
@@ -944,8 +927,6 @@ object RecallQueries {
       Similarity.appendIvfAssignPartial(spark, emb, centsTbl, idxTbl, 0L)
       Similarity.appendIvfAssignPartial(spark, poison, centsTbl, idxTbl, 1L)
       Similarity.retractFromIvfIndex(spark, poison, idxTbl, tombsTbl, 0L)
-      Seq(centsTbl, idxTbl, tombsTbl).foreach(t =>
-        graft.io.TempPaths.cleanupOnExit(s"$wh/${t.toLowerCase}"))
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }

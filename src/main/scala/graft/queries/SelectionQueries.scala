@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.ops.{Dedup, Selection, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -178,19 +178,15 @@ object SelectionQueries {
   def substringRemovalIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p71_windf", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(idxTbl)) {
       graft.io.Bucketing.dropTable(spark, idxTbl)
       Dedup.buildWindowDfIndex(docs.filter(col("doc_id") % 5 =!= 0),
         idxTbl, k = 8, buckets = 8)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       Dedup.substringRemoveIncremental(spark,
         docs.filter(col("doc_id") % 5 === 0), idxTbl, k = 8)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** p119 — RETRACTION for the window-df family via the negated-df
@@ -212,7 +208,6 @@ object SelectionQueries {
     val delta = docs.filter(col("doc_id") % 5 === 0)
     val poison = delta.withColumn("doc_id", col("doc_id") + lit(10000000L))
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p119_windf", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // completion MARKER: a crash between the poison append and the
     // retraction must rebuild, never probe a poisoned index (the
     // p116/p117/p118 discipline)
@@ -222,16 +217,12 @@ object SelectionQueries {
       Dedup.appendWindowDfPartial(spark, corpus, idxTbl, 0L, k = 8)
       Dedup.appendWindowDfPartial(spark, poison, idxTbl, 1L, k = 8)
       Dedup.retractWindowDfPartial(spark, poison, idxTbl, 2L, k = 8)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${idxTbl.toLowerCase}")
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       Dedup.substringRemoveIncremental(spark, delta, idxTbl, k = 8)
-        .localCheckpoint() // materialize under the disabled-broadcast conf
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   val substringRemovalIncrementalSql: String =

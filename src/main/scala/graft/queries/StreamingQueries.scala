@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.streaming.EventsStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,19 +30,8 @@ object StreamingQueries {
     * partition commits). At production volume this number is a capacity
     * decision — state bytes / executor memory — made per stream and
     * locked into the checkpoint by the first batch; see
-    * EventsStream.runAvailableNowTo. Env-overridable for profiling; a
-    * malformed or non-positive override falls back to the default with
-    * a stderr warning instead of detonating class init (a bare .toInt
-    * here would surface as ExceptionInInitializerError). */
-  private val statePartitions: Option[Int] = Some(
-    sys.env.get("SPARK_GRAFT_STATE_PARTS") match {
-      case None => 8
-      case Some(raw) => raw.toIntOption.filter(_ >= 1).getOrElse {
-        System.err.println(
-          s"[graft] SPARK_GRAFT_STATE_PARTS='$raw' is not a positive int; using 8")
-        8
-      }
-    })
+    * EventsStream.runAvailableNowTo. */
+  private val statePartitions: Option[Int] = Some(8)
 
   /** Copy the events fixture into a landing directory as-is (one part
     * file per fixture part, deterministic names). Idempotent:
@@ -925,11 +914,9 @@ object StreamingQueries {
       graft.ops.TextAnalysis.appendLineDfPartial(spark, b, idxTbl, id)
     }
     val delta = Tables.documents(spark, dir).filter(deltaSide(col("doc_id")))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       graft.ops.TextAnalysis.lineDedupIncremental(spark, delta, idxTbl)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** q69 — STREAMING INDEX MAINTENANCE for the window-df (passage
@@ -953,11 +940,9 @@ object StreamingQueries {
       graft.ops.Dedup.appendWindowDfPartial(spark, b, idxTbl, id, k = 8)
     }
     val delta = Tables.documents(spark, dir).filter(deltaSide(col("doc_id")))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       graft.ops.Dedup.substringRemoveIncremental(spark, delta, idxTbl, k = 8)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** q70 — STREAMING INDEX MAINTENANCE for the BM25 df family: q68's
@@ -1024,13 +1009,6 @@ object StreamingQueries {
                                   mergeFraction: Double = 0.25)(
       append: (DataFrame, Long) => Unit): Unit = {
     if (!graft.io.TempPaths.isComplete(ckpt)) {
-      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      tables.foreach { t =>
-        if (!spark.catalog.tableExists(t)) {
-          graft.io.Bucketing.dropTable(spark, t)
-          graft.io.TempPaths.cleanupOnExit(s"$wh/${t.toLowerCase}")
-        }
-      }
       val schema = spark.read.parquet(landing).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(landing)
@@ -1086,14 +1064,11 @@ object StreamingQueries {
         graft.ops.Similarity.appendVectorIndexPartial(spark, b, bandsTbl,
           vecsTbl, id, tables = 8, bitsPerTable = bits)
     }
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       graft.ops.Similarity.incrementalCosineVerdictsAgainstIndex(spark,
           emb.filter(deltaSide(col("vec_id"))), bandsTbl, vecsTbl,
           threshold = 0.45)
-        .localCheckpoint()
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** q72 — STREAMING INDEX MAINTENANCE for the benchmark-gram
@@ -1116,11 +1091,9 @@ object StreamingQueries {
     }
     val delta = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0 &&
       pmod(col("doc_id"), lit(4)) === 1)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       graft.ops.TextAnalysis.decontaminationAgainstIndex(spark, delta, idxTbl)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** q73 — STREAMING INDEX MAINTENANCE for the minhash corpus-index
@@ -1144,14 +1117,11 @@ object StreamingQueries {
           sigsTbl, id)
     }
     val docs = Tables.documents(spark, dir)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withoutBroadcast(spark) {
       graft.ops.Dedup.incrementalVerdictsAgainstIndex(spark,
           docs.filter(deltaSide(col("doc_id"))), bandsTbl, sigsTbl,
           bands = 16, rowsPerBand = 8, shingleN = 3, threshold = 0.7)
-        .localCheckpoint()
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   /** q74 — STREAMING INDEX MAINTENANCE for the IVF family (p56): the
@@ -1171,11 +1141,9 @@ object StreamingQueries {
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q74_ckpt", dir)
     val centTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q74_cents", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q74_ivf", dir)
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     if (!spark.catalog.tableExists(centTbl)) {
       graft.io.Bucketing.dropTable(spark, centTbl)
       graft.ops.Similarity.buildIvfCentroids(emb, centTbl)
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${centTbl.toLowerCase}")
     }
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
       graft.ops.Similarity.appendIvfAssignPartial(spark, b, centTbl,
@@ -1469,8 +1437,6 @@ object StreamingQueries {
     if (!spark.catalog.tableExists(centsTbl)) {
       graft.io.Bucketing.dropTable(spark, centsTbl)
       graft.ops.Similarity.buildIvfCentroids(emb, centsTbl)
-      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      graft.io.TempPaths.cleanupOnExit(s"$wh/${centsTbl.toLowerCase}")
     }
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl),
       tombstones = Seq(graft.io.Tombstones.PurgeSpec(tombsTbl, "vec_id",

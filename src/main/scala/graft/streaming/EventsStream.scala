@@ -253,34 +253,21 @@ object EventsStream {
     runAvailableNowTo(hourlyAggregates(readEventsStream(spark, dir)),
       checkpoint, outDir, statePartitions)
 
-  /** State-store provider for the streaming surface: RocksDB unless
-    * overridden (`SPARK_GRAFT_STATE_PROVIDER=hdfs` restores the
-    * heap-backed default). At 100x state the HDFS-backed provider holds
-    * every state row ON HEAP — the scale-killer watermark eviction
-    * cannot fix, because the bound is live keys, not history; RocksDB
-    * keeps state off-heap with incremental changelog snapshots, so
-    * state capacity tracks local disk, not executor heap. The provider
-    * is part of the checkpoint contract: it must be chosen before the
-    * first batch and kept for the checkpoint's life. */
-  private val stateStoreProvider: Option[String] =
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER") match {
-      case Some("hdfs") => None
-      case _ => Some(
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    }
-
   /** Session confs [[runAvailableNowTo]] pins around every run (and
     * restores after) — exposed so StreamingSpec can assert the exact
     * state-store contract the production path ships with:
     *
-    *  - RocksDB provider (unless env-overridden): state capacity bound
-    *    to local disk, not executor heap.
+    *  - RocksDB provider: at 100x state the heap-backed default holds
+    *    every state row ON HEAP — the scale-killer watermark eviction
+    *    cannot fix, because the bound is live keys, not history; RocksDB
+    *    keeps state off-heap, so state capacity tracks local disk, not
+    *    executor heap. Part of the checkpoint contract: chosen before
+    *    the first batch and kept for the checkpoint's life.
     *  - Changelog checkpointing: per-batch DELTAS instead of a full
     *    RocksDB snapshot per store per micro-batch, so snapshot cost
     *    amortizes across batches instead of being the per-commit
     *    constant. Part of the checkpoint contract — must not flip
-    *    mid-checkpoint. `SPARK_GRAFT_ROCKSDB_CHANGELOG=0` restores full
-    *    snapshots for A/B measurement only.
+    *    mid-checkpoint.
     *  - Bounded native memory: block cache + write buffers for EVERY
     *    state store in the JVM come from one shared budget
     *    (`maxMemoryUsageMB`, default 512, env-overridable via
@@ -312,15 +299,12 @@ object EventsStream {
       statePartitions: Option[Int]): Seq[(String, String)] = {
     val rocksPrefix = "spark.sql.streaming.stateStore.rocksdb."
     statePartitions.map("spark.sql.shuffle.partitions" -> _.toString).toSeq ++
-      stateStoreProvider.toSeq.flatMap { p =>
-        Seq(
-          "spark.sql.streaming.stateStore.providerClass" -> p,
-          rocksPrefix + "changelogCheckpointing.enabled" ->
-            (if (sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG").contains("0"))
-              "false" else "true"),
-          rocksPrefix + "boundedMemoryUsage" -> "true",
-          rocksPrefix + "maxMemoryUsageMB" -> rocksDbMemMb.toString)
-      }
+      Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        rocksPrefix + "changelogCheckpointing.enabled" -> "true",
+        rocksPrefix + "boundedMemoryUsage" -> "true",
+        rocksPrefix + "maxMemoryUsageMB" -> rocksDbMemMb.toString)
   }
 
   /** Drain any streaming Dataset to a parquet sink under
@@ -349,63 +333,56 @@ object EventsStream {
                         statePartitions: Option[Int] = None)
       : Array[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
     val spark = ds.sparkSession
-    val confs = streamingRunConfs(statePartitions)
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    // collect per-batch progress through a listener, NOT q.recentProgress:
-    // recentProgress is a ring buffer capped by
-    // spark.sql.streaming.numRecentProgressUpdates (default 100), so a
-    // run with more micro-batches would silently truncate the history
-    // q60 hash-checks as its metrics contract. Events are filtered by
-    // runId AFTER termination (not inside the callback) because the
-    // first batch of a tiny fixture can complete before start() returns.
-    // Completeness: the listener bus is FIFO per listener and the
-    // terminated event is posted after the last progress event, so once
-    // we have seen OUR terminated event the progress list is provably
-    // the whole run.
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    val progressEvents =
-      new java.util.concurrent.ConcurrentLinkedQueue[
-        org.apache.spark.sql.streaming.StreamingQueryProgress]()
-    val terminatedRuns =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        progressEvents.add(e.progress); ()
+    graft.Sessions.withConf(spark, streamingRunConfs(statePartitions): _*) {
+      // collect per-batch progress through a listener, NOT q.recentProgress:
+      // recentProgress is a ring buffer capped by
+      // spark.sql.streaming.numRecentProgressUpdates (default 100), so a
+      // run with more micro-batches would silently truncate the history
+      // q60 hash-checks as its metrics contract. Events are filtered by
+      // runId AFTER termination (not inside the callback) because the
+      // first batch of a tiny fixture can complete before start() returns.
+      // Completeness: the listener bus is FIFO per listener and the
+      // terminated event is posted after the last progress event, so once
+      // we have seen OUR terminated event the progress list is provably
+      // the whole run.
+      import org.apache.spark.sql.streaming.StreamingQueryListener
+      val progressEvents =
+        new java.util.concurrent.ConcurrentLinkedQueue[
+          org.apache.spark.sql.streaming.StreamingQueryProgress]()
+      val terminatedRuns =
+        java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(
+            e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryProgress(
+            e: StreamingQueryListener.QueryProgressEvent): Unit = {
+          progressEvents.add(e.progress); ()
+        }
+        override def onQueryTerminated(
+            e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+          terminatedRuns.add(e.runId); ()
+        }
       }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
-        terminatedRuns.add(e.runId); ()
-      }
-    }
-    spark.streams.addListener(listener)
-    try {
-      val q = ds.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!terminatedRuns.contains(q.runId) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      require(terminatedRuns.contains(q.runId),
-        s"listener never saw termination of run ${q.runId} — progress history incomplete")
-      import scala.jdk.CollectionConverters._
-      progressEvents.iterator().asScala
-        .filter(_.runId == q.runId).toArray
-        .sortBy(_.batchId)
-    } finally {
-      spark.streams.removeListener(listener)
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+      spark.streams.addListener(listener)
+      try {
+        val q = ds.writeStream
+          .outputMode("append")
+          .format("parquet")
+          .option("path", outDir)
+          .option("checkpointLocation", checkpoint)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!terminatedRuns.contains(q.runId) && System.nanoTime() < deadline)
+          Thread.sleep(10)
+        require(terminatedRuns.contains(q.runId),
+          s"listener never saw termination of run ${q.runId} — progress history incomplete")
+        import scala.jdk.CollectionConverters._
+        progressEvents.iterator().asScala
+          .filter(_.runId == q.runId).toArray
+          .sortBy(_.batchId)
+      } finally spark.streams.removeListener(listener)
     }
   }
 

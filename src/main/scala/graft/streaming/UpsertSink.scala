@@ -93,15 +93,9 @@ object UpsertSink {
     // materialize BEFORE the overwrite: the plan reads the very
     // partition files the dynamic overwrite is about to replace
     val snap = merged.localCheckpoint()
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(modeKey)
-    try {
-      spark.conf.set(modeKey, "dynamic")
-      snap.write.mode("overwrite").partitionBy("u_bucket").parquet(target)
-    } finally {
-      spark.conf.set(modeKey, prev)
-      snap.unpersist()
-    }
+    try snap.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("u_bucket").parquet(target)
+    finally snap.unpersist()
   }
 
   /** Drain an events landing into the keyed table under

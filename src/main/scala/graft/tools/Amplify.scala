@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derive an AMPLIFIED scratch corpus above sf0.1 for the scaling
@@ -35,13 +35,7 @@ object Amplify {
     val src = args(0)
     val out = args(1)
     val k = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(32)
     val idStride = 1000000000L
 
     def copies(df: DataFrame)(shape: (DataFrame, Int) => DataFrame): DataFrame =

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for named catalog queries to files —
@@ -13,17 +12,7 @@ object PlanDump {
     val dir = args(0)
     val outDir = args(1)
     val names = args(2)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.io.TempPaths.newWarehouseDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.io.TempPaths.cleanupOnExit(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    val spark = graft.Sessions.local(8)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.split(',').map(_.trim).filter(_.nonEmpty).foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, dir)

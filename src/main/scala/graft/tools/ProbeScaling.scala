@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measure O(|delta|) probe cost for the persisted-index families.
@@ -24,16 +24,7 @@ object ProbeScaling {
   def main(args: Array[String]): Unit = {
     val out = args.lift(0).getOrElse("PROBE_SCALING_DATA.json")
     val reps = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.io.TempPaths.newWarehouseDir())
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.io.TempPaths.cleanupOnExit(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    val spark = graft.Sessions.local(32)
 
     // SPARK_GRAFT_PROBE_SFDIRS: comma-separated corpus dirs to build the
     // indexes from, smallest first — defaults to the three testdata SFs;
@@ -337,9 +328,8 @@ object ProbeScaling {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
     val selected = families.filter(f =>
       only.forall(_.exists(f.name.startsWith)))
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val rows = try selected.map { fam =>
+    val rows = try graft.Sessions.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(selected.map { fam =>
       val per = sfs.zipWithIndex.map { case (sf, sfIdx) =>
         val dropsBefore = drops.size
         val (idxRows, probe) = fam.setup(sf)
@@ -395,10 +385,7 @@ object ProbeScaling {
         s"""{"sf":"$sf","index_rows":$n,"index_bytes":$bytes,"sec_per_gb":${num(if (bytes > 0) med / (bytes / 1e9) else 0.0)},"median_sec":${num(med)},"reps_sec":${ts.map(num).mkString("[", ",", "]")}}"""
       }.mkString("[", ",", "]")
       s"""{"family":"${fam.name}","slope":${num(slope)},"degenerate_x":$degenerate,"points":$perJson}"""
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      drops.distinct.foreach(graft.io.Bucketing.dropTable(spark, _))
-    }
+    }) finally drops.distinct.foreach(graft.io.Bucketing.dropTable(spark, _))
     val json = s"""{"reps":$reps,"delta":"fixed sf0.01 slices","families":${rows.mkString("[", ",", "]")}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     println(s"PROBE_SCALING written to $out")

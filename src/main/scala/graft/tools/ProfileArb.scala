@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{avg, col, count, lit, sum}
 
 /** Fresh-JVM mover arbitration (dev utility) — the PROFILE_r14
@@ -17,14 +16,7 @@ object ProfileArb {
     val name = args(1)
     val reps = args.lift(2).map(_.toInt).getOrElse(7)
     val refCanary = args.lift(3).map(_.toDouble).getOrElse(0.277)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.io.TempPaths.newWarehouseDir())
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(32)
 
     // SPARK_GRAFT_ARB_WARM_STREAM: replicate Bench's state-store warmup
     // block (a 50-row AvailableNow stream through the same

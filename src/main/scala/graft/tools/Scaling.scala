@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Empirical scaling-slope harness (dev tool, not driver-run): times every
   * catalog query at several scale factors in ONE JVM and fits the
@@ -31,20 +30,9 @@ object Scaling {
     val sfOf: String => Double = dir =>
       dir.split("/").last.stripPrefix("sf").toDouble
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALING_REPS", "3").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALING_FILE", "SCALING_DATA.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.io.TempPaths.newWarehouseDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.io.TempPaths.cleanupOnExit(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    val spark = graft.Sessions.local()
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
     graft.io.TempPaths.sweepStale(spark.sparkContext.applicationId,
       Seq(sys.props("java.io.tmpdir"),
         spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")))

@@ -29,19 +29,11 @@ class AqeSpec extends SparkSpec {
   }
 
   private def withAqeNoBroadcast[A](body: => A): A = {
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      // broadcast off for the same reason as the static probes: at
-      // fixture scale the planner (or AQE's runtime re-plan) would
-      // broadcast and skip the layout under test; AQE explicitly ON
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      body
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
+    // broadcast off for the same reason as the static probes: at
+    // fixture scale the planner (or AQE's runtime re-plan) would
+    // broadcast and skip the layout under test; AQE explicitly ON
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "true")(body)
   }
 
   test("AQE skew-join splits a pathological key at runtime (the complement to q32's salting)") {
@@ -58,9 +50,7 @@ class AqeSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32k",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    Sessions.withConf(spark, confs: _*) {
       val big = spark.range(0, 100000)
         .select(when(col("id") % 10 =!= 0, lit(7L))
           .otherwise(pmod(col("id"), lit(64))).as("k"),
@@ -73,7 +63,7 @@ class AqeSpec extends SparkSpec {
         s"skew demo must run a shuffled join:\n$plan")
       assert(plan.contains("skew=true"),
         s"AQE must mark the skewed join split at runtime:\n$plan")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("skew-safe df form under AQE: the planted hot window key splits at runtime") {
@@ -96,9 +86,7 @@ class AqeSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1k",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512b")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    Sessions.withConf(spark, confs: _*) {
       val plan = finalPlan(
         graft.ops.Dedup.substringRemove(docs, k = 8, skewSafe = true))
       assert(plan.contains("skew=true"),
@@ -107,7 +95,7 @@ class AqeSpec extends SparkSpec {
       // split, which is exactly why the skew-safe form exists
       val planW = finalPlan(graft.ops.Dedup.substringRemove(docs, k = 8))
       assert(planW.contains("Window") && !planW.contains("skew=true"), planW)
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
   }
 
   test("p54 probe under AQE: bucketed scan + single delta exchange survive re-planning") {
@@ -187,16 +175,10 @@ class AqeSpec extends SparkSpec {
       }
       // a destructive rewrite must not depend on the physical plan:
       // AQE-on output equals the AQE-off output row for row
-      val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      val aqeOff = try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val aqeOff = Sessions.withConf(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.adaptive.enabled" -> "false") {
         graft.ops.Dedup.substringRemoveIncremental(spark,
           docs.filter(col("doc_id") % 5 === 0), tbl, k = 8).collect().toSet
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       }
       assert(aqeOn === aqeOff,
         "p71 rewrite must be identical with and without AQE re-planning")

@@ -18,9 +18,7 @@ class BucketingSpec extends SparkSpec {
     // at fixture scale the planner would broadcast instead and skip the
     // bucket layout entirely; force the shuffle-join path the layout is
     // designed for (at 100 TB neither side broadcasts)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = Bucketing.cocolocatedJoin(spark, "orders_bkt", "lineitem_bkt", "o_orderkey")
       joined.collect()
       val plan = joined.queryExecution.executedPlan.toString
@@ -28,7 +26,7 @@ class BucketingSpec extends SparkSpec {
       // correctness: same count as the plain join
       val plain = o.join(li, Seq("o_orderkey")).count()
       assert(joined.count() === plain)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
   }
 
   test("salted join returns exactly the plain join result") {
@@ -80,14 +78,12 @@ class BucketingSpec extends SparkSpec {
     assert(spec.exists(s => s.numBuckets == 4 &&
       s.bucketColumnNames == Seq("doc_id")), s"bucket spec lost: $spec")
     // … the planner still sees a bucketed scan …
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = spark.table(tbl).groupBy(col("doc_id")).count()
         .queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"groupBy on the bucket key must stay exchange-free after compact:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
     // … and not a row was lost or duplicated
     val got = spark.table(tbl)
     assert(got.count() === docs.count())

@@ -20,6 +20,13 @@ class ExplainSpec extends SparkSpec {
     }
   }
 
+  /** Broadcast and AQE off: fixture scale would broadcast the small side
+    * and AQE would rewrap the exchanges, hiding the static shuffle-join
+    * plan the bucketed layouts target. */
+  private def staticShufflePlan[A](body: => A): A =
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.enabled" -> "false")(body)
+
   test("q07: predicate and projection are pushed into the parquet scan") {
     val df = CoreQueries.q07FilterProject(spark, sfDir)
     val scan = df.queryExecution.executedPlan.toString
@@ -259,13 +266,9 @@ class ExplainSpec extends SparkSpec {
     graft.io.Bucketing.dropTable(spark, sigsTbl)
     graft.ops.Dedup.buildCorpusIndex(corpus, bandsTbl, sigsTbl,
       bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 4)
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
+    try staticShufflePlan {
       // fixture scale would broadcast the delta and AQE would rewrap the
       // exchanges; pin the static shuffle-join plan the layout targets
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
       val dSig = graft.ops.Dedup.sigFrame(delta, 128, 3)
       val probe = graft.ops.Dedup.bandFrame(dSig, 16, 8).as("d")
         .join(spark.table(bandsTbl).as("c"),
@@ -289,8 +292,6 @@ class ExplainSpec extends SparkSpec {
       assert(indexed.exceptAll(inline).isEmpty && inline.exceptAll(indexed).isEmpty,
         "persisted-index verdicts must equal the inline path")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, bandsTbl)
       graft.io.Bucketing.dropTable(spark, sigsTbl)
     }
@@ -308,9 +309,7 @@ class ExplainSpec extends SparkSpec {
       .withColumn("vec_id", col("vec_id") + lit(10000000L))
     graft.ops.Similarity.appendIvfAssignPartial(spark, poison, cents, idx, 1L)
     graft.ops.Similarity.retractFromIvfIndex(spark, poison, idx, tombs, 0L)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val ungated = planString(
         graft.ops.Similarity.ivfTopKAgainstIndex(spark, emb, idx))
       val gated = planString(graft.ops.Similarity.ivfTopKAgainstIndex(
@@ -326,7 +325,6 @@ class ExplainSpec extends SparkSpec {
       assert(exchanges(gated) === exchanges(ungated),
         s"the gate must add no hash exchange:\nGATED\n$gated\nUNGATED\n$ungated")
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       Seq(cents, idx, tombs).foreach(graft.io.Bucketing.dropTable(spark, _))
     }
   }
@@ -345,11 +343,7 @@ class ExplainSpec extends SparkSpec {
         corpus.filter(pmod(col("doc_id"), lit(2)) === i),
         bandsTbl, sigsTbl, i.toLong, buckets = 4)
     }
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try staticShufflePlan {
       val dSig = graft.ops.Dedup.sigFrame(delta, 128, 3)
       val probe = graft.ops.Dedup.bandFrame(dSig, 16, 8).as("d")
         .join(spark.table(bandsTbl).as("c"),
@@ -365,8 +359,6 @@ class ExplainSpec extends SparkSpec {
       assert("Exchange hashpartitioning".r.findAllIn(plan).size === 1,
         s"expected exactly one (delta-side) exchange:\n$plan")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, bandsTbl)
       graft.io.Bucketing.dropTable(spark, sigsTbl)
     }
@@ -383,15 +375,12 @@ class ExplainSpec extends SparkSpec {
         bench.filter(pmod(col("doc_id"), lit(2)) === i), tbl, i.toLong,
         buckets = 4)
     }
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val fold = spark.table(tbl).select(col("gram")).distinct()
       val plan = planString(fold)
       assert(!plan.contains("Exchange"),
         s"gram fold must ride the bucketed layout, not re-shuffle:\n$plan")
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, tbl)
     }
   }
@@ -406,11 +395,7 @@ class ExplainSpec extends SparkSpec {
       docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 2 === 0), tbl, 0L)
     graft.ops.TextAnalysis.appendLineDfPartial(spark,
       docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 2 === 1), tbl, 1L)
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try staticShufflePlan {
       val verdicts = graft.ops.TextAnalysis.lineDedupIncremental(spark,
         docs.filter(col("doc_id") % 5 === 0), tbl)
       val plan = planString(verdicts)
@@ -447,8 +432,6 @@ class ExplainSpec extends SparkSpec {
       assert(foldChain.exists(_.contains("HashAggregate")),
         s"expected the partial-df fold above the index scan:\n$plan")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, tbl)
     }
   }
@@ -460,11 +443,7 @@ class ExplainSpec extends SparkSpec {
     graft.io.Bucketing.dropTable(spark, tbl)
     graft.ops.TextAnalysis.buildLineDfIndex(
       docs.filter(col("doc_id") % 5 =!= 0), tbl, buckets = 4)
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try staticShufflePlan {
       val verdicts = graft.ops.TextAnalysis.lineDedupIncremental(spark,
         docs.filter(col("doc_id") % 5 === 0), tbl)
       val plan = planString(verdicts)
@@ -475,8 +454,6 @@ class ExplainSpec extends SparkSpec {
       assert(plan.linesIterator.exists(_.contains(tbl)),
         s"expected a scan of $tbl in:\n$plan")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, tbl)
     }
   }
@@ -488,11 +465,7 @@ class ExplainSpec extends SparkSpec {
     graft.io.Bucketing.dropTable(spark, tbl)
     graft.ops.Dedup.buildWindowDfIndex(
       docs.filter(col("doc_id") % 5 =!= 0), tbl, k = 8, buckets = 4)
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try staticShufflePlan {
       val out = graft.ops.Dedup.substringRemoveIncremental(spark,
         docs.filter(col("doc_id") % 5 === 0), tbl, k = 8)
       val plan = planString(out)
@@ -511,8 +484,6 @@ class ExplainSpec extends SparkSpec {
       assert(hashExchanges == 1,
         s"expected exactly one delta-side exchange on h, got $hashExchanges:\n$plan")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, tbl)
     }
   }
@@ -523,9 +494,7 @@ class ExplainSpec extends SparkSpec {
     val tbl = "graft_p56spec_ivf"
     graft.io.Bucketing.dropTable(spark, tbl)
     graft.ops.Similarity.buildIvfIndex(emb, tbl, nCentroids = 16, buckets = 4)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val indexed = graft.ops.Similarity.ivfTopKAgainstIndex(spark, emb, tbl)
       val plan = planString(indexed)
       // the corpus side must come straight from the stored assignment:
@@ -546,7 +515,6 @@ class ExplainSpec extends SparkSpec {
       assert(indexed.exceptAll(inline).isEmpty && inline.exceptAll(indexed).isEmpty,
         "indexed IVF must equal the inline path")
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, tbl)
     }
   }
@@ -581,11 +549,7 @@ class ExplainSpec extends SparkSpec {
       bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 4)
     graft.ops.Dedup.appendToCorpusIndex(docs.filter(col("doc_id") % 5 === 1),
       bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 4)
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try staticShufflePlan {
       // the appended table must STILL plan as a bucketed scan — an
       // append that silently degraded the layout would re-shuffle the
       // whole corpus on every future probe
@@ -632,8 +596,6 @@ class ExplainSpec extends SparkSpec {
              monolithic.exceptAll(compacted).isEmpty,
         "compaction must not change a single verdict")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, bandsTbl)
       graft.io.Bucketing.dropTable(spark, sigsTbl)
     }
@@ -650,11 +612,7 @@ class ExplainSpec extends SparkSpec {
     graft.io.Bucketing.dropTable(spark, vecsTbl)
     val bits = graft.ops.Similarity.buildVectorIndex(corpus, bandsTbl, vecsTbl,
       buckets = 4)
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try staticShufflePlan {
       val dPosed = delta.select(col("vec_id"),
         posexplode(graft.ops.Similarity.lshBucketsMulti(col("embedding"), 8, bits)))
         .toDF("new_id", "t", "bucket")
@@ -675,8 +633,6 @@ class ExplainSpec extends SparkSpec {
       assert(indexed.exceptAll(inline).isEmpty && inline.exceptAll(indexed).isEmpty,
         "persisted-index verdicts must equal the inline path")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, bandsTbl)
       graft.io.Bucketing.dropTable(spark, vecsTbl)
     }
@@ -797,9 +753,7 @@ class ExplainSpec extends SparkSpec {
       graft.ops.Sketches.appendLog2HistogramPartial(spark, b, hist, i.toLong,
         buckets = 4)
     }
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       // count-min fold: grouped on pos, the bucket key
       val cmPlan = planString(
         spark.table(cm).groupBy("pos").agg(sum(col("cnt")).as("cnt")))
@@ -812,7 +766,6 @@ class ExplainSpec extends SparkSpec {
       assert(!hPlan.contains("Exchange"),
         s"histogram fold must ride the lang-bucketed layout:\n$hPlan")
     } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, cm)
       graft.io.Bucketing.dropTable(spark, hist)
     }
@@ -870,11 +823,7 @@ class ExplainSpec extends SparkSpec {
     graft.io.Bucketing.dropTable(spark, tbl)
     graft.ops.Dedup.buildShingleDfIndex(
       docs.filter(col("doc_id") % 5 =!= 0), tbl, buckets = 4)
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try staticShufflePlan {
       val out = graft.ops.Dedup.noveltyIncremental(spark,
         docs.filter(col("doc_id") % 5 === 0), tbl)
       val plan = planString(out)
@@ -893,8 +842,6 @@ class ExplainSpec extends SparkSpec {
         s"expected at most the two delta-side exchanges on h, got $hashExchanges:\n$plan")
       assert(!plan.contains("CartesianProduct"), plan)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, tbl)
     }
   }
@@ -919,11 +866,7 @@ class ExplainSpec extends SparkSpec {
     val files = graft.io.Bucketing.foldBucketed(spark, tbl)
     assert(files === 4,
       s"fold must produce one file per bucket (4), got $files")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try staticShufflePlan {
       val out = graft.ops.Dedup.noveltyIncremental(spark,
         docs.filter(col("doc_id") % 5 === 0), tbl)
       val plan = planString(out)
@@ -938,8 +881,6 @@ class ExplainSpec extends SparkSpec {
         s"expected at most the two delta-side exchanges on h post-fold, got $hashExchanges:\n$plan")
       assert(!plan.contains("CartesianProduct"), plan)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.io.Bucketing.dropTable(spark, tbl)
     }
   }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.io.LandingZone
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
 /** SQL surface of the native expressions via SparkSessionExtensions,
@@ -9,474 +8,401 @@ import java.nio.file.Files
 class ExtensionsSpec extends SparkSpec {
 
   test("GraftExtensions registers vec_dot and friends for SQL use") {
-    spark.sparkContext // ensure the shared context exists first
-    // getOrCreate returns any active session, which would skip extensions:
-    // clear, build a sibling session on the same context, then restore
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      val dot = s2.sql(
-        "SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").collect()(0).getDouble(0)
-      assert(dot === 11.0)
-      val sh = s2.sql(
-        "SELECT simhash64(array('a','b','a')) AS h").collect()(0).getLong(0)
-      val sh2 = s2.sql(
-        "SELECT simhash64(array('a','a','b')) AS h").collect()(0).getLong(0)
-      assert(sh === sh2) // order-insensitive (bag semantics)
-      val j = s2.sql(
-        "SELECT array_jaccard(array('x','y'), array('y','z')) AS j").collect()(0).getDouble(0)
-      assert(math.abs(j - 1.0 / 3.0) < 1e-12)
-      val agree = s2.sql(
-        "SELECT sig_agreement(array(1L,2L,3L,4L), array(1L,9L,3L,8L)) AS a")
-        .collect()(0).getDouble(0)
-      assert(agree === 0.5)
-      assert(s2.sql("SELECT minhash_sig(array('a','b','c'), 2) AS s")
-        .collect()(0).getSeq[Long](0).length === 64)
-      assert(s2.sql("SELECT char_ngrams('abcd', 3) AS g")
-        .collect()(0).getSeq[String](0) === Seq("abc", "bcd"))
-      // 60-bit replayable simhash: top nibble clear, same bag semantics
-      val m1 = s2.sql("SELECT simhash_md5(array('a','b','a')) AS h")
-        .collect()(0).getLong(0)
-      val m2 = s2.sql("SELECT simhash_md5(array('a','a','b')) AS h")
-        .collect()(0).getLong(0)
-      assert(m1 === m2 && (m1 >>> 60) === 0L)
-      assert(s2.sql("SELECT vec_sum(array(1.0D, 2.5D, -0.5D)) AS s")
-        .collect()(0).getDouble(0) === 3.0)
-      assert(s2.sql("SELECT word_ngrams(array('a','b','a','b'), 2) AS g")
-        .collect()(0).getSeq[String](0) === Seq("a b", "b a", "a b"))
-      assert(s2.sql("SELECT subvectors(array(1.0D, 2.0D, 3.0D, 4.0D), 2) AS sv")
-        .collect()(0).getSeq[Seq[Double]](0) === Seq(Seq(1.0, 2.0), Seq(3.0, 4.0)))
-    } finally {
-      // do NOT stop s2 (it shares the SparkContext); restore the default
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
+    val dot = spark.sql(
+      "SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").collect()(0).getDouble(0)
+    assert(dot === 11.0)
+    val sh = spark.sql(
+      "SELECT simhash64(array('a','b','a')) AS h").collect()(0).getLong(0)
+    val sh2 = spark.sql(
+      "SELECT simhash64(array('a','a','b')) AS h").collect()(0).getLong(0)
+    assert(sh === sh2) // order-insensitive (bag semantics)
+    val j = spark.sql(
+      "SELECT array_jaccard(array('x','y'), array('y','z')) AS j").collect()(0).getDouble(0)
+    assert(math.abs(j - 1.0 / 3.0) < 1e-12)
+    val agree = spark.sql(
+      "SELECT sig_agreement(array(1L,2L,3L,4L), array(1L,9L,3L,8L)) AS a")
+      .collect()(0).getDouble(0)
+    assert(agree === 0.5)
+    assert(spark.sql("SELECT minhash_sig(array('a','b','c'), 2) AS s")
+      .collect()(0).getSeq[Long](0).length === 64)
+    assert(spark.sql("SELECT char_ngrams('abcd', 3) AS g")
+      .collect()(0).getSeq[String](0) === Seq("abc", "bcd"))
+    // 60-bit replayable simhash: top nibble clear, same bag semantics
+    val m1 = spark.sql("SELECT simhash_md5(array('a','b','a')) AS h")
+      .collect()(0).getLong(0)
+    val m2 = spark.sql("SELECT simhash_md5(array('a','a','b')) AS h")
+      .collect()(0).getLong(0)
+    assert(m1 === m2 && (m1 >>> 60) === 0L)
+    assert(spark.sql("SELECT vec_sum(array(1.0D, 2.5D, -0.5D)) AS s")
+      .collect()(0).getDouble(0) === 3.0)
+    assert(spark.sql("SELECT word_ngrams(array('a','b','a','b'), 2) AS g")
+      .collect()(0).getSeq[String](0) === Seq("a b", "b a", "a b"))
+    assert(spark.sql("SELECT subvectors(array(1.0D, 2.0D, 3.0D, 4.0D), 2) AS sv")
+      .collect()(0).getSeq[Seq[Double]](0) === Seq(Seq(1.0, 2.0), Seq(3.0, 4.0)))
   }
 
   test("RETRACT FROM / PURGE RETRACTIONS SQL surface: dispatch, guards, delegate passthrough") {
-    spark.sparkContext // ensure the shared context exists first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[4]")
-      .appName("graft-ext-retract-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      import s2.implicits._
-      Seq("ext_tok_ret", "ext_tok_reb")
-        .foreach(graft.io.Bucketing.dropTable(s2, _))
-      // token-count family end-to-end: corpus + poison appended in
-      // Scala, the retraction issued through SQL, probe must equal the
-      // clean build — the negated-partial path behind the statement
-      val docs = Seq((1L, "a b a"), (2L, "b c"), (3L, "a c c"))
-        .toDF("doc_id", "text")
-      val poison = Seq((11L, "a b a")).toDF("doc_id", "text")
-      graft.ops.TextAnalysis.appendTokenCountPartial(s2, docs, "ext_tok_ret", 0L)
-      graft.ops.TextAnalysis.appendTokenCountPartial(s2, poison, "ext_tok_ret", 1L)
-      poison.createOrReplaceTempView("ext_poison")
-      val res = s2.sql("RETRACT FROM token_count INDEX ext_tok_ret " +
-        "BATCH 2 AS SELECT * FROM ext_poison").collect()
-      assert(res.length === 1 && res(0).getString(0) === "token_count" &&
-        res(0).getLong(1) === 2L && res(0).getLong(2) === 1L)
-      graft.ops.TextAnalysis.appendTokenCountPartial(s2, docs, "ext_tok_reb", 0L)
-      val probe = Seq((21L, "a b c")).toDF("doc_id", "text")
-      assert(graft.ops.TextAnalysis
-          .unigramLogProbIncremental(s2, probe, "ext_tok_ret")
-          .collect().toSeq ===
-        graft.ops.TextAnalysis
-          .unigramLogProbIncremental(s2, probe, "ext_tok_reb")
-          .collect().toSeq,
-        "SQL-issued retraction must equal the clean-corpus build")
-      // grammar / dispatch guards fire at parse time
-      intercept[IllegalArgumentException] {
-        s2.sql("RETRACT FROM nosuch INDEX t BATCH 0 AS SELECT 1")
-      }
-      intercept[IllegalArgumentException] { // tombstone family needs TOMBSTONES
-        s2.sql("RETRACT FROM minhash INDEX a, b BATCH 0 AS SELECT 1")
-      }
-      intercept[IllegalArgumentException] { // additive family has no tombstones
-        s2.sql("RETRACT FROM token_count INDEX t TOMBSTONES tt BATCH 0 AS SELECT 1")
-      }
-      intercept[IllegalArgumentException] { // nothing to purge on additive
-        s2.sql("PURGE RETRACTIONS FROM token_count INDEX t TOMBSTONES tt")
-      }
-      intercept[IllegalArgumentException] { // wrong INDEX arity
-        s2.sql("RETRACT FROM minhash INDEX onlyone TOMBSTONES tt BATCH 0 AS SELECT 1")
-      }
-      // everything else still parses through the delegate
-      assert(s2.sql("SELECT 1 AS x").collect()(0).getInt(0) === 1)
-      Seq("ext_tok_ret", "ext_tok_reb")
-        .foreach(graft.io.Bucketing.dropTable(s2, _))
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
+    import spark.implicits._
+    Seq("ext_tok_ret", "ext_tok_reb")
+      .foreach(graft.io.Bucketing.dropTable(spark, _))
+    // token-count family end-to-end: corpus + poison appended in
+    // Scala, the retraction issued through SQL, probe must equal the
+    // clean build — the negated-partial path behind the statement
+    val docs = Seq((1L, "a b a"), (2L, "b c"), (3L, "a c c"))
+      .toDF("doc_id", "text")
+    val poison = Seq((11L, "a b a")).toDF("doc_id", "text")
+    graft.ops.TextAnalysis.appendTokenCountPartial(spark, docs, "ext_tok_ret", 0L)
+    graft.ops.TextAnalysis.appendTokenCountPartial(spark, poison, "ext_tok_ret", 1L)
+    poison.createOrReplaceTempView("ext_poison")
+    val res = spark.sql("RETRACT FROM token_count INDEX ext_tok_ret " +
+      "BATCH 2 AS SELECT * FROM ext_poison").collect()
+    assert(res.length === 1 && res(0).getString(0) === "token_count" &&
+      res(0).getLong(1) === 2L && res(0).getLong(2) === 1L)
+    graft.ops.TextAnalysis.appendTokenCountPartial(spark, docs, "ext_tok_reb", 0L)
+    val probe = Seq((21L, "a b c")).toDF("doc_id", "text")
+    assert(graft.ops.TextAnalysis
+        .unigramLogProbIncremental(spark, probe, "ext_tok_ret")
+        .collect().toSeq ===
+      graft.ops.TextAnalysis
+        .unigramLogProbIncremental(spark, probe, "ext_tok_reb")
+        .collect().toSeq,
+      "SQL-issued retraction must equal the clean-corpus build")
+    // grammar / dispatch guards fire at parse time
+    intercept[IllegalArgumentException] {
+      spark.sql("RETRACT FROM nosuch INDEX t BATCH 0 AS SELECT 1")
     }
+    intercept[IllegalArgumentException] { // tombstone family needs TOMBSTONES
+      spark.sql("RETRACT FROM minhash INDEX a, b BATCH 0 AS SELECT 1")
+    }
+    intercept[IllegalArgumentException] { // additive family has no tombstones
+      spark.sql("RETRACT FROM token_count INDEX t TOMBSTONES tt BATCH 0 AS SELECT 1")
+    }
+    intercept[IllegalArgumentException] { // nothing to purge on additive
+      spark.sql("PURGE RETRACTIONS FROM token_count INDEX t TOMBSTONES tt")
+    }
+    intercept[IllegalArgumentException] { // wrong INDEX arity
+      spark.sql("RETRACT FROM minhash INDEX onlyone TOMBSTONES tt BATCH 0 AS SELECT 1")
+    }
+    // everything else still parses through the delegate
+    assert(spark.sql("SELECT 1 AS x").collect()(0).getInt(0) === 1)
+    Seq("ext_tok_ret", "ext_tok_reb")
+      .foreach(graft.io.Bucketing.dropTable(spark, _))
   }
 
   test("CREATE/APPEND/COMPACT/PROBE SQL lifecycle: dispatch, landed flag, guards, near-miss diagnostics") {
-    spark.sparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[4]")
-      .appName("graft-ext-lifecycle-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      import s2.implicits._
-      Seq("ext_lc_idx", "ext_lc_out", "ext_lc_reb")
-        .foreach(graft.io.Bucketing.dropTable(s2, _))
-      val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta"),
-        (2L, "beta gamma delta eta theta iota"),
-        (3L, "kappa lambda mu nu xi omicron")).toDF("doc_id", "text")
-      val poison = Seq((11L, "alpha beta gamma delta epsilon zeta"))
-        .toDF("doc_id", "text")
-      val probeDocs = Seq((21L, "alpha beta gamma something else here"))
-        .toDF("doc_id", "text")
-      corpus.createOrReplaceTempView("ext_lc_corpus")
-      poison.createOrReplaceTempView("ext_lc_poison")
-      probeDocs.createOrReplaceTempView("ext_lc_probe")
-      // CREATE = batch 0 of a table that must not exist yet
-      val created = s2.sql("CREATE shingle_df INDEX ext_lc_idx AS " +
-        "SELECT * FROM ext_lc_corpus").collect()
-      assert(created.length === 1 && created(0).getString(0) === "shingle_df"
-        && created(0).getLong(1) === 0L && created(0).getLong(2) === 3L
-        && created(0).getBoolean(3))
-      intercept[IllegalArgumentException] { // never silently extend
-        s2.sql("CREATE shingle_df INDEX ext_lc_idx AS SELECT * FROM ext_lc_corpus")
-      }
-      // APPEND poison, RETRACT it, FOLD it away
-      assert(s2.sql("APPEND TO shingle_df INDEX ext_lc_idx BATCH 1 AS " +
-        "SELECT * FROM ext_lc_poison").collect()(0).getBoolean(3))
-      assert(s2.sql("RETRACT FROM shingle_df INDEX ext_lc_idx BATCH 2 AS " +
-        "SELECT * FROM ext_lc_poison").collect()(0).getBoolean(3))
-      val rowsBefore = s2.table("ext_lc_idx").count()
-      val compacted = s2.sql("COMPACT INDEX ext_lc_idx").collect()
-      assert(compacted(0).getBoolean(1),
-        "an additive-df table must FOLD, not identity-compact")
-      assert(s2.table("ext_lc_idx").count() < rowsBefore,
-        "the fold must drop the poison's cancelled (+df, −df) pairs")
-      // a replayed (folded) batch reports landed = false — the ADVICE
-      // r18 visibility contract — and changes nothing
-      val replay = s2.sql("APPEND TO shingle_df INDEX ext_lc_idx BATCH 1 " +
-        "AS SELECT * FROM ext_lc_poison").collect()
-      assert(!replay(0).getBoolean(3),
-        "a post-fold replay must report landed = false")
-      val replayRet = s2.sql("RETRACT FROM shingle_df INDEX ext_lc_idx " +
-        "BATCH 2 AS SELECT * FROM ext_lc_poison").collect()
-      assert(!replayRet(0).getBoolean(3))
-      // PROBE INTO: distributed result table, count through the command
-      val probed = s2.sql("PROBE shingle_df INDEX ext_lc_idx INTO " +
-        "ext_lc_out AS SELECT * FROM ext_lc_probe").collect()
-      assert(probed(0).getString(1) === "ext_lc_out" &&
-        probed(0).getLong(2) === 1L)
-      // ... and the SQL-routed lifecycle equals the Scala rebuild-without
-      graft.ops.Dedup.appendShingleDfPartial(s2, corpus, "ext_lc_reb", 0L)
-      assert(s2.table("ext_lc_out").collect().map(_.toString).toSet ===
-        graft.ops.Dedup.noveltyIncremental(s2, probeDocs, "ext_lc_reb")
-          .collect().map(_.toString).toSet,
-        "SQL lifecycle probe must equal the Scala rebuild-without probe")
-      // minhash: the tombstone family's WHOLE lifecycle through SQL,
-      // probe included — build, poison, retract (gate up), PROBE
-      // through the LIVE gate, purge, PROBE ungated; both probes must
-      // equal the Scala probe of a clean build
-      Seq("ext_mh_bands", "ext_mh_sigs", "ext_mh_tombs", "ext_mh_out",
-        "ext_mh_bands_c", "ext_mh_sigs_c")
-        .foreach(graft.io.Bucketing.dropTable(s2, _))
-      val mhCorpus = Seq(
-        (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2L, "beta gamma delta eta theta iota kappa lambda"),
-        (3L, "kappa lambda mu nu xi omicron pi rho")).toDF("doc_id", "text")
-      val mhDelta = Seq(
-        (21L, "alpha beta gamma delta epsilon zeta eta theta"))
-        .toDF("doc_id", "text")
-      import org.apache.spark.sql.functions.{col, lit}
-      val mhPoison = mhDelta.withColumn("doc_id",
-        col("doc_id") + lit(10000000L))
-      mhCorpus.createOrReplaceTempView("ext_mh_corpus")
-      mhPoison.createOrReplaceTempView("ext_mh_poison")
-      mhDelta.createOrReplaceTempView("ext_mh_delta")
-      s2.sql("CREATE minhash INDEX ext_mh_bands, ext_mh_sigs AS " +
-        "SELECT * FROM ext_mh_corpus").collect()
-      s2.sql("APPEND TO minhash INDEX ext_mh_bands, ext_mh_sigs BATCH 1 " +
-        "AS SELECT * FROM ext_mh_poison").collect()
-      s2.sql("RETRACT FROM minhash INDEX ext_mh_bands, ext_mh_sigs " +
-        "TOMBSTONES ext_mh_tombs BATCH 0 AS " +
-        "SELECT doc_id FROM ext_mh_poison").collect()
-      graft.ops.Dedup.appendCorpusIndexPartial(s2, mhCorpus,
-        "ext_mh_bands_c", "ext_mh_sigs_c", 0L)
-      val mhWant = graft.ops.Dedup.incrementalVerdictsAgainstIndex(s2,
-        mhDelta, "ext_mh_bands_c", "ext_mh_sigs_c")
-        .collect().map(_.toString).toSet
-      // through the LIVE gate: the poison twin must not match
-      s2.sql("PROBE minhash INDEX ext_mh_bands, ext_mh_sigs " +
-        "TOMBSTONES ext_mh_tombs INTO ext_mh_out AS " +
-        "SELECT * FROM ext_mh_delta").collect()
-      assert(s2.table("ext_mh_out").collect().map(_.toString).toSet ===
-        mhWant, "SQL probe through the live gate must equal the clean build")
-      // purge, then ungated: identical again
-      s2.sql("PURGE RETRACTIONS FROM minhash INDEX ext_mh_bands, " +
-        "ext_mh_sigs TOMBSTONES ext_mh_tombs").collect()
-      s2.sql("PROBE minhash INDEX ext_mh_bands, ext_mh_sigs INTO " +
-        "ext_mh_out AS SELECT * FROM ext_mh_delta").collect()
-      assert(s2.table("ext_mh_out").collect().map(_.toString).toSet ===
-        mhWant, "post-purge ungated SQL probe must equal the clean build")
-      Seq("ext_mh_bands", "ext_mh_sigs", "ext_mh_tombs", "ext_mh_out",
-        "ext_mh_bands_c", "ext_mh_sigs_c")
-        .foreach(graft.io.Bucketing.dropTable(s2, _))
-      // bm25_df: the two-input probe rides a QUERIES clause — SQL
-      // lifecycle (create + probe) must equal the Scala streamed probe
-      Seq("ext_bm_idx", "ext_bm_out").foreach(graft.io.Bucketing.dropTable(s2, _))
-      s2.sql("CREATE bm25_df INDEX ext_bm_idx AS SELECT * FROM ext_mh_corpus")
-        .collect()
-      // the (query_id, term) long form bm25QuerySet produces
-      val bmQueries = Seq((0L, "beta"), (0L, "gamma"), (1L, "mu"),
-        (1L, "nu")).toDF("query_id", "term")
-      bmQueries.createOrReplaceTempView("ext_bm_q")
-      s2.sql("PROBE bm25_df INDEX ext_bm_idx QUERIES ext_bm_q INTO " +
-        "ext_bm_out AS SELECT * FROM ext_mh_delta").collect()
-      assert(s2.table("ext_bm_out").collect().map(_.toString).toSet ===
-        graft.ops.TextAnalysis.bm25TopKIncrementalStreamed(s2, mhDelta,
-            bmQueries, "ext_bm_idx")
-          .collect().map(_.toString).toSet,
-        "SQL bm25 probe must equal the Scala streamed probe")
-      intercept[IllegalArgumentException] { // bm25 probe NEEDS its query set
-        s2.sql("PROBE bm25_df INDEX ext_bm_idx INTO o AS SELECT 1")
-      }
-      Seq("ext_bm_idx", "ext_bm_out").foreach(graft.io.Bucketing.dropTable(s2, _))
-      // guards: geometry clauses are REQUIRED at vector/ivf CREATE
-      // (VERDICT r19 item 3: the provisioning decision must be stated,
-      // then it rides table properties) and rejected for families that
-      // have none
-      val gv = intercept[IllegalArgumentException] {
-        s2.sql("CREATE vector INDEX a, b AS SELECT 1")
-      }
-      assert(gv.getMessage.contains("TABLES"))
-      val gi = intercept[IllegalArgumentException] {
-        s2.sql("CREATE ivf INDEX a AS SELECT 1")
-      }
-      assert(gi.getMessage.contains("CENTROIDS"))
-      intercept[IllegalArgumentException] { // clauses are vector/ivf-only
-        s2.sql("CREATE shingle_df INDEX x TABLES 4 BITS 2 AS SELECT 1")
-      }
-      intercept[IllegalArgumentException] { // CENTROIDS belongs to ivf
-        s2.sql("CREATE vector INDEX a, b TABLES 4 BITS 2 CENTROIDS 3 AS SELECT 1")
-      }
-      intercept[IllegalArgumentException] { // TABLES/BITS belong to vector
-        s2.sql("CREATE ivf INDEX a TABLES 4 BITS 2 CENTROIDS 3 AS SELECT 1")
-      }
-      intercept[IllegalArgumentException] { // gate on an additive probe
-        s2.sql("PROBE shingle_df INDEX t TOMBSTONES tt INTO o AS SELECT 1")
-      }
-      intercept[IllegalArgumentException] { // QUERIES is bm25-only
-        s2.sql("PROBE shingle_df INDEX t QUERIES q INTO o AS SELECT 1")
-      }
-      // near-miss diagnostics: unambiguously-graft statements with bad
-      // grammar raise the graft grammar, not a Spark ParseException
-      val miss1 = intercept[IllegalArgumentException] {
-        s2.sql("APPEND TO shingle_df INDEX ext_lc_idx AS SELECT 1") // no BATCH
-      }
-      assert(miss1.getMessage.contains("malformed graft statement"))
-      val miss2 = intercept[IllegalArgumentException] { // qualified name
-        s2.sql("RETRACT FROM minhash INDEX db.t1, t2 TOMBSTONES tt BATCH 0 AS SELECT 1")
-      }
-      assert(miss2.getMessage.contains("unqualified"))
-      val miss3 = intercept[IllegalArgumentException] { // known family, bad tail
-        s2.sql("CREATE shingle_df INDEX ext_lc_x")
-      }
-      assert(miss3.getMessage.contains("malformed graft statement"))
-      // non-graft statements pass through untouched — CREATE included
-      s2.sql("CREATE TEMPORARY VIEW ext_lc_view AS SELECT 1 AS x")
-      assert(s2.sql("SELECT x FROM ext_lc_view").collect()(0).getInt(0) === 1)
-      s2.sql("DROP VIEW ext_lc_view")
-      Seq("ext_lc_idx", "ext_lc_out", "ext_lc_reb")
-        .foreach(graft.io.Bucketing.dropTable(s2, _))
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
+    import spark.implicits._
+    Seq("ext_lc_idx", "ext_lc_out", "ext_lc_reb")
+      .foreach(graft.io.Bucketing.dropTable(spark, _))
+    val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "beta gamma delta eta theta iota"),
+      (3L, "kappa lambda mu nu xi omicron")).toDF("doc_id", "text")
+    val poison = Seq((11L, "alpha beta gamma delta epsilon zeta"))
+      .toDF("doc_id", "text")
+    val probeDocs = Seq((21L, "alpha beta gamma something else here"))
+      .toDF("doc_id", "text")
+    corpus.createOrReplaceTempView("ext_lc_corpus")
+    poison.createOrReplaceTempView("ext_lc_poison")
+    probeDocs.createOrReplaceTempView("ext_lc_probe")
+    // CREATE = batch 0 of a table that must not exist yet
+    val created = spark.sql("CREATE shingle_df INDEX ext_lc_idx AS " +
+      "SELECT * FROM ext_lc_corpus").collect()
+    assert(created.length === 1 && created(0).getString(0) === "shingle_df"
+      && created(0).getLong(1) === 0L && created(0).getLong(2) === 3L
+      && created(0).getBoolean(3))
+    intercept[IllegalArgumentException] { // never silently extend
+      spark.sql("CREATE shingle_df INDEX ext_lc_idx AS SELECT * FROM ext_lc_corpus")
     }
+    // APPEND poison, RETRACT it, FOLD it away
+    assert(spark.sql("APPEND TO shingle_df INDEX ext_lc_idx BATCH 1 AS " +
+      "SELECT * FROM ext_lc_poison").collect()(0).getBoolean(3))
+    assert(spark.sql("RETRACT FROM shingle_df INDEX ext_lc_idx BATCH 2 AS " +
+      "SELECT * FROM ext_lc_poison").collect()(0).getBoolean(3))
+    val rowsBefore = spark.table("ext_lc_idx").count()
+    val compacted = spark.sql("COMPACT INDEX ext_lc_idx").collect()
+    assert(compacted(0).getBoolean(1),
+      "an additive-df table must FOLD, not identity-compact")
+    assert(spark.table("ext_lc_idx").count() < rowsBefore,
+      "the fold must drop the poison's cancelled (+df, −df) pairs")
+    // a replayed (folded) batch reports landed = false — the ADVICE
+    // r18 visibility contract — and changes nothing
+    val replay = spark.sql("APPEND TO shingle_df INDEX ext_lc_idx BATCH 1 " +
+      "AS SELECT * FROM ext_lc_poison").collect()
+    assert(!replay(0).getBoolean(3),
+      "a post-fold replay must report landed = false")
+    val replayRet = spark.sql("RETRACT FROM shingle_df INDEX ext_lc_idx " +
+      "BATCH 2 AS SELECT * FROM ext_lc_poison").collect()
+    assert(!replayRet(0).getBoolean(3))
+    // PROBE INTO: distributed result table, count through the command
+    val probed = spark.sql("PROBE shingle_df INDEX ext_lc_idx INTO " +
+      "ext_lc_out AS SELECT * FROM ext_lc_probe").collect()
+    assert(probed(0).getString(1) === "ext_lc_out" &&
+      probed(0).getLong(2) === 1L)
+    // ... and the SQL-routed lifecycle equals the Scala rebuild-without
+    graft.ops.Dedup.appendShingleDfPartial(spark, corpus, "ext_lc_reb", 0L)
+    assert(spark.table("ext_lc_out").collect().map(_.toString).toSet ===
+      graft.ops.Dedup.noveltyIncremental(spark, probeDocs, "ext_lc_reb")
+        .collect().map(_.toString).toSet,
+      "SQL lifecycle probe must equal the Scala rebuild-without probe")
+    // minhash: the tombstone family's WHOLE lifecycle through SQL,
+    // probe included — build, poison, retract (gate up), PROBE
+    // through the LIVE gate, purge, PROBE ungated; both probes must
+    // equal the Scala probe of a clean build
+    Seq("ext_mh_bands", "ext_mh_sigs", "ext_mh_tombs", "ext_mh_out",
+      "ext_mh_bands_c", "ext_mh_sigs_c")
+      .foreach(graft.io.Bucketing.dropTable(spark, _))
+    val mhCorpus = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "beta gamma delta eta theta iota kappa lambda"),
+      (3L, "kappa lambda mu nu xi omicron pi rho")).toDF("doc_id", "text")
+    val mhDelta = Seq(
+      (21L, "alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("doc_id", "text")
+    import org.apache.spark.sql.functions.{col, lit}
+    val mhPoison = mhDelta.withColumn("doc_id",
+      col("doc_id") + lit(10000000L))
+    mhCorpus.createOrReplaceTempView("ext_mh_corpus")
+    mhPoison.createOrReplaceTempView("ext_mh_poison")
+    mhDelta.createOrReplaceTempView("ext_mh_delta")
+    spark.sql("CREATE minhash INDEX ext_mh_bands, ext_mh_sigs AS " +
+      "SELECT * FROM ext_mh_corpus").collect()
+    spark.sql("APPEND TO minhash INDEX ext_mh_bands, ext_mh_sigs BATCH 1 " +
+      "AS SELECT * FROM ext_mh_poison").collect()
+    spark.sql("RETRACT FROM minhash INDEX ext_mh_bands, ext_mh_sigs " +
+      "TOMBSTONES ext_mh_tombs BATCH 0 AS " +
+      "SELECT doc_id FROM ext_mh_poison").collect()
+    graft.ops.Dedup.appendCorpusIndexPartial(spark, mhCorpus,
+      "ext_mh_bands_c", "ext_mh_sigs_c", 0L)
+    val mhWant = graft.ops.Dedup.incrementalVerdictsAgainstIndex(spark,
+      mhDelta, "ext_mh_bands_c", "ext_mh_sigs_c")
+      .collect().map(_.toString).toSet
+    // through the LIVE gate: the poison twin must not match
+    spark.sql("PROBE minhash INDEX ext_mh_bands, ext_mh_sigs " +
+      "TOMBSTONES ext_mh_tombs INTO ext_mh_out AS " +
+      "SELECT * FROM ext_mh_delta").collect()
+    assert(spark.table("ext_mh_out").collect().map(_.toString).toSet ===
+      mhWant, "SQL probe through the live gate must equal the clean build")
+    // purge, then ungated: identical again
+    spark.sql("PURGE RETRACTIONS FROM minhash INDEX ext_mh_bands, " +
+      "ext_mh_sigs TOMBSTONES ext_mh_tombs").collect()
+    spark.sql("PROBE minhash INDEX ext_mh_bands, ext_mh_sigs INTO " +
+      "ext_mh_out AS SELECT * FROM ext_mh_delta").collect()
+    assert(spark.table("ext_mh_out").collect().map(_.toString).toSet ===
+      mhWant, "post-purge ungated SQL probe must equal the clean build")
+    Seq("ext_mh_bands", "ext_mh_sigs", "ext_mh_tombs", "ext_mh_out",
+      "ext_mh_bands_c", "ext_mh_sigs_c")
+      .foreach(graft.io.Bucketing.dropTable(spark, _))
+    // bm25_df: the two-input probe rides a QUERIES clause — SQL
+    // lifecycle (create + probe) must equal the Scala streamed probe
+    Seq("ext_bm_idx", "ext_bm_out").foreach(graft.io.Bucketing.dropTable(spark, _))
+    spark.sql("CREATE bm25_df INDEX ext_bm_idx AS SELECT * FROM ext_mh_corpus")
+      .collect()
+    // the (query_id, term) long form bm25QuerySet produces
+    val bmQueries = Seq((0L, "beta"), (0L, "gamma"), (1L, "mu"),
+      (1L, "nu")).toDF("query_id", "term")
+    bmQueries.createOrReplaceTempView("ext_bm_q")
+    spark.sql("PROBE bm25_df INDEX ext_bm_idx QUERIES ext_bm_q INTO " +
+      "ext_bm_out AS SELECT * FROM ext_mh_delta").collect()
+    assert(spark.table("ext_bm_out").collect().map(_.toString).toSet ===
+      graft.ops.TextAnalysis.bm25TopKIncrementalStreamed(spark, mhDelta,
+          bmQueries, "ext_bm_idx")
+        .collect().map(_.toString).toSet,
+      "SQL bm25 probe must equal the Scala streamed probe")
+    intercept[IllegalArgumentException] { // bm25 probe NEEDS its query set
+      spark.sql("PROBE bm25_df INDEX ext_bm_idx INTO o AS SELECT 1")
+    }
+    Seq("ext_bm_idx", "ext_bm_out").foreach(graft.io.Bucketing.dropTable(spark, _))
+    // guards: geometry clauses are REQUIRED at vector/ivf CREATE
+    // (VERDICT r19 item 3: the provisioning decision must be stated,
+    // then it rides table properties) and rejected for families that
+    // have none
+    val gv = intercept[IllegalArgumentException] {
+      spark.sql("CREATE vector INDEX a, b AS SELECT 1")
+    }
+    assert(gv.getMessage.contains("TABLES"))
+    val gi = intercept[IllegalArgumentException] {
+      spark.sql("CREATE ivf INDEX a AS SELECT 1")
+    }
+    assert(gi.getMessage.contains("CENTROIDS"))
+    intercept[IllegalArgumentException] { // clauses are vector/ivf-only
+      spark.sql("CREATE shingle_df INDEX x TABLES 4 BITS 2 AS SELECT 1")
+    }
+    intercept[IllegalArgumentException] { // CENTROIDS belongs to ivf
+      spark.sql("CREATE vector INDEX a, b TABLES 4 BITS 2 CENTROIDS 3 AS SELECT 1")
+    }
+    intercept[IllegalArgumentException] { // TABLES/BITS belong to vector
+      spark.sql("CREATE ivf INDEX a TABLES 4 BITS 2 CENTROIDS 3 AS SELECT 1")
+    }
+    intercept[IllegalArgumentException] { // gate on an additive probe
+      spark.sql("PROBE shingle_df INDEX t TOMBSTONES tt INTO o AS SELECT 1")
+    }
+    intercept[IllegalArgumentException] { // QUERIES is bm25-only
+      spark.sql("PROBE shingle_df INDEX t QUERIES q INTO o AS SELECT 1")
+    }
+    // near-miss diagnostics: unambiguously-graft statements with bad
+    // grammar raise the graft grammar, not a Spark ParseException
+    val miss1 = intercept[IllegalArgumentException] {
+      spark.sql("APPEND TO shingle_df INDEX ext_lc_idx AS SELECT 1") // no BATCH
+    }
+    assert(miss1.getMessage.contains("malformed graft statement"))
+    val miss2 = intercept[IllegalArgumentException] { // qualified name
+      spark.sql("RETRACT FROM minhash INDEX db.t1, t2 TOMBSTONES tt BATCH 0 AS SELECT 1")
+    }
+    assert(miss2.getMessage.contains("unqualified"))
+    val miss3 = intercept[IllegalArgumentException] { // known family, bad tail
+      spark.sql("CREATE shingle_df INDEX ext_lc_x")
+    }
+    assert(miss3.getMessage.contains("malformed graft statement"))
+    // non-graft statements pass through untouched — CREATE included
+    spark.sql("CREATE TEMPORARY VIEW ext_lc_view AS SELECT 1 AS x")
+    assert(spark.sql("SELECT x FROM ext_lc_view").collect()(0).getInt(0) === 1)
+    spark.sql("DROP VIEW ext_lc_view")
+    Seq("ext_lc_idx", "ext_lc_out", "ext_lc_reb")
+      .foreach(graft.io.Bucketing.dropTable(spark, _))
   }
 
   test("vector/ivf SQL lifecycle: CREATE pins geometry in metadata, APPEND/PROBE re-read it, retract+purge equals the clean Scala build") {
-    spark.sparkContext // ensure the shared context exists first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[4]")
-      .appName("graft-ext-vector-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      import org.apache.spark.sql.functions.{col, lit}
-      val emb = Tables.embeddings(s2, sfDir)
-      val corpus = emb.filter(col("vec_id") % 5 =!= 0)
-      val delta = emb.filter(col("vec_id") % 5 === 0)
-      val poison = delta.withColumn("vec_id", col("vec_id") + lit(10000000L))
-      emb.createOrReplaceTempView("ext_v_all")
-      corpus.createOrReplaceTempView("ext_v_corpus")
-      delta.createOrReplaceTempView("ext_v_delta")
-      poison.createOrReplaceTempView("ext_v_poison")
-      def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-        df.collect().map(_.toString).toSet
+    import org.apache.spark.sql.functions.{col, lit}
+    val emb = Tables.embeddings(spark, sfDir)
+    val corpus = emb.filter(col("vec_id") % 5 =!= 0)
+    val delta = emb.filter(col("vec_id") % 5 === 0)
+    val poison = delta.withColumn("vec_id", col("vec_id") + lit(10000000L))
+    emb.createOrReplaceTempView("ext_v_all")
+    corpus.createOrReplaceTempView("ext_v_corpus")
+    delta.createOrReplaceTempView("ext_v_delta")
+    poison.createOrReplaceTempView("ext_v_poison")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
 
-      // ---- vector: CREATE(TABLES/BITS) -> APPEND -> RETRACT -> PURGE
-      //      -> PROBE, vs the clean Scala batch build ----
-      val vTbls = Seq("ext_v_bands", "ext_v_vecs", "ext_v_tombs",
-        "ext_v_out", "ext_v_bands_c", "ext_v_vecs_c")
-      vTbls.foreach(graft.io.Bucketing.dropTable(s2, _))
-      val bits = graft.ops.Similarity.adaptiveBitsPerTable(emb.count())
-      s2.sql(s"CREATE vector INDEX ext_v_bands, ext_v_vecs TABLES 8 " +
-        s"BITS $bits AS SELECT vec_id, embedding FROM ext_v_corpus").collect()
-      // geometry persisted at CREATE (the q71 pin, now metadata)
-      assert(graft.io.Bucketing.tableProperty(s2, "ext_v_bands",
-        graft.io.Bucketing.LshTablesProperty) === Some("8"))
-      assert(graft.io.Bucketing.tableProperty(s2, "ext_v_bands",
-        graft.io.Bucketing.LshBitsProperty) === Some(bits.toString))
-      // a repeated clause that CONTRADICTS the provisioning fails loudly
-      val mm = intercept[IllegalArgumentException] {
-        s2.sql(s"APPEND TO vector INDEX ext_v_bands, ext_v_vecs BATCH 1 " +
-          s"BITS ${bits + 1} AS SELECT vec_id, embedding FROM ext_v_poison")
-      }
-      assert(mm.getMessage.contains("provisioned"))
-      // clause-free APPEND re-reads the pinned geometry
-      s2.sql("APPEND TO vector INDEX ext_v_bands, ext_v_vecs BATCH 1 AS " +
-        "SELECT vec_id, embedding FROM ext_v_poison").collect()
-      s2.sql("RETRACT FROM vector INDEX ext_v_bands, ext_v_vecs " +
-        "TOMBSTONES ext_v_tombs BATCH 0 AS " +
-        "SELECT vec_id FROM ext_v_poison").collect()
-      graft.ops.Similarity.buildVectorIndex(corpus, "ext_v_bands_c",
-        "ext_v_vecs_c", bitsPerTable = bits)
-      val vWant = rows(graft.ops.Similarity
-        .incrementalCosineVerdictsAgainstIndex(s2, delta, "ext_v_bands_c",
-          "ext_v_vecs_c", bitsPerTable = bits))
-      // through the LIVE gate: the cosine-1.0 twins must not match
-      s2.sql("PROBE vector INDEX ext_v_bands, ext_v_vecs " +
-        "TOMBSTONES ext_v_tombs INTO ext_v_out AS " +
-        "SELECT vec_id, embedding FROM ext_v_delta").collect()
-      assert(rows(s2.table("ext_v_out")) === vWant,
-        "gated SQL vector probe must equal the clean Scala build")
-      // purge, then ungated — and the pinned bits survive the shrink
-      s2.sql("PURGE RETRACTIONS FROM vector INDEX ext_v_bands, " +
-        "ext_v_vecs TOMBSTONES ext_v_tombs").collect()
-      s2.sql("PROBE vector INDEX ext_v_bands, ext_v_vecs INTO ext_v_out " +
-        "AS SELECT vec_id, embedding FROM ext_v_delta").collect()
-      assert(rows(s2.table("ext_v_out")) === vWant,
-        "post-purge SQL vector probe must equal the clean Scala build")
-      vTbls.foreach(graft.io.Bucketing.dropTable(s2, _))
-
-      // ---- ivf: CREATE(CENTROIDS) trains the pinned artifact ->
-      //      APPEND -> RETRACT -> gated PROBE (K = top-k), vs the
-      //      clean Scala streamed build ----
-      val iTbls = Seq("ext_i_idx", "ext_i_idx_centroids", "ext_i_tombs",
-        "ext_i_out", "ext_i_cents_c", "ext_i_idx_c")
-      iTbls.foreach(graft.io.Bucketing.dropTable(s2, _))
-      s2.sql("CREATE ivf INDEX ext_i_idx CENTROIDS 16 AS " +
-        "SELECT vec_id, embedding FROM ext_v_all").collect()
-      assert(graft.io.Bucketing.tableProperty(s2, "ext_i_idx",
-        graft.io.Bucketing.CentroidsProperty) === Some("16"))
-      assert(graft.io.Bucketing.tableProperty(s2, "ext_i_idx",
-        graft.io.Bucketing.CentroidsTableProperty)
-        === Some("ext_i_idx_centroids"))
-      val im = intercept[IllegalArgumentException] {
-        s2.sql("APPEND TO ivf INDEX ext_i_idx BATCH 1 CENTROIDS 8 AS " +
-          "SELECT vec_id, embedding FROM ext_v_poison")
-      }
-      assert(im.getMessage.contains("provisioned"))
-      s2.sql("APPEND TO ivf INDEX ext_i_idx BATCH 1 AS " +
-        "SELECT vec_id, embedding FROM ext_v_poison").collect()
-      s2.sql("RETRACT FROM ivf INDEX ext_i_idx TOMBSTONES ext_i_tombs " +
-        "BATCH 0 AS SELECT vec_id FROM ext_v_poison").collect()
-      graft.ops.Similarity.buildIvfCentroids(emb, "ext_i_cents_c")
-      graft.ops.Similarity.appendIvfAssignPartial(s2, emb, "ext_i_cents_c",
-        "ext_i_idx_c", 0L)
-      val iWant = rows(graft.ops.Similarity.ivfTopKAgainstIndex(s2, emb,
-        "ext_i_idx_c", k = 5))
-      s2.sql("PROBE ivf INDEX ext_i_idx K 5 TOMBSTONES ext_i_tombs " +
-        "INTO ext_i_out AS SELECT vec_id, embedding FROM ext_v_all").collect()
-      assert(rows(s2.table("ext_i_out")) === iWant,
-        "gated SQL ivf probe must equal the clean Scala build")
-      iTbls.foreach(graft.io.Bucketing.dropTable(s2, _))
-
-      // APPEND into a batch-built (unpartitioned) layout fails loudly
-      // instead of truncating the index to one batch
-      graft.io.Bucketing.dropTable(s2, "ext_v_batch")
-      graft.ops.Dedup.buildShingleDfIndex(
-        Tables.documents(s2, sfDir).limit(20), "ext_v_batch")
-      val lay = intercept[IllegalArgumentException] {
-        s2.sql("APPEND TO shingle_df INDEX ext_v_batch BATCH 1 AS " +
-          "SELECT doc_id, text FROM parquet.`" + sfDir +
-          "/documents.parquet` WHERE doc_id % 50 = 0")
-      }
-      assert(lay.getMessage.contains("batch_id-partitioned"))
-      graft.io.Bucketing.dropTable(s2, "ext_v_batch")
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
+    // ---- vector: CREATE(TABLES/BITS) -> APPEND -> RETRACT -> PURGE
+    //      -> PROBE, vs the clean Scala batch build ----
+    val vTbls = Seq("ext_v_bands", "ext_v_vecs", "ext_v_tombs",
+      "ext_v_out", "ext_v_bands_c", "ext_v_vecs_c")
+    vTbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+    val bits = graft.ops.Similarity.adaptiveBitsPerTable(emb.count())
+    spark.sql(s"CREATE vector INDEX ext_v_bands, ext_v_vecs TABLES 8 " +
+      s"BITS $bits AS SELECT vec_id, embedding FROM ext_v_corpus").collect()
+    // geometry persisted at CREATE (the q71 pin, now metadata)
+    assert(graft.io.Bucketing.tableProperty(spark, "ext_v_bands",
+      graft.io.Bucketing.LshTablesProperty) === Some("8"))
+    assert(graft.io.Bucketing.tableProperty(spark, "ext_v_bands",
+      graft.io.Bucketing.LshBitsProperty) === Some(bits.toString))
+    // a repeated clause that CONTRADICTS the provisioning fails loudly
+    val mm = intercept[IllegalArgumentException] {
+      spark.sql(s"APPEND TO vector INDEX ext_v_bands, ext_v_vecs BATCH 1 " +
+        s"BITS ${bits + 1} AS SELECT vec_id, embedding FROM ext_v_poison")
     }
+    assert(mm.getMessage.contains("provisioned"))
+    // clause-free APPEND re-reads the pinned geometry
+    spark.sql("APPEND TO vector INDEX ext_v_bands, ext_v_vecs BATCH 1 AS " +
+      "SELECT vec_id, embedding FROM ext_v_poison").collect()
+    spark.sql("RETRACT FROM vector INDEX ext_v_bands, ext_v_vecs " +
+      "TOMBSTONES ext_v_tombs BATCH 0 AS " +
+      "SELECT vec_id FROM ext_v_poison").collect()
+    graft.ops.Similarity.buildVectorIndex(corpus, "ext_v_bands_c",
+      "ext_v_vecs_c", bitsPerTable = bits)
+    val vWant = rows(graft.ops.Similarity
+      .incrementalCosineVerdictsAgainstIndex(spark, delta, "ext_v_bands_c",
+        "ext_v_vecs_c", bitsPerTable = bits))
+    // through the LIVE gate: the cosine-1.0 twins must not match
+    spark.sql("PROBE vector INDEX ext_v_bands, ext_v_vecs " +
+      "TOMBSTONES ext_v_tombs INTO ext_v_out AS " +
+      "SELECT vec_id, embedding FROM ext_v_delta").collect()
+    assert(rows(spark.table("ext_v_out")) === vWant,
+      "gated SQL vector probe must equal the clean Scala build")
+    // purge, then ungated — and the pinned bits survive the shrink
+    spark.sql("PURGE RETRACTIONS FROM vector INDEX ext_v_bands, " +
+      "ext_v_vecs TOMBSTONES ext_v_tombs").collect()
+    spark.sql("PROBE vector INDEX ext_v_bands, ext_v_vecs INTO ext_v_out " +
+      "AS SELECT vec_id, embedding FROM ext_v_delta").collect()
+    assert(rows(spark.table("ext_v_out")) === vWant,
+      "post-purge SQL vector probe must equal the clean Scala build")
+    vTbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+
+    // ---- ivf: CREATE(CENTROIDS) trains the pinned artifact ->
+    //      APPEND -> RETRACT -> gated PROBE (K = top-k), vs the
+    //      clean Scala streamed build ----
+    val iTbls = Seq("ext_i_idx", "ext_i_idx_centroids", "ext_i_tombs",
+      "ext_i_out", "ext_i_cents_c", "ext_i_idx_c")
+    iTbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+    spark.sql("CREATE ivf INDEX ext_i_idx CENTROIDS 16 AS " +
+      "SELECT vec_id, embedding FROM ext_v_all").collect()
+    assert(graft.io.Bucketing.tableProperty(spark, "ext_i_idx",
+      graft.io.Bucketing.CentroidsProperty) === Some("16"))
+    assert(graft.io.Bucketing.tableProperty(spark, "ext_i_idx",
+      graft.io.Bucketing.CentroidsTableProperty)
+      === Some("ext_i_idx_centroids"))
+    val im = intercept[IllegalArgumentException] {
+      spark.sql("APPEND TO ivf INDEX ext_i_idx BATCH 1 CENTROIDS 8 AS " +
+        "SELECT vec_id, embedding FROM ext_v_poison")
+    }
+    assert(im.getMessage.contains("provisioned"))
+    spark.sql("APPEND TO ivf INDEX ext_i_idx BATCH 1 AS " +
+      "SELECT vec_id, embedding FROM ext_v_poison").collect()
+    spark.sql("RETRACT FROM ivf INDEX ext_i_idx TOMBSTONES ext_i_tombs " +
+      "BATCH 0 AS SELECT vec_id FROM ext_v_poison").collect()
+    graft.ops.Similarity.buildIvfCentroids(emb, "ext_i_cents_c")
+    graft.ops.Similarity.appendIvfAssignPartial(spark, emb, "ext_i_cents_c",
+      "ext_i_idx_c", 0L)
+    val iWant = rows(graft.ops.Similarity.ivfTopKAgainstIndex(spark, emb,
+      "ext_i_idx_c", k = 5))
+    spark.sql("PROBE ivf INDEX ext_i_idx K 5 TOMBSTONES ext_i_tombs " +
+      "INTO ext_i_out AS SELECT vec_id, embedding FROM ext_v_all").collect()
+    assert(rows(spark.table("ext_i_out")) === iWant,
+      "gated SQL ivf probe must equal the clean Scala build")
+    iTbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+
+    // APPEND into a batch-built (unpartitioned) layout fails loudly
+    // instead of truncating the index to one batch
+    graft.io.Bucketing.dropTable(spark, "ext_v_batch")
+    graft.ops.Dedup.buildShingleDfIndex(
+      Tables.documents(spark, sfDir).limit(20), "ext_v_batch")
+    val lay = intercept[IllegalArgumentException] {
+      spark.sql("APPEND TO shingle_df INDEX ext_v_batch BATCH 1 AS " +
+        "SELECT doc_id, text FROM parquet.`" + sfDir +
+        "/documents.parquet` WHERE doc_id % 50 = 0")
+    }
+    assert(lay.getMessage.contains("batch_id-partitioned"))
+    graft.io.Bucketing.dropTable(spark, "ext_v_batch")
   }
 
   test("PROBE ivf scores a delta source against the pinned CREATE-time quantizer artifact, never a probe-source re-derivation (ADVICE r20)") {
-    spark.sparkContext // ensure the shared context exists first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[4]")
-      .appName("graft-ext-ivf-pinned-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables.embeddings(s2, sfDir)
-      val corpus = emb.filter(col("vec_id") % 5 =!= 0)
-      // the natural incremental usage: the probe source is a DELTA the
-      // CREATE never saw — a quantizer re-derived from it is a
-      // different centroid set, so its cells miss the index's
-      val probeSrc = emb.filter(col("vec_id") % 5 === 0)
-      corpus.createOrReplaceTempView("ivfp_corpus")
-      probeSrc.createOrReplaceTempView("ivfp_delta")
-      def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-        df.collect().map(_.toString).toSet
-      val tbls = Seq("ivfp_idx", "ivfp_idx_centroids", "ivfp_out",
-        "ivfp_batch")
-      tbls.foreach(graft.io.Bucketing.dropTable(s2, _))
-      s2.sql("CREATE ivf INDEX ivfp_idx CENTROIDS 16 AS " +
-        "SELECT vec_id, embedding FROM ivfp_corpus").collect()
-      s2.sql("PROBE ivf INDEX ivfp_idx K 5 INTO ivfp_out AS " +
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.embeddings(spark, sfDir)
+    val corpus = emb.filter(col("vec_id") % 5 =!= 0)
+    // the natural incremental usage: the probe source is a DELTA the
+    // CREATE never saw — a quantizer re-derived from it is a
+    // different centroid set, so its cells miss the index's
+    val probeSrc = emb.filter(col("vec_id") % 5 === 0)
+    corpus.createOrReplaceTempView("ivfp_corpus")
+    probeSrc.createOrReplaceTempView("ivfp_delta")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
+    val tbls = Seq("ivfp_idx", "ivfp_idx_centroids", "ivfp_out",
+      "ivfp_batch")
+    tbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+    spark.sql("CREATE ivf INDEX ivfp_idx CENTROIDS 16 AS " +
+      "SELECT vec_id, embedding FROM ivfp_corpus").collect()
+    spark.sql("PROBE ivf INDEX ivfp_idx K 5 INTO ivfp_out AS " +
+      "SELECT vec_id, embedding FROM ivfp_delta").collect()
+    val want = rows(graft.ops.Similarity.ivfTopKAgainstIndexWithCentroids(
+      spark, probeSrc, "ivfp_idx", "ivfp_idx_centroids", k = 5))
+    assert(rows(spark.table("ivfp_out")) === want,
+      "SQL delta probe must score against the pinned artifact")
+    // the fixture must actually discriminate: the old re-derive-from-
+    // the-AS-source behavior answers DIFFERENTLY here, so this test
+    // fails on a regression to it
+    assert(rows(graft.ops.Similarity.ivfTopKAgainstIndex(
+        spark, probeSrc, "ivfp_idx", k = 5)) !== want,
+      "fixture degenerate: delta-derived centroids equal the pinned set")
+    // an unstamped table (batch-built outside CREATE/the streamed
+    // builder) errors loudly instead of silently re-deriving
+    graft.ops.Similarity.buildIvfIndex(corpus, "ivfp_batch")
+    val e = intercept[IllegalArgumentException] {
+      spark.sql("PROBE ivf INDEX ivfp_batch K 5 INTO ivfp_out AS " +
         "SELECT vec_id, embedding FROM ivfp_delta").collect()
-      val want = rows(graft.ops.Similarity.ivfTopKAgainstIndexWithCentroids(
-        s2, probeSrc, "ivfp_idx", "ivfp_idx_centroids", k = 5))
-      assert(rows(s2.table("ivfp_out")) === want,
-        "SQL delta probe must score against the pinned artifact")
-      // the fixture must actually discriminate: the old re-derive-from-
-      // the-AS-source behavior answers DIFFERENTLY here, so this test
-      // fails on a regression to it
-      assert(rows(graft.ops.Similarity.ivfTopKAgainstIndex(
-          s2, probeSrc, "ivfp_idx", k = 5)) !== want,
-        "fixture degenerate: delta-derived centroids equal the pinned set")
-      // an unstamped table (batch-built outside CREATE/the streamed
-      // builder) errors loudly instead of silently re-deriving
-      graft.ops.Similarity.buildIvfIndex(corpus, "ivfp_batch")
-      val e = intercept[IllegalArgumentException] {
-        s2.sql("PROBE ivf INDEX ivfp_batch K 5 INTO ivfp_out AS " +
-          "SELECT vec_id, embedding FROM ivfp_delta").collect()
-      }
-      assert(e.getMessage.contains("centroid-artifact"))
-      tbls.foreach(graft.io.Bucketing.dropTable(s2, _))
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
     }
+    assert(e.getMessage.contains("centroid-artifact"))
+    tbls.foreach(graft.io.Bucketing.dropTable(spark, _))
   }
 
   test("landing zone: quarantine, archive, clean") {
@@ -526,27 +452,13 @@ class ExtensionsSpec extends SparkSpec {
         graft.ops.Dedup.minhashSignature(col("text")).as("sig"))
       .collect()
       .map(r => (r.getString(0), r.getSeq[String](1), r.getSeq[Long](2)))
-    spark.sparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      s2.createDataFrame(lib.toSeq.map { case (t, toks, _) => (t, toks) })
-        .toDF("text", "tokens").createOrReplaceTempView("mh_sql_docs")
-      val viaSql = s2.sql(
-          "SELECT text, minhash_sig(tokens, 2) AS sig FROM mh_sql_docs")
-        .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-      lib.foreach { case (t, _, sig) =>
-        assert(viaSql(t) === sig, s"signatures differ for '$t'")
-      }
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
+    spark.createDataFrame(lib.toSeq.map { case (t, toks, _) => (t, toks) })
+      .toDF("text", "tokens").createOrReplaceTempView("mh_sql_docs")
+    val viaSql = spark.sql(
+        "SELECT text, minhash_sig(tokens, 2) AS sig FROM mh_sql_docs")
+      .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+    lib.foreach { case (t, _, sig) =>
+      assert(viaSql(t) === sig, s"signatures differ for '$t'")
     }
   }
 }

@@ -645,14 +645,12 @@ class RecoverySpec extends SparkSpec {
       org.apache.spark.sql.catalyst.TableIdentifier(tbl)).bucketSpec
     assert(spec.exists(s => s.numBuckets == 4 &&
       s.bucketColumnNames == Seq("doc_id")), s"bucket spec lost: $spec")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = spark.table(tbl).groupBy(col("doc_id")).count()
         .queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"bucket-key groupBy must stay exchange-free after repair:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
     Seq(tbl, s"${tbl}_compacting", s"${tbl}_precompact")
       .foreach(Bucketing.dropTable(spark, _))
   }
