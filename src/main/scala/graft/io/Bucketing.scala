@@ -120,7 +120,8 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
 
-  /** THE LANDING PATH of every streamed index table: land `rows` as the
+  /** THE LANDING PATH of every streamed index table and every
+    * [[Tombstones]] retraction batch: land `rows` as the
     * `batch_id = batchId` partition of `table`, creating the table first
     * when it does not resolve. Returns false when the batch no-opped at
     * the fold watermark (see [[appendPartialInto]]).
@@ -188,7 +189,7 @@ object Bucketing {
     * a presence check. Runs under the DataFrame's OWN session (inside
     * foreachBatch that is the micro-batch's cloned session, whose conf
     * is what the insert actually reads). */
-  def overwritePartitions(df: DataFrame, table: String): Unit =
+  private[graft] def overwritePartitions(df: DataFrame, table: String): Unit =
     withDynamicOverwrite(df.sparkSession) {
       df.write.mode(SaveMode.Overwrite).insertInto(table)
     }
@@ -986,31 +987,25 @@ object Bucketing {
     * sweep's bytes axis (VERDICT r19 item 5): these probes scan the
     * whole index side, so on-disk index bytes IS the bytes-scanned
     * normalizer for seconds-per-GB. */
-  def dataFileBytes(spark: SparkSession, table: String): Long = {
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(p: org.apache.hadoop.fs.Path): Long =
-      fs.listStatus(p).map { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) st.getLen else 0L
-      }.sum
-    walk(loc)
-  }
+  def dataFileBytes(spark: SparkSession, table: String): Long =
+    dataFiles(spark, table).map(_.getLen).sum
 
-  /** Count the data files of a managed table (parquet parts, not logs),
-    * recursing through partition directories. */
-  def dataFileCount(spark: SparkSession, table: String): Int = {
+  /** Count the data files of a managed table (parquet parts, not logs). */
+  def dataFileCount(spark: SparkSession, table: String): Int =
+    dataFiles(spark, table).size
+
+  /** A managed table's parquet data files, recursing through partition
+    * directories. */
+  private def dataFiles(spark: SparkSession,
+                        table: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+      spark.sessionState.catalog.getTableMetadata(identOf(table)).location)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(p: org.apache.hadoop.fs.Path): Int =
-      fs.listStatus(p).map { st =>
+    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap { st =>
         if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) 1 else 0
-      }.sum
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st) else Nil
+      }
     walk(loc)
   }
 

@@ -1,32 +1,37 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.functions.{broadcast, col, max}
 
 /** Tombstone-based RETRACTION for posting-list index families (minhash
-  * bands/sigs, vector bands/payloads) — the right-to-be-forgotten path
-  * the additive-df families solve with negated partials
-  * (Dedup.retractShingleDfPartial) but posting lists cannot: a posting
-  * row is a fact about one document, not a count, so deletion must
-  * REMOVE rows, and rewriting a 100 TB index per deletion request is
-  * not an option.
+  * bands/sigs, vector bands/payloads, ivf assignments) — the
+  * right-to-be-forgotten path the additive-df families solve with
+  * negated partials (Dedup.retractShingleDfPartial) but posting lists
+  * cannot: a posting row is a fact about one document, not a count, so
+  * deletion must REMOVE rows, and rewriting a 100 TB index per deletion
+  * request is not an option.
   *
-  * The protocol, mirroring the append side's economics:
+  * Each family is one [[Family]] value ([[minhash]], [[vector]],
+  * [[ivf]]), and each verb has one entry point. The protocol, mirroring
+  * the append side's economics:
   *
-  *  1. [[land]] — record the retired ids as their own batch_id
-  *     partition of a tiny tombstone table: O(|removed|) write, same
-  *     idempotent-replay discipline as every append partial (a torn
-  *     retraction batch re-lands over itself).
+  *  1. [[retract]] — record the retired ids as their own batch_id
+  *     partition of a tiny tombstone table, landed through
+  *     [[Bucketing.landPartial]] like every streamed index partial: one
+  *     kind-stamped `CREATE` on the first batch, then the guarded
+  *     dynamic overwrite, so a torn retraction batch re-lands over
+  *     itself. O(|removed|) write.
   *  2. probe-side filtering — probes broadcast-anti-join the tombstone
-  *     ids against the index scans (a map-side gate on the corpus
-  *     side, no added exchange), so a retired document STOPS MATCHING
-  *     the instant the tombstone lands, long before any rewrite.
-  *  3. [[purge]] — at maintenance cadence, fold the tombstones into
-  *     the index for real via the crash-safe layout-preserving
-  *     [[Bucketing.purgeBucketed]] swap, then drop the tombstone
-  *     table: the index is again byte-equivalent to a rebuild without
-  *     the retired documents, and the probe-side filter becomes a
-  *     no-op it no longer needs.
+  *     ids against the index scans ([[filterRetracted]], a map-side gate
+  *     on the corpus side, no added exchange), so a retired document
+  *     STOPS MATCHING the instant the tombstone lands, long before any
+  *     rewrite.
+  *  3. [[purge]] — at the family's cadence (a step of [[retract]]) or
+  *     on demand, fold the tombstones into the index for real via the
+  *     crash-safe layout-preserving [[Bucketing.purgeBucketed]] swap,
+  *     then drop the tombstone table: the index is again
+  *     byte-equivalent to a rebuild without the retired documents, and
+  *     the probe-side filter becomes a no-op it no longer needs.
   *
   * Guards (the negative-df analogue for posting lists): retracting a
   * document the index never contained fails loudly (orphan guard), as
@@ -36,7 +41,7 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   * retraction and stays idempotent — INCLUDING a replay that arrives
   * after [[purge]] already folded the batch (the at-least-once window
   * does not end at purge): purge stamps its high-water batch_id on
-  * every family table, and [[land]] no-ops a batch at or below that
+  * every family table, and [[retract]] no-ops a batch at or below that
   * watermark instead of tripping the orphan guard on ids the purge
   * legitimately removed. The watermark contract is that retraction
   * batch ids are MONOTONICALLY increasing per tombstone table (every
@@ -47,93 +52,149 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
 object Tombstones {
 
   /** Table property stamped on every family table by its [[purge]]
-    * swap: the highest retraction batch_id the purge folded. [[land]]
-    * reads it from `sigsTable` (the last table a purge rewrites) to
-    * recognize a post-purge replay. */
+    * swap: the highest retraction batch_id the purge folded. [[retract]]
+    * reads it from the family's payload table (the last table a purge
+    * rewrites) to recognize a post-purge replay. */
   val PurgedThroughProperty = "graft.retraction.purgedThrough"
 
+  /** Default purge cadence (pending retraction BATCHES before a fold),
+    * mirroring [[Bucketing.maintainIndex]]'s compaction cadence: a purge
+    * rewrites the whole index (O(index/N) amortized at cadence N), so it
+    * runs every few retraction batches, not per batch — while the
+    * unpurged window stays bounded at `purgeEvery` batches' worth of
+    * broadcast gate. */
+  val PurgeEveryDefault: Int = 4
+
+  /** Bucket count of a tombstone table. The tombstone set is
+    * retraction-sized and always read whole — broadcast by the probe
+    * gate and by the purge's anti-join — so no join ever uses its
+    * bucketing; one bucket keeps each retraction batch one file. */
+  private val TombstoneBuckets = 1
+
+  /** One tombstone-carrying index family: its tombstone table and
+    * `kind`, the id column stored in the index and tombstone tables
+    * (`idCol`) and the one a retraction source returns (`sourceIdCol`),
+    * the index `tables` with their kinds — purged in order, the last
+    * being the payload table with one row per indexed id — and the
+    * purge cadence [[retract]] applies (pending batches; 0 = never). */
+  final case class Family(kind: String, idCol: String, sourceIdCol: String,
+                          tables: Seq[(String, String)], tombstones: String,
+                          purgeEvery: Int = PurgeEveryDefault) {
+    /** The table the orphan guard and the purge watermark read. */
+    def payload: String = tables.last._1
+  }
+
+  /** The minhash corpus index: band postings and signatures by doc_id. */
+  def minhash(bands: String, sigs: String, tombstones: String): Family =
+    Family("minhash-tombs", "doc_id", "doc_id",
+      Seq(bands -> "minhash-bands", sigs -> "minhash-sigs"), tombstones)
+
+  /** The vector index: LSH postings and verify payloads, stored by
+    * corpus_id and retired by the source's vec_id. */
+  def vector(bands: String, vecs: String, tombstones: String): Family =
+    Family("vec-tombs", "corpus_id", "vec_id",
+      Seq(bands -> "vec-bands", vecs -> "vec-payload"), tombstones)
+
+  /** The IVF assignment index, by vec_id. */
+  def ivf(assign: String, tombstones: String): Family =
+    Family("ivf-tombs", "vec_id", "vec_id", Seq(assign -> "ivf-assign"),
+      tombstones)
+
   private def purgedThrough(spark: SparkSession, table: String): Long =
-    spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties.get(PurgedThroughProperty)
+    Bucketing.tableProperty(spark, table, PurgedThroughProperty)
       .flatMap(_.toLongOption).getOrElse(Long.MinValue)
 
-  /** Land `ids` (single id column named `idCol`) as retraction batch
-    * `batchId` of `tombstonesTable`. `sigsTable` is the family table
-    * that carries one row per indexed document under the same id
-    * column — the orphan guard checks membership against it. Returns
-    * false (and does nothing) when `batchId` was already purged — the
-    * post-purge replay of the at-least-once window; true when the
+  /** RETRACT the rows of `removed` (by the family's `sourceIdCol`) as
+    * retraction batch `batchId`: after it lands, probes passing the
+    * tombstone table no longer see the retired ids. Then the AUTO-PURGE
+    * CADENCE: once `purgeEvery` retraction batches are pending, [[purge]]
+    * folds them — without it steady right-to-be-forgotten traffic would
+    * grow the probe-side gate and the tombstone table without bound, and
+    * physical deletion would wait on an operator remembering to purge.
+    * Returns false (and lands nothing) when `batchId` was already purged
+    * — the post-purge replay of the at-least-once window; true when the
     * batch landed (first time or idempotent re-land). */
-  def land(spark: SparkSession, ids: DataFrame, idCol: String,
-           tombstonesTable: String, kind: String, batchId: Long,
-           sigsTable: String): Boolean = {
+  def retract(spark: SparkSession, family: Family, removed: DataFrame,
+              batchId: Long): Boolean = {
+    val names = family.tables.map(_._1)
+    require(names.forall(spark.catalog.tableExists),
+      s"${names.mkString("/")} must exist — a retraction can only follow " +
+        "an index build")
+    family.tables.foreach { case (t, k) => Bucketing.requireKind(spark, t, k) }
+    val landed = land(spark, family,
+      removed.select(col(family.sourceIdCol).as(family.idCol)), batchId)
+    val tt = family.tombstones
+    if (family.purgeEvery > 0 && spark.catalog.tableExists(tt)) {
+      val pending = spark.sessionState.catalog.listPartitionNames(
+        org.apache.spark.sql.catalyst.TableIdentifier(tt))
+        .flatMap(_.stripPrefix("batch_id=").toLongOption).distinct.size
+      if (pending >= family.purgeEvery) purge(spark, family)
+    }
+    landed
+  }
+
+  private def land(spark: SparkSession, family: Family, ids: DataFrame,
+                   batchId: Long): Boolean = {
+    val (idCol, tt, payload) = (family.idCol, family.tombstones, family.payload)
     // post-purge replay: this batch's tombstones were already folded
-    // into the index and dropped — its ids are gone from sigsTable by
+    // into the index and dropped — its ids are gone from the payload by
     // design, so re-running the orphan guard would misread a legal
     // replay as history corruption. No-op; the forget already happened.
     // BUT distinguish a true replay from a REUSED low batch id (ADVICE
-    // r18): a genuinely purged batch's ids are absent from sigsTable by
-    // construction, so any id still LIVE there means this is a fresh
+    // r18): a genuinely purged batch's ids are absent from the payload
+    // by construction, so any id still LIVE there means this is a fresh
     // right-to-be-forgotten request wearing an already-purged id —
     // silently dropping it would leave the operator believing data was
     // forgotten while it stays indexed. One retraction-sized semi-join
     // on the (rare) watermark path, fail-loudly like every other
     // history guard in this file.
-    if (batchId <= purgedThrough(spark, sigsTable)) {
-      val live = ids.select(col(idCol)).distinct()
-        .join(spark.table(sigsTable).select(col(idCol)), Seq(idCol),
+    if (batchId <= purgedThrough(spark, payload)) {
+      val live = ids.distinct()
+        .join(spark.table(payload).select(col(idCol)), Seq(idCol),
           "left_semi").count()
       require(live == 0L,
-        s"retraction batch $batchId is at/below $sigsTable's purge " +
+        s"retraction batch $batchId is at/below $payload's purge " +
           s"watermark, but $live of its id(s) are still live in the " +
           "index — a reused batch id would silently drop a live " +
           "retraction; use a batch id above the watermark")
       return false
     }
-    val distinctIds = ids.select(col(idCol)).distinct().localCheckpoint()
+    val distinctIds = ids.distinct().localCheckpoint()
+    val pending = spark.catalog.tableExists(tt)
     // orphan guard: a retraction can only retire documents the index
     // actually contains — a typo'd id list silently "succeeding" would
     // leave the operator believing data was forgotten when nothing was.
     // Ids already in the tombstone table are exempt: a replay landing
-    // in the window AFTER purgeBucketed removed them from sigsTable but
+    // in the window AFTER purgeBucketed removed them from the payload but
     // BEFORE the tombstone table was dropped is the crash-recovery path,
     // not an orphan (the double-retract guard below still rejects the
     // same id under a DIFFERENT batch).
-    val known = spark.table(sigsTable).select(col(idCol))
+    val known = spark.table(payload).select(col(idCol))
     val knownOrPending =
-      if (spark.catalog.tableExists(tombstonesTable))
-        known.union(spark.table(tombstonesTable).select(col(idCol)))
-      else known
+      if (pending) known.union(spark.table(tt).select(col(idCol))) else known
     val orphans = distinctIds.join(knownOrPending, Seq(idCol), "left_anti")
       .count()
     require(orphans == 0L,
-      s"retraction names $orphans document(s) absent from $sigsTable — " +
+      s"retraction names $orphans document(s) absent from $payload — " +
         "retracting a never-indexed document is history corruption; " +
         "check the id list")
-    if (spark.catalog.tableExists(tombstonesTable)) {
-      Bucketing.requireKind(spark, tombstonesTable, kind)
+    if (pending) {
       // double-retraction guard — but a REPLAY of this same batch_id
       // (the at-least-once window) must pass and idempotently overwrite
       // its own partition
       val dup = distinctIds.join(
-          spark.table(tombstonesTable).filter(col("batch_id") =!= batchId)
+          spark.table(tt).filter(col("batch_id") =!= batchId)
             .select(col(idCol)),
           Seq(idCol), "left_semi")
         .count()
       require(dup == 0L,
         s"$dup document(s) already retracted in an earlier batch of " +
-          s"$tombstonesTable — a double retraction is history corruption")
-      Bucketing.overwritePartitions(
-        distinctIds.withColumn("batch_id", lit(batchId)), tombstonesTable)
-    } else {
-      Bucketing.dropTable(spark, tombstonesTable)
-      distinctIds.withColumn("batch_id", lit(batchId))
-        .write.partitionBy("batch_id").format("parquet")
-        .saveAsTable(tombstonesTable)
-      Bucketing.stampKind(spark, tombstonesTable, kind)
+          s"$tt — a double retraction is history corruption")
     }
-    true
+    // the kind, the batch_id-partitioned layout and the replay
+    // discipline are the index landing's own guards
+    Bucketing.landPartial(spark, distinctIds, tt, family.kind, Seq(idCol),
+      TombstoneBuckets, batchId)
   }
 
   /** Probe-side gate: drop tombstoned ids from an index scan. The
@@ -160,69 +221,34 @@ object Tombstones {
     * the final drop, probes still filter by the tombstones (filtering
     * an already-purged id is a no-op); after it, the index itself is
     * the rebuild-without. Returns true when a purge ran. */
-  def purge(spark: SparkSession, tombstonesTable: String, idCol: String,
-            kind: String, tables: Seq[String]): Boolean = {
-    if (!spark.catalog.tableExists(tombstonesTable)) return false
-    Bucketing.requireKind(spark, tombstonesTable, kind)
-    val pending = spark.table(tombstonesTable)
-    val maxBatchRow = pending.agg(
-      org.apache.spark.sql.functions.max(col("batch_id"))).head
+  def purge(spark: SparkSession, family: Family): Boolean = {
+    val tt = family.tombstones
+    if (!spark.catalog.tableExists(tt)) return false
+    Bucketing.requireKind(spark, tt, family.kind)
+    val pending = spark.table(tt)
+    val maxBatchRow = pending.agg(max(col("batch_id"))).head
     if (maxBatchRow.isNullAt(0)) {
-      // a zero-row retraction batch can leave an EXISTING but empty
-      // tombstone table (partitionBy of an empty frame writes no
+      // a zero-row retraction batch leaves an EXISTING but empty
+      // tombstone table (the create ran, the empty overwrite wrote no
       // partition): nothing to fold, no watermark to stamp — just
       // remove the empty gate
-      Bucketing.dropTable(spark, tombstonesTable)
+      Bucketing.dropTable(spark, tt)
       return false
     }
-    val ids = pending.select(col(idCol)).distinct().localCheckpoint()
+    val ids = pending.select(col(family.idCol)).distinct().localCheckpoint()
     // the watermark rides each table's purge swap, so it goes live
     // together with that table's purged rows, and every table is stamped
     // BEFORE the drop: every crash window is replay-safe — until the last
-    // table's swap, land() (which reads the last table) sees no watermark,
-    // the tombstone table still exists so a replay passes the
+    // table's swap, retract() (which reads the last table) sees no
+    // watermark, the tombstone table still exists so a replay passes the
     // tombstone-membership exemption, and a re-run purge is an idempotent
     // rewrite; after it but before the drop, replays of folded batches
     // no-op on the watermark while the leftover gate filters
     // already-absent ids (a no-op) until the next purge drops it
     val watermark = Map(PurgedThroughProperty -> maxBatchRow.getLong(0).toString)
-    tables.foreach(t => Bucketing.purgeBucketed(spark, t, ids, idCol, watermark))
-    Bucketing.dropTable(spark, tombstonesTable)
+    family.tables.foreach { case (t, _) =>
+      Bucketing.purgeBucketed(spark, t, ids, family.idCol, watermark) }
+    Bucketing.dropTable(spark, tt)
     true
-  }
-
-  /** One tombstone-carrying index family under cadence maintenance:
-    * everything [[maybePurge]] needs to fold its pending retractions. */
-  final case class PurgeSpec(tombstonesTable: String, idCol: String,
-                             kind: String, tables: Seq[String],
-                             everyBatches: Int = PurgeEveryDefault)
-
-  /** Default purge cadence (pending retraction BATCHES before a fold),
-    * mirroring [[Bucketing.maintainIndex]]'s compaction cadence: a purge
-    * rewrites the whole index (O(index/N) amortized at cadence N), so it
-    * runs every few retraction batches, not per batch — while the
-    * unpurged window stays bounded at `everyBatches` batches' worth of
-    * broadcast gate. */
-  val PurgeEveryDefault: Int = 4
-
-  /** AUTO-PURGE CADENCE — the tombstone analogue of
-    * [[Bucketing.maintainIndex]]'s compaction cadence, closing the one unbounded-growth path
-    * left in the index lifecycle (VERDICT r17 item 1): without it,
-    * steady right-to-be-forgotten traffic grows the probe-side
-    * broadcast gate and the tombstone table without bound, and physical
-    * deletion waits on an operator remembering to call [[purge]]. Once
-    * `everyBatches` retraction batches are pending, the purge runs
-    * through the same crash-safe swap and drops the gate. Wired into
-    * `runIndexMaintenance` next to the compaction cadence, so streamed
-    * index families get it by default. Returns true when a purge ran. */
-  def maybePurge(spark: SparkSession, spec: PurgeSpec): Boolean = {
-    if (spec.everyBatches <= 0) return false
-    if (!spark.catalog.tableExists(spec.tombstonesTable)) return false
-    val pendingBatches = spark.sessionState.catalog.listPartitionNames(
-      org.apache.spark.sql.catalyst.TableIdentifier(spec.tombstonesTable))
-      .flatMap(_.stripPrefix("batch_id=").toLongOption).distinct.size
-    if (pendingBatches < spec.everyBatches) false
-    else purge(spark, spec.tombstonesTable, spec.idCol, spec.kind,
-      spec.tables)
   }
 }

@@ -342,12 +342,13 @@ object Dedup {
     * the index amortizes the corpus-side signature computation AND its
     * shuffle across every future delta.
     *
-    * `tombstonesTable`: when a [[retractFromCorpusIndex]] retraction is
-    * pending (landed but not yet purged), pass its tombstone table and
-    * the retired documents stop matching as near-dup sources — the
-    * gate is a broadcast anti-join on the index scans, map-side, no
-    * added exchange. After [[purgeCorpusIndexRetractions]] the option
-    * is a no-op (the table is gone). */
+    * `tombstonesTable`: when a [[graft.io.Tombstones.retract]]
+    * retraction is pending (landed but not yet purged), pass its
+    * tombstone table and the retired documents stop matching as
+    * near-dup sources — the gate is a broadcast anti-join on the index
+    * scans, map-side, no added exchange. After
+    * [[graft.io.Tombstones.purge]] the option is a no-op (the table is
+    * gone). */
   def incrementalVerdictsAgainstIndex(spark: org.apache.spark.sql.SparkSession,
                                       delta: DataFrame, bandsTable: String,
                                       sigsTable: String, bands: Int = 16,
@@ -369,50 +370,6 @@ object Dedup {
         col("sig").as("csig"), shingles(col("text"), shingleN).as("cgrams"))
     incrementalVerdictsFrom(delta, dSig, cs, candidates, shingleN, threshold)
   }
-
-  /** RETRACTION for the minhash corpus-index family — the
-    * right-to-be-forgotten path for the near-dup index (VERDICT r16
-    * item 3): land the retired doc ids as a tombstone batch
-    * (O(|removed|), idempotent replay), after which probes passing the
-    * tombstone table no longer see the documents' band postings or
-    * signatures — they stop matching as near-dup sources immediately.
-    * Physical removal happens at maintenance cadence via
-    * [[purgeCorpusIndexRetractions]]. Orphan and double-retraction
-    * attempts fail loudly (the posting-list analogue of the shingle-df
-    * negative-df guard — see [[graft.io.Tombstones]]). */
-  def retractFromCorpusIndex(spark: org.apache.spark.sql.SparkSession,
-                             removed: DataFrame, bandsTable: String,
-                             sigsTable: String, tombstonesTable: String,
-                             batchId: Long): Boolean = {
-    require(spark.catalog.tableExists(bandsTable) &&
-        spark.catalog.tableExists(sigsTable),
-      s"$bandsTable/$sigsTable do not exist — a retraction can only " +
-        "follow an index build")
-    graft.io.Bucketing.requireKind(spark, bandsTable, "minhash-bands")
-    graft.io.Bucketing.requireKind(spark, sigsTable, "minhash-sigs")
-    val landed = graft.io.Tombstones.land(spark,
-      removed.select(col("doc_id")), "doc_id",
-      tombstonesTable, "minhash-tombs", batchId, sigsTable)
-    // batch-side purge cadence (VERDICT r18 item 3): the streamed path
-    // purges via runIndexMaintenance, but a batch-only caller issuing
-    // steady retractions would grow the tombstone gate forever unless
-    // they knew to purge — run the same default-on cadence here
-    graft.io.Tombstones.maybePurge(spark, graft.io.Tombstones.PurgeSpec(
-      tombstonesTable, "doc_id", "minhash-tombs",
-      Seq(bandsTable, sigsTable)))
-    landed
-  }
-
-  /** Fold pending minhash retractions into the index for real: purge
-    * the tombstoned documents' band postings and signature payloads
-    * (crash-safe layout-preserving swap per table) and drop the
-    * tombstone table — the index is again byte-equivalent to a rebuild
-    * without the retired documents, and probes need no tombstone gate. */
-  def purgeCorpusIndexRetractions(spark: org.apache.spark.sql.SparkSession,
-                                  bandsTable: String, sigsTable: String,
-                                  tombstonesTable: String): Boolean =
-    graft.io.Tombstones.purge(spark, tombstonesTable, "doc_id",
-      "minhash-tombs", Seq(bandsTable, sigsTable))
 
   /** 64-bit SimHash over word unigrams: per-bit vote of token hashes.
     * Token hashes are computed once per document, then folded 64 times —

@@ -233,37 +233,6 @@ object Similarity {
       Map(graft.io.Bucketing.CentroidsProperty -> nCentroids.toString))
   }
 
-  /** RETRACTION for the IVF family — the tombstone protocol (see
-    * [[graft.io.Tombstones]]) on the assignment table: retired vec_ids
-    * land as an O(|removed|) tombstone batch; probes passing the
-    * tombstone table stop returning those vectors as neighbors
-    * immediately, and [[purgeIvfIndexRetractions]] removes their
-    * assignment rows physically at maintenance cadence. Orphan /
-    * double-retraction guards as in the minhash/vector families. */
-  def retractFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                          removed: DataFrame, table: String,
-                          tombstonesTable: String, batchId: Long): Boolean = {
-    require(spark.catalog.tableExists(table),
-      s"$table does not exist — a retraction can only follow an index build")
-    graft.io.Bucketing.requireKind(spark, table, "ivf-assign")
-    val landed = graft.io.Tombstones.land(spark,
-      removed.select(col("vec_id")), "vec_id",
-      tombstonesTable, "ivf-tombs", batchId, table)
-    // batch-side purge cadence (VERDICT r18 item 3) — see
-    // Dedup.retractFromCorpusIndex
-    graft.io.Tombstones.maybePurge(spark, graft.io.Tombstones.PurgeSpec(
-      tombstonesTable, "vec_id", "ivf-tombs", Seq(table)))
-    landed
-  }
-
-  /** Fold pending IVF retractions into the index for real (crash-safe
-    * layout-preserving swap), then drop the tombstone table. */
-  def purgeIvfIndexRetractions(spark: org.apache.spark.sql.SparkSession,
-                               table: String,
-                               tombstonesTable: String): Boolean =
-    graft.io.Tombstones.purge(spark, tombstonesTable, "vec_id",
-      "ivf-tombs", Seq(table))
-
   /** The probe half: identical semantics to [[ivfTopK]] (same centroid
     * geometry — `nCentroids` MUST match the index build; probes are
     * derived from the same deterministic scramble), but the corpus side
@@ -736,13 +705,13 @@ object Similarity {
     * This is what a 100 TB embedded corpus runs per ingest batch: the
     * index amortizes the corpus-side banding AND its shuffle across
     * every future delta. */
-  /** `tombstonesTable`: when a [[retractFromVectorIndex]] retraction
-    * is pending, pass its tombstone table and the retired vectors stop
-    * matching as near-dup sources (broadcast anti-join gate, map-side,
-    * no added exchange); after [[purgeVectorIndexRetractions]] the
-    * option is a no-op. NOTE on geometry: bits are re-derived from the
-    * STORED (unfiltered) count, so pending tombstones cannot shift the
-    * banding — but after a PURGE shrinks the store, a `bitsPerTable=0`
+  /** `tombstonesTable`: when a [[graft.io.Tombstones.retract]]
+    * retraction is pending, pass its tombstone table and the retired
+    * vectors stop matching as near-dup sources (broadcast anti-join
+    * gate, map-side, no added exchange); after
+    * [[graft.io.Tombstones.purge]] the option is a no-op. NOTE on
+    * geometry: bits are re-derived from the STORED (unfiltered) count,
+    * so pending tombstones cannot shift the banding — but after a PURGE shrinks the store, a `bitsPerTable=0`
     * caller could re-derive different bits than the build used; an
     * index that retracts should pin the bits [[buildVectorIndex]]
     * returned, exactly as the streamed-maintenance path pins them. */
@@ -761,43 +730,4 @@ object Similarity {
         tombstonesTable, "vec-tombs"),
       tables, b, threshold)
   }
-
-  /** RETRACTION for the vector-index family — the embedding-space
-    * right-to-be-forgotten path (VERDICT r16 item 3): land the retired
-    * vec_ids as a tombstone batch (O(|removed|), idempotent replay);
-    * probes passing the tombstone table stop seeing the vectors' LSH
-    * postings and verify payloads immediately, and
-    * [[purgeVectorIndexRetractions]] removes them physically at
-    * maintenance cadence. Orphan / double-retraction guards as in
-    * [[graft.io.Tombstones]]. */
-  def retractFromVectorIndex(spark: org.apache.spark.sql.SparkSession,
-                             removed: DataFrame, bandsTable: String,
-                             vecsTable: String, tombstonesTable: String,
-                             batchId: Long): Boolean = {
-    require(spark.catalog.tableExists(bandsTable) &&
-        spark.catalog.tableExists(vecsTable),
-      s"$bandsTable/$vecsTable do not exist — a retraction can only " +
-        "follow an index build")
-    graft.io.Bucketing.requireKind(spark, bandsTable, "vec-bands")
-    graft.io.Bucketing.requireKind(spark, vecsTable, "vec-payload")
-    val landed = graft.io.Tombstones.land(spark,
-      removed.select(col("vec_id").as("corpus_id")), "corpus_id",
-      tombstonesTable, "vec-tombs", batchId, vecsTable)
-    // batch-side purge cadence (VERDICT r18 item 3) — see
-    // Dedup.retractFromCorpusIndex
-    graft.io.Tombstones.maybePurge(spark, graft.io.Tombstones.PurgeSpec(
-      tombstonesTable, "corpus_id", "vec-tombs",
-      Seq(bandsTable, vecsTable)))
-    landed
-  }
-
-  /** Fold pending vector retractions into the index for real: purge
-    * the tombstoned vectors' postings and payloads (crash-safe
-    * layout-preserving swap per table) and drop the tombstone table —
-    * the index equals a rebuild without the retired vectors. */
-  def purgeVectorIndexRetractions(spark: org.apache.spark.sql.SparkSession,
-                                  bandsTable: String, vecsTable: String,
-                                  tombstonesTable: String): Boolean =
-    graft.io.Tombstones.purge(spark, tombstonesTable, "corpus_id",
-      "vec-tombs", Seq(bandsTable, vecsTable))
 }

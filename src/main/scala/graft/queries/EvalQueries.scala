@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.ops.{Clustering, Dedup, Packing, Sampling, TextAnalysis}
 import graft.functions.VectorFunctions.{vec_dot, vec_norm}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -152,17 +152,7 @@ object EvalQueries {
       .select(col("doc_id"), round(col("avg_logprob") * 1e6, 0).cast("long").as("score6"))
     val b = docs.select(col("doc_id"), Sampling.hashBucket(col("text")).as("bkt"))
     val smp = sc.join(b, Seq("doc_id")).filter(col("bkt") < 10)
-      .select(col("score6"), col("doc_id"))
-    val n = smp.agg(count(lit(1)).as("n"))
-    // the ONLY ordered step, bounded by the calibration sample size
-    val ranked = smp.crossJoin(broadcast(n))
-      .withColumn("rn", row_number().over(Window.orderBy(col("score6"), col("doc_id"))))
-    val cuts = ranked.agg(
-      max(when(col("rn") <= expr("(1 * n + 4) div 5"), col("score6"))).as("c1"),
-      max(when(col("rn") <= expr("(2 * n + 4) div 5"), col("score6"))).as("c2"),
-      max(when(col("rn") <= expr("(3 * n + 4) div 5"), col("score6"))).as("c3"),
-      max(when(col("rn") <= expr("(4 * n + 4) div 5"), col("score6"))).as("c4"))
-    sc.crossJoin(broadcast(cuts))
+    sc.crossJoin(broadcast(sampleQuintileCuts(smp, "c")))
       .withColumn("bucket",
         (lit(1) + (col("score6") > col("c1")).cast("int")
           + (col("score6") > col("c2")).cast("int")
@@ -171,6 +161,24 @@ object EvalQueries {
       .select(col("doc_id"), col("score6"), col("bucket"),
         (col("bucket") >= 2).as("keep"))
   }
+
+  /** Cut `k` of 4 (column `<prefix>k`) over rows ranked `rn` of `n`: the
+    * score at rank ceil(k·n/5) = (k·n+4) div 5. */
+  private def quintileCut(k: Int, prefix: String): Column =
+    max(when(col("rn") <= expr(s"($k * n + 4) div 5"), col("score6")))
+      .as(s"$prefix$k")
+
+  /** The global quintile cuts `<prefix>1..4` of `score6` over the
+    * calibration sample `smp`, ranked by (score6, doc_id). Its window is
+    * unpartitioned by design — an exact global rank — and bounded: it
+    * runs over the calibration sample (md5 bucket < 10 of 100), never
+    * the corpus. */
+  private def sampleQuintileCuts(smp: DataFrame, prefix: String): DataFrame =
+    smp.select(col("score6"), col("doc_id"))
+      .crossJoin(broadcast(smp.agg(count(lit(1)).as("n"))))
+      .withColumn("rn", row_number().over(Window.orderBy(col("score6"), col("doc_id"))))
+      .agg(quintileCut(1, prefix), quintileCut(2, prefix),
+        quintileCut(3, prefix), quintileCut(4, prefix))
 
   val calibratedQualityGateSql: String =
     """WITH tok AS (
@@ -234,25 +242,14 @@ object EvalQueries {
     val smp = sc.filter(col("bkt") < 10).select(col("source"), col("score6"), col("doc_id"))
     // per-source exact type-1 quintiles over the sample
     val ws = Window.partitionBy(col("source")).orderBy(col("score6"), col("doc_id"))
-    val rankedS = smp
+    val cutsS = smp
       .withColumn("rn", row_number().over(ws))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(col("source"))))
-    val cutsS = rankedS.groupBy(col("source")).agg(
-      max(when(col("rn") <= expr("(1 * n + 4) div 5"), col("score6"))).as("s1"),
-      max(when(col("rn") <= expr("(2 * n + 4) div 5"), col("score6"))).as("s2"),
-      max(when(col("rn") <= expr("(3 * n + 4) div 5"), col("score6"))).as("s3"),
-      max(when(col("rn") <= expr("(4 * n + 4) div 5"), col("score6"))).as("s4"))
-    // global cuts — the fallback bar (p105's computation, verbatim ranks)
-    val n = smp.agg(count(lit(1)).as("n"))
-    val rankedG = smp.select(col("score6"), col("doc_id")).crossJoin(broadcast(n))
-      .withColumn("rn", row_number().over(Window.orderBy(col("score6"), col("doc_id"))))
-    val cutsG = rankedG.agg(
-      max(when(col("rn") <= expr("(1 * n + 4) div 5"), col("score6"))).as("g1"),
-      max(when(col("rn") <= expr("(2 * n + 4) div 5"), col("score6"))).as("g2"),
-      max(when(col("rn") <= expr("(3 * n + 4) div 5"), col("score6"))).as("g3"),
-      max(when(col("rn") <= expr("(4 * n + 4) div 5"), col("score6"))).as("g4"))
+      .groupBy(col("source")).agg(quintileCut(1, "s"), quintileCut(2, "s"),
+        quintileCut(3, "s"), quintileCut(4, "s"))
+    // global cuts — the fallback bar (p105's computation)
     sc.join(broadcast(cutsS), Seq("source"), "left")
-      .crossJoin(broadcast(cutsG))
+      .crossJoin(broadcast(sampleQuintileCuts(smp, "g")))
       .withColumn("calibrated", col("s1").isNotNull)
       .withColumn("bucket",
         (lit(1) + (col("score6") > coalesce(col("s1"), col("g1"))).cast("int")
@@ -795,6 +792,8 @@ object EvalQueries {
   def tokenizerDrift(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     def ranked(wave: Int): DataFrame = {
+      // unpartitioned, but bounded: it ranks the k = 10 rows
+      // bpePairStats returns, not the input
       val w = Window.orderBy(col("n_occurrences").desc, col("pair").asc)
       TextAnalysis.bpePairStats(
           docs.filter(pmod(col("doc_id"), lit(2L)) === wave), k = 10)

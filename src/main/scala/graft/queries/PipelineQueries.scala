@@ -172,8 +172,9 @@ object PipelineQueries {
         bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
       Dedup.appendToCorpusIndex(poison, bandsTbl, sigsTbl,
         bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
-      Dedup.retractFromCorpusIndex(spark, poison, bandsTbl, sigsTbl,
-        tombsTbl, batchId = 0L)
+      graft.io.Tombstones.retract(spark,
+        graft.io.Tombstones.minhash(bandsTbl, sigsTbl, tombsTbl), poison,
+        batchId = 0L)
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }

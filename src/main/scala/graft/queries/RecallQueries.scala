@@ -883,10 +883,9 @@ object RecallQueries {
         .foreach(graft.io.Bucketing.dropTable(spark, _))
       Similarity.buildVectorIndex(corpus.unionByName(poison), bandsTbl,
         vecsTbl, bitsPerTable = bits)
-      Similarity.retractFromVectorIndex(spark, poison, bandsTbl, vecsTbl,
-        tombsTbl, batchId = 0L)
-      Similarity.purgeVectorIndexRetractions(spark, bandsTbl, vecsTbl,
-        tombsTbl)
+      val family = graft.io.Tombstones.vector(bandsTbl, vecsTbl, tombsTbl)
+      graft.io.Tombstones.retract(spark, family, poison, batchId = 0L)
+      graft.io.Tombstones.purge(spark, family)
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }
@@ -926,7 +925,8 @@ object RecallQueries {
       Similarity.buildIvfCentroids(emb, centsTbl)
       Similarity.appendIvfAssignPartial(spark, emb, centsTbl, idxTbl, 0L)
       Similarity.appendIvfAssignPartial(spark, poison, centsTbl, idxTbl, 1L)
-      Similarity.retractFromIvfIndex(spark, poison, idxTbl, tombsTbl, 0L)
+      graft.io.Tombstones.retract(spark,
+        graft.io.Tombstones.ivf(idxTbl, tombsTbl), poison, 0L)
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }

@@ -993,19 +993,13 @@ object StreamingQueries {
     * batch 3), so every q68–q80 CORRECTNESS row also certifies that a
     * mid-maintenance auto-compaction preserves the probe hash. */
   private[graft] val CompactEveryDefault = 4
-  /** PURGE CADENCE (VERDICT r17): families that retract via the
-    * tombstone protocol pass their [[graft.io.Tombstones.PurgeSpec]]s
-    * and every maintenance batch runs
-    * [[graft.io.Tombstones.maybePurge]] next to the compaction
-    * cadence — once enough retraction batches are pending, the fold
-    * runs through the crash-safe swap and the broadcast probe gate is
-    * dropped, so steady right-to-be-forgotten traffic can no longer
-    * grow the gate or the tombstone table without bound. Default-on
-    * for every tombstone-carrying streamed family. */
+  /** The purge cadence of a tombstone-carrying family needs no step
+    * here: it is a step of every [[graft.io.Tombstones.retract]], so a
+    * batch that lands a retraction also folds the pending ones once the
+    * family's `purgeEvery` batches have accumulated. */
   private def runIndexMaintenance(spark: SparkSession, landing: String,
                                   ckpt: String, tables: Seq[String],
                                   compactEvery: Int = CompactEveryDefault,
-                                  tombstones: Seq[graft.io.Tombstones.PurgeSpec] = Nil,
                                   mergeFraction: Double = 0.25)(
       append: (DataFrame, Long) => Unit): Unit = {
     if (!graft.io.TempPaths.isComplete(ckpt)) {
@@ -1023,7 +1017,6 @@ object StreamingQueries {
           tables.foreach(t =>
             graft.io.Bucketing.maintainIndex(spark, t, compactEvery,
               mergeFraction))
-          tombstones.foreach(s => graft.io.Tombstones.maybePurge(spark, s))
         })
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1404,13 +1397,13 @@ object StreamingQueries {
     * batches: corpus half 0 (append), poison twins of every stride
     * query — vec_id + 10M, embedding verbatim, a cosine-1.0 twin of
     * each probe vector (append), a RETRACTION of the poison batch
-    * (graft.io.Tombstones landing through the maintenance loop), then
-    * corpus half 1 (appends continue after the deletion). The
-    * maintenance loop's purge cadence ([[graft.io.Tombstones.maybePurge]],
-    * default-on in runIndexMaintenance) fires MID-STREAM right after
-    * the tombstones land — cadence 1 here so the fixture's single
-    * retraction batch crosses the threshold deterministically
-    * (production keeps [[graft.io.Tombstones.PurgeEveryDefault]]);
+    * ([[graft.io.Tombstones.retract]] inside the maintenance loop),
+    * then corpus half 1 (appends continue after the deletion). The
+    * retraction's purge cadence fires MID-STREAM right after the
+    * tombstones land — cadence 1 here (the family's `purgeEvery`) so
+    * the fixture's single retraction batch crosses the threshold
+    * deterministically (production keeps
+    * [[graft.io.Tombstones.PurgeEveryDefault]]);
     * the poison rows are physically purged through the crash-safe swap
     * and the tombstone table is dropped while batch 3 still appends
     * behind it. The probe then runs with NO tombstone gate: a hash
@@ -1438,15 +1431,12 @@ object StreamingQueries {
       graft.io.Bucketing.dropTable(spark, centsTbl)
       graft.ops.Similarity.buildIvfCentroids(emb, centsTbl)
     }
-    runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl),
-      tombstones = Seq(graft.io.Tombstones.PurgeSpec(tombsTbl, "vec_id",
-        "ivf-tombs", Seq(idxTbl), everyBatches = 1))) { (b, id) =>
+    val tombs = graft.io.Tombstones.ivf(idxTbl, tombsTbl).copy(purgeEvery = 1)
+    runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
       if (!b.isEmpty) {
         val isRetract = b.select(max(col("retract"))).head.getBoolean(0)
         val vecs = b.drop("retract")
-        if (isRetract)
-          graft.ops.Similarity.retractFromIvfIndex(spark, vecs, idxTbl,
-            tombsTbl, id)
+        if (isRetract) graft.io.Tombstones.retract(spark, tombs, vecs, id)
         else
           graft.ops.Similarity.appendIvfAssignPartial(spark, vecs, centsTbl,
             idxTbl, id)

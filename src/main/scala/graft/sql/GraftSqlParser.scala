@@ -1,5 +1,6 @@
 package graft.sql
 
+import graft.io.Tombstones
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
@@ -30,8 +31,10 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType, 
   *
   * Families: `minhash` (INDEX bands, sigs — TOMBSTONES required on
   * RETRACT), `vector` (INDEX bands, vecs), `ivf` (INDEX assign) retire
-  * by id through the tombstone protocol, so the RETRACT source returns
-  * the retired id column (doc_id / corpus_id / vec_id). `shingle_df`,
+  * by id through the tombstone protocol ([[graft.io.Tombstones.retract]]
+  * and [[graft.io.Tombstones.purge]] over the family's
+  * [[graft.io.Tombstones.Family]]), so the RETRACT source returns the
+  * family's `sourceIdCol` (doc_id / vec_id / vec_id). `shingle_df`,
   * `line_df`, `window_df` (optional K, default 8), `token_count`,
   * `bm25_df` retract by negated partial, so the source returns the
   * retired DOCUMENTS (doc_id, text). CREATE/APPEND route through the
@@ -93,31 +96,24 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
 object GraftSqlParser {
 
-  /** family -> (expected INDEX table count, tombstone id column or None
-    * for the negated-partial families) */
-  private val families: Map[String, (Int, Option[String])] = Map(
-    "minhash" -> (2, Some("doc_id")),
-    "vector" -> (2, Some("corpus_id")),
-    "ivf" -> (1, Some("vec_id")),
+  /** family -> (expected INDEX table count, the tombstone family over
+    * (INDEX tables, TOMBSTONES table), or None for the negated-partial
+    * families) */
+  private type Tombs = (Seq[String], String) => Tombstones.Family
+  private val families: Map[String, (Int, Option[Tombs])] = Map(
+    "minhash" -> (2, Some[Tombs]((t, tt) => Tombstones.minhash(t(0), t(1), tt))),
+    "vector" -> (2, Some[Tombs]((t, tt) => Tombstones.vector(t(0), t(1), tt))),
+    "ivf" -> (1, Some[Tombs]((t, tt) => Tombstones.ivf(t(0), tt))),
     "shingle_df" -> (1, None),
     "line_df" -> (1, None),
     "window_df" -> (1, None),
     "token_count" -> (1, None),
     "bm25_df" -> (1, None))
 
-  /** Families whose CREATE must state explicit geometry clauses —
-    * vector (TABLES n BITS b) and ivf (CENTROIDS c). Everything else
-    * must NOT carry them (their partial paths have no such geometry).
-    * All 8 families are buildable and probeable since VERDICT r19
-    * item 3: geometry rides table properties, not operator memory.
-    * minhash probes at the default build geometry (the same defaults
-    * CREATE/APPEND use, so a SQL-built index probes consistently) and
-    * takes the optional live TOMBSTONES gate; bm25_df's second input
-    * (the fixed query set) arrives as `QUERIES <table-or-view>`
-    * resolved in the command's session; the ivf probe's K is its
-    * top-k. */
-  private val buildable: Set[String] = families.keySet
-  private val probeable: Set[String] = families.keySet
+  /** The tombstone family a validated RETRACT/PURGE statement names. */
+  private[sql] def tombstoneFamily(family: String, tables: Seq[String],
+                                   tombstones: String): Tombstones.Family =
+    families(family)._2.get(tables, tombstones)
 
   // unqualified (\w+) table names only — see the class doc
   private val Tbls = """\w+(?:\s*,\s*\w+)*"""
@@ -185,8 +181,6 @@ object GraftSqlParser {
       case ProbeRe(family, tables, k, tombs, queries, out, source)
           if known(family) =>
         val f = family.toLowerCase(java.util.Locale.ROOT)
-        require(probeable(f),
-          s"PROBE is SQL-surfaced for ${probeable.toSeq.sorted.mkString(", ")}")
         require(splitTables(tables).size == families(f)._1,
           s"family '$f' takes ${families(f)._1} INDEX table(s), got '$tables'")
         require(tombs == null || families(f)._2.isDefined,
@@ -290,9 +284,6 @@ object GraftSqlParser {
   private def validateBuild(familyRaw: String, tables: String,
                             geom: Geometry, create: Boolean): String = {
     val family = familyRaw.toLowerCase(java.util.Locale.ROOT)
-    require(buildable(family),
-      s"CREATE/APPEND are SQL-surfaced for " +
-        s"${buildable.toSeq.sorted.mkString(", ")}")
     val given = splitTables(tables).size
     require(given == families(family)._1,
       s"family '$family' takes ${families(family)._1} INDEX table(s), " +
@@ -582,15 +573,10 @@ case class RetractIndexCommand(family: String, tables: Seq[String],
   override def run(spark: SparkSession): Seq[Row] = {
     GraftSqlParser.withSourceOnce(spark, sourceSql) { (removed, n) =>
     val landed = family match {
-      case "minhash" =>
-        graft.ops.Dedup.retractFromCorpusIndex(spark, removed,
-          tables(0), tables(1), tombstones.get, batchId)
-      case "vector" =>
-        graft.ops.Similarity.retractFromVectorIndex(spark, removed,
-          tables(0), tables(1), tombstones.get, batchId)
-      case "ivf" =>
-        graft.ops.Similarity.retractFromIvfIndex(spark, removed,
-          tables(0), tombstones.get, batchId)
+      case _ if tombstones.isDefined =>
+        Tombstones.retract(spark,
+          GraftSqlParser.tombstoneFamily(family, tables, tombstones.get),
+          removed, batchId)
       case "shingle_df" =>
         graft.ops.Dedup.retractShingleDfPartial(spark, removed, tables(0),
           batchId)
@@ -614,7 +600,7 @@ case class RetractIndexCommand(family: String, tables: Seq[String],
 
 /** `PURGE RETRACTIONS FROM ...` — folds every pending tombstone batch
   * into the family tables through the crash-safe swap and drops the
-  * gate (the [[graft.io.Tombstones.purge]] path, watermark included).
+  * gate ([[graft.io.Tombstones.purge]], watermark included).
   * `purged` is false when there was nothing pending. */
 case class PurgeRetractionsCommand(family: String, tables: Seq[String],
                                    tombstonesTable: String)
@@ -625,17 +611,8 @@ case class PurgeRetractionsCommand(family: String, tables: Seq[String],
     AttributeReference("purged", BooleanType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val purged = family match {
-      case "minhash" =>
-        graft.ops.Dedup.purgeCorpusIndexRetractions(spark, tables(0),
-          tables(1), tombstonesTable)
-      case "vector" =>
-        graft.ops.Similarity.purgeVectorIndexRetractions(spark, tables(0),
-          tables(1), tombstonesTable)
-      case "ivf" =>
-        graft.ops.Similarity.purgeIvfIndexRetractions(spark, tables(0),
-          tombstonesTable)
-    }
+    val purged = Tombstones.purge(spark,
+      GraftSqlParser.tombstoneFamily(family, tables, tombstonesTable))
     Seq(Row(family, purged))
   }
 }

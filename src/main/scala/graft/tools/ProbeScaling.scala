@@ -281,7 +281,8 @@ object ProbeScaling {
           col("vec_id") + lit(10000000L))
         graft.ops.Similarity.appendIvfAssignPartial(spark, emb(sf), cents, t, 0L)
         graft.ops.Similarity.appendIvfAssignPartial(spark, poison, cents, t, 1L)
-        graft.ops.Similarity.retractFromIvfIndex(spark, poison, t, tombs, 0L)
+        graft.io.Tombstones.retract(spark, graft.io.Tombstones.ivf(t, tombs),
+          poison, 0L)
         (spark.table(t).count(), () =>
           graft.ops.Similarity.ivfTopKAgainstIndex(spark, queryEmb, t,
             tombstonesTable = Some(tombs)))
@@ -311,10 +312,11 @@ object ProbeScaling {
           cents, t, 0L)
         graft.ops.Similarity.appendIvfAssignPartial(spark, poison, cents,
           t, 1L)
-        graft.ops.Similarity.retractFromIvfIndex(spark,
-          poison.filter(col("vec_id") % 2 === 0), t, tombs, 0L)
-        graft.ops.Similarity.retractFromIvfIndex(spark,
-          poison.filter(col("vec_id") % 2 =!= 0), t, tombs, 1L)
+        val family = graft.io.Tombstones.ivf(t, tombs)
+        graft.io.Tombstones.retract(spark, family,
+          poison.filter(col("vec_id") % 2 === 0), 0L)
+        graft.io.Tombstones.retract(spark, family,
+          poison.filter(col("vec_id") % 2 =!= 0), 1L)
         (spark.table(tombs).count(), () =>
           graft.ops.Similarity.ivfTopKAgainstIndex(spark, queryEmb, t,
             tombstonesTable = Some(tombs)))

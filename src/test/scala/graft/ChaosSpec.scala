@@ -1,6 +1,6 @@
 package graft
 
-import graft.io.Bucketing
+import graft.io.{Bucketing, Tombstones}
 import graft.ops.{Dedup, TextAnalysis}
 import org.apache.spark.sql.functions._
 
@@ -627,11 +627,11 @@ class ChaosSpec extends SparkSpec {
 
       // tombstone retraction — sometimes a torn landing (subset under
       // the same batch id), healed by the idempotent replay
+      val family = Tombstones.minhash(tb, ts, tt)
       if (rnd.nextDouble() < 0.5)
-        Dedup.retractFromCorpusIndex(spark,
-          poison.filter(col("doc_id") === poisonIds(rnd.nextInt(2))),
-          tb, ts, tt, 50L)
-      Dedup.retractFromCorpusIndex(spark, poison, tb, ts, tt, 50L)
+        Tombstones.retract(spark, family,
+          poison.filter(col("doc_id") === poisonIds(rnd.nextInt(2))), 50L)
+      Tombstones.retract(spark, family, poison, 50L)
 
       // sometimes purge — with injected mid-swap kills on either table,
       // repairs sometimes prompt, sometimes left for the next entry
@@ -648,7 +648,7 @@ class ChaosSpec extends SparkSpec {
           if (rnd.nextBoolean()) Bucketing.repairCompaction(spark, victim)
         }
         // the real purge (its own repairCompaction heals any torn swap)
-        Dedup.purgeCorpusIndexRetractions(spark, tb, ts, tt)
+        Tombstones.purge(spark, family)
       }
 
       withClue(s"seed=$seed: ") {
@@ -669,7 +669,7 @@ class ChaosSpec extends SparkSpec {
 
   test("12 seeded lifecycles: purge cadence + replay past purge converge on the clean index") {
     // the round-18 machinery under chaos: two retraction waves, the
-    // maybePurge CADENCE (fires only at its pending-batch threshold),
+    // retract's purge CADENCE (fires only at its pending-batch threshold),
     // replays landing in every window — before purge (idempotent
     // overwrite), inside the purge crash window (tombstone-membership
     // exemption), and AFTER purge (watermark no-op) — plus mid-swap
@@ -698,15 +698,16 @@ class ChaosSpec extends SparkSpec {
       append(mCorpus, 0L)
       append(poisonA, 1L)
       append(poisonB, 2L)
-      val spec = graft.io.Tombstones.PurgeSpec(tt, "doc_id",
-        "minhash-tombs", Seq(tb, ts), everyBatches = 2)
+      val family = Tombstones.minhash(tb, ts, tt).copy(purgeEvery = 2)
+      def purgedThrough: Option[String] =
+        Bucketing.tableProperty(spark, ts, Tombstones.PurgedThroughProperty)
 
       // wave A retracts; the cadence must HOLD at one pending batch
-      Dedup.retractFromCorpusIndex(spark, poisonA, tb, ts, tt, 10L)
-      assert(!graft.io.Tombstones.maybePurge(spark, spec),
+      Tombstones.retract(spark, family, poisonA, 10L)
+      assert(purgedThrough.isEmpty,
         s"seed=$seed: cadence fired below its threshold")
       if (rnd.nextDouble() < 0.5) // pre-purge replay: idempotent
-        Dedup.retractFromCorpusIndex(spark, poisonA, tb, ts, tt, 10L)
+        Tombstones.retract(spark, family, poisonA, 10L)
       if (rnd.nextDouble() < 0.4) {
         // the purge crash window: one table rewritten, kill mid-swap on
         // the other, watermark/drop never reached — a replay of wave A
@@ -720,24 +721,24 @@ class ChaosSpec extends SparkSpec {
           }
         }
         Bucketing.repairCompaction(spark, ts)
-        Dedup.retractFromCorpusIndex(spark, poisonA, tb, ts, tt, 10L)
+        Tombstones.retract(spark, family, poisonA, 10L)
       }
 
       // wave B retracts; the cadence threshold is now met
-      Dedup.retractFromCorpusIndex(spark, poisonB, tb, ts, tt, 11L)
-      val purged = graft.io.Tombstones.maybePurge(spark, spec)
-      assert(purged, s"seed=$seed: cadence must fire at 2 pending batches")
+      Tombstones.retract(spark, family, poisonB, 11L)
+      assert(purgedThrough === Some("11"),
+        s"seed=$seed: cadence must fire at 2 pending batches")
       assert(!spark.catalog.tableExists(tt), s"seed=$seed: gate not dropped")
       // post-purge replays of BOTH folded waves no-op on the watermark
       if (rnd.nextDouble() < 0.7) {
-        Dedup.retractFromCorpusIndex(spark,
-          if (rnd.nextBoolean()) poisonA else poisonB, tb, ts, tt,
+        Tombstones.retract(spark, family,
+          if (rnd.nextBoolean()) poisonA else poisonB,
           if (rnd.nextBoolean()) 10L else 11L)
         assert(!spark.catalog.tableExists(tt),
           s"seed=$seed: a post-purge replay resurrected the tombstone table")
       }
-      // the cadence stays armed: nothing pending → no-op
-      assert(!graft.io.Tombstones.maybePurge(spark, spec))
+      // nothing pending → a purge is a no-op
+      assert(!Tombstones.purge(spark, family))
 
       withClue(s"seed=$seed: ") {
         val got = Dedup.incrementalVerdictsAgainstIndex(spark, mDelta,
@@ -1063,6 +1064,44 @@ class ChaosSpec extends SparkSpec {
     Seq(refB, refP, refS).foreach(walkCleanup)
   }
 
+  test("a first minhash retraction batch killed at create or at append replays into a stamped tombstone table equal to a clean landing") {
+    // doc 7 is mDelta's exact near-dup source, so the gate changes the probe
+    val retired = mCorpus.filter(col("doc_id").isin(3L, 7L))
+    def index(tb: String, ts: String): Unit =
+      Dedup.appendCorpusIndexPartial(spark, mCorpus, tb, ts, 0L,
+        bands = 8, rowsPerBand = 4, buckets = 2)
+    def retract(tb: String, ts: String, tt: String): Boolean =
+      Tombstones.retract(spark, Tombstones.minhash(tb, ts, tt), retired, 1L)
+    def probe(tb: String, ts: String, tt: Option[String]): Set[String] =
+      Dedup.incrementalVerdictsAgainstIndex(spark, mDelta, tb, ts, bands = 8,
+        rowsPerBand = 4, tombstonesTable = tt).collect().map(_.toString).toSet
+    val (refB, refS, refT) = ("tomb_ref_b", "tomb_ref_s", "tomb_ref_t")
+    Seq(refB, refS, refT).foreach(walkCleanup)
+    index(refB, refS)
+    assert(retract(refB, refS, refT))
+    assert(graftProps(refT) === Map(Bucketing.KindProperty -> "minhash-tombs"))
+    val want = probe(refB, refS, Some(refT))
+    assert(want !== probe(refB, refS, None), "the gate changed nothing — vacuous")
+    for (step <- Seq("create", "append")) {
+      val (tb, ts, tt) = (s"tomb_${step}_b", s"tomb_${step}_s", s"tomb_${step}_t")
+      Seq(tb, ts, tt).foreach(walkCleanup)
+      index(tb, ts)
+      walkCrash(tt, step)(retract(tb, ts, tt))
+      withClue(s"$tt killed at $step: ") {
+        if (step == "create") assert(!spark.catalog.tableExists(tt))
+        else assert(spark.table(tt).isEmpty, "the kill precedes every row")
+      }
+      withClue(s"$tt killed at $step, then replayed: ") {
+        assert(retract(tb, ts, tt))
+        assert(graftProps(tt) === graftProps(refT), "kind stamp")
+        assert(walkRows(tt) === walkRows(refT))
+        assert(probe(tb, ts, Some(tt)) === want, "the probe gate must filter")
+      }
+      Seq(tb, ts, tt).foreach(walkCleanup)
+    }
+    Seq(refB, refS, refT).foreach(walkCleanup)
+  }
+
   test("a purge killed at any step of either table's swap leaves purgedThrough exactly on the tables it purged") {
     val (tb, ts, tt) = ("purgewalk_b", "purgewalk_s", "purgewalk_t")
     val retired = Seq(3L, 7L)
@@ -1074,9 +1113,10 @@ class ChaosSpec extends SparkSpec {
       Seq(tb, ts, tt).foreach(walkCleanup)
       Dedup.appendCorpusIndexPartial(spark, mCorpus, tb, ts, 0L,
         bands = 8, rowsPerBand = 4, buckets = 2)
-      Dedup.retractFromCorpusIndex(spark,
-        mCorpus.filter(col("doc_id").isin(retired: _*)), tb, ts, tt, 1L)
-      walkCrash(victim, step)(Dedup.purgeCorpusIndexRetractions(spark, tb, ts, tt))
+      val family = Tombstones.minhash(tb, ts, tt)
+      Tombstones.retract(spark, family,
+        mCorpus.filter(col("doc_id").isin(retired: _*)), 1L)
+      walkCrash(victim, step)(Tombstones.purge(spark, family))
       Seq(tb, ts).foreach(Bucketing.repairCompaction(spark, _))
       withClue(s"purge killed at $step of $victim: ") {
         // tables are purged in order; the victim's swap counts once it
@@ -1086,14 +1126,14 @@ class ChaosSpec extends SparkSpec {
         assert(Seq(tb, ts).map(purgedRowsGone) === purged)
         for (t <- Seq(tb, ts))
           assert(Bucketing.tableProperty(spark, t,
-              graft.io.Tombstones.PurgedThroughProperty) ===
+              Tombstones.PurgedThroughProperty) ===
             (if (purgedRowsGone(t)) Some("1") else None), t)
         // and the re-run purge converges
-        assert(Dedup.purgeCorpusIndexRetractions(spark, tb, ts, tt))
+        assert(Tombstones.purge(spark, family))
         for (t <- Seq(tb, ts)) {
           assert(purgedRowsGone(t), t)
           assert(Bucketing.tableProperty(spark, t,
-            graft.io.Tombstones.PurgedThroughProperty) === Some("1"), t)
+            Tombstones.PurgedThroughProperty) === Some("1"), t)
         }
         assert(!spark.catalog.tableExists(tt))
       }

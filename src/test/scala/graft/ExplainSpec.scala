@@ -308,7 +308,8 @@ class ExplainSpec extends SparkSpec {
     val poison = emb.filter(pmod(col("vec_id"), lit(50)) === 0)
       .withColumn("vec_id", col("vec_id") + lit(10000000L))
     graft.ops.Similarity.appendIvfAssignPartial(spark, poison, cents, idx, 1L)
-    graft.ops.Similarity.retractFromIvfIndex(spark, poison, idx, tombs, 0L)
+    graft.io.Tombstones.retract(spark, graft.io.Tombstones.ivf(idx, tombs),
+      poison, 0L)
     try Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val ungated = planString(
         graft.ops.Similarity.ivfTopKAgainstIndex(spark, emb, idx))

@@ -89,6 +89,30 @@ class ExtensionsSpec extends SparkSpec {
       .foreach(graft.io.Bucketing.dropTable(spark, _))
   }
 
+  test("RETRACT into an unpartitioned TOMBSTONES table fails on the layout guard and leaves its rows unchanged") {
+    import spark.implicits._
+    val tbls = Seq("ext_lg_bands", "ext_lg_sigs", "ext_lg_tombs")
+    tbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+    val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "kappa lambda mu nu xi omicron")).toDF("doc_id", "text")
+    graft.ops.Dedup.appendCorpusIndexPartial(spark, corpus, "ext_lg_bands",
+      "ext_lg_sigs", 0L)
+    // an existing, unstamped, UNPARTITIONED table with the tombstone
+    // columns: its rows pass the orphan and double-retract guards
+    Seq((99L, 0L)).toDF("doc_id", "batch_id").write.format("parquet")
+      .saveAsTable("ext_lg_tombs")
+    corpus.filter($"doc_id" === 1L).createOrReplaceTempView("ext_lg_retired")
+    val e = intercept[IllegalArgumentException] {
+      spark.sql("RETRACT FROM minhash INDEX ext_lg_bands, ext_lg_sigs " +
+        "TOMBSTONES ext_lg_tombs BATCH 1 AS SELECT doc_id FROM ext_lg_retired")
+        .collect()
+    }
+    assert(e.getMessage.contains("not batch_id-partitioned"), e.getMessage)
+    assert(spark.table("ext_lg_tombs").collect().map(_.toString).toSeq ===
+      Seq("[99,0]"), "the failed retraction must not overwrite the table")
+    tbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+  }
+
   test("CREATE/APPEND/COMPACT/PROBE SQL lifecycle: dispatch, landed flag, guards, near-miss diagnostics") {
     import spark.implicits._
     Seq("ext_lc_idx", "ext_lc_out", "ext_lc_reb")

@@ -453,8 +453,7 @@ class RecoverySpec extends SparkSpec {
     val tombs = "rec_q82_tombs"; val clean = "rec_q82_clean"
     Seq(cents, idx, tombs, clean).foreach(graft.io.Bucketing.dropTable(spark, _))
     graft.ops.Similarity.buildIvfCentroids(emb, cents)
-    val spec = graft.io.Tombstones.PurgeSpec(tombs, "vec_id", "ivf-tombs",
-      Seq(idx), everyBatches = 1)
+    val family = graft.io.Tombstones.ivf(idx, tombs).copy(purgeEvery = 1)
     var crashAfterPurge = true
     var purgeFiredBeforeCrash = false
     var retractReplayLanded = true
@@ -469,9 +468,10 @@ class RecoverySpec extends SparkSpec {
             val isRetract = b.select(max(col("retract"))).head.getBoolean(0)
             val vecs = b.drop("retract")
             if (isRetract) {
-              retractReplayLanded = graft.ops.Similarity
-                .retractFromIvfIndex(spark, vecs, idx, tombs, id)
-              val fired = graft.io.Tombstones.maybePurge(spark, spec)
+              retractReplayLanded =
+                graft.io.Tombstones.retract(spark, family, vecs, id)
+              // the cadence purge, a step of retract, drops the gate
+              val fired = !spark.catalog.tableExists(tombs)
               if (crashAfterPurge) {
                 crashAfterPurge = false
                 purgeFiredBeforeCrash = fired
@@ -481,7 +481,6 @@ class RecoverySpec extends SparkSpec {
             } else {
               graft.ops.Similarity.appendIvfAssignPartial(spark, vecs,
                 cents, idx, id)
-              graft.io.Tombstones.maybePurge(spark, spec)
             }
           }
           ()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.io.Bucketing
+import graft.io.{Bucketing, Tombstones}
 import graft.ops.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -269,34 +269,30 @@ class StreamedIndexSpec extends SparkSpec {
       "si_mh_bands", "si_mh_sigs"))
     assert(poisoned !== want, "poison changed nothing — vacuous fixture")
     // retract + tombstone-gated probe == clean build
-    Dedup.retractFromCorpusIndex(spark, poison, "si_mh_bands", "si_mh_sigs",
-      "si_mh_tombs", 0L)
+    val mh = Tombstones.minhash("si_mh_bands", "si_mh_sigs", "si_mh_tombs")
+    Tombstones.retract(spark, mh, poison, 0L)
     assert(rows(Dedup.incrementalVerdictsAgainstIndex(spark, delta,
         "si_mh_bands", "si_mh_sigs", tombstonesTable = Some("si_mh_tombs")))
       === want,
       "tombstone-gated probe must equal the clean-corpus build")
     // replay of the SAME retraction batch is idempotent
-    Dedup.retractFromCorpusIndex(spark, poison, "si_mh_bands", "si_mh_sigs",
-      "si_mh_tombs", 0L)
+    Tombstones.retract(spark, mh, poison, 0L)
     assert(rows(Dedup.incrementalVerdictsAgainstIndex(spark, delta,
         "si_mh_bands", "si_mh_sigs", tombstonesTable = Some("si_mh_tombs")))
       === want, "retraction replay must be idempotent")
     // double retraction in a NEW batch fails loudly
     val dbl = intercept[IllegalArgumentException] {
-      Dedup.retractFromCorpusIndex(spark, poison, "si_mh_bands", "si_mh_sigs",
-        "si_mh_tombs", 1L)
+      Tombstones.retract(spark, mh, poison, 1L)
     }
     assert(dbl.getMessage.contains("already retracted"), dbl.getMessage)
     // orphan retraction (never-indexed doc) fails loudly
     val orphan = intercept[IllegalArgumentException] {
-      Dedup.retractFromCorpusIndex(spark,
-        delta.withColumn("doc_id", col("doc_id") + lit(77000000L)),
-        "si_mh_bands", "si_mh_sigs", "si_mh_tombs", 2L)
+      Tombstones.retract(spark, mh,
+        delta.withColumn("doc_id", col("doc_id") + lit(77000000L)), 2L)
     }
     assert(orphan.getMessage.contains("absent"), orphan.getMessage)
     // PURGE: postings physically gone, probe equals clean WITHOUT a gate
-    assert(Dedup.purgeCorpusIndexRetractions(spark, "si_mh_bands",
-      "si_mh_sigs", "si_mh_tombs"))
+    assert(Tombstones.purge(spark, mh))
     assert(!spark.catalog.tableExists("si_mh_tombs"),
       "purge must drop the tombstone table")
     assert(spark.table("si_mh_sigs")
@@ -329,8 +325,8 @@ class StreamedIndexSpec extends SparkSpec {
         embDelta, "si_vr_bands", "si_vr_vecs", threshold = 0.45,
         bitsPerTable = bits)) !== want,
       "poison changed nothing — vacuous fixture")
-    Similarity.retractFromVectorIndex(spark, poison, "si_vr_bands",
-      "si_vr_vecs", "si_vr_tombs", 0L)
+    val vr = Tombstones.vector("si_vr_bands", "si_vr_vecs", "si_vr_tombs")
+    Tombstones.retract(spark, vr, poison, 0L)
     // tombstone-gated probe already equals the clean build
     assert(rows(Similarity.incrementalCosineVerdictsAgainstIndex(spark,
         embDelta, "si_vr_bands", "si_vr_vecs", threshold = 0.45,
@@ -346,8 +342,7 @@ class StreamedIndexSpec extends SparkSpec {
     }
     assert(graft.io.Bucketing.repairCompaction(spark, "si_vr_vecs"),
       "repair must restore the table after a mid-swap crash")
-    assert(Similarity.purgeVectorIndexRetractions(spark, "si_vr_bands",
-      "si_vr_vecs", "si_vr_tombs"))
+    assert(Tombstones.purge(spark, vr))
     assert(spark.table("si_vr_vecs")
       .filter(col("corpus_id") >= 10000000L).count() === 0L,
       "purged payloads must be gone from disk")
@@ -479,11 +474,12 @@ class StreamedIndexSpec extends SparkSpec {
     val want = rows(Similarity.ivfTopKAgainstIndex(spark, emb, "si_ivf_clean"))
     assert(rows(Similarity.ivfTopKAgainstIndex(spark, emb, "si_ivf_ret")) !== want,
       "poison changed nothing — vacuous")
-    Similarity.retractFromIvfIndex(spark, poison, "si_ivf_ret", "si_ivf_tombs", 0L)
+    val ivf = Tombstones.ivf("si_ivf_ret", "si_ivf_tombs")
+    Tombstones.retract(spark, ivf, poison, 0L)
     assert(rows(Similarity.ivfTopKAgainstIndex(spark, emb, "si_ivf_ret",
         tombstonesTable = Some("si_ivf_tombs"))) === want,
       "tombstone-gated probe must equal the clean build")
-    assert(Similarity.purgeIvfIndexRetractions(spark, "si_ivf_ret", "si_ivf_tombs"))
+    assert(Tombstones.purge(spark, ivf))
     assert(spark.table("si_ivf_ret")
       .filter(col("vec_id") >= 10000000L).count() === 0L,
       "purged assignments must be gone from disk")
@@ -502,18 +498,19 @@ class StreamedIndexSpec extends SparkSpec {
     Similarity.appendIvfAssignPartial(spark, poisonB, "si_pc_cents", "si_pc_ivf", 2L)
     Similarity.appendIvfAssignPartial(spark, emb, "si_pc_cents", "si_pc_clean", 0L)
     val want = rows(Similarity.ivfTopKAgainstIndex(spark, emb, "si_pc_clean"))
-    val spec = graft.io.Tombstones.PurgeSpec("si_pc_tombs", "vec_id",
-      "ivf-tombs", Seq("si_pc_ivf"), everyBatches = 2)
-    // nothing retracted yet → cadence is a no-op
-    assert(!graft.io.Tombstones.maybePurge(spark, spec))
-    Similarity.retractFromIvfIndex(spark, poisonA, "si_pc_ivf", "si_pc_tombs", 10L)
+    val ivf = Tombstones.ivf("si_pc_ivf", "si_pc_tombs").copy(purgeEvery = 2)
+    // nothing retracted yet → nothing to purge
+    assert(!Tombstones.purge(spark, ivf))
+    Tombstones.retract(spark, ivf, poisonA, 10L)
     // one pending batch < cadence 2 → the purge waits, the gate stays
-    assert(!graft.io.Tombstones.maybePurge(spark, spec),
+    assert(Bucketing.tableProperty(spark, "si_pc_ivf",
+        Tombstones.PurgedThroughProperty).isEmpty,
       "cadence must not fire below the pending-batch threshold")
     assert(spark.catalog.tableExists("si_pc_tombs"))
-    Similarity.retractFromIvfIndex(spark, poisonB, "si_pc_ivf", "si_pc_tombs", 11L)
+    Tombstones.retract(spark, ivf, poisonB, 11L)
     // the second pending batch crosses the cadence → fold + gate drop
-    assert(graft.io.Tombstones.maybePurge(spark, spec),
+    assert(Bucketing.tableProperty(spark, "si_pc_ivf",
+        Tombstones.PurgedThroughProperty) === Some("11"),
       "cadence must fire at the pending-batch threshold")
     assert(!spark.catalog.tableExists("si_pc_tombs"),
       "purge must drop the tombstone table")
@@ -524,17 +521,15 @@ class StreamedIndexSpec extends SparkSpec {
       === want, "post-purge probe (no gate) must equal the clean build")
     // post-purge replay of a folded batch no-ops on the watermark — the
     // at-least-once window does not end at purge (ADVICE r17)
-    assert(!graft.io.Tombstones.land(spark, poisonA.select(col("vec_id")),
-      "vec_id", "si_pc_tombs", "ivf-tombs", 10L, "si_pc_ivf"),
+    assert(!Tombstones.retract(spark, ivf, poisonA, 10L),
       "a post-purge replay must be recognized and no-op")
     assert(!spark.catalog.tableExists("si_pc_tombs"),
       "a replayed folded batch must not resurrect the tombstone table")
     assert(rows(Similarity.ivfTopKAgainstIndex(spark, emb, "si_pc_ivf"))
       === want, "a post-purge replay must change nothing")
     // a NEW retraction batch above the watermark still lands normally
-    assert(graft.io.Tombstones.land(spark,
-      emb.filter(col("vec_id") % 97 === 3).select(col("vec_id")),
-      "vec_id", "si_pc_tombs", "ivf-tombs", 12L, "si_pc_ivf"),
+    assert(Tombstones.retract(spark, ivf,
+      emb.filter(col("vec_id") % 97 === 3), 12L),
       "a fresh batch above the watermark must land")
     assert(spark.catalog.tableExists("si_pc_tombs"))
     drop("si_pc_ivf", "si_pc_tombs", "si_pc_cents", "si_pc_clean")
@@ -546,7 +541,8 @@ class StreamedIndexSpec extends SparkSpec {
     Similarity.buildIvfCentroids(emb, "si_pw_cents")
     Similarity.appendIvfAssignPartial(spark, emb, "si_pw_cents", "si_pw_ivf", 0L)
     Similarity.appendIvfAssignPartial(spark, poison, "si_pw_cents", "si_pw_ivf", 1L)
-    Similarity.retractFromIvfIndex(spark, poison, "si_pw_ivf", "si_pw_tombs", 0L)
+    val ivf = Tombstones.ivf("si_pw_ivf", "si_pw_tombs")
+    Tombstones.retract(spark, ivf, poison, 0L)
     // simulate the crash window inside purge(): the index rewrite ran,
     // the watermark stamp and tombstone drop did not
     graft.io.Bucketing.purgeBucketed(spark, "si_pw_ivf",
@@ -555,12 +551,10 @@ class StreamedIndexSpec extends SparkSpec {
     // are gone from the index (the purge removed them) but present in
     // the tombstone table — membership there exempts them from the
     // orphan guard, because this is recovery, not history corruption
-    assert(graft.io.Tombstones.land(spark, poison.select(col("vec_id")),
-      "vec_id", "si_pw_tombs", "ivf-tombs", 0L, "si_pw_ivf"),
+    assert(Tombstones.retract(spark, ivf, poison, 0L),
       "a replay landing in the purge crash window must pass")
     // and the re-run purge completes the fold idempotently
-    assert(graft.io.Tombstones.purge(spark, "si_pw_tombs", "vec_id",
-      "ivf-tombs", Seq("si_pw_ivf")))
+    assert(Tombstones.purge(spark, ivf))
     assert(!spark.catalog.tableExists("si_pw_tombs"))
     drop("si_pw_ivf", "si_pw_cents")
   }
@@ -576,18 +570,16 @@ class StreamedIndexSpec extends SparkSpec {
     Similarity.buildIvfCentroids(emb, "si_ru_cents")
     Similarity.appendIvfAssignPartial(spark, emb, "si_ru_cents", "si_ru_ivf", 0L)
     Similarity.appendIvfAssignPartial(spark, poison, "si_ru_cents", "si_ru_ivf", 1L)
-    Similarity.retractFromIvfIndex(spark, poison, "si_ru_ivf", "si_ru_tombs", 0L)
-    assert(graft.io.Tombstones.purge(spark, "si_ru_tombs", "vec_id",
-      "ivf-tombs", Seq("si_ru_ivf")))
+    val ivf = Tombstones.ivf("si_ru_ivf", "si_ru_tombs")
+    Tombstones.retract(spark, ivf, poison, 0L)
+    assert(Tombstones.purge(spark, ivf))
     // a true replay of the purged batch still no-ops cleanly
-    assert(!graft.io.Tombstones.land(spark, poison.select(col("vec_id")),
-      "vec_id", "si_ru_tombs", "ivf-tombs", 0L, "si_ru_ivf"))
+    assert(!Tombstones.retract(spark, ivf, poison, 0L))
     // a fresh retraction wearing the purged batch id names LIVE ids —
     // must fail loudly, and the ids must still be indexed afterwards
     val live = emb.filter(col("vec_id") % 97 === 3)
     val e = intercept[Exception] {
-      graft.io.Tombstones.land(spark, live.select(col("vec_id")), "vec_id",
-        "si_ru_tombs", "ivf-tombs", 0L, "si_ru_ivf")
+      Tombstones.retract(spark, ivf, live, 0L)
     }
     assert(messages(e).exists(_.contains("still live")),
       s"expected the reused-batch-id guard, got: ${messages(e).mkString(" | ")}")
