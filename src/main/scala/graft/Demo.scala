@@ -50,8 +50,8 @@ object Demo {
       "demo_lineitem_bkt", "o_orderkey", 8)
     val exchangeFree = Sessions.withConf(spark,
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val cocolocated = io.Bucketing.cocolocatedJoin(
-        spark, "demo_orders_bkt", "demo_lineitem_bkt", "o_orderkey")
+      val cocolocated = spark.table("demo_orders_bkt")
+        .join(spark.table("demo_lineitem_bkt"), Seq("o_orderkey"))
       cocolocated.collect()
       !cocolocated.queryExecution.executedPlan.toString.contains("Exchange")
     }

@@ -48,16 +48,12 @@ object Bucketing {
   /** Table-property key distinguishing persisted index FAMILIES that
     * share a column layout. The line-df index (md5 segment digests) and
     * the window-df index (xxhash64 window hashes) are both
-    * `(h, df_corpus[, batch_id])`, so a column-set guard alone cannot
+    * `(h, df_corpus, batch_id)`, so a column-set guard alone cannot
     * tell them apart — and probing a destructive rewrite against the
     * wrong family's counts is precisely the failure the guards exist
-    * to prevent. Builders stamp their kind at create time; probes
-    * check it with [[requireKind]]. */
+    * to prevent. [[landPartial]] stamps the kind in the one CREATE;
+    * probes check it with [[requireKind]]. */
   val KindProperty = "graft.index.kind"
-
-  /** Stamp the index-family kind on a table (idempotent). */
-  def stampKind(spark: SparkSession, table: String, kind: String): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('$KindProperty' = '$kind')")
 
   def tableKind(spark: SparkSession, table: String): Option[String] =
     tableProperty(spark, table, KindProperty)
@@ -65,9 +61,7 @@ object Bucketing {
   /** Read one table property (None when unset). */
   def tableProperty(spark: SparkSession, table: String,
                     key: String): Option[String] =
-    spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties.get(key)
+    spark.sessionState.catalog.getTableMetadata(identOf(table)).properties.get(key)
 
   /** GEOMETRY STAMPS (VERDICT r19 item 3): the banding / quantizer
     * parameters an index is provisioned with, persisted as table
@@ -87,41 +81,71 @@ object Bucketing {
       spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
         props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
 
-  /** Fail loudly when `table` is stamped as a DIFFERENT index family.
-    * An unstamped table (foreign, or predating the stamp) falls through
-    * to the caller's column-layout guard — the stamp narrows the
-    * guard's blind spot (same-schema families) without rejecting
-    * legacy tables. */
+  /** Fail loudly unless `table` is an `expected`-kind index in the one
+    * index layout (see [[requireLayout]]). */
   def requireKind(spark: SparkSession, table: String, expected: String): Unit =
-    tableKind(spark, table).foreach { kind =>
-      require(kind == expected,
-        s"$table is a '$kind' index, not the '$expected' index this probe " +
-          "expects — same column layout, different hash family; joining it " +
-          "would silently resolve against unrelated hashes")
-    }
+    requireLayout(table,
+      spark.sessionState.catalog.getTableMetadata(identOf(table)), Some(expected))
 
-  /** Write `df` as a bucketed, sorted table on `key`. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
-                    mode: SaveMode = SaveMode.Overwrite): Unit =
-    writeBucketedMulti(df, table, Seq(key), buckets, mode)
+  /** THE LAYOUT CHECK probes ([[requireKind]]), appends
+    * ([[appendPartialInto]]) and rewrites ([[repairedMeta]]) share: the
+    * table is batch_id-partitioned and carries a kind stamp (`expected`,
+    * when given) — true of every table [[landPartial]] creates. An
+    * unpartitioned index (a warehouse written before builds landed as
+    * batch 0) would be TRUNCATED by APPEND's dynamic overwrite and break
+    * COMPACT's partition recover mid-swap, so both refuse it up front. */
+  private def requireLayout(table: String, meta: CatalogTable,
+                            expected: Option[String]): Unit = {
+    require(meta.partitionColumnNames == Seq("batch_id"),
+      s"$table is not batch_id-partitioned — a batch-built index from " +
+        "before every build landed as batch 0, or a foreign table; APPEND " +
+        "would truncate it and COMPACT cannot swap it. Rebuild it through " +
+        "its family's builder")
+    val kind = meta.properties.get(KindProperty)
+    require(kind.isDefined,
+      s"$table carries no index-kind stamp ($KindProperty) — it was not " +
+        "landed by an index builder; rebuild it through its family's builder")
+    expected.foreach(e => require(kind.get == e,
+      s"$table is a '${kind.get}' index, not the '$e' index this call " +
+        "expects — same column layout, different hash family; joining it " +
+        "would silently resolve against unrelated hashes"))
+  }
 
-  /** Multi-key variant: bucket AND sort on the full key sequence, in
-    * order. Needed when the downstream join clusters on several keys —
-    * `spark.sql.requireAllClusterKeysForCoPartition` (default true)
-    * rejects a partial-key bucket layout for co-partitioned joins, so a
-    * table bucketed on a key SUBSET would be silently re-shuffled (and
-    * its bucketed scan disabled by the planner), defeating the layout. */
-  def writeBucketedMulti(df: DataFrame, table: String, keys: Seq[String],
-                         buckets: Int,
-                         mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
+  /** Write `df` as a bucketed, sorted table on `key` — the layout of the
+    * plain bucketed-join tables (q34), which are not indexes. */
+  def writeBucketed(df: DataFrame, table: String, key: String,
+                    buckets: Int): Unit =
+    df.write.mode(SaveMode.Overwrite).bucketBy(buckets, key).sortBy(key)
+      .format("parquet").saveAsTable(table)
 
-  /** THE LANDING PATH of every streamed index table and every
-    * [[Tombstones]] retraction batch: land `rows` as the
+  /** A BATCH BUILD: replace `table` with `rows` landed as its batch 0 —
+    * the first increment of the layout every later batch lands into.
+    * Swap leftovers of the old index go too: the create's repair would
+    * otherwise restore one and land batch 0 into the OLD rows. */
+  def landBuild(spark: SparkSession, rows: DataFrame, table: String,
+                kind: String, keys: Seq[String], buckets: Int,
+                stamps: Map[String, String] = Map.empty): Unit = {
+    Seq("", BackupSuffix, SwapSideSuffix).foreach(s => dropTable(spark, table + s))
+    landPartial(spark, rows, table, kind, keys, buckets, 0L, stamps)
+  }
+
+  /** True when `table` holds its `batch_id = batchId` partition: the
+    * build-if-absent guard of a cached index. Table existence is not
+    * enough — create-then-land leaves an EMPTY stamped table after a
+    * kill at `append`, and a multi-batch build killed between batches
+    * leaves a partial one; a guard must name the LAST batch its build
+    * lands. A partition is registered only after its job committed. */
+  def hasLandedBatch(spark: SparkSession, table: String, batchId: Long): Boolean = {
+    val cat = spark.sessionState.catalog
+    cat.tableExists(identOf(table)) &&
+      cat.getTableMetadata(identOf(table)).partitionColumnNames == Seq("batch_id") &&
+      cat.listPartitionNames(identOf(table),
+        Some(Map("batch_id" -> batchId.toString))).nonEmpty
+  }
+
+  /** THE LANDING PATH of every index table — a batch build is its
+    * batch 0 ([[landBuild]]), a streamed batch or a [[Tombstones]]
+    * retraction batch any later one: land `rows` as the
     * `batch_id = batchId` partition of `table`, creating the table first
     * when it does not resolve. Returns false when the batch no-opped at
     * the fold watermark (see [[appendPartialInto]]).
@@ -132,8 +156,10 @@ object Bucketing {
     * every partition. Spark's bucketed scan folds bucket i's files ACROSS
     * partitions into task i, so the probe-side joins/aggregations on
     * `keys` stay exchange-free whatever the batch count; every cluster
-    * key is in the layout because a co-partitioned join needs all of them
-    * (the [[writeBucketedMulti]] rationale).
+    * key is in the layout because a co-partitioned join needs all of them:
+    * `spark.sql.requireAllClusterKeysForCoPartition` (default true)
+    * rejects a partial-key bucket layout, so a table bucketed on a key
+    * SUBSET would be silently re-shuffled.
     *
     * Create-then-land, like a table declared once in DDL: the table is
     * created EMPTY by one `CREATE TABLE` (step `create`) that carries the
@@ -385,6 +411,9 @@ object Bucketing {
   private def batchIds(partitionNames: Seq[String]): Seq[Long] =
     partitionNames.flatMap(_.stripPrefix("batch_id=").toLongOption)
 
+  private def partitionIds(spark: SparkSession, table: String): Seq[Long] =
+    batchIds(spark.sessionState.catalog.listPartitionNames(identOf(table)))
+
   private def longProperty(meta: CatalogTable, key: String): Option[Long] =
     meta.properties.get(key).flatMap(_.toLongOption)
 
@@ -398,9 +427,10 @@ object Bucketing {
     * [[tieredFold]] (cursor [[FoldedThroughProperty]]: a fold subsumes a
     * compaction and is the only rewrite that physically drops retracted
     * keys' cancelled row pairs, so the two never both run), and any other
-    * batch_id-partitioned index runs the [[compactBucketed]] rewrite
-    * (cursor [[CompactedAtProperty]]). Absent tables and non-batch
-    * layouts (e.g. the pinned IVF centroid artifact) are no-ops.
+    * index runs the [[compactBucketed]] rewrite (cursor
+    * [[CompactedAtProperty]]). Absent and unpartitioned (foreign) tables
+    * are no-ops, and a one-batch artifact — the pinned IVF centroid
+    * table, a build nobody appends to — never reaches the cadence.
     *
     * Why on a cadence: each append fans one wave of files into every
     * bucket, and accumulated waves double streamed-probe cost by the
@@ -440,12 +470,9 @@ object Bucketing {
     * expected index FAMILY, then land the partial as its own idempotent
     * batch_id partition. A table this call's own `create` just made
     * passes every guard by construction, so the first batch skips the
-    * metadata read. The kind check closes the blind spot of probe-only
-    * checks: a partial appended into a same-column-layout table of a
-    * DIFFERENT hash family (e.g. a shingle-df partial into a line-df
-    * index — both `(h, df_corpus, batch_id)`) would silently mix
-    * families; the very first append into a wrong-family table fails
-    * loudly instead.
+    * metadata read. The [[requireLayout]] check fails the very first
+    * append into a DIFFERENT family of the same column layout (e.g. a
+    * shingle-df partial into a line-df index) instead of mixing them.
     *
     * FOLD WATERMARK: a batch at/below the table's
     * [[FoldedThroughProperty]] already had its partial absorbed by a
@@ -462,26 +489,10 @@ object Bucketing {
                                 created: Boolean): Boolean = {
     if (!created) {
       spark.catalog.refreshTable(table)
-      // ONE metadata fetch serves all three guards (kind, layout, fold
-      // watermark) — each is a property of the same snapshot
+      // ONE metadata fetch serves both guards (layout, fold watermark)
+      // — each is a property of the same snapshot
       val meta = countedMeta(spark, table)
-      meta.properties.get(KindProperty).foreach { k =>
-        require(k == kind,
-          s"$table is a '$k' index, not the '$kind' index this append " +
-            "expects — same column layout, different hash family; joining " +
-            "it would silently resolve against unrelated hashes")
-      }
-      // layout guard: the dynamic-partition overwrite below is only
-      // idempotent against a batch_id-PARTITIONED table — against an
-      // unpartitioned (batch-built) layout, insertInto-overwrite would
-      // TRUNCATE the whole index and land one batch in its place. The
-      // SQL surface makes this reachable (APPEND TO ... naming a
-      // batch-built table), so fail loudly instead.
-      require(meta.partitionColumnNames == Seq("batch_id"),
-        s"$table is not batch_id-partitioned — it is a batch-built index " +
-          "layout; per-batch APPEND maintains only the streamed " +
-          "(partitioned) layout. Rebuild it with the streamed create " +
-          "path, or extend it with the family's batch append")
+      requireLayout(table, meta, Some(kind))
       if (batchId <= longProperty(meta, FoldedThroughProperty)
           .getOrElse(Long.MinValue)) return false
     }
@@ -489,19 +500,14 @@ object Bucketing {
     true
   }
 
-  /** Compact a BUCKETED table back to one file per bucket, preserving
-    * the bucket spec and any partition layout — the maintenance
-    * companion to append-mode ingestion: every append lands one more
-    * file wave inside the existing buckets, and after enough batches
-    * the scan's file-open count (not its byte count) becomes the
-    * bottleneck. Plain [[graft.io.Sinks.compactParquet]] would destroy
-    * the layout (repartition + plain write loses catalog bucket
-    * metadata); this reads the spec from the catalog and repartitions on
-    * the bucket keys — `repartition(n, keys)` hashes exactly like the
-    * bucket layout, so each output task holds exactly one bucket and
-    * writes exactly one file. The replacement goes live through the
-    * crash-safe [[rewrite]] protocol. Returns the data file count after
-    * compaction. */
+  /** Compact an index back to one file per (batch, bucket) — the
+    * companion to per-batch appends, each of which can land several file
+    * waves into the buckets until the scan's file-open count (not its
+    * bytes) is the bottleneck. Plain [[graft.io.Sinks.compactParquet]]
+    * would lose the catalog bucket spec; this repartitions on the bucket
+    * keys — hashed exactly like the bucket layout, so each output task
+    * holds one bucket — and installs the result through the crash-safe
+    * [[rewrite]] protocol. Returns the data file count after compaction. */
   def compactBucketed(spark: SparkSession, table: String): Int =
     rewriteTable(spark, table, identity)
 
@@ -550,9 +556,7 @@ object Bucketing {
     * into one summed file: O(index) once per cadence window, O(index/N)
     * amortized per batch. Returns the data file count after the fold. */
   def foldBucketed(spark: SparkSession, table: String): Int = {
-    val meta = repairedMeta(spark, table)
-    baseMerge(spark, table, meta,
-      batchIds(spark.sessionState.catalog.listPartitionNames(identOf(table))))
+    baseMerge(spark, table, repairedMeta(spark, table), partitionIds(spark, table))
     dataFileCount(spark, table)
   }
 
@@ -584,8 +588,7 @@ object Bucketing {
       .getOrElse(Long.MinValue)
     val baseAt = longProperty(meta, BaseAtProperty)
     val runAt = longProperty(meta, RunAtProperty)
-    val parts = batchIds(
-      spark.sessionState.catalog.listPartitionNames(identOf(table)))
+    val parts = partitionIds(spark, table)
     val fresh = parts.filter(_ > folded)
     if (fresh.isEmpty) return false
     def mass(ids: Seq[Long]): Long =
@@ -607,10 +610,13 @@ object Bucketing {
     }
   }
 
-  /** Repair `table`, then fetch its metadata once for the rewrite. */
+  /** THE REWRITE ENTRY: repair `table`, then fetch its metadata once and
+    * check its layout before any rewrite decision. */
   private def repairedMeta(spark: SparkSession, table: String): CatalogTable = {
     repairCompaction(spark, table)
-    spark.sessionState.catalog.getTableMetadata(identOf(table))
+    val meta = spark.sessionState.catalog.getTableMetadata(identOf(table))
+    requireLayout(table, meta, None)
+    meta
   }
 
   /** Whole-table [[rewrite]] of `transform(table)`, after a repair.
@@ -624,14 +630,11 @@ object Bucketing {
     dataFileCount(spark, table)
   }
 
-  /** Layout guard of the fold paths: `table` must be a
-    * batch_id-partitioned, bucketed, additive-df index with exactly one
-    * summable value column. Returns (bucket keys, the value field). */
+  /** Layout guard of the fold paths, past [[requireLayout]]: `table`
+    * must be a bucketed additive-df index with exactly one summable
+    * value column. Returns (bucket keys, the value field). */
   private def additiveLayout(table: String, meta: CatalogTable)
       : (Seq[String], org.apache.spark.sql.types.StructField) = {
-    require(meta.partitionColumnNames == Seq("batch_id"),
-      s"$table is not a batch_id-partitioned streamed index — " +
-        "folds rewrite per-batch partials; nothing to fold here")
     require(meta.properties.get(KindProperty).exists(AdditiveKinds),
       s"$table is not an additive-df index family " +
         s"(${AdditiveKinds.toSeq.sorted.mkString(", ")}) — folding a " +
@@ -736,7 +739,7 @@ object Bucketing {
     *  3. install: `rename-to-backup` + `rename-into-place` (whole
     *     table), or `drop-sources` + `land` + `advance-markers` (run
     *     fold).
-    *  4. `recover-partitions` (partitioned whole-table swap).
+    *  4. `recover-partitions` (whole-table swap).
     *  5. `clear-stamp`.
     *  6. `drop-leftover`: the backup, or the run fold's side table.
     *
@@ -767,20 +770,18 @@ object Bucketing {
     }
     install match {
       case WholeTable =>
-        val partitioned = meta.partitionColumnNames.nonEmpty
         // carry graft.* table properties (kind and geometry stamps)
         // through the rewrite in one ALTER — saveAsTable starts from a
-        // blank property map, and losing the kind stamp would re-open
-        // requireKind's blind spot after every compaction
+        // blank property map, and losing the kind stamp would fail
+        // requireKind after every compaction
         val stamps = meta.properties.filter(_._1.startsWith("graft.")) --
           dropProps ++ props ++
-          countAs.map(_ -> spark.table(side).count().toString) ++
-          (if (partitioned) Some(NeedsRecoverProperty -> "true") else None)
+          countAs.map(_ -> spark.table(side).count().toString) +
+          (NeedsRecoverProperty -> "true")
         step(table, "stamp")(stampProperties(spark, side, stamps))
         step(table, "rename-to-backup")(
           spark.sql(s"ALTER TABLE $table RENAME TO ${table + BackupSuffix}"))
-        renameIntoPlace(spark, table, side, partitioned,
-          leftover = table + BackupSuffix)
+        renameIntoPlace(spark, table, side, leftover = table + BackupSuffix)
       case fold: RunFold =>
         step(table, "stamp")(stampProperties(spark, table,
           Map(FoldJournalProperty -> fold.journal)))
@@ -788,7 +789,8 @@ object Bucketing {
     }
   }
 
-  /** Write `df` into `side` with `meta`'s bucket spec and partition
+  /** Write `df` into `side` with `meta`'s bucket spec, sorted on the
+    * bucket keys and partitioned on batch_id — the [[landPartial]]
     * layout. */
   private def writeLayout(spark: SparkSession, df: DataFrame, table: String,
                           side: String, meta: CatalogTable,
@@ -796,7 +798,6 @@ object Bucketing {
     val spec = meta.bucketSpec.getOrElse(
       throw new IllegalArgumentException(s"$table is not bucketed"))
     val keys = spec.bucketColumnNames
-    val sorts = spec.sortColumnNames
     // pin the bucketed scan ON for the rewrite: the explicit repartition
     // is elided against the scan's bucket partitioning (zero-shuffle
     // compaction — each task drains one bucket's file wave into one
@@ -810,33 +811,27 @@ object Bucketing {
     // and the pin would FORCE the shuffle it exists to prevent
     val pin = "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false"
     graft.Sessions.withConf(spark, Seq(pin).filter(_ => pinBucketedScanOff): _*) {
-      // preserve a partition layout too (the streamed index families are
-      // partitionBy(batch_id) + bucketBy): a rewrite that silently
-      // dropped the partition columns would not just lose directory
-      // pruning — the NEXT dynamic-partition-overwrite append would see
-      // an unpartitioned target and truncate the whole index
-      val partCols = meta.partitionColumnNames
-      val writerBase = df.repartition(spec.numBuckets, keys.map(col): _*).write
-      val writer =
-        (if (partCols.isEmpty) writerBase else writerBase.partitionBy(partCols: _*))
-          .bucketBy(spec.numBuckets, keys.head, keys.tail: _*)
-      // a bucketed-but-unsorted spec is legal (never produced by
-      // writeBucketedMulti, but a foreign table may carry one) — skip
-      // sortBy rather than throwing NoSuchElementException on sorts.head
-      (if (sorts.isEmpty) writer else writer.sortBy(sorts.head, sorts.tail: _*))
+      // preserve the partition layout too: a rewrite that silently
+      // dropped batch_id would not just lose directory pruning — the NEXT
+      // dynamic-partition-overwrite append would see an unpartitioned
+      // target and truncate the whole index
+      df.repartition(spec.numBuckets, keys.map(col): _*).write
+        .partitionBy("batch_id")
+        .bucketBy(spec.numBuckets, keys.head, keys.tail: _*)
+        .sortBy(keys.head, keys.tail: _*)
         .format("parquet")
         .saveAsTable(side)
     }
   }
 
   /** Install steps shared by a whole-table swap and its recovery: rename
-    * the (already stamped) `from` into place, re-sync a partitioned
-    * table's partition locations, drop `leftover`. */
+    * the (already stamped) `from` into place, re-sync its partition
+    * locations, drop `leftover`. */
   private def renameIntoPlace(spark: SparkSession, table: String, from: String,
-                              partitioned: Boolean, leftover: String): Unit = {
+                              leftover: String): Unit = {
     step(table, "rename-into-place")(
       spark.sql(s"ALTER TABLE $from RENAME TO $table"))
-    if (partitioned) recoverPartitions(spark, table)
+    recoverPartitions(spark, table)
     // partition-safe drop: never follows the backup's stale paths
     step(table, "drop-leftover")(dropTable(spark, leftover))
   }
@@ -934,12 +929,9 @@ object Bucketing {
         Seq(backup -> side, side -> backup)
           .find { case (from, _) => countedExists(spark, from) } match {
           case Some((from, leftover)) =>
-            val partitioned =
-              countedMeta(spark, from).partitionColumnNames.nonEmpty
-            if (partitioned)
-              step(table, "stamp")(stampProperties(spark, from,
-                Map(NeedsRecoverProperty -> "true")))
-            renameIntoPlace(spark, table, from, partitioned, leftover)
+            step(table, "stamp")(stampProperties(spark, from,
+              Map(NeedsRecoverProperty -> "true")))
+            renameIntoPlace(spark, table, from, leftover)
             true
           case None => false
         }
@@ -1008,11 +1000,4 @@ object Bucketing {
       }
     walk(loc)
   }
-
-  /** Join two tables bucketed on the same key with the same bucket count:
-    * planner sees compatible output partitioning and elides both
-    * exchanges (asserted in BucketingSpec). */
-  def cocolocatedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-                      key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), Seq(key))
 }

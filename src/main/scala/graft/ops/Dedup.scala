@@ -228,13 +228,15 @@ object Dedup {
     *    join needs NO corpus-side exchange and only the (small) delta
     *    shuffles, every day, forever. Both keys must be in the layout:
     *    requireAllClusterKeysForCoPartition rejects subset-key bucketing
-    *    for co-partitioned joins (see Bucketing.writeBucketedMulti).
+    *    for co-partitioned joins (see Bucketing.landPartial).
     *  - `sigsTable` (doc_id, text, sig) bucketed on doc_id: the verify
     *    side; candidate hits join it on corpus_id, again exchange-free
     *    on the corpus side. Shingles are rebuilt post-scan rather than
     *    stored (grams are ~3x the text; recompute is a narrow pass).
     *
-    * Corpus×corpus work is paid exactly once, at build time. */
+    * Both land as batch 0 of the streamed layout ([[appendCorpusIndexPartial]]
+    * lands every later batch). Corpus×corpus work is paid exactly once,
+    * at build time. */
   def buildCorpusIndex(corpus: DataFrame, bandsTable: String,
                        sigsTable: String, bands: Int = 16,
                        rowsPerBand: Int = 8, shingleN: Int = 3,
@@ -245,15 +247,16 @@ object Dedup {
     // both derive from `sig`, and as two independent actions they used
     // to run the k-minhash pass over the whole corpus TWICE. The
     // signature table is itself the materialization the band projection
-    // needs, so write it FIRST and derive the band postings from the
-    // STORED rows — zero extra signature passes, no block-manager
-    // checkpoint to size or release (the device the streamed twin
-    // appendCorpusIndexPartial needs localCheckpoint for, because its
-    // per-batch partials land under dynamic-partition overwrite and
-    // cannot be read back mid-append). Bands read only (doc_id, sig) —
-    // column pruning keeps the stored text out of the second pass.
-    graft.io.Bucketing.writeBucketed(sig, sigsTable, "doc_id", buckets)
+    // needs, so land it FIRST and derive the band postings from its
+    // STORED batch-0 partition — zero extra signature passes, no
+    // block-manager checkpoint to size or release (appendCorpusIndexPartial
+    // needs localCheckpoint instead, because its two landings overlap and
+    // neither can read the other's rows back). Bands read only
+    // (doc_id, sig) — column pruning keeps the stored text out of the
+    // second pass.
     val spark = corpus.sparkSession
+    graft.io.Bucketing.landBuild(spark, sig, sigsTable, "minhash-sigs",
+      Seq("doc_id"), buckets)
     // repartition on the band keys before the write: the stored-sigs
     // scan arrives as `buckets` tasks (vs the raw corpus scan's 1-2 at
     // fixture scale), and a bucketed write emits one file per (task,
@@ -261,54 +264,24 @@ object Dedup {
     // probe and purge rewrite paid the extra file opens (measured
     // +25% on p54, +60% on the purge-heavy p116/p123). The exchange
     // carries only (doc_id, band_id, band_hash).
-    graft.io.Bucketing.writeBucketedMulti(
-      bandFrame(spark.table(sigsTable), bands, rowsPerBand)
+    graft.io.Bucketing.landBuild(spark,
+      bandFrame(spark.table(sigsTable).filter(col("batch_id") === 0L),
+        bands, rowsPerBand)
         .repartition(buckets, col("band_id"), col("band_hash")),
-      bandsTable, Seq("band_id", "band_hash"), buckets)
-    graft.io.Bucketing.stampKind(spark, bandsTable, "minhash-bands")
-    graft.io.Bucketing.stampKind(spark, sigsTable, "minhash-sigs")
+      bandsTable, "minhash-bands", Seq("band_id", "band_hash"), buckets)
   }
 
-  /** The maintenance half of the daily-ingest contract: fold a verdicted
-    * delta INTO the persisted index so tomorrow's delta probes today's
-    * documents too. Only the delta is signed, banded, and written —
-    * appended files land inside the existing bucket layout (Spark
-    * validates the bucket spec against catalog metadata and fails loudly
-    * on a mismatch), so the corpus is never re-signed, re-shuffled, or
-    * rewritten. At 100 TB this is the nightly index upkeep: O(|delta|)
-    * work forever, with the small appended files swept by the same
-    * compaction machinery as any bucketed fact table (q45). Parameters
-    * MUST match the [[buildCorpusIndex]] call that created the tables. */
-  def appendToCorpusIndex(delta: DataFrame, bandsTable: String,
-                          sigsTable: String, bands: Int = 16,
-                          rowsPerBand: Int = 8, shingleN: Int = 3,
-                          buckets: Int = 8): Unit = {
-    // sign the delta ONCE (guide §1.2 step 1): the band and signature
-    // appends are two actions over this frame, which used to run the
-    // k-minhash pass twice per append. Unlike the build, the appended
-    // rows cannot be isolated by reading the table back (they land as
-    // bucket-interleaved files, not a partition), so this path uses the
-    // streamed twin's device: an eager localCheckpoint, delta-sized by
-    // contract (the whole point of the append is |delta| << |corpus|).
-    val sig = sigFrame(delta, bands * rowsPerBand, shingleN)
-      .localCheckpoint(true)
-    graft.io.Bucketing.writeBucketedMulti(bandFrame(sig, bands, rowsPerBand),
-      bandsTable, Seq("band_id", "band_hash"), buckets,
-      org.apache.spark.sql.SaveMode.Append)
-    graft.io.Bucketing.writeBucketed(sig, sigsTable, "doc_id", buckets,
-      org.apache.spark.sql.SaveMode.Append)
-  }
-
-  /** STREAMED index maintenance for the minhash family: sign and band
-    * one ingest micro-batch and land its band postings + signature
-    * payloads as batch_id partitions of the two index tables —
-    * [[appendToCorpusIndex]]'s semantics with the q68 replay
-    * discipline (each attempt dynamic-partition-overwrites exactly its
-    * own partition, so foreachBatch's at-least-once window is
-    * idempotent where a plain append would double-write). Signatures
-    * and bands are per-document independent, so partitioned partials
-    * ARE the index: the [[incrementalVerdictsAgainstIndex]] probe reads
-    * this layout exactly as it reads the batch-built one (the batch_id
+  /** The maintenance half of the daily-ingest contract: sign and band
+    * one delta (a day's verdicted documents, or one ingest micro-batch)
+    * and land its band postings + signature payloads as the `batchId`
+    * partitions of the two index tables that [[buildCorpusIndex]]
+    * created as batch 0. Only the delta is signed, banded and written —
+    * the corpus is never re-signed, re-shuffled or rewritten, so upkeep
+    * is O(|delta|) forever. Replay follows the q68 discipline: each
+    * attempt dynamic-partition-overwrites exactly its own partition, so
+    * foreachBatch's at-least-once window is idempotent where a plain
+    * append would double-write. Signatures and bands are per-document
+    * independent, so partitioned partials ARE the index (the batch_id
     * column rides along and is dropped by the probe's projections).
     * Parameters MUST match across every batch AND the probe. */
   def appendCorpusIndexPartial(spark: org.apache.spark.sql.SparkSession,
@@ -758,10 +731,9 @@ object Dedup {
     * so at 100 TB the index is a tiny fraction of the corpus and the
     * probe join runs exchange-free on the corpus side. */
   def buildWindowDfIndex(docs: DataFrame, table: String, k: Int = 8,
-                         buckets: Int = 8): Unit = {
-    graft.io.Bucketing.writeBucketed(windowDf(docs, k, 1L), table, "h", buckets)
-    graft.io.Bucketing.stampKind(docs.sparkSession, table, "window-df")
-  }
+                         buckets: Int = 8): Unit =
+    graft.io.Bucketing.landBuild(docs.sparkSession, windowDf(docs, k, 1L),
+      table, "window-df", Seq("h"), buckets)
 
   /** (h, df_corpus): `docs`' window occurrence counts times `sign` — the
     * one aggregate the build, the append and the retraction share. */
@@ -835,27 +807,24 @@ object Dedup {
     // garbage counts — the worst failure mode for a destructive rewrite
     require(Set("h", "df_corpus").subsetOf(idxRaw.columns.toSet),
       s"$indexTable is not a window-df index: expected columns " +
-        s"(h, df_corpus[, batch_id]) from buildWindowDfIndex/" +
+        s"(h, df_corpus, batch_id) from buildWindowDfIndex/" +
         s"appendWindowDfPartial, got " +
         idxRaw.columns.mkString("(", ", ", ")"))
-    // a streamed (batch_id-partitioned) layout folds its per-batch
-    // partials back to global counts first — a groupBy on the bucket
-    // key, so the fold (like the join) has no corpus-side exchange.
-    // Retraction-aware: a zero fold (every occurrence retracted) means
-    // the window is NOT in the corpus — for this family row-PRESENCE is
-    // the predicate, so folded zeros must become absent, and a negative
-    // fold (double retraction / never-appended doc) fails loudly
-    // instead of silently un-removing passages
-    val idx =
-      if (idxRaw.columns.contains("batch_id"))
-        idxRaw.groupBy("h")
-          .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
-          .filter(when(col("df_corpus") < 0,
-              raise_error(concat(lit(s"$indexTable carries a negative folded "),
-                lit("window count — double retraction or retraction of a "),
-                lit("never-appended doc"))))
-            .otherwise(col("df_corpus")) > 0)
-      else idxRaw
+    // the per-batch partials fold back to global counts first — a
+    // groupBy on the bucket key, so the fold (like the join) has no
+    // corpus-side exchange. Retraction-aware: a zero fold (every
+    // occurrence retracted) means the window is NOT in the corpus — for
+    // this family row-PRESENCE is the predicate, so folded zeros must
+    // become absent, and a negative fold (double retraction /
+    // never-appended doc) fails loudly instead of silently un-removing
+    // passages
+    val idx = idxRaw.groupBy("h")
+      .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
+      .filter(when(col("df_corpus") < 0,
+          raise_error(concat(lit(s"$indexTable carries a negative folded "),
+            lit("window count — double retraction or retraction of a "),
+            lit("never-appended doc"))))
+        .otherwise(col("df_corpus")) > 0)
     val toks = passageTokens(delta)
     val occ = windowOccurrences(toks, k)
     // within-delta keep-first: window form rides the probe join's
@@ -935,14 +904,14 @@ object Dedup {
     noveltyFold(grams.join(df, Seq("h")))
   }
 
-  /** Batch build: (h, df_corpus) bucketed on h — same layout and kind
-    * discipline as the line-df index (one exchange at build, probes
-    * fold on the bucketed key with no index-side exchange). */
+  /** Batch build: (h, df_corpus) bucketed on h, landed as batch 0 —
+    * same layout and kind discipline as the line-df index (one exchange
+    * at build, probes fold on the bucketed key with no index-side
+    * exchange). */
   def buildShingleDfIndex(corpus: DataFrame, table: String, n: Int = 3,
-                          buckets: Int = 8): Unit = {
-    graft.io.Bucketing.writeBucketed(shingleDf(corpus, n, 1L), table, "h", buckets)
-    graft.io.Bucketing.stampKind(corpus.sparkSession, table, "shingle-df")
-  }
+                          buckets: Int = 8): Unit =
+    graft.io.Bucketing.landBuild(corpus.sparkSession, shingleDf(corpus, n, 1L),
+      table, "shingle-df", Seq("h"), buckets)
 
   /** (h, df_corpus): `docs`' shingle document frequencies times `sign` —
     * the one aggregate the build, the append and the retraction share. */
@@ -1007,13 +976,10 @@ object Dedup {
     val idxRaw = spark.table(table)
     require(Set("h", "df_corpus").subsetOf(idxRaw.columns.toSet),
       s"$table is not a shingle-df index: expected columns (h, df_corpus" +
-        s"[, batch_id]) from buildShingleDfIndex/appendShingleDfPartial, " +
+        s", batch_id) from buildShingleDfIndex/appendShingleDfPartial, " +
         s"got " + idxRaw.columns.mkString("(", ", ", ")"))
-    val idx =
-      if (idxRaw.columns.contains("batch_id"))
-        idxRaw.groupBy(col("h"))
-          .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
-      else idxRaw
+    val idx = idxRaw.groupBy(col("h"))
+      .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
     val grams = shingleGrams(delta, n)
     val deltaDf = grams.groupBy(col("h")).agg(count(lit(1)).as("df_delta"))
     // a retraction-capable fold can go negative on a broken history

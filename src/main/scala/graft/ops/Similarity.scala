@@ -221,15 +221,15 @@ object Similarity {
     * at build time, and every future query batch probes the stored
     * (vec_id, cell, embedding, nrm) rows directly. Bucketed on `cell`
     * (the full probe-join key) so even a non-broadcast probe join runs
-    * with no index-side exchange. */
+    * with no index-side exchange. Lands as batch 0 of the
+    * [[appendIvfAssignPartial]] layout. */
   def buildIvfIndex(embeddings: DataFrame, table: String,
                     nCentroids: Int = 16, buckets: Int = 8): Unit = {
     val (assign, _) = ivfParts(embeddings, queryStride = 50, nCentroids, nProbe = 1)
-    graft.io.Bucketing.writeBucketed(assign, table, "cell", buckets)
-    graft.io.Bucketing.stampKind(embeddings.sparkSession, table, "ivf-assign")
     // persist the quantizer geometry (VERDICT r19 item 3): a probe must
     // score against the SAME centroid count the build pinned
-    graft.io.Bucketing.stampProperties(embeddings.sparkSession, table,
+    graft.io.Bucketing.landBuild(embeddings.sparkSession, assign, table,
+      "ivf-assign", Seq("cell"), buckets,
       Map(graft.io.Bucketing.CentroidsProperty -> nCentroids.toString))
   }
 
@@ -334,14 +334,14 @@ object Similarity {
 
   /** Persist the pinned centroid artifact for STREAMED IVF maintenance
     * ([[appendIvfAssignPartial]]): trained once at provisioning time,
-    * read by every maintenance batch. Tiny (nCentroids rows). */
+    * read by every maintenance batch. Tiny (nCentroids rows), so it
+    * lands as batch 0 in ONE bucket on `cent_id` — one file, and the
+    * one layout every kind-stamped table shares. */
   def buildIvfCentroids(embeddings: DataFrame, table: String,
-                        nCentroids: Int = 16): Unit = {
-    ivfCentroids(embeddings, nCentroids).coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(table)
-    graft.io.Bucketing.stampKind(embeddings.sparkSession, table,
-      "ivf-centroids")
-  }
+                        nCentroids: Int = 16): Unit =
+    graft.io.Bucketing.landBuild(embeddings.sparkSession,
+      ivfCentroids(embeddings, nCentroids), table, "ivf-centroids",
+      Seq("cent_id"), buckets = 1)
 
   /** STREAMED IVF maintenance: assign one ingest micro-batch against
     * the pinned [[buildIvfCentroids]] artifact and land it as its own
@@ -350,10 +350,10 @@ object Similarity {
     * idempotent: each attempt dynamic-partition-overwrites exactly its
     * own partition, the q68 discipline. Cell assignments are per-vector
     * independent, so partitioned partials ARE the index — a probe reads
-    * the table exactly as it reads the batch-built layout (the extra
-    * batch_id column rides along and is dropped by the probe's
-    * projection). This is how a production IVF index rides continuous
-    * ingest: the quantizer is retrained offline, never per batch. */
+    * the table as one index whatever the batching (the batch_id column
+    * rides along and is dropped by the probe's projection). This is how
+    * a production IVF index rides continuous ingest: the quantizer is
+    * retrained offline, never per batch. */
   def appendIvfAssignPartial(spark: org.apache.spark.sql.SparkSession,
                              batch: DataFrame, centroidsTable: String,
                              table: String, batchId: Long,
@@ -660,8 +660,10 @@ object Similarity {
     *
     * Bits per table are sized from the corpus count at build time; the
     * probe re-derives the SAME value from the stored row count (a
-    * parquet-footer read), so the two halves cannot drift. Returns the
-    * resolved bits for callers that want to log it. */
+    * parquet-footer read), so the two halves cannot drift. Both land as
+    * batch 0 of the [[appendVectorIndexPartial]] layout, stamped with
+    * the geometry. Returns the resolved bits for callers that want to
+    * log it. */
   def buildVectorIndex(corpus: DataFrame, bandsTable: String,
                        vecsTable: String, tables: Int = 8,
                        bitsPerTable: Int = 0, buckets: Int = 8): Int = {
@@ -672,28 +674,22 @@ object Similarity {
     val spark = corpus.sparkSession
     // geometry stamps (VERDICT r19 item 3) — the q71 pinning doctrine:
     // probes and appends re-read the exact provisioned (tables, bits)
-    // instead of trusting a caller to repeat them; carried through
-    // every compaction/purge swap
+    // instead of trusting a caller to repeat them; they ride the one
+    // CREATE and every compaction/purge swap
     val geom = Map(graft.io.Bucketing.LshTablesProperty -> tables.toString,
       graft.io.Bucketing.LshBitsProperty -> b.toString)
     // the two tables derive independently from the corpus, so their
-    // writes overlap (guide §2.6, optimization r22): the payload write
+    // landings overlap (guide §2.6, optimization r22): the payload write
     // used to wait out the full banding job. Unlike buildCorpusIndex
     // (whose band table reads the STORED sigs and must stay
     // sequential), both sides here scan the corpus directly.
-    graft.io.Bucketing.concurrently({
-      graft.io.Bucketing.writeBucketedMulti(bands, bandsTable,
-        Seq("t", "bucket"), buckets)
-      graft.io.Bucketing.stampKind(spark, bandsTable, "vec-bands")
-      graft.io.Bucketing.stampProperties(spark, bandsTable, geom)
-    }, {
-      graft.io.Bucketing.writeBucketed(
+    graft.io.Bucketing.concurrently(
+      graft.io.Bucketing.landBuild(spark, bands, bandsTable, "vec-bands",
+        Seq("t", "bucket"), buckets, geom),
+      graft.io.Bucketing.landBuild(spark,
         corpus.select(col("vec_id").as("corpus_id"),
           col("embedding").as("c_emb"), vec_norm(col("embedding")).as("c_nrm")),
-        vecsTable, "corpus_id", buckets)
-      graft.io.Bucketing.stampKind(spark, vecsTable, "vec-payload")
-      graft.io.Bucketing.stampProperties(spark, vecsTable, geom)
-    })
+        vecsTable, "vec-payload", Seq("corpus_id"), buckets, geom))
     b
   }
 

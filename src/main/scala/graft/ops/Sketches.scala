@@ -91,8 +91,6 @@ object Sketches {
     graft.io.Bucketing.repairCompaction(spark, table)
     graft.io.Bucketing.requireKind(spark, table, "kmv-profile")
     val idx = spark.table(table)
-    require(idx.columns.contains("batch_id"),
-      s"$table is not a streamed kmv-profile layout (no batch_id partitions)")
     val sk = idx.groupBy("lang")
       .agg(graft.functions.KmvAggregator.kmv(k)(col("h")).as("mins"))
     val exact = docs.select(col("lang"),
@@ -342,8 +340,6 @@ object Sketches {
     graft.io.Bucketing.repairCompaction(spark, table)
     graft.io.Bucketing.requireKind(spark, table, "log2-hist")
     val idx = spark.table(table)
-    require(idx.columns.contains("batch_id"),
-      s"$table is not a streamed log2-histogram layout (no batch_id partitions)")
     idx.groupBy(col("lang"), col("bin"))
       .agg(sum(col("cnt")).as("cnt"))
       .select(col("lang"), col("bin"), col("cnt"),

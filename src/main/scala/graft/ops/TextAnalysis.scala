@@ -148,14 +148,14 @@ object TextAnalysis {
     * (h, df_corpus) only: 32-byte digests and counts, never segment
     * text, so at 100 TB the index is a tiny fraction of the corpus and
     * the probe join below runs exchange-free on the corpus side (bucket
-    * layout on h). */
+    * layout on h). Lands as batch 0 of the [[appendLineDfPartial]]
+    * layout. */
   def buildLineDfIndex(corpus: DataFrame, table: String,
                        segTokens: Int = 12, byLines: Boolean = false,
-                       buckets: Int = 8): Unit = {
-    graft.io.Bucketing.writeBucketed(lineDf(corpus, segTokens, byLines, 1L),
-      table, "h", buckets)
-    graft.io.Bucketing.stampKind(corpus.sparkSession, table, "line-df")
-  }
+                       buckets: Int = 8): Unit =
+    graft.io.Bucketing.landBuild(corpus.sparkSession,
+      lineDf(corpus, segTokens, byLines, 1L), table, "line-df", Seq("h"),
+      buckets)
 
   /** (h, df_corpus): `docs`' per-segment document frequencies times
     * `sign` — the one aggregate the build, the append and the retraction
@@ -219,11 +219,10 @@ object TextAnalysis {
     * is never re-segmented, and the index side of the probe join is
     * pre-bucketed on h so only delta digests shuffle.
     *
-    * Accepts both index layouts: a monolithic [[buildLineDfIndex]]
-    * table, or a streamed [[appendLineDfPartial]] table whose per-batch
-    * partials are folded back to global dfs first — a groupBy on the
-    * bucket key, so the fold (like the join) runs with no corpus-side
-    * exchange. */
+    * The index's per-batch partials (the [[buildLineDfIndex]] batch 0
+    * and every [[appendLineDfPartial]] batch) are folded back to global
+    * dfs first — a groupBy on the bucket key, so the fold (like the
+    * join) runs with no corpus-side exchange. */
   def lineDedupIncremental(spark: org.apache.spark.sql.SparkSession,
                            delta: DataFrame, indexTable: String,
                            segTokens: Int = 12, maxDocFreq: Int = 1,
@@ -239,18 +238,15 @@ object TextAnalysis {
     val deltaDf = segs.select("h", "doc_id").distinct()
       .groupBy("h").count().withColumnRenamed("count", "df_delta")
     val idxRaw = spark.table(indexTable)
-    // loud layout guard: accept exactly the two shapes this module
-    // writes — a wrong table silently joined here would "dedup" against
-    // garbage dfs, the worst possible failure mode for a curation gate
+    // loud layout guard: accept exactly the shape this module writes —
+    // a wrong table silently joined here would "dedup" against garbage
+    // dfs, the worst possible failure mode for a curation gate
     require(Set("h", "df_corpus").subsetOf(idxRaw.columns.toSet),
       s"$indexTable is not a line-df index: expected columns (h, df_corpus" +
-        s"[, batch_id]) from buildLineDfIndex/appendLineDfPartial, got " +
+        s", batch_id) from buildLineDfIndex/appendLineDfPartial, got " +
         idxRaw.columns.mkString("(", ", ", ")"))
-    val idx =
-      if (idxRaw.columns.contains("batch_id"))
-        idxRaw.groupBy("h")
-          .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
-      else idxRaw
+    val idx = idxRaw.groupBy("h")
+      .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
     // retraction-aware fold: a probed segment whose folded corpus df
     // went negative (double retraction / never-appended doc) fails
     // loudly instead of silently passing the keep gate; the guard is
@@ -597,8 +593,6 @@ object TextAnalysis {
     graft.io.Bucketing.repairCompaction(spark, table)
     graft.io.Bucketing.requireKind(spark, table, "tok-counts")
     val idx = spark.table(table)
-    require(idx.columns.contains("batch_id"),
-      s"$table is not a streamed token-count layout (no batch_id partitions)")
     coverageAudit(
       docs.select(col("lang"), explode(tokens(col("text"))).as("tok")),
       topVocab(foldTokenCounts(idx, table), vocabSize))
@@ -884,14 +878,17 @@ object TextAnalysis {
   /** Persist the benchmark side of decontamination: the eval suite's
     * distinct n-gram set as a table bucketed on the gram — built once
     * when the eval suite changes, probed by every ingest delta after.
-    * The decontamination analogue of [[buildLineDfIndex]]. */
+    * The decontamination analogue of [[buildLineDfIndex]], landed as
+    * batch 0 of the [[appendBenchGramPartial]] layout. */
   def buildBenchGramIndex(benchDocs: DataFrame, table: String,
-                          n: Int = 8, buckets: Int = 8): Unit = {
-    val grams = benchDocs
-      .select(explode(Dedup.shingles(col("text"), n)).as("gram")).distinct()
-    graft.io.Bucketing.writeBucketed(grams, table, "gram", buckets)
-    graft.io.Bucketing.stampKind(benchDocs.sparkSession, table, "bench-grams")
-  }
+                          n: Int = 8, buckets: Int = 8): Unit =
+    graft.io.Bucketing.landBuild(benchDocs.sparkSession,
+      benchGrams(benchDocs, n), table, "bench-grams", Seq("gram"), buckets)
+
+  /** `docs`' distinct n-gram set — the one projection the build and the
+    * append share. */
+  private def benchGrams(docs: DataFrame, n: Int): DataFrame =
+    docs.select(explode(Dedup.shingles(col("text"), n)).as("gram")).distinct()
 
   /** STREAMED maintenance for the benchmark-gram index: land one
     * micro-batch's DISTINCT n-grams as its own batch_id partition —
@@ -918,12 +915,9 @@ object TextAnalysis {
     * need. */
   def appendBenchGramPartial(spark: org.apache.spark.sql.SparkSession,
                              batch: DataFrame, table: String, batchId: Long,
-                             n: Int = 8, buckets: Int = 8): Unit = {
-    graft.io.Bucketing.landPartial(spark,
-      batch.select(explode(Dedup.shingles(col("text"), n)).as("gram"))
-        .distinct(),
-      table, "bench-grams", Seq("gram"), buckets, batchId)
-  }
+                             n: Int = 8, buckets: Int = 8): Unit =
+    graft.io.Bucketing.landPartial(spark, benchGrams(batch, n), table,
+      "bench-grams", Seq("gram"), buckets, batchId)
 
   /** Incremental decontamination: score ONLY the freshly-ingested delta
     * docs against the persisted benchmark-gram index — the daily-ingest
@@ -931,25 +925,20 @@ object TextAnalysis {
     * checked without recomputing the suite's grams. Output schema and
     * semantics are [[decontamination]]'s, restricted to the delta (the
     * oracle replays exactly that); the index side of the join arrives
-    * pre-bucketed on gram, so only delta grams shuffle. Accepts both
-    * layouts (the [[bm25TopKIncremental]] convention): a STREAMED
-    * ([[appendBenchGramPartial]]) table carries one distinct-gram set
-    * PER batch — a gram in two suite additions appears twice, and
-    * joining it raw would double-count contamination — so it folds back
-    * to the global distinct set first (a distinct on the bucket key:
-    * no exchange on the index side). */
+    * pre-bucketed on gram, so only delta grams shuffle. The index
+    * carries one distinct-gram set PER batch (the build's batch 0, then
+    * every [[appendBenchGramPartial]]) — a gram in two suite additions
+    * appears twice, and joining it raw would double-count contamination
+    * — so it folds back to the global distinct set first (a distinct on
+    * the bucket key: no exchange on the index side). */
   def decontaminationAgainstIndex(spark: org.apache.spark.sql.SparkSession,
                                   delta: DataFrame, indexTable: String,
                                   n: Int = 8): DataFrame = {
     graft.io.Bucketing.repairCompaction(spark, indexTable)
     graft.io.Bucketing.requireKind(spark, indexTable, "bench-grams")
-    val raw = spark.table(indexTable)
-    val benchGrams =
-      if (raw.columns.contains("batch_id")) raw.select(col("gram")).distinct()
-      else raw
     val contaminated = delta
       .select(col("doc_id"), explode(Dedup.shingles(col("text"), n)).as("gram"))
-      .join(benchGrams, Seq("gram"))
+      .join(spark.table(indexTable).select(col("gram")).distinct(), Seq("gram"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_contaminated"))
     delta.select(col("doc_id"),
@@ -1228,57 +1217,21 @@ object TextAnalysis {
 
   /** Build the PERSISTED BM25 statistics index over the already-ingested
     * corpus: the full-vocabulary (term, df_corpus) table bucketed on
-    * `term` (query-agnostic — any future eval set probes it), plus a
-    * one-row corpus-stats table (doc count, total tokens). At 100 TB
-    * this is the index a screening pipeline maintains once per ingest
-    * epoch; the probe below prices a new shard at O(|delta|). */
-  def buildBm25DfIndex(corpus: DataFrame, idxTbl: String, statsTbl: String,
-                       buckets: Int = 8): Unit = {
-    val df = corpus
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .distinct()
-      .groupBy("term").agg(count(lit(1)).as("df_corpus"))
-    graft.io.Bucketing.writeBucketed(df, idxTbl, "term", buckets)
-    graft.io.Bucketing.stampKind(corpus.sparkSession, idxTbl, "bm25-df")
-    corpus.select(size(tokens(col("text"))).cast("long").as("dl"))
-      .agg(count(lit(1)).cast("long").as("n_corpus"),
-        sum(col("dl")).as("tot_corpus"))
-      .write.mode("overwrite").saveAsTable(statsTbl)
-  }
+    * `term` (query-agnostic — any future eval set probes it), with the
+    * corpus stats (doc count, total tokens) riding the same rows as two
+    * sentinel terms ([[bm25Df]]), landed as batch 0 of the
+    * [[appendBm25DfPartial]] layout — one table, so the df rows and the
+    * stats cannot tear apart. At 100 TB this is the index a screening
+    * pipeline maintains once per ingest epoch; the probe below prices a
+    * new shard at O(|delta|). */
+  def buildBm25DfIndex(corpus: DataFrame, idxTbl: String,
+                       buckets: Int = 8): Unit =
+    graft.io.Bucketing.landBuild(corpus.sparkSession, bm25Df(corpus, 1L),
+      idxTbl, "bm25-df", Seq("term"), buckets)
 
-  /** Incremental BM25 screening: score ONLY the day's delta shard
-    * against the fixed query set, with document frequencies and length
-    * stats merged from the persisted [[buildBm25DfIndex]] index plus
-    * the delta's own contribution — bit-identical to re-running
-    * [[bm25TopK]] over corpus ∪ delta and keeping delta candidates
-    * (corpus and delta are doc-disjoint, so df and token totals are
-    * sums). Probe cost is O(|delta|): the delta is tokenized and
-    * aggregated; the INDEX is only touched through a broadcast
-    * query-term gate on its bucketed layout (never scanned into a
-    * shuffle); the corpus text is never re-read. */
-  def bm25TopKIncremental(spark: org.apache.spark.sql.SparkSession,
-                          delta: DataFrame, queries: DataFrame,
-                          idxTbl: String, statsTbl: String, k: Int = 5,
-                          k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // probe-side crash repair: a maintenance compaction killed mid-swap
-    // leaves the index under its backup name; restore before resolving
-    graft.io.Bucketing.repairCompaction(spark, idxTbl)
-    graft.io.Bucketing.requireKind(spark, idxTbl, "bm25-df")
-    // accept both layouts (the lineDedupIncremental convention): a
-    // STREAMED (batch_id-partitioned) table shares the kind stamp but
-    // carries one df row PER batch and its stats as sentinel terms —
-    // scoring it against a monolithic stats table would sum a
-    // contribution per partition and silently inflate every score
-    if (spark.table(idxTbl).columns.contains("batch_id"))
-      return bm25TopKIncrementalStreamed(spark, delta, queries, idxTbl, k, k1, b)
-    val st = spark.table(statsTbl).select(col("n_corpus"), col("tot_corpus")).head()
-    bm25IncrCore(spark, delta, queries, spark.table(idxTbl),
-      st.getLong(0), st.getLong(1), k, k1, b)
-  }
-
-  /** Sentinel terms carrying the per-batch corpus stats INSIDE the
-    * streamed df table: a leading space cannot appear in a real
-    * whitespace-split token, so these never collide with vocabulary. */
+  /** Sentinel terms carrying the per-batch corpus stats INSIDE the df
+    * table: a leading space cannot appear in a real whitespace-split
+    * token, so these never collide with vocabulary. */
   private val StatNDocs = " n"
   private val StatTotTokens = " tot"
 
@@ -1303,7 +1256,7 @@ object TextAnalysis {
 
   /** (term, df_corpus): `docs`' term document frequencies plus the two
     * sentinel corpus-stat rows, times `sign` — the one aggregate the
-    * append and the retraction share. */
+    * build, the append and the retraction share. */
   private def bm25Df(docs: DataFrame, sign: Long): DataFrame = {
     val df = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
@@ -1321,43 +1274,49 @@ object TextAnalysis {
     df.unionByName(stats)
   }
 
-  /** RETRACTION partial for the streamed BM25 df family — the
-    * negated-df device: the REMOVED docs' term dfs AND their sentinel
-    * corpus stats land NEGATED as one batch_id partition (single-table
-    * maintenance: dfs and stats cannot tear apart, exactly like the
-    * append). After the fold the index scores as a rebuild WITHOUT
-    * those docs at O(|removed|); replay idempotent. Zero-folded terms
-    * contribute df 0 (identical to absent in the scorer's
-    * coalesce-merge); negative probed dfs and non-positive folded
-    * stats fail loudly. */
+  /** RETRACTION partial for the BM25 df family — the negated-df
+    * device: the REMOVED docs' term dfs AND their sentinel corpus stats
+    * land NEGATED as one batch_id partition (single-table maintenance:
+    * dfs and stats cannot tear apart, exactly like the append). After
+    * the fold the index scores as a rebuild WITHOUT those docs at
+    * O(|removed|); replay idempotent. Zero-folded terms contribute df 0
+    * (identical to absent in the scorer's coalesce-merge); negative
+    * probed dfs and non-positive folded stats fail loudly. */
   def retractBm25DfPartial(spark: org.apache.spark.sql.SparkSession,
                            removed: DataFrame, table: String,
                            batchId: Long): Boolean =
     graft.io.Bucketing.retractPartial(spark, bm25Df(removed, -1L), table,
       "bm25-df", batchId)
 
-  /** Incremental BM25 screening against a STREAMED
-    * ([[appendBm25DfPartial]]) index: per-batch partials fold back to
-    * global dfs (a groupBy on the bucket key — no corpus-side
-    * exchange) and the sentinel stat terms sum to the corpus stats;
-    * everything downstream is [[bm25TopKIncremental]]'s core, so
-    * stream-maintained and batch-built indexes are interchangeable. */
-  def bm25TopKIncrementalStreamed(spark: org.apache.spark.sql.SparkSession,
-                                  delta: DataFrame, queries: DataFrame,
-                                  idxTbl: String, k: Int = 5,
-                                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // probe-side crash repair, as in [[lineDedupIncremental]]
+  /** Incremental BM25 screening: score ONLY the day's delta shard
+    * against the fixed query set, with document frequencies and length
+    * stats merged from the persisted index plus the delta's own
+    * contribution — bit-identical to re-running [[bm25TopK]] over
+    * corpus ∪ delta and keeping delta candidates (corpus and delta are
+    * doc-disjoint, so df and token totals are sums). The index's
+    * per-batch partials ([[buildBm25DfIndex]]'s batch 0, then every
+    * [[appendBm25DfPartial]] / [[retractBm25DfPartial]] batch) fold back
+    * to global dfs (a groupBy on the bucket key — no corpus-side
+    * exchange) and the sentinel stat terms sum to the corpus stats.
+    * Probe cost is O(|delta|): the delta is tokenized and aggregated;
+    * the INDEX is only touched through a broadcast query-term gate on
+    * its bucketed layout (never scanned into a shuffle); the corpus
+    * text is never re-read. */
+  def bm25TopKIncremental(spark: org.apache.spark.sql.SparkSession,
+                          delta: DataFrame, queries: DataFrame,
+                          idxTbl: String, k: Int = 5,
+                          k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    // probe-side crash repair: a maintenance compaction killed mid-swap
+    // leaves the index under its backup name; restore before resolving
     graft.io.Bucketing.repairCompaction(spark, idxTbl)
     graft.io.Bucketing.requireKind(spark, idxTbl, "bm25-df")
     val idxRaw = spark.table(idxTbl)
-    require(idxRaw.columns.contains("batch_id"),
-      s"$idxTbl is not a streamed bm25-df layout (no batch_id partitions)")
     val st = idxRaw
       .filter(col("term") === StatNDocs || col("term") === StatTotTokens)
       .groupBy("term").agg(sum(col("df_corpus")).cast("long").as("v"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     require(st.contains(StatNDocs) && st.contains(StatTotTokens),
-      s"$idxTbl carries no sentinel corpus stats — not a complete streamed bm25-df index")
+      s"$idxTbl carries no sentinel corpus stats — not a complete bm25-df index")
     // retraction guard: over-retraction drives the folded corpus stats
     // non-positive — scoring against them would divide by a broken
     // corpus size, so fail loudly here
@@ -1365,24 +1324,14 @@ object TextAnalysis {
       s"$idxTbl folded corpus stats are non-positive " +
         s"(${st(StatNDocs)} docs, ${st(StatTotTokens)} tokens) — " +
         "over-retraction or a broken maintenance history")
-    val folded = idxRaw
+    val idx = idxRaw
       .filter(col("term") =!= StatNDocs && col("term") =!= StatTotTokens)
       .groupBy("term").agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
-    bm25IncrCore(spark, delta, queries, folded,
-      st(StatNDocs), st(StatTotTokens), k, k1, b)
-  }
-
-  /** Shared incremental-probe core: merge corpus-side stats/dfs with
-    * the delta's own contribution and score the delta candidates. */
-  private def bm25IncrCore(spark: org.apache.spark.sql.SparkSession,
-                           delta: DataFrame, queries: DataFrame,
-                           idx: DataFrame, nCorpus: Long, totCorpus: Long,
-                           k: Int, k1: Double, b: Double): DataFrame = {
     val dst = delta.select(size(tokens(col("text"))).cast("long").as("dl"))
       .agg(count(lit(1)).cast("long"), sum(col("dl"))).head()
     // an EMPTY delta ("no new docs this batch") sums to null, not 0
-    val n = nCorpus + dst.getLong(0)
-    val tot = totCorpus + (if (dst.isNullAt(1)) 0L else dst.getLong(1))
+    val n = st(StatNDocs) + dst.getLong(0)
+    val tot = st(StatTotTokens) + (if (dst.isNullAt(1)) 0L else dst.getLong(1))
     val avgdl = tot.toDouble / n.toDouble
     val qMatched = bm25TermFreq(delta).join(broadcast(queries), Seq("term"))
       .localCheckpoint(true) // feeds delta-df AND scoring; cut the lineage

@@ -643,10 +643,8 @@ object EvalQueries {
   def noveltyIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p110_shdf", dir)
-    if (!spark.catalog.tableExists(idxTbl)) {
-      graft.io.Bucketing.dropTable(spark, idxTbl)
+    if (!graft.io.Bucketing.hasLandedBatch(spark, idxTbl, 0L))
       Dedup.buildShingleDfIndex(docs.filter(col("doc_id") % 5 =!= 0), idxTbl)
-    }
     Dedup.noveltyIncremental(spark, docs.filter(col("doc_id") % 5 === 0), idxTbl)
   }
 
@@ -668,7 +666,7 @@ object EvalQueries {
   def logprobIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p112_tok", dir)
-    if (!spark.catalog.tableExists(idxTbl)) {
+    if (!graft.io.Bucketing.hasLandedBatch(spark, idxTbl, 0L)) {
       graft.io.Bucketing.dropTable(spark, idxTbl)
       TextAnalysis.appendTokenCountPartial(spark,
         docs.filter(col("doc_id") % 5 =!= 0), idxTbl, 0L)
@@ -746,12 +744,8 @@ object EvalQueries {
     // the rebuild guard must witness the RETRACTION, not bare table
     // existence: a crash between the append and the retraction leaves a
     // real table whose probe would silently return un-retracted novelty
-    // — the p91 torn-two-table lesson, checked here as a partition
-    // listing (batch_id=1 is the retraction batch)
-    val complete = spark.catalog.tableExists(idxTbl) &&
-      spark.sql(s"SHOW PARTITIONS $idxTbl").collect()
-        .exists(_.getString(0).contains("batch_id=1"))
-    if (!complete) {
+    // (batch_id=1 is the retraction batch)
+    if (!graft.io.Bucketing.hasLandedBatch(spark, idxTbl, 1L)) {
       graft.io.Bucketing.dropTable(spark, idxTbl)
       Dedup.appendShingleDfPartial(spark, corpus, idxTbl, 0L)
       Dedup.retractShingleDfPartial(spark,

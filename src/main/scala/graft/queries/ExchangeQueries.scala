@@ -98,8 +98,7 @@ object ExchangeQueries {
         liTbl, "o_orderkey", 8)
     }
     Sessions.withoutBroadcast(spark) {
-      Bucketing
-        .cocolocatedJoin(spark, oTbl, liTbl, "o_orderkey")
+      spark.table(oTbl).join(spark.table(liTbl), Seq("o_orderkey"))
         .groupBy(col("o_orderkey"), col("o_totalprice"))
         .agg(count(lit(1)).as("n_items"),
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))

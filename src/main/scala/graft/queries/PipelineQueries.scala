@@ -122,14 +122,11 @@ object PipelineQueries {
     val docs = Tables.documents(spark, dir)
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p54_bands", dir)
     val sigsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p54_sigs", dir)
-    if (!spark.catalog.tableExists(bandsTbl) ||
-        !spark.catalog.tableExists(sigsTbl)) {
-      graft.io.Bucketing.dropTable(spark, bandsTbl)
-      graft.io.Bucketing.dropTable(spark, sigsTbl)
+    if (!Seq(bandsTbl, sigsTbl)
+        .forall(graft.io.Bucketing.hasLandedBatch(spark, _, 0L)))
       Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 5 =!= 0),
         bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3,
         buckets = 8)
-    }
     Sessions.withoutBroadcast(spark) {
       Dedup.incrementalVerdictsAgainstIndex(spark,
           docs.filter(col("doc_id") % 5 === 0), bandsTbl, sigsTbl,
@@ -170,8 +167,8 @@ object PipelineQueries {
         .foreach(graft.io.Bucketing.dropTable(spark, _))
       Dedup.buildCorpusIndex(corpus, bandsTbl, sigsTbl,
         bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
-      Dedup.appendToCorpusIndex(poison, bandsTbl, sigsTbl,
-        bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
+      Dedup.appendCorpusIndexPartial(spark, poison, bandsTbl, sigsTbl,
+        batchId = 1L, bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
       graft.io.Tombstones.retract(spark,
         graft.io.Tombstones.minhash(bandsTbl, sigsTbl, tombsTbl), poison,
         batchId = 0L)
@@ -213,8 +210,8 @@ object PipelineQueries {
         .foreach(graft.io.Bucketing.dropTable(spark, _))
       Dedup.buildCorpusIndex(corpus, bandsTbl, sigsTbl,
         bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
-      Dedup.appendToCorpusIndex(poison, bandsTbl, sigsTbl,
-        bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
+      Dedup.appendCorpusIndexPartial(spark, poison, bandsTbl, sigsTbl,
+        batchId = 1L, bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
       spark.sql(
         s"""RETRACT FROM minhash INDEX $bandsTbl, $sigsTbl
            |TOMBSTONES $tombsTbl BATCH 0 AS
@@ -348,16 +345,14 @@ object PipelineQueries {
     val docs = Tables.documents(spark, dir)
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p58_bands", dir)
     val sigsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p58_sigs", dir)
-    if (!spark.catalog.tableExists(bandsTbl) ||
-        !spark.catalog.tableExists(sigsTbl)) {
-      graft.io.Bucketing.dropTable(spark, bandsTbl)
-      graft.io.Bucketing.dropTable(spark, sigsTbl)
+    if (!Seq(bandsTbl, sigsTbl)
+        .forall(graft.io.Bucketing.hasLandedBatch(spark, _, 1L))) {
       Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 5 >= 2),
         bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3,
         buckets = 8)
-      Dedup.appendToCorpusIndex(docs.filter(col("doc_id") % 5 === 1),
-        bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3,
-        buckets = 8)
+      Dedup.appendCorpusIndexPartial(spark,
+        docs.filter(col("doc_id") % 5 === 1), bandsTbl, sigsTbl,
+        batchId = 1L, bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
     }
     Sessions.withoutBroadcast(spark) {
       Dedup.incrementalVerdictsAgainstIndex(spark,
@@ -380,16 +375,14 @@ object PipelineQueries {
     val docs = Tables.documents(spark, dir)
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p59_bands", dir)
     val sigsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p59_sigs", dir)
-    if (!spark.catalog.tableExists(bandsTbl) ||
-        !spark.catalog.tableExists(sigsTbl)) {
-      graft.io.Bucketing.dropTable(spark, bandsTbl)
-      graft.io.Bucketing.dropTable(spark, sigsTbl)
+    if (!Seq(bandsTbl, sigsTbl)
+        .forall(graft.io.Bucketing.hasLandedBatch(spark, _, 1L))) {
       Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 5 >= 2),
         bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3,
         buckets = 8)
-      Dedup.appendToCorpusIndex(docs.filter(col("doc_id") % 5 === 1),
-        bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3,
-        buckets = 8)
+      Dedup.appendCorpusIndexPartial(spark,
+        docs.filter(col("doc_id") % 5 === 1), bandsTbl, sigsTbl,
+        batchId = 1L, bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
       graft.io.Bucketing.compactBucketed(spark, bandsTbl)
       graft.io.Bucketing.compactBucketed(spark, sigsTbl)
     }
@@ -582,10 +575,8 @@ object PipelineQueries {
     * the indexed path returns bit-identical neighbors. */
   def annIvfTopKIndexed(spark: SparkSession, dir: String): DataFrame = {
     val tbl = graft.io.TempPaths.scratchTableName(spark, "graft_p56_ivf", dir)
-    if (!spark.catalog.tableExists(tbl)) {
-      graft.io.Bucketing.dropTable(spark, tbl)
+    if (!graft.io.Bucketing.hasLandedBatch(spark, tbl, 0L))
       Similarity.buildIvfIndex(Tables.embeddings(spark, dir), tbl)
-    }
     Similarity.ivfTopKAgainstIndex(spark, Tables.embeddings(spark, dir), tbl)
   }
 
@@ -1409,11 +1400,9 @@ object PipelineQueries {
   def lineDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p63_linedf", dir)
-    if (!spark.catalog.tableExists(idxTbl)) {
-      graft.io.Bucketing.dropTable(spark, idxTbl)
+    if (!graft.io.Bucketing.hasLandedBatch(spark, idxTbl, 0L))
       TextAnalysis.buildLineDfIndex(docs.filter(col("doc_id") % 5 =!= 0),
         idxTbl, buckets = 8)
-    }
     Sessions.withoutBroadcast(spark) {
       TextAnalysis.lineDedupIncremental(spark,
         docs.filter(col("doc_id") % 5 === 0), idxTbl)
@@ -1497,11 +1486,9 @@ object PipelineQueries {
   def textDecontaminationIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p65_grams", dir)
-    if (!spark.catalog.tableExists(idxTbl)) {
-      graft.io.Bucketing.dropTable(spark, idxTbl)
+    if (!graft.io.Bucketing.hasLandedBatch(spark, idxTbl, 0L))
       TextAnalysis.buildBenchGramIndex(
         docs.filter(pmod(col("doc_id"), lit(10)) === 0), idxTbl)
-    }
     val delta = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0 &&
       pmod(col("doc_id"), lit(4)) === 1)
     Sessions.withoutBroadcast(spark) {
@@ -1745,7 +1732,8 @@ object PipelineQueries {
 
   /** p91 — INCREMENTAL BM25 screening against the persisted df index:
     * the corpus (doc_id % 5 != 0) is indexed ONCE — full-vocab
-    * (term, df) bucketed on term + a one-row stats table — and the
+    * (term, df) bucketed on term, with the corpus stats as two sentinel
+    * rows of the same batch-0 partition — and the
     * day's delta shard (doc_id % 5 == 0) is scored against the fixed
     * query set at O(|delta|): delta tokenized and aggregated, index
     * touched only through a broadcast query-term gate on its bucketed
@@ -1758,28 +1746,19 @@ object PipelineQueries {
   def bm25TopKIncr(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p91_bm25df", dir)
-    val statsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p91_bm25st", dir)
-    // guard on BOTH tables: buildBm25DfIndex writes the df index before
-    // the stats table, so a crash between the two leaves a torn state a
-    // single-table guard would skip forever (the q70 single-table layout
-    // exists precisely to avoid this tear)
-    if (!spark.catalog.tableExists(idxTbl) ||
-        !spark.catalog.tableExists(statsTbl)) {
-      graft.io.Bucketing.dropTable(spark, idxTbl)
-      graft.io.Bucketing.dropTable(spark, statsTbl)
+    if (!graft.io.Bucketing.hasLandedBatch(spark, idxTbl, 0L))
       TextAnalysis.buildBm25DfIndex(docs.filter(col("doc_id") % 5 =!= 0),
-        idxTbl, statsTbl)
-    }
+        idxTbl)
     TextAnalysis.bm25TopKIncremental(spark,
       docs.filter(col("doc_id") % 5 === 0),
-      TextAnalysis.bm25QuerySet(docs), idxTbl, statsTbl)
+      TextAnalysis.bm25QuerySet(docs), idxTbl)
   }
 
   val bm25TopKIncrSql: String = bm25SqlFor("\n  WHERE tf.doc_id % 5 = 0")
 
   /** p121 — RETRACTION for the bm25-df family via the negated-df
     * device, promoted from its StreamedIndexSpec certification to the
-    * driver's hash gate (VERDICT r17 item 4), on the q70 single-table
+    * driver's hash gate (VERDICT r17 item 4), on the one bm25-df
     * layout: the corpus (term, df) rows and the sentinel (N, total-dl)
     * stats row land as one appended partial, POISON twins of every
     * delta doc (doc_id + 10M, text verbatim) land as a second batch —
@@ -1807,7 +1786,7 @@ object PipelineQueries {
       new java.io.File(done).mkdirs()
       graft.io.TempPaths.markComplete(done)
     }
-    TextAnalysis.bm25TopKIncrementalStreamed(spark, delta,
+    TextAnalysis.bm25TopKIncremental(spark, delta,
       TextAnalysis.bm25QuerySet(docs), idxTbl)
   }
 

@@ -214,7 +214,7 @@ object ProfilingQueries {
     import org.apache.spark.sql.functions.{col, lit, pmod}
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p102_tok", dir)
-    if (!spark.catalog.tableExists(idxTbl)) {
+    if (!graft.io.Bucketing.hasLandedBatch(spark, idxTbl, 1L)) {
       graft.io.Bucketing.dropTable(spark, idxTbl)
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       Seq(0, 1).foreach { i =>

@@ -425,12 +425,9 @@ object RecallQueries {
     val delta = emb.filter(col("vec_id") % 5 === 0)
     val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p57_vbands", dir)
     val vecsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p57_vecs", dir)
-    if (!spark.catalog.tableExists(bandsTbl) ||
-        !spark.catalog.tableExists(vecsTbl)) {
-      graft.io.Bucketing.dropTable(spark, bandsTbl)
-      graft.io.Bucketing.dropTable(spark, vecsTbl)
+    if (!Seq(bandsTbl, vecsTbl)
+        .forall(graft.io.Bucketing.hasLandedBatch(spark, _, 0L)))
       Similarity.buildVectorIndex(corpus, bandsTbl, vecsTbl)
-    }
     Sessions.withoutBroadcast(spark) {
       Similarity.incrementalCosineVerdictsAgainstIndex(spark, delta,
           bandsTbl, vecsTbl, threshold = 0.45)

@@ -178,11 +178,9 @@ object SelectionQueries {
   def substringRemovalIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p71_windf", dir)
-    if (!spark.catalog.tableExists(idxTbl)) {
-      graft.io.Bucketing.dropTable(spark, idxTbl)
+    if (!graft.io.Bucketing.hasLandedBatch(spark, idxTbl, 0L))
       Dedup.buildWindowDfIndex(docs.filter(col("doc_id") % 5 =!= 0),
         idxTbl, k = 8, buckets = 8)
-    }
     Sessions.withoutBroadcast(spark) {
       Dedup.substringRemoveIncremental(spark,
         docs.filter(col("doc_id") % 5 === 0), idxTbl, k = 8)

@@ -954,7 +954,7 @@ object StreamingQueries {
     * overwrites exactly its own partition; single-table maintenance
     * means df rows and stats can never tear apart). Partials SUM to
     * the global dfs/stats because batches carry disjoint docs. The row
-    * then runs the streamed-layout probe against the fixed query set
+    * then runs the index probe against the fixed query set
     * and shares p91's oracle verbatim: a hash match proves
     * stream-maintained and batch-built BM25 indexes are
     * interchangeable — continuous-ingest decontamination screening
@@ -968,7 +968,7 @@ object StreamingQueries {
       graft.ops.TextAnalysis.appendBm25DfPartial(spark, b, idxTbl, id)
     }
     val docs = Tables.documents(spark, dir)
-    graft.ops.TextAnalysis.bm25TopKIncrementalStreamed(spark,
+    graft.ops.TextAnalysis.bm25TopKIncremental(spark,
       docs.filter(deltaSide(col("doc_id"))),
       graft.ops.TextAnalysis.bm25QuerySet(docs), idxTbl)
   }
@@ -1134,10 +1134,8 @@ object StreamingQueries {
     val ckpt = graft.io.TempPaths.scratchDir(spark, "graft_q74_ckpt", dir)
     val centTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q74_cents", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q74_ivf", dir)
-    if (!spark.catalog.tableExists(centTbl)) {
-      graft.io.Bucketing.dropTable(spark, centTbl)
+    if (!graft.io.Bucketing.hasLandedBatch(spark, centTbl, 0L))
       graft.ops.Similarity.buildIvfCentroids(emb, centTbl)
-    }
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
       graft.ops.Similarity.appendIvfAssignPartial(spark, b, centTbl,
         idxTbl, id)
@@ -1427,10 +1425,8 @@ object StreamingQueries {
     val centsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q82_cents", dir)
     val idxTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q82_ivf", dir)
     val tombsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_q82_tombs", dir)
-    if (!spark.catalog.tableExists(centsTbl)) {
-      graft.io.Bucketing.dropTable(spark, centsTbl)
+    if (!graft.io.Bucketing.hasLandedBatch(spark, centsTbl, 0L))
       graft.ops.Similarity.buildIvfCentroids(emb, centsTbl)
-    }
     val tombs = graft.io.Tombstones.ivf(idxTbl, tombsTbl).copy(purgeEvery = 1)
     runIndexMaintenance(spark, landing, ckpt, Seq(idxTbl)) { (b, id) =>
       if (!b.isEmpty) {

@@ -253,6 +253,21 @@ object GraftSqlParser {
       .values.foreach(_.unpersist(false))
   }
 
+  /** Re-read a provisioned geometry property, require-matching the
+    * operator's repeated clause when present. */
+  private[sql] def pinned(spark: SparkSession, table: String, prop: String,
+                          clause: Option[Int], what: String): Int = {
+    val stored = graft.io.Bucketing.tableProperty(spark, table, prop)
+      .flatMap(_.toIntOption)
+    require(stored.isDefined,
+      s"$table carries no $what stamp ($prop) — it was not provisioned " +
+        "through CREATE/the Scala builders; rebuild it")
+    clause.foreach(v => require(v == stored.get,
+      s"$what $v does not match $table's provisioned ${stored.get} — " +
+        "an index probes correctly only under its build geometry"))
+    stored.get
+  }
+
   private def validate(familyRaw: String, tables: String,
                        tombs: Option[String]): String = {
     val family = familyRaw.toLowerCase(java.util.Locale.ROOT)
@@ -350,22 +365,6 @@ case class AppendIndexCommand(family: String, tables: Seq[String],
     AttributeReference("n_source_rows", LongType, nullable = false)(),
     AttributeReference("landed", BooleanType, nullable = false)())
 
-  /** Re-read a provisioned geometry property, require-matching the
-    * operator's repeated clause when present. */
-  private def pinned(spark: SparkSession, table: String, prop: String,
-                     clause: Option[Int], what: String): Int = {
-    val stored = graft.io.Bucketing.tableProperty(spark, table, prop)
-      .flatMap(_.toIntOption)
-    require(stored.isDefined,
-      s"$table carries no $what stamp ($prop) — it was not provisioned " +
-        "through CREATE/the Scala builders; rebuild it or stamp the " +
-        "provisioned geometry before appending")
-    clause.foreach(v => require(v == stored.get,
-      s"$what $v does not match $table's provisioned ${stored.get} — " +
-        "an index probes correctly only under its build geometry"))
-    stored.get
-  }
-
   override def run(spark: SparkSession): Seq[Row] = {
     if (create) tables.foreach { t =>
       require(!spark.catalog.tableExists(t),
@@ -382,9 +381,9 @@ case class AppendIndexCommand(family: String, tables: Seq[String],
       case "vector" =>
         val (lshT, lshB) =
           if (create) (geom.lshTables.get, geom.lshBits.get)
-          else (pinned(spark, tables(0),
+          else (GraftSqlParser.pinned(spark, tables(0),
               graft.io.Bucketing.LshTablesProperty, geom.lshTables, "TABLES"),
-            pinned(spark, tables(0),
+            GraftSqlParser.pinned(spark, tables(0),
               graft.io.Bucketing.LshBitsProperty, geom.lshBits, "BITS"))
         graft.ops.Similarity.appendVectorIndexPartial(spark, batch,
           tables(0), tables(1), batchId, tables = lshT, bitsPerTable = lshB,
@@ -394,12 +393,11 @@ case class AppendIndexCommand(family: String, tables: Seq[String],
         val centsTbl =
           if (create) {
             val t = s"${tables(0)}_centroids"
-            graft.io.Bucketing.dropTable(spark, t)
             graft.ops.Similarity.buildIvfCentroids(batch, t,
               nCentroids = geom.centroids.get)
             t
           } else {
-            pinned(spark, tables(0),
+            GraftSqlParser.pinned(spark, tables(0),
               graft.io.Bucketing.CentroidsProperty, geom.centroids,
               "CENTROIDS")
             graft.io.Bucketing.tableProperty(spark, tables(0),
@@ -497,16 +495,13 @@ case class ProbeIndexCommand(family: String, tables: Seq[String],
         graft.ops.Dedup.incrementalVerdictsAgainstIndex(spark, source,
           tables(0), tables(1), tombstonesTable = tombstones)
       case "vector" =>
-        // banding geometry re-read from the CREATE-time stamps; a
-        // legacy unstamped table falls back to the Scala probe's own
-        // defaults (8 tables, count-derived bits) — identical behavior
-        // to calling incrementalCosineVerdictsAgainstIndex bare
-        val lshT = graft.io.Bucketing.tableProperty(spark, tables(0),
-          graft.io.Bucketing.LshTablesProperty).flatMap(_.toIntOption)
-          .getOrElse(8)
-        val lshB = graft.io.Bucketing.tableProperty(spark, tables(0),
-          graft.io.Bucketing.LshBitsProperty).flatMap(_.toIntOption)
-          .getOrElse(0)
+        // banding geometry re-read from the stamps every vec-bands table
+        // carries from its one CREATE (build or streamed batch alike)
+        graft.io.Bucketing.requireKind(spark, tables(0), "vec-bands")
+        val lshT = GraftSqlParser.pinned(spark, tables(0),
+          graft.io.Bucketing.LshTablesProperty, None, "TABLES")
+        val lshB = GraftSqlParser.pinned(spark, tables(0),
+          graft.io.Bucketing.LshBitsProperty, None, "BITS")
         graft.ops.Similarity.incrementalCosineVerdictsAgainstIndex(spark,
           source, tables(0), tables(1), tables = lshT, bitsPerTable = lshB,
           tombstonesTable = tombstones)
@@ -542,7 +537,7 @@ case class ProbeIndexCommand(family: String, tables: Seq[String],
         graft.ops.TextAnalysis.vocabCoverageFromStreamedIndex(spark, source,
           tables(0))
       case "bm25_df" =>
-        graft.ops.TextAnalysis.bm25TopKIncrementalStreamed(spark, source,
+        graft.ops.TextAnalysis.bm25TopKIncremental(spark, source,
           spark.table(queriesTable.get), tables(0))
     }
     graft.io.Bucketing.dropTable(spark, outTable)

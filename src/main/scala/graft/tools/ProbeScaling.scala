@@ -77,7 +77,6 @@ object ProbeScaling {
     val families = Seq(
       Family("p54_minhash_band_probe", { sf =>
         val bands = tbl(s"ps_p54_bands"); val sigs = tbl(s"ps_p54_sigs")
-        Seq(bands, sigs).foreach(graft.io.Bucketing.dropTable(spark, _))
         graft.ops.Dedup.buildCorpusIndex(docs(sf).filter(col("doc_id") % 5 =!= 0),
           bands, sigs, bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 8)
         (spark.table(sigs).count(), () =>
@@ -87,14 +86,12 @@ object ProbeScaling {
       }, () => ()),
       Family("p56_ivf_assignment_probe", { sf =>
         val t = tbl("ps_p56_ivf")
-        graft.io.Bucketing.dropTable(spark, t)
         graft.ops.Similarity.buildIvfIndex(emb(sf), t, nCentroids = 16, buckets = 8)
         (spark.table(t).count(), () =>
           graft.ops.Similarity.ivfTopKAgainstIndex(spark, queryEmb, t))
       }, () => ()),
       Family("p57_vector_index_probe", { sf =>
         val bands = tbl("ps_p57_bands"); val vecs = tbl("ps_p57_vecs")
-        Seq(bands, vecs).foreach(graft.io.Bucketing.dropTable(spark, _))
         val bits = graft.ops.Similarity.buildVectorIndex(
           emb(sf).filter(col("vec_id") % 5 =!= 0), bands, vecs, buckets = 8)
         (spark.table(vecs).count(), () =>
@@ -103,7 +100,6 @@ object ProbeScaling {
       }, () => ()),
       Family("p63_linedf_probe", { sf =>
         val t = tbl("ps_p63_linedf")
-        graft.io.Bucketing.dropTable(spark, t)
         graft.ops.TextAnalysis.buildLineDfIndex(
           docs(sf).filter(col("doc_id") % 5 =!= 0), t, buckets = 8)
         (spark.table(t).count(), () =>
@@ -111,7 +107,6 @@ object ProbeScaling {
       }, () => ()),
       Family("p110_shingledf_probe", { sf =>
         val t = tbl("ps_p110_shdf")
-        graft.io.Bucketing.dropTable(spark, t)
         graft.ops.Dedup.buildShingleDfIndex(
           docs(sf).filter(col("doc_id") % 5 =!= 0), t, buckets = 8)
         (spark.table(t).count(), () =>
@@ -136,7 +131,6 @@ object ProbeScaling {
       }, () => ()),
       Family("p65_gram_index_probe", { sf =>
         val t = tbl("ps_p65_grams")
-        graft.io.Bucketing.dropTable(spark, t)
         graft.ops.TextAnalysis.buildBenchGramIndex(
           docs(sf).filter(pmod(col("doc_id"), lit(10)) === 0), t)
         (spark.table(t).count(), () =>
@@ -144,7 +138,6 @@ object ProbeScaling {
       }, () => ()),
       Family("p71_window_df_probe", { sf =>
         val t = tbl("ps_p71_windf")
-        graft.io.Bucketing.dropTable(spark, t)
         graft.ops.Dedup.buildWindowDfIndex(
           docs(sf).filter(col("doc_id") % 5 =!= 0), t, k = 8, buckets = 8)
         (spark.table(t).count(), () =>
@@ -163,13 +156,12 @@ object ProbeScaling {
           graft.ops.Dedup.substringRemoveIncremental(spark, deltaDocs, t, k = 8))
       }, () => ()),
       Family("p91_bm25_df_probe", { sf =>
-        val t = tbl("ps_p91_bm25df"); val st = tbl("ps_p91_bm25st")
-        Seq(t, st).foreach(graft.io.Bucketing.dropTable(spark, _))
+        val t = tbl("ps_p91_bm25df")
         graft.ops.TextAnalysis.buildBm25DfIndex(
-          docs(sf).filter(col("doc_id") % 5 =!= 0), t, st, buckets = 8)
+          docs(sf).filter(col("doc_id") % 5 =!= 0), t, buckets = 8)
         (spark.table(t).count(), () =>
           graft.ops.TextAnalysis.bm25TopKIncremental(spark, deltaDocs,
-            bm25Queries, t, st))
+            bm25Queries, t))
       }, () => ()),
       // p91's REAL x axis (VERDICT r20 item 6): the plain family's
       // index is VOCABULARY-sized and the fixture vocabulary is ~31
@@ -183,8 +175,7 @@ object ProbeScaling {
       // map-side query-term gate under measurement is exactly what
       // must keep the probe flat as the vocabulary grows.
       Family("p91v_bm25_vocab_scaled_probe", { sf =>
-        val t = tbl("ps_p91v_bm25df"); val st = tbl("ps_p91v_bm25st")
-        Seq(t, st).foreach(graft.io.Bucketing.dropTable(spark, _))
+        val t = tbl("ps_p91v_bm25df")
         val corpus = docs(sf).filter(col("doc_id") % 5 =!= 0)
         val filler = corpus
           .withColumn("doc_id", col("doc_id") + lit(10000000L))
@@ -192,10 +183,10 @@ object ProbeScaling {
             transform(split(col("text"), " "),
               tok => concat(tok, lit("_v"), col("doc_id"))), " "))
         graft.ops.TextAnalysis.buildBm25DfIndex(
-          corpus.unionByName(filler), t, st, buckets = 8)
+          corpus.unionByName(filler), t, buckets = 8)
         (spark.table(t).count(), () =>
           graft.ops.TextAnalysis.bm25TopKIncremental(spark, deltaDocs,
-            bm25Queries, t, st))
+            bm25Queries, t))
       }, () => ()),
       Family("q68_streamed_linedf_probe", { sf =>
         val t = tbl("ps_q68_linedf")

@@ -19,7 +19,10 @@ class BucketingSpec extends SparkSpec {
     // bucket layout entirely; force the shuffle-join path the layout is
     // designed for (at 100 TB neither side broadcasts)
     Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val joined = Bucketing.cocolocatedJoin(spark, "orders_bkt", "lineitem_bkt", "o_orderkey")
+      // same key, same bucket count: the planner sees compatible output
+      // partitioning and elides both exchanges
+      val joined = spark.table("orders_bkt")
+        .join(spark.table("lineitem_bkt"), Seq("o_orderkey"))
       joined.collect()
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"expected exchange-free plan, got:\n$plan")
@@ -62,14 +65,12 @@ class BucketingSpec extends SparkSpec {
     val tbl = "graft_compactspec_tbl"
     Bucketing.dropTable(spark, tbl)
     Bucketing.dropTable(spark, s"${tbl}_compacting")
-    // three write waves -> up to 3 files per bucket
-    Bucketing.writeBucketed(docs.filter(col("doc_id") % 3 === 0), tbl, "doc_id", 4)
-    Bucketing.writeBucketed(docs.filter(col("doc_id") % 3 === 1), tbl, "doc_id", 4,
-      org.apache.spark.sql.SaveMode.Append)
-    Bucketing.writeBucketed(docs.filter(col("doc_id") % 3 === 2), tbl, "doc_id", 4,
-      org.apache.spark.sql.SaveMode.Append)
+    // one batch landed by three write tasks, each carrying every bucket
+    // -> up to 3 files per bucket
+    Bucketing.landPartial(spark, docs.repartition(3), tbl, "compact-spec",
+      Seq("doc_id"), buckets = 4, batchId = 0L)
     val before = Bucketing.dataFileCount(spark, tbl)
-    assert(before > 4, s"expected >4 files after three waves, got $before")
+    assert(before > 4, s"expected >4 files after a fragmented landing, got $before")
     val after = Bucketing.compactBucketed(spark, tbl)
     assert(after <= 4, s"expected <=1 file per bucket after compact, got $after")
     // spec survived the swap …
@@ -85,7 +86,7 @@ class BucketingSpec extends SparkSpec {
         s"groupBy on the bucket key must stay exchange-free after compact:\n$plan")
     }
     // … and not a row was lost or duplicated
-    val got = spark.table(tbl)
+    val got = spark.table(tbl).drop("batch_id")
     assert(got.count() === docs.count())
     assert(got.exceptAll(docs).isEmpty && docs.exceptAll(got).isEmpty)
     Bucketing.dropTable(spark, tbl)
@@ -100,27 +101,34 @@ class BucketingSpec extends SparkSpec {
     assert(salted.exceptAll(direct).isEmpty && direct.exceptAll(salted).isEmpty)
   }
 
-  test("index-kind stamp: set, read, enforce; unstamped tables pass through") {
+  test("index-kind stamp: set, read, enforce; an unstamped table fails requireKind") {
     import spark.implicits._
     val tbl = graft.io.TempPaths.scratchTableName(spark, "graft_kind_spec", "t")
-    graft.io.Bucketing.dropTable(spark, tbl)
-    Seq((1L, 2L)).toDF("h", "df_corpus").write.saveAsTable(tbl)
-    // unstamped: requireKind is a no-op either way (legacy/foreign table
-    // falls through to the caller's column guard)
-    assert(graft.io.Bucketing.tableKind(spark, tbl).isEmpty)
-    graft.io.Bucketing.requireKind(spark, tbl, "window-df")
-    graft.io.Bucketing.requireKind(spark, tbl, "line-df")
-    // stamped: matching kind passes, the other family fails loudly
-    graft.io.Bucketing.stampKind(spark, tbl, "window-df")
-    assert(graft.io.Bucketing.tableKind(spark, tbl) === Some("window-df"))
-    graft.io.Bucketing.requireKind(spark, tbl, "window-df")
-    val e = intercept[IllegalArgumentException] {
-      graft.io.Bucketing.requireKind(spark, tbl, "line-df")
+    val rows = Seq((1L, 2L)).toDF("h", "df_corpus")
+    def rejected(expected: String): String =
+      intercept[IllegalArgumentException] {
+        Bucketing.requireKind(spark, tbl, expected)
+      }.getMessage
+    // unstamped, in the batch_id layout: no kind says which hash family
+    // the rows belong to, so every family's probe refuses it
+    Bucketing.dropTable(spark, tbl)
+    rows.withColumn("batch_id", lit(0L)).write.partitionBy("batch_id")
+      .saveAsTable(tbl)
+    assert(Bucketing.tableKind(spark, tbl).isEmpty)
+    Seq("window-df", "line-df").foreach { k =>
+      assert(rejected(k).contains("no index-kind stamp"))
     }
-    assert(e.getMessage.contains("window-df"))
-    // restamping is idempotent overwrite, not append
-    graft.io.Bucketing.stampKind(spark, tbl, "line-df")
-    assert(graft.io.Bucketing.tableKind(spark, tbl) === Some("line-df"))
-    graft.io.Bucketing.dropTable(spark, tbl)
+    // unstamped and unpartitioned (a foreign table): refused too
+    Bucketing.dropTable(spark, tbl)
+    rows.write.saveAsTable(tbl)
+    assert(rejected("window-df").contains("not batch_id-partitioned"))
+    // stamped by landPartial's CREATE: matching kind passes, the other
+    // family fails loudly
+    Bucketing.dropTable(spark, tbl)
+    Bucketing.landPartial(spark, rows, tbl, "window-df", Seq("h"), 2, 0L)
+    assert(Bucketing.tableKind(spark, tbl) === Some("window-df"))
+    Bucketing.requireKind(spark, tbl, "window-df")
+    assert(rejected("line-df").contains("window-df"))
+    Bucketing.dropTable(spark, tbl)
   }
 }

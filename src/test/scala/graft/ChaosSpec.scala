@@ -56,7 +56,7 @@ class ChaosSpec extends SparkSpec {
     val refTbl = "chaos_ref_linedf"
     Bucketing.dropTable(spark, refTbl)
     TextAnalysis.buildLineDfIndex(corpus, refTbl, byLines = true, buckets = 2)
-    val want = spark.table(refTbl)
+    val want = spark.table(refTbl).drop("batch_id")
     val wantProbe = TextAnalysis.lineDedup(corpus.unionByName(delta),
       byLines = true).filter(col("doc_id") >= 100L)
 
@@ -143,7 +143,7 @@ class ChaosSpec extends SparkSpec {
     val refTbl = "chaos_ref_windf"
     Bucketing.dropTable(spark, refTbl)
     graft.ops.Dedup.buildWindowDfIndex(wCorpus, refTbl, k = 8, buckets = 2)
-    val want = spark.table(refTbl)
+    val want = spark.table(refTbl).drop("batch_id")
     val wantProbe = graft.ops.Dedup.substringRemoveIncremental(
       spark, wDelta, refTbl, k = 8)
 
@@ -214,15 +214,19 @@ class ChaosSpec extends SparkSpec {
     (102L, "entirely novel delta body")).toDF("doc_id", "text")
 
   test("10 seeded multi-kill lifecycles converge for the streamed BM25 index too") {
-    val refIdx = "chaos_ref_bm25"; val refSt = "chaos_ref_bm25st"
-    Seq(refIdx, refSt).foreach(Bucketing.dropTable(spark, _))
-    TextAnalysis.buildBm25DfIndex(bCorpus, refIdx, refSt, buckets = 2)
+    val refIdx = "chaos_ref_bm25"
+    TextAnalysis.buildBm25DfIndex(bCorpus, refIdx, buckets = 2)
     val queries = bDelta.filter(col("doc_id") % 100 === 0)
       .select(col("doc_id").as("query_id"),
         explode(slice(TextAnalysis.tokens(col("text")), 1, 3)).as("term"))
       .distinct()
     val wantProbe = TextAnalysis.bm25TopKIncremental(
-      spark, bDelta, queries, refIdx, refSt)
+      spark, bDelta, queries, refIdx)
+    def sentinelStats(t: String): Map[String, Long] =
+      spark.table(t).filter(col("term").startsWith(" "))
+        .groupBy("term").agg(sum(col("df_corpus")).cast("long").as("v"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val refStats = sentinelStats(refIdx)
 
     val ids = (1L to 20L).toVector
     for (seed <- 0 until 10) {
@@ -264,23 +268,17 @@ class ChaosSpec extends SparkSpec {
 
       withClue(s"seed=${2000 + seed} batches=${batches.map(_.size)}: ") {
         // probe-side entry self-repairs any torn swap left dangling
-        val got = TextAnalysis.bm25TopKIncrementalStreamed(
+        val got = TextAnalysis.bm25TopKIncremental(
           spark, bDelta, queries, tbl)
         assert(got.exceptAll(wantProbe).isEmpty && wantProbe.exceptAll(got).isEmpty,
           "streamed BM25 probe after chaos must equal the batch-indexed probe")
-        // sentinel stats must fold to the monolithic corpus stats
-        val st = spark.table(tbl).filter(col("term").startsWith(" "))
-          .groupBy("term").agg(sum(col("df_corpus")).cast("long").as("v"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val refStats = spark.table(refSt).head()
-        assert(st(" n") === refStats.getLong(0) &&
-          st(" tot") === refStats.getLong(1),
+        assert(sentinelStats(tbl) === refStats,
           "sentinel stats must fold to the monolithic corpus stats")
       }
       Seq(tbl, s"${tbl}_compacting", s"${tbl}_precompact")
         .foreach(Bucketing.dropTable(spark, _))
     }
-    Seq(refIdx, refSt).foreach(Bucketing.dropTable(spark, _))
+    Bucketing.dropTable(spark, refIdx)
   }
 
   test("10 seeded multi-kill lifecycles converge for the streamed minhash index") {
@@ -484,30 +482,30 @@ class ChaosSpec extends SparkSpec {
     Bucketing.dropTable(spark, refTbl)
   }
 
-  test("a torn two-table BM25 build (df index landed, stats crash) heals on rerun") {
-    // buildBm25DfIndex writes idxTbl before statsTbl; a crash between the
-    // two leaves exactly this state. The p91 rebuild guard must treat it
-    // as absent (guard on BOTH tables), not skip the rebuild and then
-    // fail the probe on the missing stats table.
-    val idx = "chaos_torn_bm25"; val st = "chaos_torn_bm25st"
-    Seq(idx, st).foreach(Bucketing.dropTable(spark, _))
-    TextAnalysis.buildBm25DfIndex(bCorpus, idx, st, buckets = 2)
+  test("a BM25 build killed at append (empty stamped table) heals on rerun") {
+    // create-then-land leaves the table created and stamped but EMPTY
+    // after a kill at `append`. The p91 build-if-absent guard must see
+    // no landed batch and rebuild — a bare tableExists guard would cache
+    // the empty index and fail every later probe on the missing stats.
+    val idx = "chaos_torn_bm25"
+    TextAnalysis.buildBm25DfIndex(bCorpus, idx, buckets = 2)
     val queries = bDelta.filter(col("doc_id") % 100 === 0)
       .select(col("doc_id").as("query_id"),
         explode(slice(TextAnalysis.tokens(col("text")), 1, 3)).as("term"))
       .distinct()
-    val want = TextAnalysis.bm25TopKIncremental(spark, bDelta, queries, idx, st)
+    val want = TextAnalysis.bm25TopKIncremental(spark, bDelta, queries, idx)
       .collect().toSet
-    Bucketing.dropTable(spark, st) // the torn state
-    // the p91 entry's guard: either table absent -> drop BOTH, rebuild
-    if (!spark.catalog.tableExists(idx) || !spark.catalog.tableExists(st)) {
-      Seq(idx, st).foreach(Bucketing.dropTable(spark, _))
-      TextAnalysis.buildBm25DfIndex(bCorpus, idx, st, buckets = 2)
-    }
-    val got = TextAnalysis.bm25TopKIncremental(spark, bDelta, queries, idx, st)
+    walkCrash(idx, "append")(TextAnalysis.buildBm25DfIndex(bCorpus, idx, buckets = 2))
+    assert(spark.catalog.tableExists(idx) && spark.table(idx).isEmpty,
+      "the kill must leave the created, empty table")
+    // the p91 entry's guard sees no landed batch 0, so it rebuilds
+    assert(!Bucketing.hasLandedBatch(spark, idx, 0L))
+    TextAnalysis.buildBm25DfIndex(bCorpus, idx, buckets = 2)
+    assert(Bucketing.hasLandedBatch(spark, idx, 0L))
+    val got = TextAnalysis.bm25TopKIncremental(spark, bDelta, queries, idx)
       .collect().toSet
     assert(got === want, "healed rebuild must reproduce the untorn probe")
-    Seq(idx, st).foreach(Bucketing.dropTable(spark, _))
+    Bucketing.dropTable(spark, idx)
   }
 
   test("a streamed bm25-df table stripped of sentinel stats fails loudly, not NoSuchElement") {
@@ -525,7 +523,7 @@ class ChaosSpec extends SparkSpec {
     val queries = bDelta.select(col("doc_id").as("query_id"),
       explode(TextAnalysis.tokens(col("text"))).as("term")).distinct()
     val ex = intercept[IllegalArgumentException] {
-      TextAnalysis.bm25TopKIncrementalStreamed(spark, bDelta, queries, tbl)
+      TextAnalysis.bm25TopKIncremental(spark, bDelta, queries, tbl)
     }
     assert(ex.getMessage.contains("sentinel corpus stats"),
       s"diagnosable error expected, got: ${ex.getMessage}")
@@ -854,10 +852,9 @@ class ChaosSpec extends SparkSpec {
   }
 
   // --- exhaustive crash walk over the one rewrite protocol -----------
-  // Fixtures are written directly in the index layouts (h, df_corpus
-  // [, batch_id]) so each of the ~100 crash scenarios costs a few small
-  // writes: a batch_id-partitioned streamed index landed as an additive
-  // family, and an unpartitioned batch-built one.
+  // Fixtures are small (h, df_corpus, batch_id) additive indexes, so each
+  // of the ~100 crash scenarios costs a few small writes: partials landed
+  // batch by batch, and a real builder's batch 0 plus one appended batch.
 
   private def walkRows(t: String): Seq[String] =
     spark.table(t).collect().map(_.toString).sorted.toSeq
@@ -903,11 +900,12 @@ class ChaosSpec extends SparkSpec {
       Bucketing.BaseMassProperty -> "30"))
   }
 
+  /** A batch build ([[Dedup.buildShingleDfIndex]], batch 0) plus a
+    * streamed batch-1 partial. */
   private def batchBuiltFixture(t: String): Unit = {
-    Bucketing.writeBucketed((1L to 30L).map(h => (h, h % 4 + 1)).toDF("h", "df_corpus"),
-      t, "h", buckets = 2)
-    Bucketing.writeBucketed((31L to 40L).map(h => (h, 1L)).toDF("h", "df_corpus"),
-      t, "h", buckets = 2, mode = org.apache.spark.sql.SaveMode.Append)
+    Dedup.buildShingleDfIndex(corpus.filter(col("doc_id") <= 10L), t, buckets = 2)
+    Dedup.appendShingleDfPartial(spark, corpus.filter(col("doc_id") > 10L), t,
+      1L, buckets = 2)
   }
 
   /** One rewrite kind: its fixture, the rewrite, the step order it must
@@ -924,9 +922,7 @@ class ChaosSpec extends SparkSpec {
     WalkKind("compact_streamed", streamedFixture,
       t => Bucketing.compactBucketed(spark, t), swapPath, "rename-into-place"),
     WalkKind("compact_batch_built", batchBuiltFixture,
-      t => Bucketing.compactBucketed(spark, t),
-      swapPath.filterNot(Set("recover-partitions", "clear-stamp")),
-      "rename-into-place"),
+      t => Bucketing.compactBucketed(spark, t), swapPath, "rename-into-place"),
     WalkKind("purge", streamedFixture,
       t => Bucketing.purgeBucketed(spark, t, (7L to 12L).toDF("h"), "h"),
       swapPath, "rename-into-place"),
@@ -1062,6 +1058,49 @@ class ChaosSpec extends SparkSpec {
       Seq(b, p, s).foreach(walkCleanup)
     }
     Seq(refB, refP, refS).foreach(walkCleanup)
+  }
+
+  test("a buildVectorIndex killed at create or at append rebuilds into stamped tables whose SQL probe equals a clean build") {
+    // the vec-bands bug class: a build killed between its write and a
+    // separate stamp left a table the vector probe read under DEFAULT
+    // geometry. Every build now lands batch 0 through the one stamped
+    // CREATE, so whatever a kill leaves is stamped, and the rebuild the
+    // build-if-absent guard triggers probes exactly like a clean build.
+    val emb = Tables.embeddings(spark, sfDir)
+    val corpus = emb.filter(col("vec_id") % 5 =!= 0)
+    emb.filter(col("vec_id") % 5 === 0).createOrReplaceTempView("kill_vec_delta")
+    def build(b: String, p: String): Unit =
+      graft.ops.Similarity.buildVectorIndex(corpus, b, p, buckets = 2)
+    def probe(b: String, p: String): Seq[String] = {
+      spark.sql(s"PROBE vector INDEX $b, $p INTO kill_vec_out AS " +
+        "SELECT vec_id, embedding FROM kill_vec_delta").collect()
+      walkRows("kill_vec_out")
+    }
+    val (refB, refP) = ("kill_ref_vb", "kill_ref_vp")
+    build(refB, refP)
+    val want = probe(refB, refP)
+    assert(want.exists(_.contains(",true,")), "vacuous fixture: no delta vector is a dup")
+    for (step <- Seq("create", "append"); victim <- Seq("b", "p")) {
+      val (b, p) = (s"kill_${step}_vb", s"kill_${step}_vp")
+      Seq(b, p).foreach(walkCleanup)
+      walkCrash(if (victim == "b") b else p, step)(build(b, p))
+      for ((t, ref) <- Seq(b -> refB, p -> refP) if spark.catalog.tableExists(t))
+        withClue(s"$t after a kill of $victim at $step: ") {
+          assert(graftProps(t) === graftProps(ref), "a created table is stamped")
+        }
+      assert(!Seq(b, p).forall(Bucketing.hasLandedBatch(spark, _, 0L)),
+        "the build-if-absent guard must see the killed build as absent")
+      build(b, p) // the guard's rebuild
+      withClue(s"killed $victim at $step, then rebuilt: ") {
+        for ((t, ref) <- Seq(b -> refB, p -> refP)) {
+          assert(graftProps(t) === graftProps(ref), "kind and geometry stamps")
+          assert(walkRows(t) === walkRows(ref))
+        }
+        assert(probe(b, p) === want, "SQL PROBE vector must equal a clean build")
+      }
+      Seq(b, p).foreach(walkCleanup)
+    }
+    Seq(refB, refP, "kill_vec_out").foreach(walkCleanup)
   }
 
   test("a first minhash retraction batch killed at create or at append replays into a stamped tombstone table equal to a clean landing") {

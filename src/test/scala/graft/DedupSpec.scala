@@ -189,13 +189,21 @@ class DedupSpec extends SparkSpec {
 
   test("substringRemoveIncremental refuses a wrong-layout table") {
     val tbl = graft.io.TempPaths.scratchTableName(spark, "graft_windf_bad", "t1")
+    val delta = Seq((1L, "a b c")).toDF("doc_id", "text")
+    def refusal: String = intercept[IllegalArgumentException] {
+      Dedup.substringRemoveIncremental(spark, delta, tbl)
+    }.getMessage
+    // stamped and batch_id-partitioned, but the wrong columns: the
+    // column guard refuses it
+    graft.io.Bucketing.dropTable(spark, tbl)
+    graft.io.Bucketing.landPartial(spark, Seq((1L, 2L)).toDF("a", "b"), tbl,
+      "window-df", Seq("a"), 2, 0L)
+    assert(refusal.contains("not a window-df index"))
+    // a foreign table (no stamp, no batch_id partitions) fails the layout
+    // check before any column is read
     graft.io.Bucketing.dropTable(spark, tbl)
     Seq((1L, 2L)).toDF("a", "b").write.saveAsTable(tbl)
-    val delta = Seq((1L, "a b c")).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.substringRemoveIncremental(spark, delta, tbl)
-    }
-    assert(e.getMessage.contains("not a window-df index"))
+    assert(refusal.contains("not batch_id-partitioned"))
     graft.io.Bucketing.dropTable(spark, tbl)
   }
 
@@ -237,7 +245,7 @@ class DedupSpec extends SparkSpec {
     Dedup.buildWindowDfIndex(corpus, mono, k = 8)
     val folded = spark.table(streamed).groupBy("h")
       .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
-    val want = spark.table(mono)
+    val want = spark.table(mono).drop("batch_id")
     assert(folded.exceptAll(want).isEmpty && want.exceptAll(folded).isEmpty,
       "streamed partials must fold to the batch-built window dfs")
     // the probe accepts both layouts and rewrites identically
@@ -317,7 +325,7 @@ class DedupSpec extends SparkSpec {
     Dedup.buildWindowDfIndex(doc, mono, k = 8)
     val folded = spark.table(tbl).groupBy("h")
       .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
-    val want = spark.table(mono)
+    val want = spark.table(mono).drop("batch_id")
     assert(folded.exceptAll(want).isEmpty && want.exceptAll(folded).isEmpty,
       "healed streamed window index must equal the batch-built one")
     Seq(tbl, mono).foreach(graft.io.Bucketing.dropTable(spark, _))

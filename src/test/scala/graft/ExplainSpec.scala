@@ -548,8 +548,9 @@ class ExplainSpec extends SparkSpec {
     // day 0: index 60% of the corpus; day 1: append the next 20%
     graft.ops.Dedup.buildCorpusIndex(docs.filter(col("doc_id") % 5 >= 2),
       bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 4)
-    graft.ops.Dedup.appendToCorpusIndex(docs.filter(col("doc_id") % 5 === 1),
-      bandsTbl, sigsTbl, bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 4)
+    graft.ops.Dedup.appendCorpusIndexPartial(spark,
+      docs.filter(col("doc_id") % 5 === 1), bandsTbl, sigsTbl, batchId = 1L,
+      bands = 16, rowsPerBand = 8, shingleN = 3, buckets = 4)
     try staticShufflePlan {
       // the appended table must STILL plan as a bucketed scan — an
       // append that silently degraded the layout would re-shuffle the
@@ -575,13 +576,14 @@ class ExplainSpec extends SparkSpec {
       assert(appended.exceptAll(monolithic).isEmpty &&
              monolithic.exceptAll(appended).isEmpty,
         "append-maintained index must equal the monolithic rebuild")
-      // p59: compact the fragmented index — files fold to <=1/bucket,
-      // the probe plan keeps its bucketed scan + single delta exchange,
-      // and not one verdict changes
+      // p59: compact the fragmented index — files fold to <=1 per
+      // (batch, bucket) (the append is its own batch_id partition), the
+      // probe plan keeps its bucketed scan + single delta exchange, and
+      // not one verdict changes
       val beforeFiles = graft.io.Bucketing.dataFileCount(spark, bandsTbl)
-      assert(graft.io.Bucketing.compactBucketed(spark, bandsTbl) <= 4 &&
-             graft.io.Bucketing.compactBucketed(spark, sigsTbl) <= 4,
-        s"compaction must leave <=1 file per bucket (was $beforeFiles)")
+      assert(graft.io.Bucketing.compactBucketed(spark, bandsTbl) <= 2 * 4 &&
+             graft.io.Bucketing.compactBucketed(spark, sigsTbl) <= 2 * 4,
+        s"compaction must leave <=1 file per (batch, bucket) (was $beforeFiles)")
       val planC = planString(graft.ops.Dedup.bandFrame(dSig, 16, 8).as("d")
         .join(spark.table(bandsTbl).as("c"),
           col("d.band_id") === col("c.band_id") &&
@@ -676,15 +678,13 @@ class ExplainSpec extends SparkSpec {
   test("p91 probe: BM25 df index gated by a broadcast query-term list") {
     import org.apache.spark.sql.functions.{col, explode, lit, pmod, slice}
     val docs = Tables.documents(spark, sfDir)
-    val idx = "graft_p91spec_bm25df"; val st = "graft_p91spec_bm25st"
-    graft.io.Bucketing.dropTable(spark, idx)
-    graft.io.Bucketing.dropTable(spark, st)
+    val idx = "graft_p91spec_bm25df"
     graft.ops.TextAnalysis.buildBm25DfIndex(
-      docs.filter(col("doc_id") % 5 =!= 0), idx, st, buckets = 4)
+      docs.filter(col("doc_id") % 5 =!= 0), idx, buckets = 4)
     try {
       val probe = graft.ops.TextAnalysis.bm25TopKIncremental(spark,
         docs.filter(col("doc_id") % 5 === 0),
-        graft.ops.TextAnalysis.bm25QuerySet(docs), idx, st)
+        graft.ops.TextAnalysis.bm25QuerySet(docs), idx)
       val plan = planString(probe)
       // the full-vocab index is scanned, but only through the broadcast
       // query-term gate: every join that touches a corpus-sized input is
@@ -698,7 +698,6 @@ class ExplainSpec extends SparkSpec {
       assert(!plan.contains("CartesianProduct"), plan)
     } finally {
       graft.io.Bucketing.dropTable(spark, idx)
-      graft.io.Bucketing.dropTable(spark, st)
     }
   }
 

@@ -227,7 +227,7 @@ class ExtensionsSpec extends SparkSpec {
     spark.sql("PROBE bm25_df INDEX ext_bm_idx QUERIES ext_bm_q INTO " +
       "ext_bm_out AS SELECT * FROM ext_mh_delta").collect()
     assert(spark.table("ext_bm_out").collect().map(_.toString).toSet ===
-      graft.ops.TextAnalysis.bm25TopKIncrementalStreamed(spark, mhDelta,
+      graft.ops.TextAnalysis.bm25TopKIncremental(spark, mhDelta,
           bmQueries, "ext_bm_idx")
         .collect().map(_.toString).toSet,
       "SQL bm25 probe must equal the Scala streamed probe")
@@ -375,18 +375,54 @@ class ExtensionsSpec extends SparkSpec {
       "gated SQL ivf probe must equal the clean Scala build")
     iTbls.foreach(graft.io.Bucketing.dropTable(spark, _))
 
-    // APPEND into a batch-built (unpartitioned) layout fails loudly
-    // instead of truncating the index to one batch
-    graft.io.Bucketing.dropTable(spark, "ext_v_batch")
-    graft.ops.Dedup.buildShingleDfIndex(
-      Tables.documents(spark, sfDir).limit(20), "ext_v_batch")
-    val lay = intercept[IllegalArgumentException] {
-      spark.sql("APPEND TO shingle_df INDEX ext_v_batch BATCH 1 AS " +
-        "SELECT doc_id, text FROM parquet.`" + sfDir +
-        "/documents.parquet` WHERE doc_id % 50 = 0")
+    // a batch build is batch 0 of the streamed layout, so APPEND extends
+    // it: the result equals the streamed landing of the same rows
+    val docsSql = "parquet.`" + sfDir + "/documents.parquet`"
+    val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 20L)
+    val appendSrc = s"SELECT doc_id, text FROM $docsSql WHERE doc_id % 50 = 0"
+    graft.ops.Dedup.buildShingleDfIndex(docs, "ext_v_batch")
+    spark.sql(s"APPEND TO shingle_df INDEX ext_v_batch BATCH 1 AS $appendSrc")
+      .collect()
+    graft.io.Bucketing.dropTable(spark, "ext_v_streamed")
+    graft.ops.Dedup.appendShingleDfPartial(spark, docs,
+      "ext_v_streamed", 0L)
+    graft.ops.Dedup.appendShingleDfPartial(spark, spark.sql(appendSrc),
+      "ext_v_streamed", 1L)
+    assert(rows(spark.table("ext_v_batch")) ===
+      rows(spark.table("ext_v_streamed")),
+      "APPEND onto a batch build must equal the streamed landing")
+    Seq("ext_v_batch", "ext_v_streamed")
+      .foreach(graft.io.Bucketing.dropTable(spark, _))
+  }
+
+  test("a pre-batch-0 warehouse index (stamped, unpartitioned) fails APPEND, COMPACT and PROBE with a rebuild error and keeps its rows") {
+    // the shape a warehouse written before every build landed as batch 0
+    // holds: a plain bucketed table plus a separate kind ALTER
+    val t = "ext_legacy_shdf"
+    val docsSql = "parquet.`" + sfDir + "/documents.parquet`"
+    Seq(t, "ext_legacy_out").foreach(graft.io.Bucketing.dropTable(spark, _))
+    import spark.implicits._
+    (1 to 40).map(i => (f"$i%032x", i.toLong)).toDF("h", "df_corpus")
+      .write.bucketBy(8, "h").sortBy("h").format("parquet").saveAsTable(t)
+    spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES " +
+      s"('${graft.io.Bucketing.KindProperty}' = 'shingle-df')")
+    def rowsOf: Seq[String] =
+      spark.table(t).collect().map(_.toString).sorted.toSeq
+    val before = rowsOf
+    assert(before.nonEmpty)
+    val statements = Seq(
+      s"APPEND TO shingle_df INDEX $t BATCH 1 AS " +
+        s"SELECT doc_id, text FROM $docsSql WHERE doc_id % 50 = 0",
+      s"COMPACT INDEX $t",
+      s"PROBE shingle_df INDEX $t INTO ext_legacy_out AS " +
+        s"SELECT doc_id, text FROM $docsSql WHERE doc_id % 5 = 0")
+    for (sql <- statements) withClue(sql + ": ") {
+      val e = intercept[IllegalArgumentException](spark.sql(sql).collect())
+      assert(e.getMessage.toLowerCase.contains("rebuild"), e.getMessage)
+      assert(e.getMessage.contains("not batch_id-partitioned"), e.getMessage)
+      assert(rowsOf === before, "the refused statement must leave the rows")
     }
-    assert(lay.getMessage.contains("batch_id-partitioned"))
-    graft.io.Bucketing.dropTable(spark, "ext_v_batch")
+    Seq(t, "ext_legacy_out").foreach(graft.io.Bucketing.dropTable(spark, _))
   }
 
   test("PROBE ivf scores a delta source against the pinned CREATE-time quantizer artifact, never a probe-source re-derivation (ADVICE r20)") {

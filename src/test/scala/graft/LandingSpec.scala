@@ -7,13 +7,14 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.apache.spark.sql.types.LongType
 
-/** The landing contract every streamed index table shares: whatever the
-  * family, `Bucketing.landPartial` creates the table with one DDL and
+/** The landing contract every index table shares: whatever the family,
+  * and whether a batch build (batch 0) or a streamed batch lands it,
+  * `Bucketing.landPartial` creates the table with one DDL and
   * lands each batch as its own `batch_id` partition, bucketed and sorted
   * on the family's probe keys, with the kind (and geometry) stamps on the
   * table from its creation. Driven through each family's public
-  * `append*Partial` entry point, so a family that stops routing through
-  * the one landing path fails here. */
+  * `append*Partial` and `build*` entry points, so a family that stops
+  * routing through the one landing path fails here. */
 class LandingSpec extends SparkSpec {
 
   private val Buckets = 3
@@ -96,6 +97,53 @@ class LandingSpec extends SparkSpec {
         Seq("batch_id=0", "batch_id=1"))
     }
     (Cents +: contracts.map(_.table)).foreach(Bucketing.dropTable(spark, _))
+  }
+
+  test("all 9 batch builders land batch 0 of the same layout: batch_id partitions, sorted on the bucket keys, stamped at create") {
+    val d = Tables.documents(spark, sfDir).filter(col("doc_id") < 20L)
+    val e = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 40L)
+    // each builder and the tables it lands (the exact graft.* stamps)
+    val builds: Seq[(() => Unit, Seq[Landed])] = Seq(
+      (() => Dedup.buildCorpusIndex(d, "lb_mh_bands", "lb_mh_sigs", buckets = Buckets),
+        Seq(Landed("lb_mh_bands", Seq("band_id", "band_hash"), "minhash-bands"),
+          Landed("lb_mh_sigs", Seq("doc_id"), "minhash-sigs"))),
+      (() => Similarity.buildVectorIndex(e, "lb_vec_bands", "lb_vec_payload",
+          tables = 4, bitsPerTable = 6, buckets = Buckets),
+        Seq(Landed("lb_vec_bands", Seq("t", "bucket"), "vec-bands", geom),
+          Landed("lb_vec_payload", Seq("corpus_id"), "vec-payload", geom))),
+      (() => Similarity.buildIvfIndex(e, "lb_ivf", nCentroids = 4, buckets = Buckets),
+        Seq(Landed("lb_ivf", Seq("cell"), "ivf-assign",
+          Map(Bucketing.CentroidsProperty -> "4")))),
+      (() => Dedup.buildShingleDfIndex(d, "lb_shingle_df", buckets = Buckets),
+        Seq(Landed("lb_shingle_df", Seq("h"), "shingle-df"))),
+      (() => TextAnalysis.buildLineDfIndex(d, "lb_line_df", buckets = Buckets),
+        Seq(Landed("lb_line_df", Seq("h"), "line-df"))),
+      (() => Dedup.buildWindowDfIndex(d, "lb_window_df", buckets = Buckets),
+        Seq(Landed("lb_window_df", Seq("h"), "window-df"))),
+      (() => TextAnalysis.buildBenchGramIndex(d, "lb_bench_grams", buckets = Buckets),
+        Seq(Landed("lb_bench_grams", Seq("gram"), "bench-grams"))),
+      (() => TextAnalysis.buildBm25DfIndex(d, "lb_bm25_df", buckets = Buckets),
+        Seq(Landed("lb_bm25_df", Seq("term"), "bm25-df"))),
+      // the one single-bucket table: the pinned centroid artifact
+      (() => Similarity.buildIvfCentroids(e, "lb_ivf_cents", nCentroids = 4),
+        Seq(Landed("lb_ivf_cents", Seq("cent_id"), "ivf-centroids"))))
+    val cat = spark.sessionState.catalog
+    for ((build, tables) <- builds) {
+      build()
+      for (c <- tables) withClue(s"${c.table} (${c.kind}): ") {
+        val meta = cat.getTableMetadata(TableIdentifier(c.table))
+        assert(meta.partitionColumnNames === Seq("batch_id"))
+        val spec = meta.bucketSpec.getOrElse(fail("not bucketed"))
+        assert(spec.bucketColumnNames === c.keys)
+        assert(spec.sortColumnNames === c.keys)
+        assert(meta.properties.filter(_._1.startsWith("graft.")) ===
+          Map(Bucketing.KindProperty -> c.kind) ++ c.stamps,
+          "exactly the kind and geometry stamps")
+        assert(cat.listPartitionNames(TableIdentifier(c.table)) ===
+          Seq("batch_id=0"))
+        Bucketing.dropTable(spark, c.table)
+      }
+    }
   }
 
   test("landPartial evaluates its stamps only when it creates the table") {

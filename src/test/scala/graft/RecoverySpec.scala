@@ -257,7 +257,7 @@ class RecoverySpec extends SparkSpec {
     graft.ops.TextAnalysis.buildLineDfIndex(docs, batchTbl)
     val folded = spark.table(streamedTbl).groupBy("h")
       .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
-    val want = spark.table(batchTbl)
+    val want = spark.table(batchTbl).drop("batch_id")
     assert(folded.exceptAll(want).isEmpty && want.exceptAll(folded).isEmpty,
       "recovered streamed index must fold to the batch-built dfs")
     graft.io.Bucketing.dropTable(spark, streamedTbl)
@@ -308,7 +308,7 @@ class RecoverySpec extends SparkSpec {
     graft.ops.Dedup.buildWindowDfIndex(docs, batchTbl, k = 8)
     val folded = spark.table(streamedTbl).groupBy("h")
       .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
-    val want = spark.table(batchTbl)
+    val want = spark.table(batchTbl).drop("batch_id")
     assert(folded.exceptAll(want).isEmpty && want.exceptAll(folded).isEmpty,
       "recovered streamed window index must fold to the batch-built counts")
     graft.io.Bucketing.dropTable(spark, streamedTbl)
@@ -598,10 +598,14 @@ class RecoverySpec extends SparkSpec {
     val tbl = "graft_rec_compact_tbl"
     Seq(tbl, s"${tbl}_compacting", s"${tbl}_precompact")
       .foreach(Bucketing.dropTable(spark, _))
-    // two append waves -> fragmented buckets, the state compaction fixes
-    Bucketing.writeBucketed(docs.filter(col("doc_id") % 2 === 0), tbl, "doc_id", 4)
-    Bucketing.writeBucketed(docs.filter(col("doc_id") % 2 === 1), tbl, "doc_id", 4,
-      org.apache.spark.sql.SaveMode.Append)
+    // two landings, each spread over several write tasks -> fragmented
+    // buckets, the state compaction fixes
+    def land(rows: org.apache.spark.sql.DataFrame, batchId: Long): Unit =
+      Bucketing.landPartial(spark, rows.repartition(3), tbl, "compact-spec",
+        Seq("doc_id"), buckets = 4, batchId)
+    def live = spark.table(tbl).drop("batch_id")
+    land(docs.filter(col("doc_id") % 2 === 0), 0L)
+    land(docs.filter(col("doc_id") % 2 === 1), 1L)
     // kill in the only window where the table name does not resolve:
     // between rename-out (original -> _precompact) and rename-in
     intercept[IllegalStateException] {
@@ -615,19 +619,18 @@ class RecoverySpec extends SparkSpec {
     // repair: the _precompact backup is the complete original — restore
     // it; nothing was lost because nothing was dropped before rename-in
     assert(Bucketing.repairCompaction(spark, tbl), "repair must restore the table")
-    val restored = spark.table(tbl)
+    val restored = live
     assert(restored.count() === docs.count())
     assert(restored.exceptAll(docs).isEmpty && docs.exceptAll(restored).isEmpty,
       "restored table must be the full pre-compaction content")
     // compaction is idempotent: re-running after repair completes the job
     val files = Bucketing.compactBucketed(spark, tbl)
-    assert(files <= 4, s"expected <=1 file per bucket, got $files")
-    val got = spark.table(tbl)
+    assert(files <= 8, s"expected <=1 file per (batch, bucket), got $files")
+    val got = live
     assert(got.exceptAll(docs).isEmpty && docs.exceptAll(got).isEmpty)
     // kill AFTER the swap (before backup cleanup): table is live and
     // compacted; the next maintenance entry just sweeps the straggler
-    Bucketing.writeBucketed(docs.limit(50), tbl, "doc_id", 4,
-      org.apache.spark.sql.SaveMode.Append)
+    land(docs.limit(50), 2L)
     intercept[IllegalStateException] {
       Bucketing.withFailpoint(tbl, "drop-leftover") {
         Bucketing.compactBucketed(spark, tbl)

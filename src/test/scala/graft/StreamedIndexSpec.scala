@@ -260,7 +260,7 @@ class StreamedIndexSpec extends SparkSpec {
     // so ANY leak flips that doc's verdict
     val poison = delta.withColumn("doc_id", col("doc_id") + lit(10000000L))
     Dedup.buildCorpusIndex(corpus, "si_mh_bands", "si_mh_sigs")
-    Dedup.appendToCorpusIndex(poison, "si_mh_bands", "si_mh_sigs")
+    Dedup.appendCorpusIndexPartial(spark, poison, "si_mh_bands", "si_mh_sigs", 1L)
     Dedup.buildCorpusIndex(corpus, "si_mh_bands_clean", "si_mh_sigs_clean")
     val want = rows(Dedup.incrementalVerdictsAgainstIndex(spark, delta,
       "si_mh_bands_clean", "si_mh_sigs_clean"))
@@ -454,8 +454,8 @@ class StreamedIndexSpec extends SparkSpec {
     TextAnalysis.retractBm25DfPartial(spark, retired, "si_bm_ret", 1L)
     TextAnalysis.appendBm25DfPartial(spark,
       corpus.filter(col("doc_id") % 7 =!= 1), "si_bm_reb", 0L)
-    assert(rows(TextAnalysis.bm25TopKIncrementalStreamed(spark, delta, queries, "si_bm_ret"))
-      === rows(TextAnalysis.bm25TopKIncrementalStreamed(spark, delta, queries, "si_bm_reb")),
+    assert(rows(TextAnalysis.bm25TopKIncremental(spark, delta, queries, "si_bm_ret"))
+      === rows(TextAnalysis.bm25TopKIncremental(spark, delta, queries, "si_bm_reb")),
       "bm25 scorer must see the rebuild-without dfs and stats")
     drop("si_bm_ret", "si_bm_reb")
   }
@@ -820,7 +820,7 @@ class StreamedIndexSpec extends SparkSpec {
     TextAnalysis.appendBm25DfPartial(spark, corpus, "si_f4_bm", 0L)
     TextAnalysis.retractBm25DfPartial(spark, retired, "si_f4_bm", 1L)
     foldShrinksKeepingProbe("si_f4_bm",
-      () => rows(TextAnalysis.bm25TopKIncrementalStreamed(spark, delta,
+      () => rows(TextAnalysis.bm25TopKIncremental(spark, delta,
         TextAnalysis.bm25QuerySet(docs), "si_f4_bm")))
     drop("si_f4_line", "si_f4_win", "si_f4_tok", "si_f4_bm")
   }

@@ -210,7 +210,7 @@ class TextAnalysisSpec extends SparkSpec {
     TextAnalysis.buildLineDfIndex(corpus, batchTbl, byLines = true)
     val folded = spark.table(tbl).groupBy("h")
       .agg(sum(col("df_corpus")).cast("long").as("df_corpus"))
-    val wantIdx = spark.table(batchTbl)
+    val wantIdx = spark.table(batchTbl).drop("batch_id")
     assert(folded.exceptAll(wantIdx).isEmpty && wantIdx.exceptAll(folded).isEmpty,
       "healed streamed index must fold to the batch-built dfs")
     graft.io.Bucketing.dropTable(spark, tbl)
@@ -519,35 +519,28 @@ class TextAnalysisSpec extends SparkSpec {
         explode(slice(graft.ops.TextAnalysis.tokens(col("text")), 1, 3)).as("term"))
       .distinct()
     val sIdx = "bm25df_stream_spec"; val mIdx = "bm25df_mono_spec"
-    val mSt = "bm25st_mono_spec"
-    Seq(sIdx, mIdx, mSt).foreach(graft.io.Bucketing.dropTable(spark, _))
+    Seq(sIdx, mIdx).foreach(graft.io.Bucketing.dropTable(spark, _))
     // three disjoint batches stream in
     for (b <- 0 until 3)
       TextAnalysis.appendBm25DfPartial(spark,
         corpus.filter(pmod(col("doc_id"), lit(3)) === b), sIdx, b.toLong,
         buckets = 4)
-    TextAnalysis.buildBm25DfIndex(corpus, mIdx, mSt, buckets = 4)
+    TextAnalysis.buildBm25DfIndex(corpus, mIdx, buckets = 4)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val streamed = rows(TextAnalysis.bm25TopKIncrementalStreamed(
+    val streamed = rows(TextAnalysis.bm25TopKIncremental(
       spark, delta, queries, sIdx))
     val mono = rows(TextAnalysis.bm25TopKIncremental(
-      spark, delta, queries, mIdx, mSt))
+      spark, delta, queries, mIdx))
     assert(streamed === mono,
       "stream-maintained and batch-built BM25 indexes must be interchangeable")
     // replaying a committed batch (the at-least-once foreachBatch
     // window) must be a no-op: same partition, same content
     TextAnalysis.appendBm25DfPartial(spark,
       corpus.filter(pmod(col("doc_id"), lit(3)) === 1), sIdx, 1L, buckets = 4)
-    assert(rows(TextAnalysis.bm25TopKIncrementalStreamed(
-      spark, delta, queries, sIdx)) === mono, "batch replay must be idempotent")
-    // handing a STREAMED table to the BATCH probe must auto-delegate to
-    // the streamed fold (kind stamps match, so without the batch_id
-    // guard this would silently sum one df row per partition)
     assert(rows(TextAnalysis.bm25TopKIncremental(
-      spark, delta, queries, sIdx, mSt)) === mono,
-      "batch probe must detect the streamed layout and fold it")
-    Seq(sIdx, mIdx, mSt).foreach(graft.io.Bucketing.dropTable(spark, _))
+      spark, delta, queries, sIdx)) === mono, "batch replay must be idempotent")
+    Seq(sIdx, mIdx).foreach(graft.io.Bucketing.dropTable(spark, _))
   }
 
   test("incremental BM25 against the persisted df index equals the global pass") {
@@ -566,11 +559,9 @@ class TextAnalysisSpec extends SparkSpec {
       .select(col("doc_id").as("query_id"),
         explode(slice(graft.ops.TextAnalysis.tokens(col("text")), 1, 3)).as("term"))
       .distinct()
-    val idx = "bm25df_idx_spec"; val st = "bm25st_idx_spec"
-    graft.io.Bucketing.dropTable(spark, idx)
-    graft.io.Bucketing.dropTable(spark, st)
-    TextAnalysis.buildBm25DfIndex(corpus, idx, st, buckets = 4)
-    val got = TextAnalysis.bm25TopKIncremental(spark, delta, queries, idx, st)
+    val idx = "bm25df_idx_spec"
+    TextAnalysis.buildBm25DfIndex(corpus, idx, buckets = 4)
+    val got = TextAnalysis.bm25TopKIncremental(spark, delta, queries, idx)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
     // contract: identical to the GLOBAL pass over corpus ∪ delta with
@@ -590,6 +581,5 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got.nonEmpty && got.forall(r => deltaIds(r._3)),
       "only delta docs may appear as candidates")
     graft.io.Bucketing.dropTable(spark, idx)
-    graft.io.Bucketing.dropTable(spark, st)
   }
 }
