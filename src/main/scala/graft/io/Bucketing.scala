@@ -87,6 +87,18 @@ object Bucketing {
     requireLayout(table,
       spark.sessionState.catalog.getTableMetadata(identOf(table)), Some(expected))
 
+  /** THE PROBE ENTRY of an index table: repair, check, read. The repair
+    * comes first because a compaction swap killed mid-swap leaves the
+    * index resolvable only under a swap name, or — between
+    * rename-into-place and the partition recover — resolving, partition
+    * names listed, while every scan reads empty; probed unrepaired, that
+    * table silently matches nothing. Returns the live rows. */
+  def openIndex(spark: SparkSession, table: String, kind: String): DataFrame = {
+    repairCompaction(spark, table)
+    requireKind(spark, table, kind)
+    spark.table(table)
+  }
+
   /** THE LAYOUT CHECK probes ([[requireKind]]), appends
     * ([[appendPartialInto]]) and rewrites ([[repairedMeta]]) share: the
     * table is batch_id-partitioned and carries a kind stamp (`expected`,

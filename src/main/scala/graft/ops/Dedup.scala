@@ -328,17 +328,18 @@ object Dedup {
                                       rowsPerBand: Int = 8, shingleN: Int = 3,
                                       threshold: Double = 0.7,
                                       tombstonesTable: Option[String] = None): DataFrame = {
+    val bandsC = graft.io.Bucketing.openIndex(spark, bandsTable, "minhash-bands")
+    val sigsC = graft.io.Bucketing.openIndex(spark, sigsTable, "minhash-sigs")
     val dSig = sigFrame(delta, bands * rowsPerBand, shingleN)
     val candidates = bandFrame(dSig, bands, rowsPerBand).as("d")
-      .join(graft.io.Tombstones.filterRetracted(spark,
-          spark.table(bandsTable), "doc_id", tombstonesTable,
-          "minhash-tombs").as("c"),
+      .join(graft.io.Tombstones.filterRetracted(spark, bandsC, "doc_id",
+          tombstonesTable, "minhash-tombs").as("c"),
         col("d.band_id") === col("c.band_id") &&
         col("d.band_hash") === col("c.band_hash"))
       .select(col("d.doc_id").as("new_id"), col("c.doc_id").as("corpus_id"))
       .distinct()
-    val cs = graft.io.Tombstones.filterRetracted(spark,
-        spark.table(sigsTable), "doc_id", tombstonesTable, "minhash-tombs")
+    val cs = graft.io.Tombstones.filterRetracted(spark, sigsC, "doc_id",
+        tombstonesTable, "minhash-tombs")
       .select(col("doc_id").as("corpus_id"),
         col("sig").as("csig"), shingles(col("text"), shingleN).as("cgrams"))
     incrementalVerdictsFrom(delta, dSig, cs, candidates, shingleN, threshold)
@@ -794,14 +795,10 @@ object Dedup {
                                  delta: DataFrame, indexTable: String,
                                  k: Int = 8,
                                  skewSafe: Boolean = false): DataFrame = {
-    // probe-side crash repair: a maintenance compaction killed mid-swap
-    // leaves the index under its backup name; restore before resolving
-    graft.io.Bucketing.repairCompaction(spark, indexTable)
     // family stamp first: the line-df index shares this exact column
     // layout (md5 digests vs xxhash64 window hashes), so the column
     // guard below cannot catch the most plausible wrong table
-    graft.io.Bucketing.requireKind(spark, indexTable, "window-df")
-    val idxRaw = spark.table(indexTable)
+    val idxRaw = graft.io.Bucketing.openIndex(spark, indexTable, "window-df")
     // loud layout guard (the lineDedupIncremental device): a wrong
     // table silently joined here would "dedup" the delta against
     // garbage counts — the worst failure mode for a destructive rewrite
@@ -970,10 +967,7 @@ object Dedup {
   def noveltyIncremental(spark: org.apache.spark.sql.SparkSession,
                          delta: DataFrame, table: String,
                          n: Int = 3): DataFrame = {
-    // probe-side crash repair + family stamp, the line-df discipline
-    graft.io.Bucketing.repairCompaction(spark, table)
-    graft.io.Bucketing.requireKind(spark, table, "shingle-df")
-    val idxRaw = spark.table(table)
+    val idxRaw = graft.io.Bucketing.openIndex(spark, table, "shingle-df")
     require(Set("h", "df_corpus").subsetOf(idxRaw.columns.toSet),
       s"$table is not a shingle-df index: expected columns (h, df_corpus" +
         s", batch_id) from buildShingleDfIndex/appendShingleDfPartial, " +

@@ -245,9 +245,10 @@ object Similarity {
                           queryStride: Int = 50, nCentroids: Int = 16,
                           nProbe: Int = 4,
                           tombstonesTable: Option[String] = None): DataFrame = {
+    val idx = graft.io.Bucketing.openIndex(spark, table, "ivf-assign")
     val (_, probes) = ivfParts(embeddings, queryStride, nCentroids, nProbe)
-    ivfRank(graft.io.Tombstones.filterRetracted(spark, spark.table(table),
-      "vec_id", tombstonesTable, "ivf-tombs"), probes, k)
+    ivfRank(graft.io.Tombstones.filterRetracted(spark, idx, "vec_id",
+      tombstonesTable, "ivf-tombs"), probes, k)
   }
 
   /** [[ivfTopKAgainstIndex]] with probes derived against an EXPLICIT
@@ -266,11 +267,12 @@ object Similarity {
       table: String, centroidsTable: String, k: Int = 10,
       queryStride: Int = 50, nProbe: Int = 4,
       tombstonesTable: Option[String] = None): DataFrame = {
-    graft.io.Bucketing.requireKind(spark, centroidsTable, "ivf-centroids")
-    val probes = ivfProbes(embeddings, spark.table(centroidsTable),
+    val idx = graft.io.Bucketing.openIndex(spark, table, "ivf-assign")
+    val probes = ivfProbes(embeddings,
+      graft.io.Bucketing.openIndex(spark, centroidsTable, "ivf-centroids"),
       queryStride, nProbe)
-    ivfRank(graft.io.Tombstones.filterRetracted(spark, spark.table(table),
-      "vec_id", tombstonesTable, "ivf-tombs"), probes, k)
+    ivfRank(graft.io.Tombstones.filterRetracted(spark, idx, "vec_id",
+      tombstonesTable, "ivf-tombs"), probes, k)
   }
 
   /** Shared IVF coarse-quantizer stages: `assign` = (vec_id, cell,
@@ -358,14 +360,12 @@ object Similarity {
                              batch: DataFrame, centroidsTable: String,
                              table: String, batchId: Long,
                              buckets: Int = 8): Unit = {
-    graft.io.Bucketing.requireKind(spark, centroidsTable, "ivf-centroids")
+    val cents = graft.io.Bucketing.openIndex(spark, centroidsTable, "ivf-centroids")
     // geometry stamp: centroid count + the pinned artifact's name, so
     // SQL APPEND/PROBE re-read the provisioning instead of guessing
-    graft.io.Bucketing.landPartial(spark,
-      ivfAssignAgainst(batch, spark.table(centroidsTable)), table,
-      "ivf-assign", Seq("cell"), buckets, batchId,
-      Map(graft.io.Bucketing.CentroidsProperty ->
-          spark.table(centroidsTable).count().toString,
+    graft.io.Bucketing.landPartial(spark, ivfAssignAgainst(batch, cents),
+      table, "ivf-assign", Seq("cell"), buckets, batchId,
+      Map(graft.io.Bucketing.CentroidsProperty -> cents.count().toString,
         graft.io.Bucketing.CentroidsTableProperty -> centroidsTable))
   }
 
@@ -716,12 +716,13 @@ object Similarity {
       bandsTable: String, vecsTable: String, threshold: Double = 0.45,
       tables: Int = 8, bitsPerTable: Int = 0,
       tombstonesTable: Option[String] = None): DataFrame = {
-    val vecsC = spark.table(vecsTable)
+    val bandsC = graft.io.Bucketing.openIndex(spark, bandsTable, "vec-bands")
+    val vecsC = graft.io.Bucketing.openIndex(spark, vecsTable, "vec-payload")
     val b = if (bitsPerTable > 0) bitsPerTable
             else adaptiveBitsPerTable(vecsC.count())
     incrementalCosineFrom(delta,
-      graft.io.Tombstones.filterRetracted(spark, spark.table(bandsTable),
-        "corpus_id", tombstonesTable, "vec-tombs"),
+      graft.io.Tombstones.filterRetracted(spark, bandsC, "corpus_id",
+        tombstonesTable, "vec-tombs"),
       graft.io.Tombstones.filterRetracted(spark, vecsC, "corpus_id",
         tombstonesTable, "vec-tombs"),
       tables, b, threshold)

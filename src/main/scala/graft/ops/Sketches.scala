@@ -88,9 +88,7 @@ object Sketches {
   def kmvProfileFromStreamedIndex(spark: org.apache.spark.sql.SparkSession,
                                   docs: DataFrame, table: String,
                                   k: Int = 64): DataFrame = {
-    graft.io.Bucketing.repairCompaction(spark, table)
-    graft.io.Bucketing.requireKind(spark, table, "kmv-profile")
-    val idx = spark.table(table)
+    val idx = graft.io.Bucketing.openIndex(spark, table, "kmv-profile")
     val sk = idx.groupBy("lang")
       .agg(graft.functions.KmvAggregator.kmv(k)(col("h")).as("mins"))
     val exact = docs.select(col("lang"),
@@ -182,9 +180,7 @@ object Sketches {
                                docs: DataFrame, table: String, n: Int = 2,
                                k: Int = 10, depth: Int = 4,
                                width: Int = 4096): DataFrame = {
-    graft.io.Bucketing.repairCompaction(spark, table)
-    graft.io.Bucketing.requireKind(spark, table, s"countmin-$depth-$width")
-    val folded = spark.table(table).groupBy("pos")
+    val folded = graft.io.Bucketing.openIndex(spark, table, s"countmin-$depth-$width").groupBy("pos")
       .agg(sum(col("cnt")).as("cnt")).collect()
     val sketch = new Array[Long](depth * width)
     folded.foreach(r => sketch(r.getInt(0)) = r.getLong(1))
@@ -271,10 +267,9 @@ object Sketches {
     * probe (p52/p63/p65/p71/p91). */
   def driftProbeIncremental(spark: org.apache.spark.sql.SparkSession,
                             delta: DataFrame, table: String): DataFrame = {
-    graft.io.Bucketing.repairCompaction(spark, table)
-    graft.io.Bucketing.requireKind(spark, table, "tok-counts")
+    val idx = graft.io.Bucketing.openIndex(spark, table, "tok-counts")
     // retraction-aware fold (zero folds absent, negative folds loud)
-    val corpus = TextAnalysis.foldTokenCounts(spark.table(table), table)
+    val corpus = TextAnalysis.foldTokenCounts(idx, table)
       .select(lit("corpus").as("source"), col("tok"), col("cnt"))
     val dd = delta
       .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
@@ -337,9 +332,7 @@ object Sketches {
     * column — because the histogram is exactly additive. */
   def log2HistogramFromStreamedIndex(spark: org.apache.spark.sql.SparkSession,
                                      table: String): DataFrame = {
-    graft.io.Bucketing.repairCompaction(spark, table)
-    graft.io.Bucketing.requireKind(spark, table, "log2-hist")
-    val idx = spark.table(table)
+    val idx = graft.io.Bucketing.openIndex(spark, table, "log2-hist")
     idx.groupBy(col("lang"), col("bin"))
       .agg(sum(col("cnt")).as("cnt"))
       .select(col("lang"), col("bin"), col("cnt"),

@@ -228,16 +228,12 @@ object TextAnalysis {
                            segTokens: Int = 12, maxDocFreq: Int = 1,
                            byLines: Boolean = false): DataFrame = {
     require(maxDocFreq >= 1, "maxDocFreq < 1 would delete every segment")
-    // probe-side crash repair: a maintenance compaction killed mid-swap
-    // leaves the index under its backup name; restore before resolving
-    graft.io.Bucketing.repairCompaction(spark, indexTable)
     // family stamp first: the window-df index shares this exact column
     // layout, so the column guard below cannot catch it
-    graft.io.Bucketing.requireKind(spark, indexTable, "line-df")
+    val idxRaw = graft.io.Bucketing.openIndex(spark, indexTable, "line-df")
     val segs = segmented(delta, segTokens, byLines)
     val deltaDf = segs.select("h", "doc_id").distinct()
       .groupBy("h").count().withColumnRenamed("count", "df_delta")
-    val idxRaw = spark.table(indexTable)
     // loud layout guard: accept exactly the shape this module writes —
     // a wrong table silently joined here would "dedup" against garbage
     // dfs, the worst possible failure mode for a curation gate
@@ -590,9 +586,7 @@ object TextAnalysis {
   def vocabCoverageFromStreamedIndex(spark: org.apache.spark.sql.SparkSession,
                                      docs: DataFrame, table: String,
                                      vocabSize: Int = 256): DataFrame = {
-    graft.io.Bucketing.repairCompaction(spark, table)
-    graft.io.Bucketing.requireKind(spark, table, "tok-counts")
-    val idx = spark.table(table)
+    val idx = graft.io.Bucketing.openIndex(spark, table, "tok-counts")
     coverageAudit(
       docs.select(col("lang"), explode(tokens(col("text"))).as("tok")),
       topVocab(foldTokenCounts(idx, table), vocabSize))
@@ -612,9 +606,7 @@ object TextAnalysis {
     * corpus. */
   def unigramLogProbIncremental(spark: org.apache.spark.sql.SparkSession,
                                 delta: DataFrame, table: String): DataFrame = {
-    graft.io.Bucketing.repairCompaction(spark, table)
-    graft.io.Bucketing.requireKind(spark, table, "tok-counts")
-    val idx = spark.table(table)
+    val idx = graft.io.Bucketing.openIndex(spark, table, "tok-counts")
     val idxFold = foldTokenCounts(idx, table)
       .withColumnRenamed("cnt", "cnt_idx")
     val idxTotal = idx.agg(coalesce(sum(col("cnt")), lit(0L)).as("t_idx"))
@@ -934,11 +926,10 @@ object TextAnalysis {
   def decontaminationAgainstIndex(spark: org.apache.spark.sql.SparkSession,
                                   delta: DataFrame, indexTable: String,
                                   n: Int = 8): DataFrame = {
-    graft.io.Bucketing.repairCompaction(spark, indexTable)
-    graft.io.Bucketing.requireKind(spark, indexTable, "bench-grams")
+    val idx = graft.io.Bucketing.openIndex(spark, indexTable, "bench-grams")
     val contaminated = delta
       .select(col("doc_id"), explode(Dedup.shingles(col("text"), n)).as("gram"))
-      .join(spark.table(indexTable).select(col("gram")).distinct(), Seq("gram"))
+      .join(idx.select(col("gram")).distinct(), Seq("gram"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_contaminated"))
     delta.select(col("doc_id"),
@@ -1306,11 +1297,7 @@ object TextAnalysis {
                           delta: DataFrame, queries: DataFrame,
                           idxTbl: String, k: Int = 5,
                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // probe-side crash repair: a maintenance compaction killed mid-swap
-    // leaves the index under its backup name; restore before resolving
-    graft.io.Bucketing.repairCompaction(spark, idxTbl)
-    graft.io.Bucketing.requireKind(spark, idxTbl, "bm25-df")
-    val idxRaw = spark.table(idxTbl)
+    val idxRaw = graft.io.Bucketing.openIndex(spark, idxTbl, "bm25-df")
     val st = idxRaw
       .filter(col("term") === StatNDocs || col("term") === StatTotTokens)
       .groupBy("term").agg(sum(col("df_corpus")).cast("long").as("v"))

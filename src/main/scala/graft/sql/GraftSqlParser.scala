@@ -496,8 +496,10 @@ case class ProbeIndexCommand(family: String, tables: Seq[String],
           tables(0), tables(1), tombstonesTable = tombstones)
       case "vector" =>
         // banding geometry re-read from the stamps every vec-bands table
-        // carries from its one CREATE (build or streamed batch alike)
-        graft.io.Bucketing.requireKind(spark, tables(0), "vec-bands")
+        // carries from its one CREATE (build or streamed batch alike),
+        // after the probe-side repair: a swap killed mid-rename leaves no
+        // table under the name to read them from
+        graft.io.Bucketing.openIndex(spark, tables(0), "vec-bands")
         val lshT = GraftSqlParser.pinned(spark, tables(0),
           graft.io.Bucketing.LshTablesProperty, None, "TABLES")
         val lshB = GraftSqlParser.pinned(spark, tables(0),
@@ -515,6 +517,7 @@ case class ProbeIndexCommand(family: String, tables: Seq[String],
         // supports), making the probed cells silently miss the index's
         // stored cells. An unstamped table is an error, not a fallback:
         // an index cannot be scored against a different quantizer.
+        graft.io.Bucketing.openIndex(spark, tables(0), "ivf-assign")
         val centsTbl = graft.io.Bucketing.tableProperty(spark, tables(0),
           graft.io.Bucketing.CentroidsTableProperty).getOrElse(
           throw new IllegalArgumentException(

@@ -1103,6 +1103,39 @@ class ChaosSpec extends SparkSpec {
     Seq(refB, refP, "kill_vec_out").foreach(walkCleanup)
   }
 
+  test("vector and ivf probes after a compaction killed at recover-partitions equal a clean probe") {
+    // the window between rename-into-place and the partition recover:
+    // the table resolves and lists its landed batch, yet every scan
+    // reads empty until a repair re-runs the recover — so each probe
+    // entry must repair before it reads, or it silently matches nothing
+    val emb = Tables.embeddings(spark, sfDir)
+    val corpus = emb.filter(col("vec_id") % 5 =!= 0)
+    emb.filter(col("vec_id") % 5 === 0).createOrReplaceTempView("rw_vec_delta")
+    val (b, p, ivf) = ("rw_vb", "rw_vp", "rw_ivf")
+    Seq(b, p, ivf, "rw_vec_out").foreach(walkCleanup)
+    graft.ops.Similarity.buildVectorIndex(corpus, b, p, buckets = 2)
+    graft.ops.Similarity.buildIvfIndex(emb, ivf, nCentroids = 16, buckets = 2)
+    def vecProbe(): Seq[String] = {
+      spark.sql(s"PROBE vector INDEX $b, $p INTO rw_vec_out AS " +
+        "SELECT vec_id, embedding FROM rw_vec_delta").collect()
+      walkRows("rw_vec_out")
+    }
+    def ivfProbe(): Seq[String] =
+      graft.ops.Similarity.ivfTopKAgainstIndex(spark, emb, ivf)
+        .collect().map(_.toString).sorted.toSeq
+    val (wantVec, wantIvf) = (vecProbe(), ivfProbe())
+    assert(wantVec.exists(_.contains(",true,")) && wantIvf.nonEmpty,
+      "vacuous fixture: the probes must find something")
+    Seq(b, p, ivf).foreach { t =>
+      walkCrash(t, "recover-partitions")(Bucketing.compactBucketed(spark, t))
+      assert(Bucketing.hasLandedBatch(spark, t, 0L) && spark.table(t).count() === 0L,
+        s"$t must be in the window: batch 0 listed, every scan empty")
+    }
+    assert(vecProbe() === wantVec, "SQL PROBE vector must repair both tables first")
+    assert(ivfProbe() === wantIvf, "the ivf probe must repair its index first")
+    Seq(b, p, ivf, "rw_vec_out").foreach(walkCleanup)
+  }
+
   test("a first minhash retraction batch killed at create or at append replays into a stamped tombstone table equal to a clean landing") {
     // doc 7 is mDelta's exact near-dup source, so the gate changes the probe
     val retired = mCorpus.filter(col("doc_id").isin(3L, 7L))

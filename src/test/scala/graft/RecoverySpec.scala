@@ -598,14 +598,13 @@ class RecoverySpec extends SparkSpec {
     val tbl = "graft_rec_compact_tbl"
     Seq(tbl, s"${tbl}_compacting", s"${tbl}_precompact")
       .foreach(Bucketing.dropTable(spark, _))
-    // two landings, each spread over several write tasks -> fragmented
+    // one landing spread over several write tasks -> fragmented
     // buckets, the state compaction fixes
     def land(rows: org.apache.spark.sql.DataFrame, batchId: Long): Unit =
       Bucketing.landPartial(spark, rows.repartition(3), tbl, "compact-spec",
         Seq("doc_id"), buckets = 4, batchId)
     def live = spark.table(tbl).drop("batch_id")
-    land(docs.filter(col("doc_id") % 2 === 0), 0L)
-    land(docs.filter(col("doc_id") % 2 === 1), 1L)
+    land(docs, 0L)
     // kill in the only window where the table name does not resolve:
     // between rename-out (original -> _precompact) and rename-in
     intercept[IllegalStateException] {
@@ -625,12 +624,12 @@ class RecoverySpec extends SparkSpec {
       "restored table must be the full pre-compaction content")
     // compaction is idempotent: re-running after repair completes the job
     val files = Bucketing.compactBucketed(spark, tbl)
-    assert(files <= 8, s"expected <=1 file per (batch, bucket), got $files")
+    assert(files <= 4, s"expected <=1 file per bucket, got $files")
     val got = live
     assert(got.exceptAll(docs).isEmpty && docs.exceptAll(got).isEmpty)
     // kill AFTER the swap (before backup cleanup): table is live and
     // compacted; the next maintenance entry just sweeps the straggler
-    land(docs.limit(50), 2L)
+    land(docs.limit(50), 1L)
     intercept[IllegalStateException] {
       Bucketing.withFailpoint(tbl, "drop-leftover") {
         Bucketing.compactBucketed(spark, tbl)
@@ -655,5 +654,37 @@ class RecoverySpec extends SparkSpec {
     }
     Seq(tbl, s"${tbl}_compacting", s"${tbl}_precompact")
       .foreach(Bucketing.dropTable(spark, _))
+  }
+
+  test("p59 compaction killed at recover-partitions: the rerun probes the repaired index") {
+    import graft.io.Bucketing
+    val bandsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p59_bands", sfDir)
+    val sigsTbl = graft.io.TempPaths.scratchTableName(spark, "graft_p59_sigs", sfDir)
+    def dropAll(): Unit =
+      Seq(bandsTbl, sigsTbl).flatMap(t => Seq(t, s"${t}_compacting", s"${t}_precompact"))
+        .foreach(Bucketing.dropTable(spark, _))
+    def p59() = graft.queries.PipelineQueries.dedupIndexCompact(spark, sfDir)
+    dropAll()
+    val want = p59().collect().toSeq
+    assert(want.nonEmpty, "fixture must probe some verdicts")
+    dropAll()
+    // kill the band table's compaction after rename-into-place, before
+    // the partition recover: the table resolves and lists its landed
+    // partitions (so the build-if-absent guard caches it), while the
+    // partition locations still name the pre-rename directory
+    intercept[IllegalStateException] {
+      Bucketing.withFailpoint(bandsTbl, "recover-partitions")(p59())
+    }
+    assert(Bucketing.hasLandedBatch(spark, bandsTbl, 1L) &&
+      Bucketing.hasLandedBatch(spark, sigsTbl, 1L),
+      "the kill window must pass p59's build-if-absent guard")
+    assert(spark.table(bandsTbl).count() === 0L,
+      "the kill window must read empty until the recover runs")
+    val got = p59().collect().toSeq
+    assert(got.sortBy(_.toString) === want.sortBy(_.toString),
+      "the rerun must probe the repaired index, not the empty window")
+    assert(Bucketing.tableProperty(spark, bandsTbl,
+      Bucketing.NeedsRecoverProperty).isEmpty)
+    dropAll()
   }
 }
