@@ -1,11 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Native Catalyst dot product for embedding columns.
   *
@@ -233,6 +235,76 @@ case class SubVectors(child: Expression, parts: Int)
     copy(child = newChild)
 }
 
+/** Multi-table sign-random-projection LSH codes: element t is the
+  * `bits`-bit code whose bit j is set iff the dot product of the
+  * embedding with plane t·bits + j is > 0. Each dot accumulates left to
+  * right in double, as [[VecDot]] does, so every bit equals the
+  * per-plane `vec_dot(emb, plane) > 0` test; a null embedding, or a null
+  * element inside a dot's range, clears that bit, as `when(null)` does.
+  * One compact loop over all planes: the same test written as one
+  * `vec_dot` expression per plane inlines tables × bits loops into one
+  * generated method, too large for the JIT to compile. */
+case class LshCodes(child: Expression, planes: Seq[Seq[Double]], bits: Int)
+  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  require(bits > 0 && planes.length % bits == 0, "lsh codes: whole tables of planes")
+
+  @transient private lazy val planeArrays: Array[Array[Double]] =
+    planes.map(_.toArray).toArray
+  private def isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"lsh codes expect array<float>/array<double>, got $other")
+    }
+
+  /** The codes of one embedding (null: all zero). */
+  def codes(x: ArrayData): ArrayData = {
+    val out = new Array[Long](planes.length / bits)
+    if (x != null) {
+      val float = isFloat
+      var p = 0
+      while (p < planeArrays.length) {
+        val plane = planeArrays(p)
+        val n = math.min(x.numElements(), plane.length)
+        var acc = 0.0
+        var i = 0
+        while (i < n && !x.isNullAt(i)) {
+          acc += (if (float) x.getFloat(i).toDouble else x.getDouble(i)) * plane(i)
+          i += 1
+        }
+        if (i == n && acc > 0) out(p / bits) |= 1L << (p % bits)
+        p += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  override def eval(input: InternalRow): Any =
+    codes(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("lshCodes", this)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |boolean ${ev.isNull} = false;
+      |ArrayData ${ev.value} = $self.codes(${c.isNull} ? null : ${c.value});
+      |""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LshCodes =
+    copy(child = newChild)
+}
+
 /** Column-level vector functions built on the native expression. */
 object VectorFunctions {
   def vec_dot(a: Column, b: Column): Column =
@@ -249,4 +321,7 @@ object VectorFunctions {
 
   def subvectors(a: Column, parts: Int): Column =
     ColumnBridge.column(SubVectors(ColumnBridge.expression(a), parts))
+
+  def lsh_codes(a: Column, planes: Seq[Seq[Double]], bits: Int): Column =
+    ColumnBridge.column(LshCodes(ColumnBridge.expression(a), planes, bits))
 }

@@ -137,9 +137,16 @@ object Bucketing {
   def landBuild(spark: SparkSession, rows: DataFrame, table: String,
                 kind: String, keys: Seq[String], buckets: Int,
                 stamps: Map[String, String] = Map.empty): Unit = {
-    Seq("", BackupSuffix, SwapSideSuffix).foreach(s => dropTable(spark, table + s))
+    (table +: swapLeftovers(table)).foreach(dropTable(spark, _))
     landPartial(spark, rows, table, kind, keys, buckets, 0L, stamps)
   }
+
+  /** The names a whole-table swap of `table` can leave behind (backup,
+    * side): with `table` absent, [[repairCompaction]] restores or
+    * promotes one, so a fresh index under that name must not start while
+    * one exists. */
+  private[graft] def swapLeftovers(table: String): Seq[String] =
+    Seq(BackupSuffix, SwapSideSuffix).map(table + _)
 
   /** True when `table` holds its `batch_id = batchId` partition: the
     * build-if-absent guard of a cached index. Table existence is not

@@ -1,8 +1,14 @@
 package graft.ops
 
-import graft.functions.VectorFunctions.{vec_dot, vec_norm}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.VectorFunctions.{lsh_codes, vec_dot, vec_norm}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.types.ArrayType
+import scala.jdk.CollectionConverters._
 
 /** Embedding similarity search over an `array<float>` column.
   *
@@ -15,9 +21,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the brute-force path broadcasts the (small) query set and
   * streams the candidate table — no shuffle on the candidate side until
-  * the final per-query top-k; the LSH path buckets candidates by a
-  * random-hyperplane signature so each query compares against one bucket,
-  * the 100 TB-friendly plan (bucket join instead of full cross product).
+  * the final per-query top-k; the LSH path hashes every vector to
+  * random-hyperplane bucket codes so each query compares only against
+  * its bucket-mates, the 100 TB-friendly plan (bucket lookup instead of
+  * full cross product).
   */
 object Similarity {
 
@@ -76,15 +83,10 @@ object Similarity {
     Seq.fill(nBits)(Seq.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Sign-random-projection LSH bucket id (nBits-bit int): one native dot
-    * per plane against a literal vector, summed Scala-side into the
-    * bucket int — no lambda plumbing at all. */
-  def lshBucket(emb: Column, nBits: Int = 12, dim: Int = 64): Column = {
-    val planes = hyperplanes(nBits, dim)
-    (0 until nBits).map { j =>
-      when(vec_dot(emb, typedLit(planes(j).toArray)) > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
+  /** Sign-random-projection LSH bucket id (nBits-bit long): the one
+    * table of [[lshBucketsMulti]] with `tables = 1`. */
+  def lshBucket(emb: Column, nBits: Int = 12, dim: Int = 64): Column =
+    lshBucketsMulti(emb, 1, nBits, dim).getItem(0)
 
   /** Per-table bit sizing: bitsPerTable grows with log2(n) so expected
     * bucket occupancy stays ~`targetOccupancy` as the corpus grows —
@@ -108,28 +110,24 @@ object Similarity {
     * standard LSH amplification. A SINGLE table (the round-1 design) has
     * recall p^b, which decays fast with b: at 8 bits and cos 0.9 only
     * ~29% of true near-dups collide. Banding fixes recall while keeping
-    * candidate volume ~ n * tables * occupancy, linear in n. */
+    * candidate volume ~ n * tables * occupancy, linear in n. Computed by
+    * the native `LshCodes` kernel: each bit is `vec_dot(emb, plane) > 0`
+    * (SimilaritySpec pins the identity). */
   def lshBucketsMulti(emb: Column, tables: Int, bitsPerTable: Int,
-                      dim: Int = 64): Column = {
-    val planes = hyperplanes(tables * bitsPerTable, dim)
-    array((0 until tables).map { t =>
-      (0 until bitsPerTable).map { j =>
-        when(vec_dot(emb, typedLit(planes(t * bitsPerTable + j).toArray)) > 0,
-          lit(1L << j)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    }: _*)
-  }
+                      dim: Int = 64): Column =
+    lsh_codes(emb, hyperplanes(tables * bitsPerTable, dim), bitsPerTable)
 
   /** LSH-bucketed approximate top-k: candidates are vectors colliding
     * with the query in any of `tables` hash tables; survivors are scored
     * exactly and top-k'd. `bitsPerTable = 0` (default) sizes the bucket
     * space from the corpus count.
     *
-    * Scale shape: one narrow pass emits (vec_id, table, bucket) — ints
-    * only, no embeddings through the explode; the candidate join is on
-    * (table, bucket) against the broadcast query side; candidate ids are
-    * deduped, then ONE embedding-fetch join scores survivors. No stage
-    * touches the n² pair space.
+    * Scale shape: one driver job gathers the query block and the corpus
+    * count; then ONE narrow pass over `embeddings` hashes each row, looks
+    * its codes up in the query block's (table, bucket) map and scores the
+    * distinct hits, with no join and no candidate `distinct`. The bounded
+    * top-k merge is the only shuffle (k rows per query and task). No
+    * stage touches the n² pair space.
     */
   def lshTopK(embeddings: DataFrame, k: Int = 10, queryStride: Int = 50,
               tables: Int = 8, bitsPerTable: Int = 0): DataFrame =
@@ -138,24 +136,56 @@ object Similarity {
   /** Exactly-scored LSH candidate pairs (q_id, c_id, cos_sim): distinct
     * any-table bucket collisions against the stride-selected query set,
     * scored with the native dot — the shared feed for [[lshTopK]] and
-    * [[hardNegatives]]. */
+    * [[hardNegatives]]. Precondition: `vec_id` is a key of `embeddings`.
+    *
+    * 1. One job, no shuffle: each partition returns its row count and its
+    *    query rows (`pmod(vec_id, queryStride) = 0`, with `embedding` and
+    *    the Spark-evaluated `vec_norm`). The counts size the bits when
+    *    `bitsPerTable = 0`. The query block is n/stride rows, the set a
+    *    broadcast-join plan would ship to every task anyway.
+    * 2. The query codes come from the same [[lshBucketsMulti]] expression,
+    *    evaluated over the block as a local relation (no job).
+    * 3. One narrow pass over `embeddings`: each row's codes index the
+    *    (table, bucket) → query map, the distinct hits explode against
+    *    the block literal and are scored; self pairs are dropped.
+    */
   private def lshScoredCandidates(embeddings: DataFrame, queryStride: Int,
                                   tables: Int, bitsPerTable: Int): DataFrame = {
-    val b = resolveBits(embeddings, bitsPerTable)
-    val posed = embeddings.select(col("vec_id"),
-      posexplode(lshBucketsMulti(col("embedding"), tables, b)))
-      .toDF("vec_id", "t", "bucket")
-    val qb = posed.filter(pmod(col("vec_id"), lit(queryStride)) === 0)
-      .select(col("vec_id").as("q_id"), col("t"), col("bucket"))
-    val cand = posed.join(broadcast(qb), Seq("t", "bucket"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("c_id")).distinct()
-    val qe = embeddings.filter(pmod(col("vec_id"), lit(queryStride)) === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        vec_norm(col("embedding")).as("q_norm"))
-    val ce = embeddings.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_emb"), vec_norm(col("embedding")).as("c_norm"))
-    ce.join(broadcast(cand.join(qe, Seq("q_id"))), Seq("c_id"))
+    val rows = embeddings.select(col("vec_id"), col("embedding"),
+      vec_norm(col("embedding")).as("vec_norm"),
+      (pmod(col("vec_id"), lit(queryStride)) === 0).as("is_query"))
+    val parts = rows.queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L
+      val queries = Array.newBuilder[InternalRow]
+      for (r <- it) {
+        n += 1
+        if (!r.isNullAt(3) && r.getBoolean(3)) queries += r.copy()
+      }
+      Iterator.single((n, queries.result()))
+    }.collect()
+    val block = parts.flatMap(_._2)
+    val b = if (bitsPerTable > 0) bitsPerTable
+      else adaptiveBitsPerTable(parts.map(_._1).sum)
+    val toRow = CatalystTypeConverters.createToScalaConverter(rows.schema)
+    val queryCodes = embeddings.sparkSession
+      .createDataFrame(block.map(toRow(_).asInstanceOf[Row]).toSeq.asJava, rows.schema)
+      .select(lshBucketsMulti(col("embedding"), tables, b))
+      .collect().map(_.getSeq[Long](0))
+    val byBucket = (for ((codes, qi) <- queryCodes.zipWithIndex;
+                         (code, t) <- codes.zipWithIndex) yield (t, code) -> qi)
+      .groupMap(_._1)(_._2)
+    val hits = udf((codes: Seq[Long]) => codes.zipWithIndex.flatMap {
+      case (code, t) => byBucket.getOrElse((t, code), Array.empty[Int]) })
+    val q = element_at(ColumnBridge.column(Literal(new GenericArrayData(block),
+      ArrayType(rows.schema, containsNull = false))), col("qi") + 1)
+    embeddings.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
+        vec_norm(col("embedding")).as("c_norm"),
+        explode(array_distinct(hits(lshBucketsMulti(col("embedding"), tables, b))))
+          .as("qi"))
+      .select(q.getField("vec_id").as("q_id"), col("c_id"),
+        q.getField("embedding").as("q_emb"), q.getField("vec_norm").as("q_norm"),
+        col("c_emb"), col("c_norm"))
+      .filter(col("q_id") =!= col("c_id"))
       .withColumn("cos_sim",
         round(vec_dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")), 6))
   }

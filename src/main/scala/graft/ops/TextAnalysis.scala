@@ -720,21 +720,18 @@ object TextAnalysis {
     * WITHIN tokens (multiset — repeats inside a token count), ranked to
     * the top-k merge candidates. Pair extraction is the native
     * `CharNgramsMultiset` (one UTF-8 offset pass per token); counts
-    * collapse map-side on the pair key. The final ranking window is
-    * global but runs over DISTINCT pairs — bounded by the character
-    * set squared, not the corpus — so the single-partition sort is a
-    * few thousand rows at any corpus size. */
+    * collapse map-side on the pair key. The ranking is a bounded top-k
+    * (`TakeOrderedAndProject`: k rows per partition, then a k-row
+    * merge), so the distinct pairs are never sorted in full or gathered
+    * into one partition. */
   def bpePairStats(docs: DataFrame, k: Int = 20): DataFrame = {
     val toks = docs.select(explode(tokens(col("text"))).as("tok"))
       .filter(length(col("tok")) >= 2)
-    val counts = toks
+    toks
       .select(explode(graft.functions.TextFunctions
         .char_ngrams_multiset(col("tok"), 2)).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("n_occurrences"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("n_occurrences").desc, col("pair").asc)
-    counts.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select(col("pair"), col("n_occurrences"))
+      .orderBy(col("n_occurrences").desc, col("pair").asc).limit(k)
   }
 
   /** The learned merge TABLE: [[bpePairStats]]' top-`n` pairs in rank

@@ -338,10 +338,11 @@ object GraftSqlParser {
 /** `CREATE <family> INDEX` / `APPEND TO <family> INDEX` — lands one
   * batch through the family's per-batch partial path (the exact code
   * streamed maintenance runs). CREATE is APPEND of batch 0 into a
-  * table that must not exist yet — refusing to silently append into a
-  * prior index is the create-vs-maintain distinction an operator
-  * expects from the keyword. `landed` is false when the batch was
-  * swallowed by the fold watermark (a post-fold replay).
+  * table that must not exist yet, nor its swap leftovers — refusing to
+  * silently append into a prior index is the create-vs-maintain
+  * distinction an operator expects from the keyword. `landed` is false
+  * when the batch was swallowed by the fold watermark (a post-fold
+  * replay).
   *
   * vector/ivf (VERDICT r19 item 3): CREATE states the geometry
   * (TABLES/BITS, CENTROIDS) explicitly; the partial paths persist it
@@ -370,6 +371,12 @@ case class AppendIndexCommand(family: String, tables: Seq[String],
       require(!spark.catalog.tableExists(t),
         s"$t already exists — APPEND TO it (maintenance) or drop it " +
           "first (rebuild); CREATE never silently extends a prior index")
+      graft.io.Bucketing.swapLeftovers(t).find(spark.catalog.tableExists)
+        .foreach { leftover =>
+          throw new IllegalArgumentException(s"$leftover is left over " +
+            s"from an interrupted rewrite of an earlier $t; CREATE would " +
+            "restore it and land batch 0 into its old rows — drop it first")
+        }
     }
     GraftSqlParser.withSourceOnce(spark, sourceSql) { (batch, n) =>
     val b = buckets.getOrElse(8)

@@ -80,10 +80,22 @@ class ExplainSpec extends SparkSpec {
       s"expected probe-side bloom filter below the semi-join, got:\n$plan")
   }
 
-  test("p12 multi-table LSH: no cartesian product, candidate join is on bucket keys") {
+  test("p12 multi-table LSH: no join; the top-k merge on q_id is the only shuffle") {
     val plan = planString(graft.ops.Similarity.lshTopK(Tables.embeddings(spark, sfDir)))
-    assert(!plan.contains("CartesianProduct"),
-      s"LSH path must never cross-product:\n$plan")
+    // candidates look their bucket codes up in the query block: no bucket
+    // join, no candidate distinct, no embedding-fetch join
+    for (op <- Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+        "BroadcastNestedLoopJoin", "CartesianProduct"))
+      assert(!plan.contains(op), s"no $op in the LSH top-k:\n$plan")
+    val shuffles = "(?<!Broadcast)Exchange (\\S+)".r.findAllMatchIn(plan).toList
+    assert(shuffles.size === 1 && shuffles.head.group(1).startsWith("hashpartitioning(q_id"),
+      s"exactly one shuffle, the top-k merge on q_id:\n$plan")
+  }
+
+  test("p46 BPE pair ranking is a bounded TakeOrderedAndProject, no window") {
+    val plan = planString(graft.ops.TextAnalysis.bpePairStats(Tables.documents(spark, sfDir)))
+    assert(plan.contains("TakeOrderedAndProject"), s"expected a bounded top-k:\n$plan")
+    assert(!plan.contains("Window"), s"no single-partition rank window:\n$plan")
   }
 
   test("p16 IVF: centroid side is a bounded broadcast (TakeOrderedAndProject + broadcast)") {

@@ -425,6 +425,38 @@ class ExtensionsSpec extends SparkSpec {
     Seq(t, "ext_legacy_out").foreach(graft.io.Bucketing.dropTable(spark, _))
   }
 
+  test("CREATE refuses a name whose dropped index left a rewrite backup, naming it and keeping its rows") {
+    import spark.implicits._
+    val t = "ext_left_idx"
+    val backup = s"${t}_precompact"
+    Seq(t, backup, s"${t}_compacting").foreach(graft.io.Bucketing.dropTable(spark, _))
+    Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "kappa lambda mu nu xi omicron")).toDF("doc_id", "text")
+      .createOrReplaceTempView("ext_left_old")
+    Seq((3L, "one two three four five six")).toDF("doc_id", "text")
+      .createOrReplaceTempView("ext_left_new")
+    spark.sql(s"CREATE shingle_df INDEX $t AS SELECT * FROM ext_left_old").collect()
+    def rowsOf(tbl: String): Seq[String] =
+      spark.table(tbl).collect().map(_.toString).sorted.toSeq
+    val old = rowsOf(t)
+    // a compaction killed after its swap, before the backup drop; then
+    // the index is dropped by name and the backup stays behind
+    intercept[IllegalStateException] {
+      graft.io.Bucketing.withFailpoint(t, "drop-leftover") {
+        graft.io.Bucketing.compactBucketed(spark, t)
+      }
+    }
+    graft.io.Bucketing.dropTable(spark, t)
+    assert(old.nonEmpty && rowsOf(backup) === old)
+    val e = intercept[IllegalArgumentException] {
+      spark.sql(s"CREATE shingle_df INDEX $t AS SELECT * FROM ext_left_new").collect()
+    }
+    assert(e.getMessage.contains(backup), e.getMessage)
+    assert(!spark.catalog.tableExists(t), "the refused CREATE must land nothing")
+    assert(rowsOf(backup) === old, "the refused CREATE must leave the backup's rows")
+    Seq(t, backup).foreach(graft.io.Bucketing.dropTable(spark, _))
+  }
+
   test("PROBE ivf scores a delta source against the pinned CREATE-time quantizer artifact, never a probe-source re-derivation (ADVICE r20)") {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, sfDir)

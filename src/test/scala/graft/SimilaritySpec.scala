@@ -1,11 +1,16 @@
 package graft
 
+import graft.functions.VectorFunctions.vec_dot
 import graft.ops.Similarity
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Vector similarity invariants: exact math, LSH bucketing behavior. */
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
+
+  /** The sf0.01 fixture, beside the suite's default one. */
+  private val sf001 = new java.io.File(sfDir).getParentFile.toPath.resolve("sf0.01").toString
 
   private def vecs = Seq(
     (0L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
@@ -50,6 +55,34 @@ class SimilaritySpec extends SparkSpec {
     assert(b(0L) === b(1L))
   }
 
+  test("lshBucketsMulti equals one vec_dot > 0 test per plane, nulls and short vectors included") {
+    val (tables, bits) = (4, 3)
+    val planes = Similarity.hyperplanes(tables * bits, 64)
+    def perPlane(emb: Column): Column = array((0 until tables).map { t =>
+      (0 until bits).map { j =>
+        when(vec_dot(emb, typedLit(planes(t * bits + j).toArray)) > 0, lit(1L << j))
+          .otherwise(lit(0L))
+      }.reduce(_ + _)
+    }: _*)
+    def agree(emb: DataFrame): Unit = {
+      val rows = emb.select(col("vec_id"),
+          Similarity.lshBucketsMulti(col("embedding"), tables, bits).as("native"),
+          perPlane(col("embedding")).as("per_plane"))
+        .collect()
+      assert(rows.nonEmpty)
+      rows.foreach(r => assert(r.getSeq[Long](1) === r.getSeq[Long](2), r.toString))
+    }
+    // generated code over a parquet scan
+    agree(Tables.embeddings(spark, sf001))
+    // interpreted eval over a local relation: a null embedding, a null
+    // element (the dots that reach it are null, their bits clear) and a
+    // short vector (dots run over the shorter length)
+    val rnd = new java.util.Random(3L)
+    def v(n: Int): Seq[Option[Float]] = Seq.fill(n)(Some(rnd.nextGaussian().toFloat))
+    agree(Seq[(Long, Seq[Option[Float]])]((1L, null), (2L, v(64).updated(10, None)),
+      (3L, v(10)), (4L, v(64))).toDF("vec_id", "embedding"))
+  }
+
   test("ivfTopK finds high-recall neighbors vs brute force on testdata") {
     val emb = Tables.embeddings(spark, sfDir)
     val brute = Similarity.bruteForceTopK(emb, k = 5).collect()
@@ -92,6 +125,60 @@ class SimilaritySpec extends SparkSpec {
     // table measured ~0.02 here — the floor guards against regressing to
     // that shape
     assert(recall > 0.4, s"multi-table lsh recall $recall too low")
+  }
+
+  /** (rows, sha-256 of the rows as sorted text): a bit-identity pin that
+    * does not depend on the plan's row order. */
+  private def pin(df: DataFrame): (Int, String) = {
+    val rows = df.select("q_id", "c_id", "cos_sim").collect()
+      .map(_.mkString(",")).sorted
+    val d = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rows.mkString("\n").getBytes("UTF-8"))
+    (rows.length, d.map("%02x".format(_)).mkString)
+  }
+
+  // The pins below were captured from the join-based candidate plan
+  // (posexplode, broadcast bucket join, distinct, embedding-fetch join)
+  // that the fused single-pass plan replaced.
+  test("lshTopK and hardNegatives at defaults on sf0.01 are pinned to their rows") {
+    val emb = Tables.embeddings(spark, sf001)
+    assert(pin(Similarity.lshTopK(emb)) ===
+      ((100, "d27ab64260a3f3a2e98c1ca92bc1ccba846e0ba082367abee9f58415865fa38f")))
+    assert(pin(Similarity.hardNegatives(emb)) ===
+      ((100, "d7dd7dfefa9e86e3229d46e4ee767603481c3890de6e2a9b1eb73a58147bd0d7")))
+  }
+
+  test("lshTopK over a 3-partition input with k = 5, stride 7, 4 bits is pinned to its rows") {
+    val emb = Tables.embeddings(spark, sf001).repartition(3)
+    assert(pin(Similarity.lshTopK(emb, k = 5, queryStride = 7, bitsPerTable = 4)) ===
+      ((360, "d019fb7220240adc122157c7715d003aae2411c95258d78b7bd4cebae24fed2c")))
+  }
+
+  test("a stride that selects no query gives empty LSH outputs, not an exception") {
+    val emb = Tables.embeddings(spark, sf001).filter(col("vec_id") > 0)
+    assert(Similarity.lshTopK(emb, queryStride = 1000).collect().isEmpty)
+    assert(Similarity.hardNegatives(emb, queryStride = 1000).collect().isEmpty)
+  }
+
+  test("lshTopK and hardNegatives with null embeddings and negative vec_ids are pinned to their rows") {
+    // queries -7, 0, 7 and 14; 14 and the candidate 5 have no embedding,
+    // so every code is 0 and the cosine is null (the top-k reads it as 0)
+    val rnd = new java.util.Random(7L)
+    val emb = (-10L to 19L).map { id =>
+      (id, if (id == 5L || id == 14L) null else Array.fill(64)(rnd.nextGaussian().toFloat))
+    }.toDF("vec_id", "embedding")
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.mkString(",")).sorted.toSeq
+    assert(rows(Similarity.lshTopK(emb, k = 3, queryStride = 7, bitsPerTable = 2)) === Seq(
+      "-7,-10,0.209665", "-7,17,0.204068", "-7,4,0.224178",
+      "0,-8,0.203372", "0,18,0.214574", "0,8,0.172454",
+      "14,-10,0.0", "14,-7,0.0", "14,-8,0.0",
+      "7,-2,0.236929", "7,-5,0.205944", "7,19,0.284977"))
+    assert(rows(Similarity.hardNegatives(emb, lo = -0.2, hi = 0.2, k = 3,
+      queryStride = 7, bitsPerTable = 2)) === Seq(
+      "-7,-9,0.158513", "-7,10,0.195508", "-7,13,0.139636",
+      "0,-2,0.152571", "0,1,0.151713", "0,8,0.172454",
+      "7,-3,0.199562", "7,1,0.153322", "7,8,0.154792"))
   }
 
   test("adaptiveBitsPerTable scales with corpus size, bounded") {
