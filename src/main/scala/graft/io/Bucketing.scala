@@ -99,6 +99,18 @@ object Bucketing {
     spark.table(table)
   }
 
+  /** Bucket count of an [[openIndex]] frame, read from the relation its
+    * plan resolved (no metastore call): a frame repartitioned on the
+    * bucket key to this count joins the scan with no exchange on the
+    * index side. */
+  def bucketCount(rows: DataFrame): Int =
+    rows.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
+    }.collect {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation => h.bucketSpec
+    }.flatten.map(_.numBuckets).getOrElse(
+      throw new IllegalArgumentException("not a bucketed table scan"))
+
   /** THE LAYOUT CHECK probes ([[requireKind]]), appends
     * ([[appendPartialInto]]) and rewrites ([[repairedMeta]]) share: the
     * table is batch_id-partitioned and carries a kind stamp (`expected`,

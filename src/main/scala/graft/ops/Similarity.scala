@@ -191,9 +191,11 @@ object Similarity {
   }
 
   /** Bounded per-query top-k over scored pairs (partial k-buffers merge
-    * map-side; the shuffle carries k rows per (query, task)). */
+    * map-side; the shuffle carries k rows per (query, task)). A null
+    * cosine (a null embedding on either side) is no neighbour: the
+    * aggregate's scores are primitive, so it would rank as 0.0. */
   private def boundedTopK(scored: DataFrame, k: Int): DataFrame =
-    scored.groupBy(col("q_id"))
+    scored.filter(col("cos_sim").isNotNull).groupBy(col("q_id"))
       .agg(graft.functions.TopKAggregator.top_k(k)(col("cos_sim"), col("c_id")).as("tk"))
       .select(col("q_id"), explode(col("tk")).as("t"))
       .select(col("q_id"), col("t.id").as("c_id"), col("t.score").as("cos_sim"))

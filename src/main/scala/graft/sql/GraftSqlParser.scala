@@ -1,7 +1,8 @@
 package graft.sql
 
 import graft.io.Tombstones
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
@@ -234,20 +235,22 @@ object GraftSqlParser {
   private def splitTables(s: String): Seq[String] =
     s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
-  /** Evaluate a command's AS query exactly ONCE (ADVICE r19): the
-    * commands report `n_source_rows` AND hand the rows to the family
+  /** Evaluate a command's AS query exactly ONCE (ADVICE r19): APPEND
+    * and RETRACT report `n_source_rows` AND hand the rows to the family
     * path, and two separate evaluations mean a non-deterministic
     * source (rand(), LIMIT without ORDER BY) can land rows that differ
     * from the reported count — and every command pays a double source
-    * scan. localCheckpoint materializes the batch before either use
-    * (command batches are delta-sized by design); the checkpoint
-    * blocks are released when `f` returns so a long SQL session does
-    * not accumulate dead block-manager state across statements. */
+    * scan. localCheckpoint materializes the batch before any use
+    * (command batches are delta-sized by design); `f` counts it
+    * (`batch.count()`, a read of the checkpoint) only when it reports
+    * the count. The checkpoint blocks are released when `f` returns so
+    * a long SQL session does not accumulate dead block-manager state
+    * across statements. */
   private[sql] def withSourceOnce[T](spark: SparkSession, sourceSql: String)(
-      f: (DataFrame, Long) => T): T = {
+      f: DataFrame => T): T = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val batch = spark.sql(sourceSql).localCheckpoint()
-    try f(batch, batch.count())
+    try f(batch)
     finally spark.sparkContext.getPersistentRDDs
       .filterNot { case (id, _) => before.contains(id) }
       .values.foreach(_.unpersist(false))
@@ -378,7 +381,8 @@ case class AppendIndexCommand(family: String, tables: Seq[String],
             "restore it and land batch 0 into its old rows — drop it first")
         }
     }
-    GraftSqlParser.withSourceOnce(spark, sourceSql) { (batch, n) =>
+    GraftSqlParser.withSourceOnce(spark, sourceSql) { batch =>
+    val n = batch.count()
     val b = buckets.getOrElse(8)
     val landed = family match {
       case "minhash" =>
@@ -493,7 +497,7 @@ case class ProbeIndexCommand(family: String, tables: Seq[String],
     // materialize the source once: the family probes read the delta
     // more than once internally (noveltyIncremental folds grams twice),
     // and a non-deterministic AS query must probe one consistent batch
-    GraftSqlParser.withSourceOnce(spark, sourceSql) { (source, _) =>
+    GraftSqlParser.withSourceOnce(spark, sourceSql) { source =>
     val result = family match {
       case "minhash" =>
         // probes through the LIVE tombstone gate when TOMBSTONES names
@@ -551,8 +555,11 @@ case class ProbeIndexCommand(family: String, tables: Seq[String],
           spark.table(queriesTable.get), tables(0))
     }
     graft.io.Bucketing.dropTable(spark, outTable)
-    result.write.format("parquet").saveAsTable(outTable)
-    Seq(Row(family, outTable, spark.table(outTable).count()))
+    // the written rows counted as they pass, not by a re-scan of outTable
+    val written = Observation("n_rows")
+    result.observe(written, count(lit(1)).as("n")).write.format("parquet")
+      .saveAsTable(outTable)
+    Seq(Row(family, outTable, written.get("n").asInstanceOf[Long]))
     }
   }
 }
@@ -576,7 +583,8 @@ case class RetractIndexCommand(family: String, tables: Seq[String],
     AttributeReference("landed", BooleanType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    GraftSqlParser.withSourceOnce(spark, sourceSql) { (removed, n) =>
+    GraftSqlParser.withSourceOnce(spark, sourceSql) { removed =>
+    val n = removed.count()
     val landed = family match {
       case _ if tombstones.isDefined =>
         Tombstones.retract(spark,

@@ -384,4 +384,47 @@ class DedupSpec extends SparkSpec {
     val bias = stats.map { case (j, agree) => agree - j }.sum / stats.size
     assert(math.abs(bias) < 0.05, f"mean agreement is biased by $bias%.3f")
   }
+
+  test("probe prefilter: on sf0.01 no band candidate at Jaccard >= 0.7 falls below the 0.6 agreement slack; one verdict per delta doc") {
+    val all = Tables.documents(spark,
+      new java.io.File(sfDir).getParentFile.toPath.resolve("sf0.01").toString)
+    // every band-candidate pair of the probe's geometry (16 x 8, 3-shingles)
+    val sig = Dedup.sigFrame(all, 128, 3)
+    val bands = Dedup.bandFrame(sig, 16, 8)
+    val pairs = bands.as("l").join(bands.as("r"),
+        col("l.band_id") === col("r.band_id") &&
+        col("l.band_hash") === col("r.band_hash") &&
+        col("l.doc_id") < col("r.doc_id"))
+      .select(col("l.doc_id").as("left_id"), col("r.doc_id").as("right_id"))
+      .distinct()
+    val scored = pairs
+      .join(sig.select(col("doc_id").as("left_id"), col("sig").as("lsig"),
+        col("text").as("ltext")), "left_id")
+      .join(sig.select(col("doc_id").as("right_id"), col("sig").as("rsig"),
+        col("text").as("rtext")), "right_id")
+      .select(col("left_id"), col("right_id"),
+        graft.functions.TextFunctions.sig_agreement(col("lsig"), col("rsig")).as("est"),
+        graft.functions.TextFunctions.array_jaccard(Dedup.shingles(col("ltext"), 3),
+          Dedup.shingles(col("rtext"), 3)).as("jaccard"))
+      .filter(col("jaccard") >= 0.7)
+      .collect()
+    assert(scored.nonEmpty, "fixture: some band candidates reach Jaccard 0.7")
+    val dropped = scored.filter(_.getDouble(2) < 0.6)
+    assert(dropped.isEmpty, "true matches the 0.1 slack drops: " +
+      dropped.map(r => s"(${r.get(0)}, ${r.get(1)}, est ${r.get(2)}, J ${r.get(3)})")
+        .mkString(", "))
+    val corpus = all.filter(col("doc_id") % 5 =!= 0)
+    val delta = all.filter(col("doc_id") % 5 === 0)
+    val (bandsTbl, sigsTbl) = ("graft_est_bands", "graft_est_sigs")
+    Seq(bandsTbl, sigsTbl).foreach(graft.io.Bucketing.dropTable(spark, _))
+    try {
+      Dedup.buildCorpusIndex(corpus, bandsTbl, sigsTbl, buckets = 4)
+      val verdicts = Dedup.incrementalVerdictsAgainstIndex(spark, delta,
+        bandsTbl, sigsTbl).collect()
+      assert(verdicts.map(_.getLong(0)).sorted.toSeq ===
+        delta.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq,
+        "exactly one verdict row per delta doc")
+      assert(verdicts.exists(_.getBoolean(1)), "fixture: some delta doc is a near-dup")
+    } finally Seq(bandsTbl, sigsTbl).foreach(graft.io.Bucketing.dropTable(spark, _))
+  }
 }

@@ -309,6 +309,81 @@ class ExplainSpec extends SparkSpec {
     }
   }
 
+  test("p54 probe under AQE: one bucketed verify join, corpus grams only for prefiltered pairs, no join after the argmax") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    val docs = Tables.documents(spark, sfDir)
+    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
+    val delta = docs.filter(col("doc_id") % 5 === 0)
+    val (bandsTbl, sigsTbl, tombs) =
+      ("graft_probe_pin_bands", "graft_probe_pin_sigs", "graft_probe_pin_tombs")
+    Seq(bandsTbl, sigsTbl, tombs).foreach(graft.io.Bucketing.dropTable(spark, _))
+    // the streamed layout (two landed batches) with a retraction pending
+    Seq(0, 1).foreach { i =>
+      graft.ops.Dedup.appendCorpusIndexPartial(spark,
+        corpus.filter(pmod(col("doc_id"), lit(2)) === i), bandsTbl, sigsTbl,
+        i.toLong, buckets = 4)
+    }
+    graft.io.Tombstones.retract(spark,
+      graft.io.Tombstones.minhash(bandsTbl, sigsTbl, tombs),
+      corpus.filter(pmod(col("doc_id"), lit(7)) === 0).select("doc_id"), 0L)
+    try Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "true") {
+      val probe = graft.ops.Dedup.incrementalVerdictsAgainstIndex(spark, delta,
+        bandsTbl, sigsTbl, tombstonesTable = Some(tombs))
+      probe.collect()
+      val root = probe.queryExecution.executedPlan
+      val plan = root match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+        case p => p.toString
+      }
+      // every root-to-leaf path, then each corpus scan's path upward to
+      // the first join that is not the tombstone gate (a LeftAnti)
+      def paths(p: SparkPlan): Seq[List[SparkPlan]] = planChildren(p) match {
+        case Seq() => Seq(List(p))
+        case cs => cs.flatMap(paths).map(p :: _)
+      }
+      def belowJoin(table: String): (FileSourceScanExec, Seq[SparkPlan]) = {
+        val path = paths(root).map(_.reverse).collectFirst {
+          case (s: FileSourceScanExec) :: up
+            if s.tableIdentifier.exists(_.table == table) => (s, up)
+        }
+        assert(path.isDefined, s"no scan of $table:\n$plan")
+        val (scan, up) = path.get
+        (scan, up.takeWhile {
+          case j: BaseJoinExec => j.joinType == LeftAnti
+          case _ => true
+        })
+      }
+      for (t <- Seq(bandsTbl, sigsTbl)) {
+        val (scan, below) = belowJoin(t)
+        assert(scan.bucketedScan, s"$t must be read as a bucketed scan:\n$plan")
+        assert(!below.exists(_.isInstanceOf[Exchange]),
+          s"no exchange between the $t scan and its join:\n$plan")
+      }
+      assert(!belowJoin(sigsTbl)._2.exists(_.expressions.exists(
+          _.find(_.isInstanceOf[graft.functions.WordShingles]).isDefined)),
+        s"the corpus text is shingled above the verify join, not per scanned row:\n$plan")
+      // nothing between the root and the argmax aggregate joins or
+      // shuffles: every delta doc got its verdict inside the aggregate
+      def aboveAgg(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: BaseAggregateExec => Nil
+        case _ => p +: planChildren(p).flatMap(aboveAgg)
+      }
+      assert(!aboveAgg(root).exists(n =>
+          n.isInstanceOf[BaseJoinExec] || n.isInstanceOf[Exchange]),
+        s"no join or shuffle of delta doc ids after the argmax:\n$plan")
+      assert(queryStages(probe) <= 7, s"at most 7 query stages:\n$plan")
+      val inline = graft.ops.Dedup.incrementalMinhashVerdicts(
+        corpus.filter(pmod(col("doc_id"), lit(7)) =!= 0), delta)
+      assert(probe.exceptAll(inline).isEmpty && inline.exceptAll(probe).isEmpty,
+        "the gated probe must equal the inline verdicts over the live corpus")
+    } finally Seq(bandsTbl, sigsTbl, tombs).foreach(graft.io.Bucketing.dropTable(spark, _))
+  }
+
   test("p122 gated probe: the tombstone gate is a broadcast anti-join adding no exchange") {
     import org.apache.spark.sql.functions.{col, lit, pmod}
     val emb = Tables.embeddings(spark, sfDir)

@@ -395,6 +395,47 @@ class ExtensionsSpec extends SparkSpec {
       .foreach(graft.io.Bucketing.dropTable(spark, _))
   }
 
+  test("PROBE n_rows is the written row count for minhash, vector and ivf; RETRACT still reports its source rows") {
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, sfDir)
+    val emb = Tables.embeddings(spark, sfDir)
+    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
+    corpus.createOrReplaceTempView("ext_n_docs")
+    docs.filter(col("doc_id") % 5 === 0).createOrReplaceTempView("ext_n_ddelta")
+    emb.filter(col("vec_id") % 5 =!= 0).createOrReplaceTempView("ext_n_emb")
+    emb.filter(col("vec_id") % 5 === 0).createOrReplaceTempView("ext_n_edelta")
+    val tbls = Seq("ext_n_bands", "ext_n_sigs", "ext_n_tombs", "ext_n_vb",
+      "ext_n_vv", "ext_n_ivf", "ext_n_ivf_centroids", "ext_n_out")
+    tbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+    // n_rows comes from the write itself; it must equal a re-scan
+    def probed(sql: String): Long = {
+      val n = spark.sql(sql).head.getLong(2)
+      assert(n > 0 && n === spark.table("ext_n_out").count(), sql)
+      n
+    }
+    try {
+      spark.sql("CREATE minhash INDEX ext_n_bands, ext_n_sigs AS " +
+        "SELECT doc_id, text FROM ext_n_docs").collect()
+      val retracted = spark.sql("RETRACT FROM minhash INDEX ext_n_bands, " +
+        "ext_n_sigs TOMBSTONES ext_n_tombs BATCH 0 AS " +
+        "SELECT doc_id FROM ext_n_docs WHERE doc_id % 7 = 0").head
+      assert(retracted.getLong(2) === corpus.filter(col("doc_id") % 7 === 0).count())
+      // one verdict per delta doc, through the live tombstone gate
+      assert(probed("PROBE minhash INDEX ext_n_bands, ext_n_sigs TOMBSTONES " +
+        "ext_n_tombs INTO ext_n_out AS SELECT doc_id, text FROM ext_n_ddelta") ===
+        docs.filter(col("doc_id") % 5 === 0).count())
+      val bits = graft.ops.Similarity.adaptiveBitsPerTable(emb.count())
+      spark.sql(s"CREATE vector INDEX ext_n_vb, ext_n_vv TABLES 8 BITS $bits " +
+        "AS SELECT vec_id, embedding FROM ext_n_emb").collect()
+      probed("PROBE vector INDEX ext_n_vb, ext_n_vv INTO ext_n_out AS " +
+        "SELECT vec_id, embedding FROM ext_n_edelta")
+      spark.sql("CREATE ivf INDEX ext_n_ivf CENTROIDS 8 AS " +
+        "SELECT vec_id, embedding FROM ext_n_emb").collect()
+      probed("PROBE ivf INDEX ext_n_ivf K 5 INTO ext_n_out AS " +
+        "SELECT vec_id, embedding FROM ext_n_edelta")
+    } finally tbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+  }
+
   test("a pre-batch-0 warehouse index (stamped, unpartitioned) fails APPEND, COMPACT and PROBE with a rebuild error and keeps its rows") {
     // the shape a warehouse written before every build landed as batch 0
     // holds: a plain bucketed table plus a separate kind ALTER

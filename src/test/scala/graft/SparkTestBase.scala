@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM. */
@@ -11,4 +14,24 @@ object SparkTestBase {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A node's children with the adaptive wrapper and its query stages
+    * opened, so a walk of a final AQE plan sees through stage
+    * boundaries (a reused exchange stays a leaf: its stages ran once). */
+  protected def planChildren(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case _ => p.children
+  }
+
+  /** Query stages of `df`'s final adaptive plan, the result stage
+    * included and reused exchanges not: each counted stage is one job
+    * the driver plans and waits on in turn. */
+  protected def queryStages(df: DataFrame): Int = {
+    def walk(p: SparkPlan): Int = (p match {
+      case s: QueryStageExec if !s.plan.isInstanceOf[ReusedExchangeExec] => 1
+      case _ => 0
+    }) + planChildren(p).map(walk).sum
+    walk(df.queryExecution.executedPlan)
+  }
 }
