@@ -339,12 +339,17 @@ case class WordNgrams(child: Expression, n: Int)
 
 /** Fraction of positions where two equal-length long arrays agree — the
   * MinHash signature estimate of Jaccard similarity. Tight loop; the
-  * zip_with/filter HOF form is interpreted per element. */
+  * zip_with/filter HOF form is interpreted per element.
+  *
+  * Not flagged `nullIntolerant`, though a null input still yields null
+  * (BinaryExpression.eval): the flag lets InferFiltersFromConstraints
+  * derive `isnotnull` of each argument, and where an argument is an
+  * aliased kernel (a delta's `minhashsig(...)`) that pushed Filter
+  * evaluates the kernel again under the projection that computes it. */
 case class SigAgreement(left: Expression, right: Expression)
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
 
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -392,12 +397,13 @@ case class SortedLongJaccard(left: Expression, right: Expression)
 }
 
 /** Exact Jaccard similarity of two string arrays treated as sets
-  * (hash-set intersection; inputs are pre-distinct shingle arrays). */
+  * (hash-set intersection; inputs are pre-distinct shingle arrays).
+  * Not `nullIntolerant`, for the reason [[SigAgreement]] gives: the
+  * inferred `isnotnull(wordshingles(...))` would shingle again. */
 case class ArrayJaccard(left: Expression, right: Expression)
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with CodegenFallback {
 
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]

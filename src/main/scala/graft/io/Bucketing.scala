@@ -545,12 +545,14 @@ object Bucketing {
   /** PHYSICAL PURGE of tombstoned keys from a bucketed index table —
     * the deletion companion to [[compactBucketed]]: the same
     * layout-preserving [[rewrite]], but dropping every row whose
-    * `keyCol` appears in `removeKeys` (broadcast anti-join —
-    * `removeKeys` is retraction-sized, the scan side streams). After a
-    * purge the rows are GONE from disk, not merely filtered at probe
-    * time: the right-to-be-forgotten end state for a posting-list index
-    * whose rows (unlike the additive-df families) cannot be cancelled
-    * by a negated partial. `stamps` ride the replacement table's stamp,
+    * `keyCol` appears in `removeKeys` (broadcast anti-join; the scan
+    * side streams). `removeKeys` is driver-sized, per the size contract
+    * of [[Tombstones]] that the probe gate's broadcast imposes;
+    * [[Tombstones.purge]] passes a local relation, so the broadcast runs
+    * no job. After a purge the rows are GONE from disk, not merely
+    * filtered at probe time: the right-to-be-forgotten end state for a
+    * posting-list index whose rows (unlike the additive-df families)
+    * cannot be cancelled by a negated partial. `stamps` ride the replacement table's stamp,
     * so they go live together with the purged rows. Returns the data
     * file count after the rewrite. */
   def purgeBucketed(spark: SparkSession, table: String,

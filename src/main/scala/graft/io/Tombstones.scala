@@ -1,7 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, max}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Tombstone-based RETRACTION for posting-list index families (minhash
   * bands/sigs, vector bands/payloads, ivf assignments) — the
@@ -48,6 +50,19 @@ import org.apache.spark.sql.functions.{broadcast, col, max}
   * caller's ids are stream micro-batch ids or a 0,1,2… sequence), so
   * one O(1) property — not an ever-growing purged-id set — covers the
   * whole replay history.
+  *
+  * Size contract: a retraction batch, and so the whole pending tombstone
+  * set (at most `purgeEvery` batches), is RETRACTION-SIZED, which here
+  * means DRIVER-SIZED. Every probe already imposes this bound:
+  * [[filterRetracted]] broadcasts the whole pending table, and a
+  * broadcast is collected to the driver first. So [[retract]] and
+  * [[purge]] hold the ids on the driver: RETRACT collects the batch's
+  * distinct ids once, answers every guard from one collect of a
+  * bucket-pruned scan, and lands the tombstone partition from a local
+  * relation of those ids; PURGE collects the pending (id, batch_id) once
+  * for its watermark and keys, and hands [[Bucketing.purgeBucketed]] a
+  * local relation to broadcast. A batch too large for the driver is too
+  * large for the probe gate as well.
   */
 object Tombstones {
 
@@ -66,9 +81,10 @@ object Tombstones {
   val PurgeEveryDefault: Int = 4
 
   /** Bucket count of a tombstone table. The tombstone set is
-    * retraction-sized and always read whole — broadcast by the probe
-    * gate and by the purge's anti-join — so no join ever uses its
-    * bucketing; one bucket keeps each retraction batch one file. */
+    * driver-sized (the size contract above) and always read whole —
+    * broadcast by the probe gate, collected by [[purge]] — so no join
+    * ever uses its bucketing; one bucket, landed by one task, keeps each
+    * retraction batch one file. */
   private val TombstoneBuckets = 1
 
   /** One tombstone-carrying index family: its tombstone table and
@@ -113,7 +129,8 @@ object Tombstones {
     * physical deletion would wait on an operator remembering to purge.
     * Returns false (and lands nothing) when `batchId` was already purged
     * — the post-purge replay of the at-least-once window; true when the
-    * batch landed (first time or idempotent re-land). */
+    * batch landed (first time or idempotent re-land). `removed` must be
+    * driver-sized (the size contract above): its ids are collected. */
   def retract(spark: SparkSession, family: Family, removed: DataFrame,
               batchId: Long): Boolean = {
     val names = family.tables.map(_._1)
@@ -136,66 +153,78 @@ object Tombstones {
   private def land(spark: SparkSession, family: Family, ids: DataFrame,
                    batchId: Long): Boolean = {
     val (idCol, tt, payload) = (family.idCol, family.tombstones, family.payload)
+    // the batch's distinct ids on the driver (retraction-sized), cast to
+    // the payload's id type first, so set membership below means what
+    // a join's equality on the stored ids means
+    val idField = spark.table(payload).schema(idCol)
+    val batch = ids.select(col(idCol).cast(idField.dataType)).collect()
+      .map(_.get(0)).distinct.toSeq
+    val keys = batch.filter(_ != null)
+    // ONE scan answers every guard: where the batch's ids stand in the
+    // payload (batch_id null) and in the pending tombstones. The `isin`
+    // on the bucket column prunes each scan to the buckets the ids hash
+    // to and adds no exchange.
+    def found(table: String, batchCol: Column): DataFrame =
+      spark.table(table).filter(col(idCol).isin(keys: _*))
+        .select(col(idCol), batchCol.cast(LongType).as("batch_id"))
+    val scan = found(payload, lit(null))
+    val (live, tombed) = (if (spark.catalog.tableExists(tt))
+        scan.unionByName(found(tt, col("batch_id"))) else scan)
+      .collect().partition(_.isNullAt(1))
+    val liveIds = live.map(_.get(0)).toSet
     // post-purge replay: this batch's tombstones were already folded
     // into the index and dropped — its ids are gone from the payload by
-    // design, so re-running the orphan guard would misread a legal
-    // replay as history corruption. No-op; the forget already happened.
+    // design, so running the orphan guard would misread a legal replay
+    // as history corruption. No-op; the forget already happened.
     // BUT distinguish a true replay from a REUSED low batch id (ADVICE
     // r18): a genuinely purged batch's ids are absent from the payload
     // by construction, so any id still LIVE there means this is a fresh
     // right-to-be-forgotten request wearing an already-purged id —
     // silently dropping it would leave the operator believing data was
-    // forgotten while it stays indexed. One retraction-sized semi-join
-    // on the (rare) watermark path, fail-loudly like every other
+    // forgotten while it stays indexed. Fail loudly, like every other
     // history guard in this file.
     if (batchId <= purgedThrough(spark, payload)) {
-      val live = ids.distinct()
-        .join(spark.table(payload).select(col(idCol)), Seq(idCol),
-          "left_semi").count()
-      require(live == 0L,
+      require(liveIds.isEmpty,
         s"retraction batch $batchId is at/below $payload's purge " +
-          s"watermark, but $live of its id(s) are still live in the " +
-          "index — a reused batch id would silently drop a live " +
+          s"watermark, but ${liveIds.size} of its id(s) are still live in " +
+          "the index — a reused batch id would silently drop a live " +
           "retraction; use a batch id above the watermark")
       return false
     }
-    val distinctIds = ids.distinct().localCheckpoint()
-    val pending = spark.catalog.tableExists(tt)
     // orphan guard: a retraction can only retire documents the index
     // actually contains — a typo'd id list silently "succeeding" would
     // leave the operator believing data was forgotten when nothing was.
-    // Ids already in the tombstone table are exempt: a replay landing
-    // in the window AFTER purgeBucketed removed them from the payload but
-    // BEFORE the tombstone table was dropped is the crash-recovery path,
-    // not an orphan (the double-retract guard below still rejects the
-    // same id under a DIFFERENT batch).
-    val known = spark.table(payload).select(col(idCol))
-    val knownOrPending =
-      if (pending) known.union(spark.table(tt).select(col(idCol))) else known
-    val orphans = distinctIds.join(knownOrPending, Seq(idCol), "left_anti")
-      .count()
-    require(orphans == 0L,
+    // A null id matches nothing, so it is an orphan. Ids already in the
+    // tombstone table are exempt: a replay landing in the window AFTER
+    // purgeBucketed removed them from the payload but BEFORE the
+    // tombstone table was dropped is the crash-recovery path, not an
+    // orphan (the double-retract guard below still rejects the same id
+    // under a DIFFERENT batch).
+    val known = liveIds ++ tombed.map(_.get(0))
+    val orphans = batch.count(id => id == null || !known.contains(id))
+    require(orphans == 0,
       s"retraction names $orphans document(s) absent from $payload — " +
         "retracting a never-indexed document is history corruption; " +
         "check the id list")
-    if (pending) {
-      // double-retraction guard — but a REPLAY of this same batch_id
-      // (the at-least-once window) must pass and idempotently overwrite
-      // its own partition
-      val dup = distinctIds.join(
-          spark.table(tt).filter(col("batch_id") =!= batchId)
-            .select(col(idCol)),
-          Seq(idCol), "left_semi")
-        .count()
-      require(dup == 0L,
-        s"$dup document(s) already retracted in an earlier batch of " +
-          s"$tt — a double retraction is history corruption")
-    }
+    // double-retraction guard — but a REPLAY of this same batch_id (the
+    // at-least-once window) must pass and idempotently overwrite its own
+    // partition
+    val dup = tombed.filter(_.getLong(1) != batchId).map(_.get(0)).distinct
+    require(dup.isEmpty,
+      s"${dup.length} document(s) already retracted in an earlier batch " +
+        s"of $tt — a double retraction is history corruption")
     // the kind, the batch_id-partitioned layout and the replay
-    // discipline are the index landing's own guards
-    Bucketing.landPartial(spark, distinctIds, tt, family.kind, Seq(idCol),
-      TombstoneBuckets, batchId)
+    // discipline are the index landing's own guards; one task lands the
+    // batch as one file
+    Bucketing.landPartial(spark, localIds(spark, idField, keys).coalesce(1),
+      tt, family.kind, Seq(idCol), TombstoneBuckets, batchId)
   }
+
+  /** A local relation of driver-held ids: scans, broadcasts and writes
+    * of it read no RDD. */
+  private def localIds(spark: SparkSession, field: StructField,
+                       ids: Seq[Any]): DataFrame =
+    spark.createDataFrame(ids.map(Row(_)).asJava, StructType(Seq(field)))
 
   /** Probe-side gate: drop tombstoned ids from an index scan. The
     * tombstone set broadcasts (it is retraction-sized), so the gate is
@@ -217,7 +246,9 @@ object Tombstones {
 
   /** Fold the tombstones into the index for real: purge every family
     * table (crash-safe layout-preserving swap), then drop the
-    * tombstone table. Ordering makes every crash window safe: until
+    * tombstone table. The pending set is collected once (driver-sized,
+    * the size contract above), so the rewrites broadcast a local
+    * relation. Ordering makes every crash window safe: until
     * the final drop, probes still filter by the tombstones (filtering
     * an already-purged id is a no-op); after it, the index itself is
     * the rebuild-without. Returns true when a purge ran. */
@@ -225,9 +256,11 @@ object Tombstones {
     val tt = family.tombstones
     if (!spark.catalog.tableExists(tt)) return false
     Bucketing.requireKind(spark, tt, family.kind)
-    val pending = spark.table(tt)
-    val maxBatchRow = pending.agg(max(col("batch_id"))).head
-    if (maxBatchRow.isNullAt(0)) {
+    // ONE collect of the pending (id, batch_id) gives both the
+    // watermark and the purge keys
+    val pending = spark.table(tt).select(col(family.idCol), col("batch_id"))
+    val rows = pending.collect()
+    if (rows.isEmpty) {
       // a zero-row retraction batch leaves an EXISTING but empty
       // tombstone table (the create ran, the empty overwrite wrote no
       // partition): nothing to fold, no watermark to stamp — just
@@ -235,7 +268,8 @@ object Tombstones {
       Bucketing.dropTable(spark, tt)
       return false
     }
-    val ids = pending.select(col(family.idCol)).distinct().localCheckpoint()
+    val ids = localIds(spark, pending.schema(family.idCol),
+      rows.map(_.get(0)).distinct.toSeq)
     // the watermark rides each table's purge swap, so it goes live
     // together with that table's purged rows, and every table is stamped
     // BEFORE the drop: every crash window is replay-safe — until the last
@@ -245,7 +279,7 @@ object Tombstones {
     // rewrite; after it but before the drop, replays of folded batches
     // no-op on the watermark while the leftover gate filters
     // already-absent ids (a no-op) until the next purge drops it
-    val watermark = Map(PurgedThroughProperty -> maxBatchRow.getLong(0).toString)
+    val watermark = Map(PurgedThroughProperty -> rows.map(_.getLong(1)).max.toString)
     family.tables.foreach { case (t, _) =>
       Bucketing.purgeBucketed(spark, t, ids, family.idCol, watermark) }
     Bucketing.dropTable(spark, tt)

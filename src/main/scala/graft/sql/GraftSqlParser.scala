@@ -241,16 +241,21 @@ object GraftSqlParser {
     * source (rand(), LIMIT without ORDER BY) can land rows that differ
     * from the reported count — and every command pays a double source
     * scan. localCheckpoint materializes the batch before any use
-    * (command batches are delta-sized by design); `f` counts it
-    * (`batch.count()`, a read of the checkpoint) only when it reports
-    * the count. The checkpoint blocks are released when `f` returns so
-    * a long SQL session does not accumulate dead block-manager state
-    * across statements. */
+    * (command batches are delta-sized by design), and an Observation on
+    * that same pass counts every source row, duplicates and null ids
+    * included: `f` gets the batch and a read of that count, which runs
+    * no job. The observation is delivered through the listener bus, so
+    * `f` reads it after its own work, and PROBE never waits on it. The
+    * checkpoint blocks are released when `f` returns so a long SQL
+    * session does not accumulate dead block-manager state across
+    * statements. */
   private[sql] def withSourceOnce[T](spark: SparkSession, sourceSql: String)(
-      f: DataFrame => T): T = {
+      f: (DataFrame, () => Long) => T): T = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val batch = spark.sql(sourceSql).localCheckpoint()
-    try f(batch)
+    val rows = Observation("n_source_rows")
+    val batch = spark.sql(sourceSql).observe(rows, count(lit(1)).as("n"))
+      .localCheckpoint()
+    try f(batch, () => rows.get("n").asInstanceOf[Long])
     finally spark.sparkContext.getPersistentRDDs
       .filterNot { case (id, _) => before.contains(id) }
       .values.foreach(_.unpersist(false))
@@ -381,8 +386,7 @@ case class AppendIndexCommand(family: String, tables: Seq[String],
             "restore it and land batch 0 into its old rows — drop it first")
         }
     }
-    GraftSqlParser.withSourceOnce(spark, sourceSql) { batch =>
-    val n = batch.count()
+    GraftSqlParser.withSourceOnce(spark, sourceSql) { (batch, n) =>
     val b = buckets.getOrElse(8)
     val landed = family match {
       case "minhash" =>
@@ -437,7 +441,7 @@ case class AppendIndexCommand(family: String, tables: Seq[String],
         graft.ops.TextAnalysis.appendBm25DfPartial(spark, batch, tables(0),
           batchId, buckets = b)
     }
-    Seq(Row(family, batchId, n, landed))
+    Seq(Row(family, batchId, n(), landed))
     }
   }
 }
@@ -497,7 +501,7 @@ case class ProbeIndexCommand(family: String, tables: Seq[String],
     // materialize the source once: the family probes read the delta
     // more than once internally (noveltyIncremental folds grams twice),
     // and a non-deterministic AS query must probe one consistent batch
-    GraftSqlParser.withSourceOnce(spark, sourceSql) { source =>
+    GraftSqlParser.withSourceOnce(spark, sourceSql) { (source, _) =>
     val result = family match {
       case "minhash" =>
         // probes through the LIVE tombstone gate when TOMBSTONES names
@@ -583,8 +587,7 @@ case class RetractIndexCommand(family: String, tables: Seq[String],
     AttributeReference("landed", BooleanType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    GraftSqlParser.withSourceOnce(spark, sourceSql) { removed =>
-    val n = removed.count()
+    GraftSqlParser.withSourceOnce(spark, sourceSql) { (removed, n) =>
     val landed = family match {
       case _ if tombstones.isDefined =>
         Tombstones.retract(spark,
@@ -606,7 +609,7 @@ case class RetractIndexCommand(family: String, tables: Seq[String],
         graft.ops.TextAnalysis.retractBm25DfPartial(spark, removed,
           tables(0), batchId)
     }
-    Seq(Row(family, batchId, n, landed))
+    Seq(Row(family, batchId, n(), landed))
     }
   }
 }

@@ -310,7 +310,8 @@ class ExplainSpec extends SparkSpec {
   }
 
   test("p54 probe under AQE: one bucketed verify join, corpus grams only for prefiltered pairs, no join after the argmax") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -377,6 +378,18 @@ class ExplainSpec extends SparkSpec {
           n.isInstanceOf[BaseJoinExec] || n.isInstanceOf[Exchange]),
         s"no join or shuffle of delta doc ids after the argmax:\n$plan")
       assert(queryStages(probe) <= 7, s"at most 7 query stages:\n$plan")
+      // each delta doc's signature and shingles are computed once: no
+      // inferred `isnotnull(minhashsig(...))` or `isnotnull(wordshingles(...))`
+      // re-runs a kernel in a Filter or a scan's DataFilters
+      def kernel(e: Expression): Boolean = e.find(x =>
+        x.isInstanceOf[graft.functions.MinHashSig] ||
+          x.isInstanceOf[graft.functions.WordShingles]).isDefined
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: planChildren(p).flatMap(nodes)
+      assert(!nodes(root).exists {
+          case f: FilterExec => kernel(f.condition)
+          case s: FileSourceScanExec => s.dataFilters.exists(kernel)
+          case _ => false
+        }, s"no Filter or scan DataFilters may evaluate a kernel:\n$plan")
       val inline = graft.ops.Dedup.incrementalMinhashVerdicts(
         corpus.filter(pmod(col("doc_id"), lit(7)) =!= 0), delta)
       assert(probe.exceptAll(inline).isEmpty && inline.exceptAll(probe).isEmpty,

@@ -113,6 +113,122 @@ class ExtensionsSpec extends SparkSpec {
     tbls.foreach(graft.io.Bucketing.dropTable(spark, _))
   }
 
+  /** A fresh SQL-built minhash index over the fixture corpus (every doc
+    * with doc_id % 5 != 0) and its tombstone table name, dropped after
+    * `body`. */
+  private def withMinhashIndex(prefix: String)(
+      body: (String, String, String) => Unit): Unit = {
+    import org.apache.spark.sql.functions.col
+    val tbls = Seq(s"${prefix}_bands", s"${prefix}_sigs", s"${prefix}_tombs")
+    tbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+    Tables.documents(spark, sfDir).filter(col("doc_id") % 5 =!= 0)
+      .createOrReplaceTempView(s"${prefix}_docs")
+    try {
+      spark.sql(s"CREATE minhash INDEX ${tbls(0)}, ${tbls(1)} AS " +
+        s"SELECT doc_id, text FROM ${prefix}_docs").collect()
+      body(tbls(0), tbls(1), tbls(2))
+    } finally tbls.foreach(graft.io.Bucketing.dropTable(spark, _))
+  }
+
+  /** The ids the probe-side gate still lets through from `sigs`. */
+  private def liveIds(sigs: String, tombs: String): Set[Long] =
+    graft.io.Tombstones.filterRetracted(spark, spark.table(sigs), "doc_id",
+      Some(tombs), "minhash-tombs").select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+
+  private def corpusIds(prefix: String): Set[Long] =
+    spark.table(s"${prefix}_docs").select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("SQL RETRACT of an INT-cast id source passes the orphan guard and retires exactly those docs") {
+    withMinhashIndex("ext_ci") { (bands, sigs, tombs) =>
+      val res = spark.sql(s"RETRACT FROM minhash INDEX $bands, $sigs " +
+        s"TOMBSTONES $tombs BATCH 0 AS SELECT CAST(doc_id AS INT) AS doc_id " +
+        "FROM ext_ci_docs WHERE doc_id % 7 = 0").head
+      val retired = corpusIds("ext_ci").filter(_ % 7 == 0)
+      assert(retired.nonEmpty && res.getLong(2) === retired.size.toLong &&
+        res.getBoolean(3))
+      assert(liveIds(sigs, tombs) === corpusIds("ext_ci") -- retired,
+        "the gate must retire exactly the INT-cast ids")
+      // the same ids again under a new batch are a double retraction
+      val e = intercept[Exception] {
+        spark.sql(s"RETRACT FROM minhash INDEX $bands, $sigs " +
+          s"TOMBSTONES $tombs BATCH 1 AS SELECT CAST(doc_id AS INT) AS doc_id " +
+          "FROM ext_ci_docs WHERE doc_id % 7 = 0").collect()
+      }
+      assert(messages(e).exists(_.contains("already retracted")),
+        messages(e).mkString(" | "))
+    }
+  }
+
+  test("SQL RETRACT whose source holds a NULL id fails the orphan guard and lands nothing") {
+    withMinhashIndex("ext_ni") { (bands, sigs, tombs) =>
+      val e = intercept[Exception] {
+        spark.sql(s"RETRACT FROM minhash INDEX $bands, $sigs " +
+          s"TOMBSTONES $tombs BATCH 0 AS SELECT doc_id FROM ext_ni_docs " +
+          "WHERE doc_id % 7 = 0 UNION ALL SELECT CAST(NULL AS BIGINT)")
+          .collect()
+      }
+      assert(messages(e).exists(_.contains("absent")),
+        messages(e).mkString(" | "))
+      assert(!spark.catalog.tableExists(tombs),
+        "a rejected first batch must not create the tombstone table")
+      // with tombstones pending, the rejected batch lands no partition
+      spark.sql(s"RETRACT FROM minhash INDEX $bands, $sigs TOMBSTONES " +
+        s"$tombs BATCH 0 AS SELECT doc_id FROM ext_ni_docs WHERE doc_id % 7 = 0")
+        .collect()
+      intercept[Exception] {
+        spark.sql(s"RETRACT FROM minhash INDEX $bands, $sigs " +
+          s"TOMBSTONES $tombs BATCH 1 AS SELECT doc_id FROM ext_ni_docs " +
+          "WHERE doc_id % 11 = 0 AND doc_id % 7 != 0 " +
+          "UNION ALL SELECT CAST(NULL AS BIGINT)").collect()
+      }
+      assert(spark.table(tombs).select("batch_id").distinct().collect()
+        .map(_.getLong(0)).toSeq === Seq(0L))
+    }
+  }
+
+  test("SQL RETRACT lands duplicate source ids once; n_source_rows counts every source row") {
+    withMinhashIndex("ext_di") { (bands, sigs, tombs) =>
+      val res = spark.sql(s"RETRACT FROM minhash INDEX $bands, $sigs " +
+        s"TOMBSTONES $tombs BATCH 0 AS SELECT doc_id FROM ext_di_docs " +
+        "WHERE doc_id % 7 = 0 UNION ALL SELECT doc_id FROM ext_di_docs " +
+        "WHERE doc_id % 14 = 0").head
+      val retired = corpusIds("ext_di").filter(_ % 7 == 0)
+      assert(res.getLong(2) ===
+        (retired.size + retired.count(_ % 14 == 0)).toLong)
+      assert(spark.table(tombs).count() === retired.size.toLong,
+        "each retired id lands once")
+      assert(liveIds(sigs, tombs) === corpusIds("ext_di") -- retired)
+    }
+  }
+
+  test("RETRACT with tombstones pending and PURGE stay in their Spark job budgets; each tombstone batch is one file") {
+    withMinhashIndex("ext_jb") { (bands, sigs, tombs) =>
+      def retract(batch: Int): Unit =
+        assert(spark.sql(s"RETRACT FROM minhash INDEX $bands, $sigs " +
+          s"TOMBSTONES $tombs BATCH $batch AS SELECT doc_id FROM ext_jb_docs " +
+          s"WHERE doc_id % 7 = ${batch + 1}").head.getBoolean(3))
+      retract(0)
+      val (_, retractJobs) = jobsDuring(retract(1))
+      // 13 jobs before the guards read one collect of one scan
+      assert(retractJobs === 4, s"RETRACT ran $retractJobs jobs")
+      assert(graft.io.Bucketing.dataFileCount(spark, tombs) === 2,
+        "each retraction batch must land as one file")
+      val (purged, purgeJobs) = jobsDuring(spark.sql(
+        s"PURGE RETRACTIONS FROM minhash INDEX $bands, $sigs TOMBSTONES $tombs")
+        .head.getBoolean(1))
+      assert(purged)
+      // 7 jobs before the one collect of the pending (id, batch_id)
+      assert(purgeJobs === 5, s"PURGE ran $purgeJobs jobs")
+      assert(liveIds(sigs, tombs) === corpusIds("ext_jb")
+        .filterNot(id => id % 7 == 1 || id % 7 == 2))
+    }
+  }
+
   test("CREATE/APPEND/COMPACT/PROBE SQL lifecycle: dispatch, landed flag, guards, near-miss diagnostics") {
     import spark.implicits._
     Seq("ext_lc_idx", "ext_lc_out", "ext_lc_reb")

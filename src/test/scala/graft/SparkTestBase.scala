@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftTestAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -33,5 +36,32 @@ abstract class SparkSpec extends AnyFunSuite {
       case _ => 0
     }) + planChildren(p).map(walk).sum
     walk(df.queryExecution.executedPlan)
+  }
+
+  /** `body`'s result and the number of Spark jobs it submitted. A local
+    * property tags the jobs of this thread and of the threads it starts
+    * (broadcasts, [[graft.io.Bucketing.concurrently]]), so work of other
+    * threads on the shared session is not counted. */
+  protected def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsDuring"
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag))
+          jobs.incrementAndGet()
+    }
+    val before = sc.getLocalProperty(key)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val out = body
+      GraftTestAccess.drainListenerBus(sc)
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, before)
+      sc.removeSparkListener(listener)
+    }
   }
 }
